@@ -28,6 +28,15 @@ fi
 # state, small enough that AQE can coalesce without driver pressure
 PARTS=$((EXECUTORS * CORES * 2))
 
+# codegen cache: one pipeline rep compiles ~350 classes (whole-stage
+# classes count twice: the driver and the executor task threads compile
+# them under different class loaders, and the cache key includes the
+# loader). Spark's default of 100 entries evicts every class before the
+# next rep needs it again, so each rep recompiles everything; 4000 entries
+# hold a rep's classes with room for the catalog queries. A static conf:
+# it must be set at submit time.
+CODEGEN_CACHE=4000
+
 exec spark-submit \
   --class "${CLASS}" \
   --master "${MASTER}" \
@@ -38,5 +47,6 @@ exec spark-submit \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.shuffle.partitions="${PARTS}" \
   --conf spark.sql.maxPlanStringLength=262144 \
+  --conf spark.sql.codegen.cache.maxEntries="${CODEGEN_CACHE}" \
   --conf spark.serializer=org.apache.spark.serializer.KryoSerializer \
   "${JAR}" ${EXTRA_ARGS:-}

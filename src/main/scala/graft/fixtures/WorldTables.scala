@@ -59,13 +59,19 @@ object WorldTables {
       .toDF()
   }
 
-  /** J7: trip_id -> ordered stop rows with coordinates + line identity. */
+  /** J7: trip_id -> ordered stop rows with coordinates + line identity.
+    * The stops and trips of a world are its dimension tables (thousands
+    * of rows against the stop_times fact table), so both joins broadcast
+    * them outright: planned as shuffle joins, each first shuffled both
+    * sides only for the run-time plan to broadcast the small one anyway. */
   def tripStops(t: Tables): DataFrame = {
     import t.stopTimes.sparkSession.implicits._
+    import org.apache.spark.sql.functions.broadcast
     t.stopTimes
-      .join(t.stops.select($"stop_id", $"name".as("stop_name"), $"lat", $"lng"),
+      .join(broadcast(t.stops.select($"stop_id", $"name".as("stop_name"), $"lat", $"lng")),
         Seq("stop_id"))
-      .join(t.trips.select($"trip_id", $"trip_short_name".as("line_name")), Seq("trip_id"))
+      .join(broadcast(t.trips.select($"trip_id", $"trip_short_name".as("line_name"))),
+        Seq("trip_id"))
       .select($"trip_id", $"seq", $"stop_id", $"arr_s", $"dep_s", $"lat", $"lng",
         $"line_name", $"stop_name")
   }

@@ -25,7 +25,11 @@ import org.apache.spark.sql.types._
   * expressions additionally return NULL for an empty array (the
   * aggregate formulation produced no row at all), so a future caller
   * that forgets the filter gets visible nulls instead of a silent
-  * sentinel signature every bigram-less doc would share. */
+  * sentinel signature every bigram-less doc would share. Because of that
+  * null, each expression declares `nullable = true` whatever its child's
+  * nullability: the default (`child.nullable`) would let codegen render
+  * `isNull` of a non-nullable child as the literal `false`, and the
+  * generated `false = true;` does not compile. */
 object SigOps {
   /** All numHashes MinHash minima in one pass:
     * sig(j-1) = min over h of (h*(2j+1) + j*12345) mod prime, j = 1..n —
@@ -87,6 +91,7 @@ object SigOps {
 case class MinhashSigs(child: Expression, numHashes: Int, prime: Long)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sigs"
   override protected def nullSafeEval(a: Any): Any = {
@@ -106,6 +111,7 @@ case class MinhashSigs(child: Expression, numHashes: Int, prime: Long)
 /** simhash_bits(hashes) -> long: the `bits`-bit SimHash vote. */
 case class SimhashBits(child: Expression, bits: Int) extends UnaryExpression {
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash_bits"
   override protected def nullSafeEval(a: Any): Any = {
@@ -124,6 +130,7 @@ case class SimhashBits(child: Expression, bits: Int) extends UnaryExpression {
 case class GramFingerprint(child: Expression, prime: Long)
     extends UnaryExpression {
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "gram_fingerprint"
   override protected def nullSafeEval(a: Any): Any = {

@@ -313,7 +313,7 @@ object StationSnap {
     val snapRes = 20 // ~10 m cells: right-sized for the 15 m snap radius
     val w = new Work(snapRes)
 
-    // the three input collects are independent jobs — submit them
+    // the two input collects are independent jobs — submit them
     // concurrently (same rationale as CompactGraph.fromEdges: back-to-back
     // driver collects pay serial scheduler/AQE round-trips)
     import scala.concurrent.{Await, Future}
@@ -326,26 +326,31 @@ object StationSnap {
       expr("transform(geom, p -> p.lat)"), expr("transform(geom, p -> p.lon)"),
       col("len_m").cast("double"), col("cost10").cast("long"),
       col("lvl").cast("int"), col("oneway").cast("int")).collect())
-    val blockersF = Future {
-      if (blockerNodes == null) Array.empty[org.apache.spark.sql.Row]
-      else blockerNodes.select(col("node_id").cast("long")).collect()
-    }
+    // stations and blocker nodes: one query (a union tagged by kind)
     val hasTrack = gt.stations.columns.contains("track")
     val trackCol = if (hasTrack) col("track") else lit(null).cast("string")
-    val stationsF = Future(gt.stations.select(col("node_id").cast("long"),
-      col("lat").cast("double"), col("lon").cast("double"), col("name"), trackCol)
-      .collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
-        if (r.isNullAt(3)) null else r.getString(3),
-        if (r.isNullAt(4)) null else r.getString(4)))
-      .sortBy(_._1))
+    val nodesF = Future {
+      val st = gt.stations.select(lit(0).as("kind"), col("node_id").cast("long"),
+        col("lat").cast("double"), col("lon").cast("double"), col("name").cast("string"),
+        trackCol.cast("string"))
+      (if (blockerNodes == null) st
+       else st.union(blockerNodes.select(lit(1), col("node_id").cast("long"),
+         lit(null).cast("double"), lit(null).cast("double"), lit(null).cast("string"),
+         lit(null).cast("string"))))
+        .collect().partition(_.getInt(0) == 0)
+    }
     Await.result(edgeRowsF, Duration.Inf).sortBy(_.getLong(0)).foreach { r =>
       w.addEdge(new WEdge(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getSeq[Double](5).toArray, r.getSeq[Double](6).toArray,
         r.getDouble(7), r.getLong(8), r.getInt(9), r.getInt(10)))
     }
-    Await.result(blockersF, Duration.Inf).foreach(r => w.blockers += r.getLong(0))
-    val stations = Await.result(stationsF, Duration.Inf)
+    val (stationRows, blockerRows) = Await.result(nodesF, Duration.Inf)
+    blockerRows.foreach(r => w.blockers += r.getLong(1))
+    val stations = stationRows
+      .map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3),
+        if (r.isNullAt(4)) null else r.getString(4),
+        if (r.isNullAt(5)) null else r.getString(5)))
+      .sortBy(_._1)
 
     val placed = runPass(w, stations, cfg)
 
@@ -373,9 +378,9 @@ object StationSnap {
     val edges2 =
       if (newEdges.isEmpty) gt.edges
       else {
-        val newDf0 = spark.createDataFrame(
-          spark.sparkContext.parallelize(newEdges.toSeq,
-            math.max(1, newEdges.length / 500)))
+        // a local relation, not a parallelized RDD: its exact size lets
+        // every consumer plan it without a stats-less shuffle first
+        val newDf0 = spark.createDataFrame(newEdges.toSeq)
         val actualTypes = newDf0.schema.map(f => f.name -> f.dataType).toMap
         val schema = gt.edges.schema
         val newDf = newDf0.select(schema.map { f =>
@@ -387,7 +392,9 @@ object StationSnap {
           val cc = if (same) c else c.cast(f.dataType)
           cc.as(f.name)
         }: _*)
-        gt.edges.join(changedIds.toDF("edge_id"), Seq("edge_id"), "left_anti")
+        // the split edges leave through a set-membership filter: an
+        // anti-join against the id list cost a broadcast job of its own
+        gt.edges.filter(col("edge_id").isNull || !col("edge_id").isin(changedIds: _*))
           .unionByName(newDf)
       }
 
@@ -399,8 +406,7 @@ object StationSnap {
         case None => (sid, sLat, sLon, name, track)
       }
     }.distinct
-    val stations2 = spark.createDataFrame(
-        spark.sparkContext.parallelize(placedRows.toSeq, 1))
+    val stations2 = spark.createDataFrame(placedRows.toSeq)
       .toDF("node_id", "lat", "lon", "name", "track")
       .withColumn("cell", graft.functions.GeoFunctions.gcell(
         col("lat"), col("lon"), cfg.cellRes))

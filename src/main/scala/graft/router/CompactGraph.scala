@@ -455,9 +455,9 @@ object CompactGraph {
                 lines: org.apache.spark.sql.DataFrame,
                 turnCycles: org.apache.spark.sql.DataFrame = null): CompactGraph = {
     val hasGeom = edges.columns.contains("geom")
-    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit}
-    // the four driver collects below are INDEPENDENT jobs; running them
-    // sequentially paid four scheduler/AQE round-trips back to back
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col => fcol, lit}
+    // the three driver collects below are INDEPENDENT jobs; running them
+    // sequentially paid three scheduler/AQE round-trips back to back
     // (guide: overlap independent jobs so the next job's tasks back-fill
     // the current job's tail). Futures on the global pool submit them
     // concurrently; results are deterministic either way.
@@ -488,7 +488,9 @@ object CompactGraph {
       if (wayLines == null || lines == null) Map.empty
       else {
         val hasFt = lines.columns.contains("from_str")
-        wayLines.join(lines, "line_id")
+        // the line dim is bounded by the feed's transit lines: broadcast
+        // it rather than shuffle both sides and convert at run time
+        wayLines.join(broadcast(lines), "line_id")
           .select(fcol("way_id"), coalesce(fcol("short_name"), lit("")),
             if (hasFt) coalesce(fcol("from_str"), lit("")) else lit(""),
             if (hasFt) coalesce(fcol("to_str"), lit("")) else lit(""))
@@ -499,11 +501,15 @@ object CompactGraph {
           }
       }
     }
-    val restrF = Future(restrictions.select("via_node", "from_way", "to_way", "positive")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))))
-    val tcyF = Future {
-      if (turnCycles == null) Array.empty[Long]
-      else turnCycles.select("node_id").collect().map(_.getLong(0))
+    // restrictions and turn-cycle nodes are both small: one query (a union
+    // tagged by kind) collects them in one job
+    val smallF = Future {
+      val restr = restrictions.select(lit(0).as("kind"), fcol("via_node").cast("long"),
+        fcol("from_way").cast("long"), fcol("to_way").cast("long"), fcol("positive"))
+      (if (turnCycles == null) restr
+       else restr.union(turnCycles.select(lit(1), fcol("node_id").cast("long"),
+         lit(null).cast("long"), lit(null).cast("long"), lit(null).cast("boolean"))))
+        .collect()
     }
     val rows = Await.result(rowsF, Duration.Inf)
     val wayToNames = Await.result(wayToNamesF, Duration.Inf)
@@ -514,8 +520,9 @@ object CompactGraph {
       EdgeRowIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         glat, glon, r.getLong(8), r.getDouble(9), r.getInt(10))
     }
-    val restr = Await.result(restrF, Duration.Inf)
-    val tcy = Await.result(tcyF, Duration.Inf)
+    val (restrRows, tcyRows) = Await.result(smallF, Duration.Inf).partition(_.getInt(0) == 0)
+    val restr = restrRows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
+    val tcy = tcyRows.map(_.getLong(1))
     fromRows(edgeRows, wayToNames, restr, tcy)
   }
 

@@ -1,6 +1,7 @@
 package graft.router
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,14 +38,16 @@ object Matcher {
   def checkpointSer(df: DataFrame): DataFrame =
     df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
-  /** Lazy variant: marks the plan for a serialized local checkpoint but
-    * lets the FIRST consuming action materialize it, folding what would be
-    * a dedicated materialization job (plan compile + AQE + scheduler
-    * round-trip, ~0.2-0.3 s of driver floor each at local parallelism,
-    * the same constant on a cluster driver) into a job that runs anyway.
-    * Safe here because every consumer chain in the match path is
-    * sequential single-threaded driver code — no two actions race to
-    * materialize the same unpersisted checkpoint. */
+  /** Lazy variant: defers only the FINAL stage. Under AQE,
+    * Dataset.checkpoint executes the physical plan at the call (inside
+    * withAction, traced as a `localCheckpoint` action): every shuffle and
+    * broadcast stage of the plan runs right here, as jobs of their own.
+    * What the first consuming action folds in is the last stage — it
+    * computes and stores the blocks, which every later reference reads —
+    * saving the one dedicated result job an eager checkpoint runs. Safe
+    * here because every consumer chain in the match path is sequential
+    * single-threaded driver code — no two actions race to materialize the
+    * same unpersisted checkpoint. */
   def checkpointSerLazy(df: DataFrame): DataFrame =
     df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
@@ -90,48 +93,42 @@ object Matcher {
       .filter($"d_m" <= cfg.maxSnapDistanceM)
       .filter(simUdf($"stop_name", $"st_name", $"d_m"))
       .withColumn("trk_mism", trkMismUdf($"pc", $"trk"))
-    // ONE aggregation pass over the stop x station pairs serves both
-    // outputs below: the previous two groupBys keyed differently ((stop,
-    // node) vs (stop)) over the un-exchanged simPairs subtree, so the
-    // k-ring join + both similarity UDFs executed twice per action. Both
-    // outputs now hang off the same (stop_id, node_id) exchange, which
-    // ReuseExchange dedups within the final cands plan. The lexicographic
-    // struct-min is hierarchical, so the per-(stop, node) min of
-    // (trk_mism, d_m) followed by the per-stop min over (trk_mism, d_m,
-    // node_id) picks exactly the pair-level minimum the old single-level
-    // min_by picked (st_lat/st_lon are constant per node).
-    val simAgg = simPairs.groupBy($"stop_id", $"node_id")
-      .agg(min(struct($"trk_mism", $"d_m")).as("md"),
-        first($"st_lat").as("st_lat"), first($"st_lon").as("st_lon"))
-    // a vertex aliasing several platforms counts as matching if ANY matches
-    val simStations = simAgg.select($"stop_id", $"node_id",
-      $"md.trk_mism".as("trk_mism"))
-    // the NEAREST similar station per stop — matching track beats distance
-    // (two same-name platforms of one station are otherwise
-    // indistinguishable): candidates touching that vertex snap their
-    // position onto it, so matched shapes terminate exactly at the station
-    // node (the reference routes via station group nodes, OsmBuilder
-    // snapStation + ShapeBuilder getECM)
-    val bestStation = simAgg.groupBy($"stop_id")
-      .agg(min_by(struct($"node_id", $"st_lat", $"st_lon"),
-        struct($"md.trk_mism".as("trk_mism"), $"md.d_m".as("d_m"), $"node_id")).as("b"))
-      .select($"stop_id", $"b.node_id".as("best_node"),
-        $"b.st_lat".as("b_lat"), $"b.st_lon".as("b_lon"))
-    val cands = buildCands(spark, stops, edges, cfg, maxAbsLat)
+    // ONE per-stop aggregate carries everything the candidates need from
+    // the stop x station pairs: the similar stations as (node, track
+    // mismatch) pairs, and the nearest similar station. Candidates then
+    // join it once on stop_id (was: a per-(stop, node) aggregate joined
+    // twice, on the from and the to endpoint, plus a per-stop best-station
+    // aggregate joined a third time).
+    //  - a vertex aliasing several platforms counts as matching if ANY
+    //    matches: the endpoint's mismatch is the min over its pairs;
+    //  - the NEAREST similar station per stop — matching track beats
+    //    distance (two same-name platforms of one station are otherwise
+    //    indistinguishable): candidates touching that vertex snap their
+    //    position onto it, so matched shapes terminate exactly at the
+    //    station node (the reference routes via station group nodes,
+    //    OsmBuilder snapStation + ShapeBuilder getECM). The pair-level min
+    //    over (trk_mism, d_m, node_id) is the per-node min followed by the
+    //    per-stop min (lexicographic order is hierarchical; st_lat/st_lon
+    //    are constant per node).
+    val stopStations = simPairs.groupBy($"stop_id")
+      .agg(collect_list(struct($"node_id", $"trk_mism")).as("sims"),
+        min_by(struct($"node_id", $"st_lat", $"st_lon"),
+          struct($"trk_mism", $"d_m", $"node_id")).as("b"))
+    val cands = buildCandsWithEnds(spark, stops, edges, cfg, maxAbsLat)
     val nonStationPen10 = graft.geo.Geo.costToInt(cfg.nonStationPenaltySec)
     val platformPen10 = graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec)
+    // track mismatch of the similar stations at an endpoint (null: none)
+    def endMism(end: String) = array_min(transform(
+      filter($"sims", x => x.getField("node_id") === col(end)), x => x.getField("trk_mism")))
     // an edge is a "station candidate" if either endpoint is a similar station
-    val edgeEnds = edges.select($"edge_id", $"from_id", $"to_id")
-    cands.join(edgeEnds, Seq("edge_id"), "left_outer")
-      .join(simStations.withColumnRenamed("node_id", "from_id")
-        .withColumnRenamed("trk_mism", "from_mism")
-        .withColumn("st_from", lit(1)), Seq("stop_id", "from_id"), "left_outer")
-      .join(simStations.withColumnRenamed("node_id", "to_id")
-        .withColumnRenamed("trk_mism", "to_mism")
-        .withColumn("st_to", lit(1)), Seq("stop_id", "to_id"), "left_outer")
-      .join(bestStation, Seq("stop_id"), "left_outer")
+    // both sides arrive hash-partitioned by stop_id (the top-K window's
+    // exchange, the per-stop aggregate's): a merge join needs no further
+    // stage, where a run-time switch to broadcast adds a broadcast job
+    cands.join(stopStations.hint("shuffle_merge"), Seq("stop_id"), "left_outer")
+      .withColumn("from_mism", endMism("from_id"))
+      .withColumn("to_mism", endMism("to_id"))
       .withColumn("pen10",
-        when($"st_from".isNotNull || $"st_to".isNotNull,
+        when($"from_mism".isNotNull || $"to_mism".isNotNull,
           // emulateReferenceTrackPenalty flips the condition to the
           // reference's literal (inverted) ShapeBuilder.cpp:216-219 test
           $"pen10" + when(least(coalesce($"from_mism", lit(1)),
@@ -139,21 +136,28 @@ object Matcher {
               (if (cfg.emulateReferenceTrackPenalty) 0 else 1),
             lit(platformPen10)).otherwise(lit(0L)))
           .otherwise($"pen10" + lit(nonStationPen10)))
+      .withColumn("best_node", $"b.node_id")
       .withColumn("at_from", $"best_node".isNotNull && $"from_id" === $"best_node")
       .withColumn("at_to", $"best_node".isNotNull && $"to_id" === $"best_node")
       .withColumn("progr", when($"at_from", lit(0.0))
         .when($"at_to", lit(1.0)).otherwise($"progr"))
-      .withColumn("py", when($"at_from" || $"at_to", $"b_lat").otherwise($"py"))
-      .withColumn("px", when($"at_from" || $"at_to", $"b_lon").otherwise($"px"))
-      .drop("from_id", "to_id", "st_from", "st_to", "from_mism", "to_mism",
-        "best_node", "b_lat", "b_lon", "at_from", "at_to")
+      .withColumn("py", when($"at_from" || $"at_to", $"b.st_lat").otherwise($"py"))
+      .withColumn("px", when($"at_from" || $"at_to", $"b.st_lon").otherwise($"px"))
+      .drop("from_id", "to_id", "sims", "b", "from_mism", "to_mism",
+        "best_node", "at_from", "at_to")
   }
 
   /** Candidate generation (J4/J5): broadcast k-ring join + projection.
     * stops(stop_id, lat, lng); edges from GraphBuilder.
     * Returns cands(stop_id, edge_id, progr, pen10, py, px, dist_m, oneway). */
   def buildCands(spark: SparkSession, stops: DataFrame, edges: DataFrame,
-                 cfg: OsmConfig, maxAbsLatOpt: Option[Double] = None): DataFrame = {
+                 cfg: OsmConfig, maxAbsLatOpt: Option[Double] = None): DataFrame =
+    buildCandsWithEnds(spark, stops, edges, cfg, maxAbsLatOpt).drop("from_id", "to_id")
+
+  /** buildCands plus each candidate edge's endpoint node ids (from_id,
+    * to_id), read in the same edge scan the cell join uses. */
+  private def buildCandsWithEnds(spark: SparkSession, stops: DataFrame, edges: DataFrame,
+                                 cfg: OsmConfig, maxAbsLatOpt: Option[Double]): DataFrame = {
     import spark.implicits._
     // ring radius from the worst-case (highest) latitude in the feed —
     // callers that already computed the feed bbox pass it in (the agg is
@@ -169,12 +173,12 @@ object Matcher {
     val hasGeom = edges.columns.contains("geom")
     val edgeCells =
       (if (hasGeom)
-        edges.select($"edge_id", $"oneway",
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
           expr("transform(geom, p -> p.lat)").as("glat"),
           expr("transform(geom, p -> p.lon)").as("glon"),
           explode($"cells").as("cell"))
       else
-        edges.select($"edge_id", $"oneway",
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
           array($"from_lat", $"to_lat").as("glat"),
           array($"from_lon", $"to_lon").as("glon"),
           explode($"cells").as("cell")))
@@ -182,14 +186,19 @@ object Matcher {
     // conversion boxed every coordinate of every candidate row's polyline)
     val joined = stopRings.join(edgeCells, Seq("cell"))
       .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
-      .select($"stop_id", $"edge_id", $"oneway",
+      .select($"stop_id", $"edge_id", $"oneway", $"from_id", $"to_id",
         $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
         $"proj._4".as("dist_m"))
       .filter($"dist_m" <= cfg.maxSnapDistanceM)
+      // one exchange by stop serves the dedup below and the top-K window
+      // (hash(stop) clusters (stop, edge) too)
+      .repartition($"stop_id")
       // a (stop, edge) pair can match through several ring cells -> dedup
+      // (the copies are equal: same stop point, same edge polyline)
       .groupBy($"stop_id", $"edge_id")
       .agg(first($"progr").as("progr"), first($"py").as("py"), first($"px").as("px"),
-        first($"dist_m").as("dist_m"), first($"oneway").as("oneway"))
+        first($"dist_m").as("dist_m"), first($"oneway").as("oneway"),
+        first($"from_id").as("from_id"), first($"to_id").as("to_id"))
     // keep top-K nearest edges per stop; the best-per-deg-2-chain dedup
     // (O1/G9) happens kernel-side against CompactGraph.chainOf
     val byStop = Window.partitionBy($"stop_id").orderBy($"dist_m", $"edge_id")
@@ -266,7 +275,9 @@ object Matcher {
     // The W2 cumulative measure is accumulated in the kernel during
     // geometry materialization (same haversine running sum the window
     // computed — without a 10^7-row sort).
-    val joined = seqKeys.join(solved, Seq("seq_key"))
+    // a merge join: each side is exchanged by seq_key once, with no
+    // run-time switch to broadcast (and its extra job) on top
+    val joined = seqKeys.join(solved.hint("shuffle_merge"), Seq("seq_key"))
     // arrays_zip at EXPLODE time only — the structs exist transiently in
     // codegen; the shuffled/checkpointed payload stays flat primitives
     val shapes = joined
@@ -349,10 +360,14 @@ object Matcher {
   }
 
   /** The two tables the matcher actually needs, each materialized SLIM:
-    *  - seqKeys(trip_id, seq_key) — the full per-trip table, two string
-    *    columns only (the old flow checkpointed every trip's stops array
-    *    here: ~15x the distinct payload at high trips-per-route, written
-    *    once and shuffled again by dropDuplicates);
+    *  - seqKeys(trip_id, seq_key, from_name, to_name) — the full per-trip
+    *    table, string columns only (the old flow checkpointed every trip's
+    *    stops array here: ~15x the distinct payload at high
+    *    trips-per-route, written once and shuffled again by
+    *    dropDuplicates). The two names are not read downstream: keeping
+    *    them keeps this per-trip aggregate identical to distinctSeqs', so
+    *    the second one runs on the classes generated for the first instead
+    *    of compiling its own;
     *  - distinctSeqs(seq_key, line_name, stops, from_name, to_name) — the
     *    heavy stops arrays, built from ONE representative trip per
     *    distinct sequence (deterministic min trip_id; dropDuplicates kept
@@ -368,7 +383,7 @@ object Matcher {
     // drops the array post-agg — it exists only transiently per group,
     // never in a shuffle file or checkpoint block
     val seqKeys = checkpointSerLazy(tripStopsWithKey(tripStops)
-      .select($"trip_id", $"seq_key"))
+      .select($"trip_id", $"seq_key", $"from_name", $"to_name"))
     val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
     val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
     val distinctSeqs = checkpointSerLazy(tripStopsWithKey(repRows)
@@ -445,101 +460,13 @@ object Matcher {
           "x.lat as lat, x.lng as lng))"))
       .drop("t0")
 
-    // Cluster = (line identity, first stop): the reference's RoutingAttrs
-    // clustering (A2) refined by the trie-forest split (one trie per first
-    // stop); the trie solver shares prefix work WITHIN each cluster (A3).
-    //
-    // SALTING (hot-stop skew, the north star's explicit demand): a feed has
-    // few (line, first-stop) clusters — far fewer than cores — and one
-    // urban cluster can hold thousands of sequences, an unsplittable
-    // straggler AQE cannot help with (it never splits a single group). So
-    // big clusters are hashed into sub-groups of <= MaxSeqsPerGroup
-    // distinct sequences: task count scales with DATA VOLUME, not with the
-    // feed's route topology. The bounded prefix-sharing loss is recovered
-    // hop-wise by the executor-global HopCache (same (cand, targets,
-    // cutoff) memo hits across sub-groups of one physical cluster).
-    // cluster sizes on a SLIM projection (a window count over the full rows
-    // would shuffle the heavy stops payload onto the very hot key being
-    // split); the per-cluster count table is tiny -> broadcast back
-    val slimKeys = distinctSeqs.select($"seq_key",
-      coalesce($"line_name", lit("")).as("c_line"),
-      coalesce(element_at($"stops", 1).getField("stop_id"), lit("")).as("c_stop"))
-    val clCounts = slimKeys.groupBy($"c_line", $"c_stop").agg(count(lit(1)).as("n_cl"))
-    // PARALLELISM-AWARE GRAIN: splitting a cluster is not free — each
-    // salted sub-group that lands on a different executor JVM recomputes
-    // that cluster's hop memo (measured: 2.97x duplicated memo computes at
-    // 4 executors with the fixed 64-seq grain, the dominant anti-scaling
-    // term). So the grain is sized to the job's actual parallelism: split
-    // only until groups ~ 4x cores, never finer than MaxSeqsPerGroup.
-    // Small cluster -> big grain -> salt 1 (zero duplication); a
-    // 1000-executor run gets a fine grain because the cores exist to pay
-    // the bounded duplication. Bigger groups also share strictly more trie
-    // prefix work. Results are grain-invariant (cluster attrs are computed
-    // on the unsalted key; each distinct sequence solves identically in
-    // any group).
-    // clCounts is one row per cluster and broadcast-joined below anyway;
-    // collecting it once yields the total without recomputing the dedup
-    // subtree for a second action. CEILING: one row per (line, first-stop)
-    // cluster — bounded by the feed's route topology, not by trips; a
-    // whole-planet GTFS aggregate is ~10^5-10^6 clusters (few MB), so
-    // this collect never becomes the driver bottleneck the edge tables
-    // were (those now stay distributed, DistGraphBuild)
-    val clRows = clCounts.collect()
-    val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
-    val clLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(clRows.toIndexedSeq, 1), clCounts.schema)
-    val targetGroups = TargetGroupsOverride.getOrElse(
-      math.max(1L, 4L * spark.sparkContext.defaultParallelism))
-    val grain = math.max(MaxSeqsPerGroup.toLong,
-      (totalSeqs + targetGroups - 1) / targetGroups).toDouble
-    val saltedKeys = slimKeys.join(broadcast(clLocal), Seq("c_line", "c_stop"))
-      .withColumn("salt",
-        pmod(xxhash64($"seq_key"),
-          greatest(lit(1L), ceil($"n_cl" / lit(grain)).cast("long")))
-          .cast("int"))
-      .select($"seq_key", $"c_line", $"c_stop", $"salt")
-    // the cluster's lineTo set is computed on the UNSALTED key and
-    // broadcast back to every salted sub-group: sub-groups seeing only
-    // their own rows' to_names would get different RoutingAttrs identities
-    // (different line-surcharge arrays and hop-memo ctx), so a cluster's
-    // routing would vary with the salt partition and the HopCache hit
-    // recovery across sub-groups would vanish for multi-terminal lines
-    val clToNames = slimKeys
-      .join(distinctSeqs.select($"seq_key", coalesce($"to_name", lit("")).as("tn")),
-        Seq("seq_key"))
-      .groupBy($"c_line", $"c_stop")
-      .agg(sort_array(collect_set($"tn")).as("cl_to_names"))
-    val seqRows = distinctSeqs.join(saltedKeys, Seq("seq_key"))
-      .join(broadcast(clToNames), Seq("c_line", "c_stop"))
-      .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
-        coalesce($"from_name", lit("")).as("from_name"),
-        $"cl_to_names")
-      .as[(String, String, Int, String, Seq[Matcher.TS], String, Seq[String])]
-
-    // Candidates are shipped ONCE PER CLUSTER via cogroup, not once per
-    // sequence: the member sequences of a cluster share (almost all of)
-    // their stops, so a per-seq_key candidate join duplicated every
-    // stop's candidate rows across all its sequences (measured ~64x
-    // payload amplification = most of the match stage's executor time —
-    // encoder deserialization of tens of millions of duplicate structs).
-    // This is still a JOIN distribution, never a driver collect.
-    // candidates may carry a bin tag (file-mode partitions: DistGraphBuild
-    // .tagCands) — the solver resolves its graph from the tags, because no
-    // edge->bin broadcast map exists when bins were built executor-side
+    val in = solverInputs(spark, distinctSeqs, cands)
+    val (seqRows, candRows) = (in.seqRows, in.candRows)
     val hasBin = cands.columns.contains("bin")
-    val binCol = if (hasBin) col("bin").cast("int") else lit(-1)
-    val candRows = saltedKeys
-      .join(distinctSeqs.select($"seq_key",
-        explode(expr("transform(stops, s -> s.stop_id)")).as("stop_id")), Seq("seq_key"))
-      .select($"c_line", $"c_stop", $"salt", $"stop_id").distinct()
-      .join(cands.select($"stop_id", $"edge_id", $"progr", $"pen10",
-        $"py", $"px", $"oneway", binCol.as("bin")), Seq("stop_id"))
-      .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",
-        $"progr", $"pen10", $"py", $"px", $"oneway", $"bin")
-      .as[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]
+    val clToNamesB = spark.sparkContext.broadcast(in.toNames)
 
     def solveGroup(key: (String, String, Int),
-                   rows: Array[(String, String, Int, String, Seq[Matcher.TS], String, Seq[String])],
+                   rows: Array[(String, String, Int, String, Seq[Matcher.TS], String)],
                    candArr: Array[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]):
         Iterator[SolvedSeq] = {
       val line = key._1
@@ -554,7 +481,8 @@ object Matcher {
       // by construction), the PHYSICAL cluster's full lineTo set (shared
       // across salted sub-groups — one RoutingAttrs identity per cluster)
       val fromName = rows.headOption.map(_._6).getOrElse("")
-      val toNames = rows.headOption.map(_._7.toArray).getOrElse(Array.empty[String])
+      val toNames = rows.headOption.map(_ => clToNamesB.value((key._1, key._2)))
+        .getOrElse(Array.empty[String])
       MatcherKernel.solveCluster(line, fromName, toNames,
         rows.map(r => (r._4, r._5.toArray)), g, candMap,
         cfgB.value).iterator
@@ -571,16 +499,19 @@ object Matcher {
     // differs, so results are partitioner-invariant.
     val useLocality = hasBin && parts.bins.length > 1 && !BinLocalityDisabled
     if (!useLocality) {
-      val seqsDs = seqRows
-        .groupByKey { case (line, stop0, salt, _, _, _, _) => (line, stop0, salt) }
-      val clusterCands = candRows
-        .groupByKey { case (line, stop0, salt, _, _, _, _, _, _, _, _) => (line, stop0, salt) }
+      // grouped on the key COLUMNS (no per-row key function: no key
+      // serializer and row joiner to generate per side)
+      val seqsDs = seqRows.toDF().groupBy($"c_line", $"c_stop", $"salt")
+        .as[(String, String, Int), (String, String, Int, String, Seq[Matcher.TS], String)]
+      val clusterCands = candRows.toDF().groupBy($"c_line", $"c_stop", $"salt")
+        .as[(String, String, Int),
+          (String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]
       // cogroup: a sequence whose stops ALL lack candidates still arrives
       // (with an empty candidate side) and is solved via the null-candidate
       // fallback, never silently dropped.
       seqsDs.cogroup(clusterCands) {
         (key: (String, String, Int),
-         seqIt: Iterator[(String, String, Int, String, Seq[Matcher.TS], String, Seq[String])],
+         seqIt: Iterator[(String, String, Int, String, Seq[Matcher.TS], String)],
          candIt: Iterator[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]) =>
           solveGroup(key, seqIt.toArray, candIt.toArray)
       }.toDF()
@@ -618,6 +549,113 @@ object Matcher {
       }
       spark.createDataset(solvedRdd).toDF()
     }
+  }
+
+  /** What the solver groups are built from: one row per sequence keyed by
+    * its salted cluster (c_line, c_stop, salt), the cluster's candidate
+    * rows under the same key, and each cluster's lineTo set.
+    * distinctSeqs: one row per seq_key, times relative (solveSeqs). */
+  private[graft] case class SolverInputs(
+      seqRows: Dataset[(String, String, Int, String, Seq[Matcher.TS], String)],
+      candRows: Dataset[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)],
+      toNames: Map[(String, String), Array[String]])
+
+  private[graft] def solverInputs(spark: SparkSession, distinctSeqs: DataFrame,
+                                  cands: DataFrame): SolverInputs = {
+    import spark.implicits._
+    // Cluster = (line identity, first stop): the reference's RoutingAttrs
+    // clustering (A2) refined by the trie-forest split (one trie per first
+    // stop); the trie solver shares prefix work WITHIN each cluster (A3).
+    //
+    // SALTING (hot-stop skew, the north star's explicit demand): a feed has
+    // few (line, first-stop) clusters — far fewer than cores — and one
+    // urban cluster can hold thousands of sequences, an unsplittable
+    // straggler AQE cannot help with (it never splits a single group). So
+    // big clusters are hashed into sub-groups of <= MaxSeqsPerGroup
+    // distinct sequences: task count scales with DATA VOLUME, not with the
+    // feed's route topology. The bounded prefix-sharing loss is recovered
+    // hop-wise by the executor-global HopCache (same (cand, targets,
+    // cutoff) memo hits across sub-groups of one physical cluster).
+    // ONE per-cluster aggregate serves the grain, the salt and the
+    // cluster's lineTo set: (n_cl, cl_to_names) per (line, first stop),
+    // computed straight off distinctSeqs (no self-join on seq_key) and
+    // collected once. The cluster's lineTo set is computed on the UNSALTED
+    // key and broadcast back to every salted sub-group: sub-groups seeing
+    // only their own rows' to_names would get different RoutingAttrs
+    // identities (different line-surcharge arrays and hop-memo ctx), so a
+    // cluster's routing would vary with the salt partition and the HopCache
+    // hit recovery across sub-groups would vanish for multi-terminal lines.
+    // CEILING: one row per (line, first-stop) cluster — bounded by the
+    // feed's route topology, not by trips; a whole-planet GTFS aggregate is
+    // ~10^5-10^6 clusters (few MB), so this collect never becomes the
+    // driver bottleneck the edge tables were (those now stay distributed,
+    // DistGraphBuild). Back in the plan it is a local relation: its exact
+    // size lets the planner broadcast it without a shuffle of the other
+    // side first.
+    val clustered = distinctSeqs
+      .withColumn("c_line", coalesce($"line_name", lit("")))
+      .withColumn("c_stop", coalesce(element_at($"stops", 1).getField("stop_id"), lit("")))
+    val clAgg = clustered.groupBy($"c_line", $"c_stop")
+      .agg(count(lit(1)).as("n_cl"),
+        sort_array(collect_set(coalesce($"to_name", lit("")))).as("cl_to_names"))
+    val clRows = clAgg.collect()
+    val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
+    // the sizes re-enter the plan (the salt); the lineTo sets go to the
+    // kernel directly, so both plan branches below read one broadcast
+    val clLocal = spark.createDataFrame(
+      java.util.Arrays.asList(clRows.map(r => Row(r.get(0), r.get(1), r.get(2))): _*),
+      StructType(clAgg.schema.fields.take(3)))
+    val toNames = clRows.map(r =>
+      (r.getString(0), r.getString(1)) -> r.getSeq[String](3).toArray).toMap
+    // PARALLELISM-AWARE GRAIN: splitting a cluster is not free — each
+    // salted sub-group that lands on a different executor JVM recomputes
+    // that cluster's hop memo (measured: 2.97x duplicated memo computes at
+    // 4 executors with the fixed 64-seq grain, the dominant anti-scaling
+    // term). So the grain is sized to the job's actual parallelism: split
+    // only until groups ~ 4x cores, never finer than MaxSeqsPerGroup.
+    // Small cluster -> big grain -> salt 1 (zero duplication); a
+    // 1000-executor run gets a fine grain because the cores exist to pay
+    // the bounded duplication. Bigger groups also share strictly more trie
+    // prefix work. Results are grain-invariant (cluster attrs are computed
+    // on the unsalted key; each distinct sequence solves identically in
+    // any group).
+    val targetGroups = TargetGroupsOverride.getOrElse(
+      math.max(1L, 4L * spark.sparkContext.defaultParallelism))
+    val grain = math.max(MaxSeqsPerGroup.toLong,
+      (totalSeqs + targetGroups - 1) / targetGroups).toDouble
+    val salted = clustered.join(broadcast(clLocal), Seq("c_line", "c_stop"))
+      .withColumn("salt",
+        pmod(xxhash64($"seq_key"),
+          greatest(lit(1L), ceil($"n_cl" / lit(grain)).cast("long")))
+          .cast("int"))
+    val seqRows = salted
+      .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
+        coalesce($"from_name", lit("")).as("from_name"))
+      .as[(String, String, Int, String, Seq[Matcher.TS], String)]
+
+    // Candidates are shipped ONCE PER CLUSTER via cogroup, not once per
+    // sequence: the member sequences of a cluster share (almost all of)
+    // their stops, so a per-seq_key candidate join duplicated every
+    // stop's candidate rows across all its sequences (measured ~64x
+    // payload amplification = most of the match stage's executor time —
+    // encoder deserialization of tens of millions of duplicate structs).
+    // This is still a JOIN distribution, never a driver collect.
+    // candidates may carry a bin tag (file-mode partitions: DistGraphBuild
+    // .tagCands) — the solver resolves its graph from the tags, because no
+    // edge->bin broadcast map exists when bins were built executor-side
+    val binCol = if (cands.columns.contains("bin")) col("bin").cast("int") else lit(-1)
+    // one exchange by stop serves the dedup and the candidate merge join
+    val candRows = salted
+      .select($"c_line", $"c_stop", $"salt",
+        explode(expr("transform(stops, s -> s.stop_id)")).as("stop_id"))
+      .repartition($"stop_id")
+      .distinct()
+      .join(cands.select($"stop_id", $"edge_id", $"progr", $"pen10",
+        $"py", $"px", $"oneway", binCol.as("bin")).hint("shuffle_merge"), Seq("stop_id"))
+      .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",
+        $"progr", $"pen10", $"py", $"px", $"oneway", $"bin")
+      .as[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]
+    SolverInputs(seqRows, candRows, toNames)
   }
 
   /** Routes each solver group into the contiguous partition block of its

@@ -135,6 +135,34 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(sigs(2L) == ((false, false, false)))
   }
 
+  test("signatures compile and yield null on an empty non-nullable gram array") {
+    // a non-nullable child must not let codegen render the result's isNull
+    // as the literal `false` (`false = true;` fails to compile); with the
+    // interpreted fallback disabled a compile failure fails the query
+    val B = org.apache.spark.sql.graftbridge.ColumnBridge
+    // filter() of a non-nullable array is non-nullable: [] for id 0, [id] otherwise
+    val in = spark.range(3).select($"id", filter(array($"id"), x => x =!= 0L).as("h"))
+    assert(!in.schema("h").nullable)
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false", "spark.sql.codegen.wholeStage" -> "false")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val sigs = in.select($"id",
+        B.column(graft.functions.MinhashSigs(B.expression($"h"), 8, DedupOps.MinhashPrime)).as("mh"),
+        B.column(graft.functions.SimhashBits(B.expression($"h"), 16)).as("sh"),
+        B.column(graft.functions.GramFingerprint(B.expression($"h"), 1000000007L)).as("fp"))
+      assert(sigs.schema.fields.drop(1).forall(_.nullable))
+      val got = sigs.collect()
+        .map(r => r.getLong(0) -> (r.isNullAt(1), r.isNullAt(2), r.isNullAt(3))).toMap
+      assert(got(0L) == ((true, true, true)))
+      assert(got(1L) == ((false, false, false)) && got(2L) == ((false, false, false)))
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("simhash: identical equal, disjoint differ, 16-bit range") {
     val sh = DedupOps.simhash(docs).as[(Long, Long)].collect.toMap
     assert(sh(0L) == sh(1L))
