@@ -63,7 +63,12 @@ object ConnectedComponents {
         .filter(col("n.comp") =!= col("o.comp")).count()
       // after the count, newLabels holds the round's whole state: free the
       // consumed inputs at block level — the Dataset-level unpersist (kept
-      // for the round-0 cached labels) is a no-op for checkpoint blocks
+      // for the round-0 cached labels) is a no-op for checkpoint blocks.
+      // Invariant: the `changed` count above has fully materialized
+      // newLabels before step1 and labels are freed. Their checkpoints cut
+      // the lineage, so a freed block cannot be recomputed: moving or
+      // deferring that count (or reading newLabels' inputs after this
+      // point) turns a lost block into a failed job instead of a recompute.
       labels.unpersist()
       checkpointRdd(labels).foreach(_.unpersist(false))
       checkpointRdd(step1).foreach(_.unpersist(false))

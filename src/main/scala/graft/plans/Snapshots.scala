@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetTables
+
 /** Iceberg-style snapshot checkpoints (north rule: "resumable from
   * checkpoint with per-partition lineage + metrics"). Each pipeline stage
   * writes its output as a parquet snapshot plus a manifest recording the
@@ -57,13 +59,13 @@ object Snapshots {
     val existing = readManifest(dir, name)
     val out = s"$dir/$name/data"
     if (existing.exists(_.fingerprint == fingerprint)) {
-      return spark.read.parquet(out)
+      return ParquetTables.read(spark, out)
     }
     val t0 = System.nanoTime()
     val df = compute
     df.write.mode(SaveMode.Overwrite).parquet(out)
     val elapsed = (System.nanoTime() - t0) / 1e9
-    val snap = spark.read.parquet(out)
+    val snap = ParquetTables.read(spark, out)
     // per-partition lineage/metrics of the WRITTEN snapshot
     val parts = snap.groupBy(spark_partition_id().as("pid"))
       .agg(count(lit(1)).as("rows")).collect()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ann.AnnOps
 import graft.dedup.DedupOps
 import graft.functions.GeoFunctions._
+import graft.sources.ParquetTables
 import graft.text.TextOps
 
 /** The driver-facing query catalog: one entry per operator family from
@@ -26,7 +27,7 @@ object GraftQueries {
   private def q(f: Q, sql: String): (Q, String) = (f, sql)
 
   private def read(s: SparkSession, dir: String, t: String): DataFrame =
-    s.read.parquet(s"$dir/$t.parquet")
+    ParquetTables.read(s, s"$dir/$t.parquet")
 
   /** Final presentation sort behind a materialization boundary: orderBy
     * plans a RangePartitioning exchange whose partition bounds come from

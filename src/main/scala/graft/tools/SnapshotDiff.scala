@@ -41,7 +41,7 @@ object SnapshotDiff {
         case "check" =>
           // canonical row rendering: column order from the saved schema,
           // rows sorted as strings — exact values, order-insensitive
-          val saved = spark.read.parquet(s"$dir/$name.parquet")
+          val saved = graft.sources.ParquetTables.read(spark, s"$dir/$name.parquet")
           val cols = saved.columns.toSeq
           def canon(d: org.apache.spark.sql.DataFrame): Array[String] =
             d.selectExpr(cols: _*).collect()
