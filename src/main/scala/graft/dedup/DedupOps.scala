@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Boundary
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines — exact,
@@ -18,15 +19,6 @@ import graft.text.TextOps
 object DedupOps {
   val MinhashPrime = 2147483647L
   val NumHashes = 8
-
-  /** Lazy serialized localCheckpoint boundary (graft.plans.PlanAudit:
-    * shared across the dedup/ANN call sites, passed through in audit
-    * mode). In BenchExtra's explain dumps these boundaries appear as
-    * ExistingRDD scans labeled with the call site; the lineage above
-    * them is in the corresponding `_before.txt` plan dump under
-    * plans/r06. */
-  private def cpLazy(df: DataFrame): DataFrame =
-    graft.plans.PlanAudit.cpLazy(df)
 
   /** Exact dedup: canonical representative per identical text.
     * (hash-groupBy; at scale this is a single shuffle on the text hash). */
@@ -70,14 +62,8 @@ object DedupOps {
   def ngramJaccard(docs: DataFrame, threshold: Double,
                    dfCapFrac: Double = DefaultDfCapFrac): DataFrame = {
     import docs.sparkSession.implicits._
-    // localCheckpoint, not cache: g is consumed by three downstream plans;
-    // checkpoint blocks are released when the plan is GC'd, while a
-    // cache() entry pins executor memory until an explicit unpersist no
-    // caller ever issues (the r3 leak). LAZY + serialized: the first
-    // consuming action materializes it (one scheduler round-trip less
-    // than the eager form; all consumers here run sequentially), and
-    // serialized blocks are exactly accounted (see Matcher.checkpointSer).
-    val g = cpLazy(gramHashes(docs))
+    // boundary: g is consumed by three downstream plans
+    val g = Boundary.deferred(gramHashes(docs))
     // DF cut: one tiny broadcast of the total count, one agg over grams.
     // The hot-gram side is SMALL relative to the gram universe but not
     // constant: under the absolute ceiling its count is bounded by
@@ -105,25 +91,24 @@ object DedupOps {
     // bounded by DfCapAbs^2 per gram row, and map-side partial
     // aggregation halves what reaches the (a, b) exchange.
     //
-    // perGram is checkpointed (lazy, serialized): it is the SMALL gram
-    // summary (one row per kept gram, array bounded at DfCapAbs) and has
-    // two consumers — the pair generation and the doc-size aggregation.
+    // perGram sits behind a boundary: it is the SMALL gram summary (one
+    // row per kept gram, array bounded at DfCapAbs) and has two
+    // consumers — the pair generation and the doc-size aggregation.
     // Without the boundary each consumer re-ran the whole upstream (g
     // scan, df agg, hot-gram anti-join, collect_list agg), and sizes was
     // consumed twice more (sza/szb), so the df/kept subtree appeared
     // THREE times in the physical plan (measured: 3 duplicate df agg
     // exchanges + 2 duplicate size aggs at sf0.1).
-    val perGram = kept.groupBy($"h")
+    val perGram = Boundary.deferred(kept.groupBy($"h")
       .agg(sort_array(collect_list($"doc_id")).as("ds"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .transform(cpLazy)
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism))
     // per-doc kept-gram count derived from perGram instead of a second
     // pass over kept: every kept (doc_id, h) row is exactly one element
     // of exactly one ds array, so the multiset of exploded doc_ids equals
     // the kept rows — identical counts, tiny input.
-    // sizes is itself consumed twice (sza and szb join sides) — the same
-    // lazy boundary keeps the agg from running twice.
-    val sizes = cpLazy(perGram.select(explode($"ds").as("doc_id"))
+    // sizes is itself consumed twice (sza and szb join sides) — a
+    // boundary keeps the agg from running twice.
+    val sizes = Boundary.deferred(perGram.select(explode($"ds").as("doc_id"))
       .groupBy($"doc_id").agg(count(lit(1)).as("sz")))
     val inter = perGram
       .select(explode($"ds").as("a"), $"ds")

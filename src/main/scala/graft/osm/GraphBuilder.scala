@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
 import graft.geo.Geo
+import graft.plans.Boundary
 
 /** OSM -> routable transit graph as a declarative DataFrame DAG — the Spark
   * recast of the reference's 4-pass streaming OsmBuilder
@@ -338,9 +339,8 @@ object GraphBuilder {
                   cfgs: Seq[(String, OsmConfig)]): Map[String, GraphTables] = {
     import spark.implicits._
     val merged = OsmConfig.mergeForGraph(cfgs.map(_._2))
-    val ways = pruneTags(osmWaysRaw, merged)
-      .filter(tagMatches($"tags", merged.keepWays))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val ways = Boundary.eager(pruneTags(osmWaysRaw, merged)
+      .filter(tagMatches($"tags", merged.keepWays)))
     // shared node checkpoint restricted to nodes any MOT build can touch:
     // members of the union-kept ways (edge geometry) plus nodes with a
     // surviving tag (station/blocker/turn-cycle/nohup rules all match on
@@ -352,10 +352,9 @@ object GraphBuilder {
       .filter($"lat" >= bbox.latMin && $"lat" <= bbox.latMax &&
               $"lon" >= bbox.lonMin && $"lon" <= bbox.lonMax)
     val wayMembers = ways.select(explode($"nodes").as("id")).distinct()
-    val nodes = bboxN.filter($"tags".isNotNull && size($"tags") > 0)
+    val nodes = Boundary.eager(bboxN.filter($"tags".isNotNull && size($"tags") > 0)
       .unionByName(bboxN.filter($"tags".isNull || size($"tags") === 0)
-        .join(wayMembers, Seq("id"), "left_semi"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .join(wayMembers, Seq("id"), "left_semi")))
     cfgs.map { case (name, cfg) =>
       name -> build(spark, nodes, ways, osmRels, bbox, cfg)
     }.toMap
@@ -453,17 +452,9 @@ object GraphBuilder {
       .select($"id".as("node_id"))
 
     // ---- G8 collapseEdges: contract deg-2 chains within each way ----
-    // Lazy localCheckpoint of the contraction: fixGaps and the cell cover
-    // below both read it. Lazy is not free under AQE: Dataset.checkpoint
-    // executes the physical plan at the call (withAction), so every
-    // shuffle stage of the checkpointed plan runs right here, as jobs of
-    // the `localCheckpoint` action; only the final stage is deferred to
-    // the first consuming action, which computes and stores the blocks
-    // that every later reference then reads. All consumers run
-    // sequentially on the driver (same safety argument as
-    // Matcher.checkpointSerLazy).
-    val contracted0 = contractWithDegrees(edgesCost)
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // Deferred boundary on the contraction: fixGaps and the cell cover
+    // below both read it, sequentially on the driver.
+    val contracted0 = Boundary.deferred(contractWithDegrees(edgesCost))
 
     // ---- G8 fixGaps: 1 m endpoint merge of degree-1 nodes ----
     val contracted = mergeGaps(contracted0, degreeOneEnds(contracted0), toleranceM = 1.0)
@@ -475,19 +466,17 @@ object GraphBuilder {
     // ShapeBuilder.cpp:287-316; a distributed labeling here paid O(log n)
     // join rounds per build for a property of the bounded dimension table)
     //
-    // localCheckpoint: every downstream consumer re-references the build
+    // boundary: every downstream consumer re-references the build
     // DAG, and plan STRINGS expand shared subtrees per reference —
     // measured 45M chars at the 64x128 bench world — which AQE re-renders
     // on every plan update, a pure-driver cost that anti-scales.
     // Truncating the lineage here makes every downstream plan shallow; the
-    // graph is the bounded dimension, so materializing it is free. Lazy,
-    // as above: a shuffle stage of the plan (the gap merge, when there are
-    // gaps) runs at the call, the final stage in the first consumer.
+    // graph is the bounded dimension, so materializing it is free.
     // geomCover: bbox + cover in one codegen'd pass (was four interpreted
     // transform/array_min/array_max passes feeding CodegenFallback
     // CellsCover — the dominant task time of this checkpoint job)
-    val edges = contracted.withColumn("cells", geomCover($"geom", cfg.cellRes))
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val edges = Boundary.deferred(
+      contracted.withColumn("cells", geomCover($"geom", cfg.cellRes)))
 
     // ---- station nodes (F4 station predicate); names via F6 deep attr
     // extraction: own name, else the name of a containing relation (e.g. a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
 import graft.images.ImageCodec
+import graft.plans.Boundary
 
 /** Raster <-> vector overlay (J10 / U17, the graft payload stage mandated by
   * BASELINE.json's north_star): image tiles are keyed by grid cell; matched
@@ -48,10 +49,9 @@ object ImageOverlay {
   def assign(images: DataFrame, shapes: DataFrame, res: Int): DataFrame = {
     import images.sparkSession.implicits._
     // the (shape_id, cell) set feeds BOTH the broadcast cell prune and the
-    // pair join; without the (lazy) checkpoint the gcell+distinct shuffle
-    // over every shape point runs twice per action
-    val sc = shapeCells(shapes, res)
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // pair join; without the boundary the gcell+distinct shuffle over
+    // every shape point runs twice per action
+    val sc = Boundary.deferred(shapeCells(shapes, res))
     val liveCells = broadcast(sc.select($"cell").distinct())
     tileCells(images)
       .join(liveCells, Seq("cell"))

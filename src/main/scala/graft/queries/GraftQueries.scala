@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ann.AnnOps
 import graft.dedup.DedupOps
 import graft.functions.GeoFunctions._
+import graft.plans.Boundary
 import graft.sources.ParquetTables
 import graft.text.TextOps
 
@@ -36,22 +37,10 @@ object GraftQueries {
     * once for the sort's own shuffle (measured ~2x wall on the
     * scan-rooted catalog queries; same-session A/B on q_dist_join:
     * plain orderBy 0.87 s, round-robin-repartition-then-sort 0.75, this
-    * form 0.63). The LAZY serialized localCheckpoint materializes the
-    * (small, final) result on the sampling pass and the sort reads the
-    * blocks back. RDD-level persistence, NOT Dataset.cache: a cache()
-    * here would register in the CacheManager keyed by the logical plan
-    * and silently REUSE results across bench reps — the cross-run
-    * caching the round rules ban; the checkpoint RDD is fresh per
-    * invocation and reclaimed by the ContextCleaner.
-    * PlanDumpEverything (set only by BenchExtra's explain mode) skips
-    * the boundary so dumped plans show the full operator tree; the
-    * executed plan differs only by this checkpoint under the final
-    * Sort. */
-  @volatile var PlanDumpEverything: Boolean = false
+    * form 0.63). The deferred boundary materializes the (small, final)
+    * result on the sampling pass and the sort reads the blocks back. */
   private def sortedBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    if (PlanDumpEverything) df.orderBy(cols: _*)
-    else df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .orderBy(cols: _*)
+    Boundary.deferred(df).orderBy(cols: _*)
 
   // ---- derived deterministic geo points (same formula in SQL) ----
   // Multiplicative scatter over lat [-45, 45), lon [-90, 90): dense,

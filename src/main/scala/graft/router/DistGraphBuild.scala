@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.geo.{Cell, Geo}
 import graft.osm.{GraphBuilder, OsmConfig, StationSnap}
+import graft.plans.Boundary
 
 /** Distributed graph construction — kills the last O(graph) driver paths.
   *
@@ -125,9 +126,8 @@ object DistGraphBuild {
     // checkpoint: comp labels and the bin tag feed the snap cogroup, the
     // refined-edge assembly AND candidate tagging — without it the whole
     // CC loop re-runs per consumer
-    val edgesB = gt.edges.join(edgeComp, Seq("edge_id"))
-      .withColumn("bin", binOf($"comp")).drop("comp")
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val edgesB = Boundary.eager(gt.edges.join(edgeComp, Seq("edge_id"))
+      .withColumn("bin", binOf($"comp")).drop("comp"))
 
     // ---- 2. station -> candidate bins + owner bin (distributed spatial
     // join at the snap grid resolution; exact projection distance) ----
@@ -149,7 +149,7 @@ object DistGraphBuild {
     val trackCol = if (hasTrack) $"track" else lit(null).cast("string")
     val st = gt.stations.select($"node_id", $"lat", $"lon",
       coalesce($"name", lit(null).cast("string")).as("name"), trackCol.as("track"))
-    val stCand = st.select($"node_id", $"lat", $"lon",
+    val stCand = Boundary.deferred(st.select($"node_id", $"lat", $"lon",
         explode(ringU($"lat", $"lon")).as("cell"))
       .join(edgeCells, Seq("cell"))
       .select($"node_id", $"lat", $"lon", $"edge_id", $"bin").distinct()
@@ -158,8 +158,7 @@ object DistGraphBuild {
         expr("transform(geom, p -> p.lon)").as("glon")), Seq("edge_id"))
       .withColumn("dist", projU($"lat", $"lon", $"glat", $"glon"))
       .filter($"dist" <= cfg.maxOsmStationDistanceM)
-      .select($"node_id", $"edge_id", $"bin", $"dist")
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select($"node_id", $"edge_id", $"bin", $"dist"))
     val stOwner = stCand.groupBy($"node_id")
       .agg(min_by($"bin", struct($"dist", $"edge_id")).as("owner_bin"))
     val stBins = stCand.select($"node_id", $"bin").distinct()
@@ -228,10 +227,10 @@ object DistGraphBuild {
     // file name — a stale cache hit would route one build's clusters over
     // another build's graph
     val epoch = CompactGraph.newEpoch()
-    val out = edgeIn.groupByKey(_.bin).cogroup(misc.groupByKey(_.bin)) {
+    val out = Boundary.eager(edgeIn.groupByKey(_.bin).cogroup(misc.groupByKey(_.bin)) {
       (bin: Int, eIt: Iterator[EdgeIn], mIt: Iterator[MiscIn]) =>
         processBin(bin, eIt, mIt, cfg, cellRes, dir, epoch).iterator
-    }.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    })
 
     // ---- 5. assemble refined tables + arbitration + partitions ----
     val killed = out.filter($"kind" === 2).select($"killed".as("edge_id"))
@@ -243,9 +242,8 @@ object DistGraphBuild {
       val same = actualTypes(camelOf(f.name)).catalogString == f.dataType.catalogString
       (if (same) c else c.cast(f.dataType)).as(f.name)
     } :+ $"bin"): _*)
-    val edges2 = edgesB.join(killed, Seq("edge_id"), "left_anti")
-      .unionByName(newEdges)
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val edges2 = Boundary.deferred(edgesB.join(killed, Seq("edge_id"), "left_anti")
+      .unionByName(newEdges))
 
     val win = out.filter($"kind" === 1)
       .groupBy($"sid")

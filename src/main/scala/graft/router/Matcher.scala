@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions._
 import graft.geo.{Cell, Geo}
 import graft.osm.OsmConfig
+import graft.plans.Boundary
 
 /** The map-matching stage: stops -> edge candidates (broadcast k-ring
   * spatial join, the declared core of the north star), trips clustered by
@@ -26,30 +27,6 @@ import graft.osm.OsmConfig
   * thousands of trips.
   */
 object Matcher {
-
-  /** Eager local checkpoint with SERIALIZED storage. The default level
-    * keeps block rows as deserialized JVM objects, whose true footprint
-    * Spark's SizeEstimator undercounts severely for nested-array payloads
-    * (shape points, hop edge lists) — a heavy checkpoint can fill an
-    * executor's whole old generation while the memory manager believes it
-    * is under budget (measured: a permanent full-GC spiral, 3-4 full
-    * GCs/s, solver threads at 10% of a core). Serialized blocks are one
-    * byte[] per block: exactly accounted, GC-opaque, spillable. */
-  def checkpointSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
-  /** Lazy variant: defers only the FINAL stage. Under AQE,
-    * Dataset.checkpoint executes the physical plan at the call (inside
-    * withAction, traced as a `localCheckpoint` action): every shuffle and
-    * broadcast stage of the plan runs right here, as jobs of their own.
-    * What the first consuming action folds in is the last stage — it
-    * computes and stores the blocks, which every later reference reads —
-    * saving the one dedicated result job an eager checkpoint runs. Safe
-    * here because every consumer chain in the match path is sequential
-    * single-threaded driver code — no two actions race to materialize the
-    * same unpersisted checkpoint. */
-  def checkpointSerLazy(df: DataFrame): DataFrame =
-    df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Candidate generation with station-aware penalties (J4 + J6 + U1-U5):
     * buildCands plus, per stop, a bonus for edges that touch an OSM station
@@ -244,21 +221,20 @@ object Matcher {
     // for ONE representative trip per distinct sequence (1/dup-factor of
     // the rows), at the cost of a second pass over the tripStops source
     // (scans are cheap and pruned; wide shuffles are not).
-    // localCheckpoint (not cache) on both: a cache leaves the full
-    // upstream lineage in every consumer's plan string (AQE re-renders it
-    // per update), a checkpoint truncates it.
+    // Both sit behind deferred boundaries: every consumer chain in the
+    // match path is sequential driver code.
     val (seqKeys, distinctSeqs) = tripSeqTables(tripStops)
-    // localCheckpoint: the kernel output feeds shapes, anchors,
-    // hops, the color ops, the eval and the overlay — truncating the
-    // logical lineage here keeps every downstream plan shallow (deep
-    // lineage made AQE's per-update plan stringification quadratic)
+    // boundary: the kernel output feeds shapes, anchors, hops, the color
+    // ops, the eval and the overlay — truncating the logical lineage here
+    // keeps every downstream plan shallow (deep lineage made AQE's
+    // per-update plan stringification quadratic)
     // EAGER on purpose (unlike the slim seq tables above): the solve must
     // run as its own dedicated job so the kernel has every core and the
     // KernelNanos/KernelCpuNanos wall-vs-CPU diagnostics measure the
     // kernel, not co-scheduled join/explode tasks of a fused job (a lazy
     // checkpoint here inflated summed in-solve wall ~100x at local[32]
     // with identical CPU and iteration counts)
-    val solved = checkpointSer(solveSeqs(spark, distinctSeqs,
+    val solved = Boundary.eager(solveSeqs(spark, distinctSeqs,
       cands, parts, cfg))
 
     // join back ONCE, LAZILY: the solved table carries the heavy
@@ -382,11 +358,11 @@ object Matcher {
     // seq_key depends on the collected stops array, but the projection
     // drops the array post-agg — it exists only transiently per group,
     // never in a shuffle file or checkpoint block
-    val seqKeys = checkpointSerLazy(tripStopsWithKey(tripStops)
+    val seqKeys = Boundary.deferred(tripStopsWithKey(tripStops)
       .select($"trip_id", $"seq_key", $"from_name", $"to_name"))
     val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
     val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
-    val distinctSeqs = checkpointSerLazy(tripStopsWithKey(repRows)
+    val distinctSeqs = Boundary.deferred(tripStopsWithKey(repRows)
       .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"))
     (seqKeys, distinctSeqs)
   }

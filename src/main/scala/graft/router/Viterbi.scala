@@ -43,11 +43,6 @@ object Viterbi {
   val ResidualClamp = new java.util.concurrent.atomic.LongAdder()
   val LadderPasses = new java.util.concurrent.atomic.LongAdder()
   val LayersRelaxed = new java.util.concurrent.atomic.LongAdder()
-  /** minimum real sources for the hopsFast N->N pass — below this the
-    * per-source memoized path wins (finer-grained cross-layer reuse).
-    * var: tests force Int.MaxValue to compare both paths exactly. */
-  @volatile var FastMinSources = 3
-
   /** ExpoTransWeight.maxCost (Weights.cpp:189-196): cutoff10 =
     * ceil(max(hopTimeSec, 60) * 3 * punishFactor * 10). */
   def maxHopCost10(hopTimeSec: Double, punishFactor: Double = 1.0): Long =
@@ -76,13 +71,18 @@ object Viterbi {
         math.round(transitionPen * hop10)
     }
 
-  /** The per-layer knobs shared by the linear solve and the trie solve. */
+  /** The per-layer knobs shared by the linear solve and the trie solve.
+    * @param fastMinSources minimum real sources for the hopsFast N->N
+    *        pass — below this the per-source memoized path wins
+    *        (finer-grained cross-layer reuse). Tests pass Int.MaxValue to
+    *        compare both paths exactly. */
   final case class RelaxParams(turnPen10: (Int, Int) => Long,
                                vmaxMs: Double = 85.0 / 3.6,
                                transitionPenalty: Double = 1.0,
                                transModel: String = "expo",
                                cutoffFactor: Double = 1.0,
-                               cacheCtx: Long = 0L)
+                               cacheCtx: Long = 0L,
+                               fastMinSources: Int = 3)
 
   /** Relax ONE from->to layer pair in place (hop matrix + doubling +
     * fallback ladder): costTo/predTo/pathTo are updated for every to-cand
@@ -494,7 +494,7 @@ object Viterbi {
         fi0 += 1
       }
       val useFast = p.transModel == "expo" && p.transitionPenalty == 1.0 &&
-        nRealSrc >= FastMinSources && targets.nonEmpty
+        nRealSrc >= p.fastMinSources && targets.nonEmpty
       var cutoff = baseCutoff
       var step = 0
       var found = false
@@ -554,6 +554,7 @@ object Viterbi {
     * @param cutoffFactor widens the hop cutoff (the reference multiplies
     *        maxCost by its line-punish factors, Weights.cpp:192-195)
     * @param cacheCtx graph+config+line identity folded into hop-memo keys
+    * @param fastMinSources see RelaxParams
     */
   def solve(g: CompactGraph, cands: Array[Array[Cand]], schedSec: Array[Double],
             turnPen10: (Int, Int) => Long,
@@ -562,12 +563,13 @@ object Viterbi {
             transitionPenalty: Double = 1.0,
             transModel: String = "expo",
             cutoffFactor: Double = 1.0,
-            cacheCtx: Long = 0L): SolveResult = {
+            cacheCtx: Long = 0L,
+            fastMinSources: Int = 3): SolveResult = {
     val nLayers = cands.length
     require(nLayers >= 1 && schedSec.length == nLayers - 1)
     val Inf = Dijkstra.Inf
     val p = RelaxParams(turnPen10, vmaxMs, transitionPenalty, transModel,
-      cutoffFactor, cacheCtx)
+      cutoffFactor, cacheCtx, fastMinSources)
 
     // cost/pred lattice (CostsDAG/PredeDAG, Router.h:38-40)
     val cost = Array.tabulate(nLayers)(l => Array.fill[Long](cands(l).length)(Inf))

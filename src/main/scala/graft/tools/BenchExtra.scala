@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *     — times each named catalog query (default: all) with a noop sink,
   *       printing one line per rep + the median.
   *   sbt "runMain graft.tools.BenchExtra explain <outDir> [query ...]"
-  *     — writes <outDir>/<query>.txt with .explain("formatted") output.
+  *     — runs each query into a noop sink and writes <outDir>/<query>.txt
+  *       with the formatted plan of every SQL execution it ran
+  *       (graft.plans.ExecutedPlans), one section per execution.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -32,18 +34,17 @@ object BenchExtra {
 
     val all = graft.queries.GraftQueries.all
     if (args.headOption.contains("explain")) {
-      // dump the full operator tree: without this the sortedBy
-      // materialization boundary roots the visible plan at an ExistingRDD
-      // scan (see GraftQueries.sortedBy — the executed plan differs only
-      // by that lazy checkpoint directly under the final Sort)
-      graft.queries.GraftQueries.PlanDumpEverything = true
       val outDir = new java.io.File(args(1))
       outDir.mkdirs()
       val names = if (args.length > 2) args.drop(2).toSeq else all.keys.toSeq.sorted
       names.foreach { name =>
         val (fn, _) = all(name)
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plans = graft.plans.ExecutedPlans(spark) {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        val plan = plans.zipWithIndex.map { case (p, i) =>
+          s"== execution ${i + 1} of ${plans.size} ==\n$p"
+        }.mkString("\n")
         val w = new java.io.PrintWriter(new java.io.File(outDir, s"$name.txt"))
         try w.print(plan) finally w.close()
         println(s"[explain] wrote ${outDir}/${name}.txt (${plan.length} chars)")

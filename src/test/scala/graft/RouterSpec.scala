@@ -264,7 +264,7 @@ class RouterSpec extends AnyFunSuite {
   }
   test("hopsFast N->N layer pass matches the per-source slow path exactly (G5)") {
     // 3 sources x 3 targets with distinct progr offsets and pens — enough
-    // real sources to trigger the fast pass (FastMinSources = 3)
+    // real sources to trigger the fast pass (fastMinSources = 3)
     val layer0 = Array(
       Cand(0, 0.25, 5L, 48.0, 7.8025),   // on e0 fwd
       Cand(2, 0.10, 0L, 48.0, 7.811),    // on e1 fwd
@@ -276,13 +276,11 @@ class RouterSpec extends AnyFunSuite {
     val cands = Array(layer0, layer1)
     def solveBoth(): (SolveResult, SolveResult) = {
       HopCache.clear()
-      val prev = Viterbi.FastMinSources
-      Viterbi.FastMinSources = Int.MaxValue   // slow reference
-      val slow = Viterbi.solve(g, cands, Array(600.0), noPen)
+      val slow = Viterbi.solve(g, cands, Array(600.0), noPen,
+        fastMinSources = Int.MaxValue)        // slow reference
       HopCache.clear()
-      Viterbi.FastMinSources = 3              // fast path
-      val fast = Viterbi.solve(g, cands, Array(600.0), noPen)
-      Viterbi.FastMinSources = prev
+      val fast = Viterbi.solve(g, cands, Array(600.0), noPen,
+        fastMinSources = 3)                   // fast path
       (slow, fast)
     }
     val (slow, fast) = solveBoth()
@@ -317,10 +315,7 @@ class RouterSpec extends AnyFunSuite {
     val cands = Array(layer0, layer1)
     def run(fastMin: Int): SolveResult = {
       HopCache.clear()
-      val prev = Viterbi.FastMinSources
-      Viterbi.FastMinSources = fastMin
-      try Viterbi.solve(g2, cands, Array(600.0), noPen)
-      finally Viterbi.FastMinSources = prev
+      Viterbi.solve(g2, cands, Array(600.0), noPen, fastMinSources = fastMin)
     }
     val slow = run(Int.MaxValue)
     val fast = run(3)
@@ -369,10 +364,7 @@ class RouterSpec extends AnyFunSuite {
       val sched = Array.fill(nLayers - 1)(60.0 + rnd.nextInt(600))
       def run(fastMin: Int): SolveResult = {
         HopCache.clear()
-        val prev = Viterbi.FastMinSources
-        Viterbi.FastMinSources = fastMin
-        try Viterbi.solve(gg, cands, sched, noPen)
-        finally Viterbi.FastMinSources = prev
+        Viterbi.solve(gg, cands, sched, noPen, fastMinSources = fastMin)
       }
       val slow = run(Int.MaxValue)
       val fast = run(2)
