@@ -2,8 +2,9 @@ package graft.osm
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.geo.{Cell, Geo}
 import graft.functions.StringSim
@@ -39,6 +40,10 @@ import graft.functions.StringSim
   * (anti-joined) remainder. Nothing here touches the unbounded fact tables.
   */
 object StationSnap {
+
+  /** grid resolution of the snap pass: ~10 m cells, right-sized for the
+    * 15 m snap radius (refine and the per-bin pass alike) */
+  val SnapRes = 20
 
   /** half a meter: projection closer than this to an endpoint reuses the
     * endpoint as the station vertex (OsmBuilder.cpp:1283-1289) */
@@ -310,8 +315,7 @@ object StationSnap {
   def refine(spark: SparkSession, gt: GraphBuilder.GraphTables, cfg: OsmConfig,
              blockerNodes: DataFrame = null): (GraphBuilder.GraphTables, SnapStats) = {
     import spark.implicits._
-    val snapRes = 20 // ~10 m cells: right-sized for the 15 m snap radius
-    val w = new Work(snapRes)
+    val w = new Work(SnapRes)
 
     // the two input collects are independent jobs — submit them
     // concurrently (same rationale as CompactGraph.fromEdges: back-to-back
@@ -367,31 +371,14 @@ object StationSnap {
     val changedIds = w.edges.indices
       .filter(i => !w.alive(i) && w.edges(i).id >= 0).map(i => w.edges(i).id)
     val newEdges = w.edges.indices.filter(i => w.alive(i) && w.edges(i).id < 0)
-      .map { i =>
-        val e = w.edges(i)
-        EdgeOut(e.id, e.wayId, e.pos, e.from, e.to,
-          e.lat.head, e.lon.head, e.lat.last, e.lon.last,
-          e.lenM, e.cost10, e.lvl, e.oneway,
-          e.lat.indices.map(k => GeoPt(e.lat(k), e.lon(k))),
-          Cell.cover(e.lat.min, e.lon.min, e.lat.max, e.lon.max, cfg.cellRes))
-      }
+      .map(i => edgeOut(w.edges(i), cfg.cellRes))
     val edges2 =
       if (newEdges.isEmpty) gt.edges
       else {
         // a local relation, not a parallelized RDD: its exact size lets
         // every consumer plan it without a stats-less shuffle first
         val newDf0 = spark.createDataFrame(newEdges.toSeq)
-        val actualTypes = newDf0.schema.map(f => f.name -> f.dataType).toMap
-        val schema = gt.edges.schema
-        val newDf = newDf0.select(schema.map { f =>
-          val c = col(camelOf(f.name))
-          // cast only on a REAL type mismatch — casting a non-nullable
-          // struct to its nullable twin is rejected by Catalyst
-          // catalogString carries no nullability -> equality ignores it
-          val same = actualTypes(camelOf(f.name)).catalogString == f.dataType.catalogString
-          val cc = if (same) c else c.cast(f.dataType)
-          cc.as(f.name)
-        }: _*)
+        val newDf = newDf0.select(edgeColumns(newDf0, gt.edges.schema): _*)
         // the split edges leave through a set-membership filter: an
         // anti-join against the id list cost a broadcast job of its own
         gt.edges.filter(col("edge_id").isNull || !col("edge_id").isin(changedIds: _*))
@@ -424,6 +411,27 @@ object StationSnap {
     val out = if (g.length >= 2) g.clone() else Array(a, b)
     out(0) = a; out(out.length - 1) = b
     out
+  }
+
+  /** a split edge of the working graph as an edges-table row */
+  private[graft] def edgeOut(e: WEdge, cellRes: Int): EdgeOut =
+    EdgeOut(e.id, e.wayId, e.pos, e.from, e.to,
+      e.lat.head, e.lon.head, e.lat.last, e.lon.last,
+      e.lenM, e.cost10, e.lvl, e.oneway,
+      e.lat.indices.map(k => GeoPt(e.lat(k), e.lon(k))),
+      Cell.cover(e.lat.min, e.lon.min, e.lat.max, e.lon.max, cellRes))
+
+  /** `EdgeOut` columns of `df` selected as the edges-table `schema`. Casts
+    * only on a REAL type mismatch: casting a non-nullable struct to its
+    * nullable twin is rejected by Catalyst, and catalogString carries no
+    * nullability, so equality ignores it. */
+  private[graft] def edgeColumns(df: DataFrame, schema: StructType): Seq[Column] = {
+    val actualTypes = df.schema.map(f => f.name -> f.dataType).toMap
+    schema.map { f =>
+      val name = camelOf(f.name)
+      val same = actualTypes(name).catalogString == f.dataType.catalogString
+      (if (same) col(name) else col(name).cast(f.dataType)).as(f.name)
+    }
   }
 
   /** edges-DF column name (snake_case) -> EdgeOut field name (camelCase) */

@@ -43,10 +43,6 @@ import graft.plans.Boundary
   */
 object DistGraphBuild {
 
-  /** grid resolution of the snap pass (~10 m cells; matches
-    * StationSnap.refine) */
-  val SnapRes = 20
-
   case class Result(parts: GraphPartitions,
                     /** refined edges, `bin` column appended */
                     edges: DataFrame,
@@ -76,25 +72,6 @@ object DistGraphBuild {
                             pPrio: Int, pDist: Double, pEdge: Long, pKind: Int,
                             killed: Long, path: String)
 
-  /** comp -> bin greedy packing on (size desc, label): big comps own a
-    * bin, the rest fills the smallest (same policy as GraphPartitions
-    * .build, on component LABELS instead of a built graph). */
-  private def packBins(sizes: Array[(Long, Long)], minBinEdges: Int,
-                       maxBins: Int): (Map[Long, Int], Int) = {
-    val comps = sizes.sortBy { case (label, n) => (-n, label) }
-    val binSize = scala.collection.mutable.ArrayBuffer[Long]()
-    val of = scala.collection.mutable.HashMap[Long, Int]()
-    comps.foreach { case (label, n) =>
-      if (binSize.length < maxBins && (n >= minBinEdges || binSize.isEmpty)) {
-        binSize += n; of(label) = binSize.length - 1
-      } else {
-        val b = binSize.indices.minBy(binSize(_))
-        binSize(b) += n; of(label) = b
-      }
-    }
-    (of.toMap, binSize.length)
-  }
-
   /** Full distributed build over GraphBuilder output tables. `binDir` must
     * be cluster-shared storage (any Hadoop FS path; a local dir suffices
     * for local / local-cluster — the sandbox proxy for HDFS/S3). */
@@ -120,7 +97,7 @@ object DistGraphBuild {
       .select($"edge_id", $"comp")
     val sizes = edgeComp.groupBy($"comp").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val (binOfComp, nBins) = packBins(sizes, minBinEdges, maxBins)
+    val (binOfComp, nBins) = GraphPartitions.pack(sizes, minBinEdges, maxBins)
     val bcBins = spark.sparkContext.broadcast(binOfComp)
     val binOf = udf((c: Long) => bcBins.value(c))
     // checkpoint: comp labels and the bin tag feed the snap cogroup, the
@@ -132,10 +109,11 @@ object DistGraphBuild {
     // ---- 2. station -> candidate bins + owner bin (distributed spatial
     // join at the snap grid resolution; exact projection distance) ----
     val coverU = udf((glat: Seq[Double], glon: Seq[Double]) =>
-      Cell.coverPolyline(glat.indices.map(i => (glat(i), glon(i))).toArray, SnapRes))
+      Cell.coverPolyline(glat.indices.map(i => (glat(i), glon(i))).toArray,
+        StationSnap.SnapRes))
     val ringU = udf((lat: Double, lon: Double) =>
-      Cell.kRing(Cell.encode(lat, lon, SnapRes),
-        Cell.kForMeters(cfg.maxOsmStationDistanceM, lat, SnapRes)))
+      Cell.kRing(Cell.encode(lat, lon, StationSnap.SnapRes),
+        Cell.kForMeters(cfg.maxOsmStationDistanceM, lat, StationSnap.SnapRes)))
     val projU = udf((sLat: Double, sLon: Double, glat: Seq[Double], glon: Seq[Double]) => {
       val line = glat.indices.map(i => (glat(i), glon(i))).toArray
       Geo.projectOnPolyline(sLat, sLon, line)._4
@@ -234,14 +212,9 @@ object DistGraphBuild {
 
     // ---- 5. assemble refined tables + arbitration + partitions ----
     val killed = out.filter($"kind" === 2).select($"killed".as("edge_id"))
-    val schema = gt.edges.schema
     val newEdges0 = out.filter($"kind" === 0).select($"bin", $"edge.*")
-    val actualTypes = newEdges0.schema.map(f => f.name -> f.dataType).toMap
-    val newEdges = newEdges0.select((schema.map { f =>
-      val c = col(camelOf(f.name))
-      val same = actualTypes(camelOf(f.name)).catalogString == f.dataType.catalogString
-      (if (same) c else c.cast(f.dataType)).as(f.name)
-    } :+ $"bin"): _*)
+    val newEdges = newEdges0.select(
+      (StationSnap.edgeColumns(newEdges0, gt.edges.schema) :+ $"bin"): _*)
     val edges2 = Boundary.deferred(edgesB.join(killed, Seq("edge_id"), "left_anti")
       .unionByName(newEdges))
 
@@ -298,7 +271,7 @@ object DistGraphBuild {
   private def processBin(bin: Int, eIt: Iterator[EdgeIn], mIt: Iterator[MiscIn],
                          cfg: OsmConfig, cellRes: Int,
                          binDir: String, epoch: Long): Seq[BinOut] = {
-    val w = new StationSnap.Work(SnapRes)
+    val w = new StationSnap.Work(StationSnap.SnapRes)
     val origCells = new java.util.HashMap[Long, Seq[Long]]()
     eIt.toArray.sortBy(_.edge_id).foreach { e =>
       origCells.put(e.edge_id, e.cells)
@@ -329,11 +302,7 @@ object DistGraphBuild {
       val e = w.edges(i)
       if (!w.alive(i) && e.id >= 0) emit(2, killed = e.id)
       else if (w.alive(i) && e.id < 0)
-        emit(0, edge = StationSnap.EdgeOut(e.id, e.wayId, e.pos, e.from, e.to,
-          e.lat.head, e.lon.head, e.lat.last, e.lon.last,
-          e.lenM, e.cost10, e.lvl, e.oneway,
-          e.lat.indices.map(k => StationSnap.GeoPt(e.lat(k), e.lon(k))),
-          Cell.cover(e.lat.min, e.lon.min, e.lat.max, e.lon.max, cellRes)))
+        emit(0, edge = StationSnap.edgeOut(e, cellRes))
     }
     placed.foreach { case (sid, p) => emit(1, sid = sid, p = p) }
 
@@ -354,8 +323,4 @@ object DistGraphBuild {
     emit(3, path = path)
     outs.toSeq
   }
-
-  /** edges-DF column name (snake_case) -> EdgeOut field name (camelCase) */
-  private def camelOf(snake: String): String =
-    "_([a-z])".r.replaceAllIn(snake, m => m.group(1).toUpperCase)
 }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   * (or the merged graph of several bins) is bit-identical to solving it
   * against the full graph — components are closed under adjacency and the
   * deterministic (cost, dense-index) tie-break preserves relative order.
-  * On a real cluster, additionally sorting solver-group keys by bin would
-  * co-locate each bin's tasks on few executors; with lazy torrent fetch
-  * this is an optimization, not a correctness requirement.
+  * Matcher.BinBlockPartitioner co-locates each bin's solver groups on few
+  * executors; with lazy fetch this is an optimization, not a correctness
+  * requirement.
   */
 /** How a bin's CompactGraph reaches a solver task. */
 sealed trait BinHandle extends Serializable { def get: CompactGraph }
@@ -112,17 +112,6 @@ final class GraphPartitions(
     val fileMode: Boolean = false)
   extends Serializable {
 
-  /** optional measurement hook: when set (LocalityProbe), every bin a
-    * solver task touches is recorded as (executorId, binIdx) — the
-    * fetched-bins-per-executor evidence for the bin-block placement */
-  var touchAcc: org.apache.spark.util.CollectionAccumulator[(String, Int)] = null
-
-  private def touched(binIdx: Int): Unit =
-    if (touchAcc != null) {
-      val env = org.apache.spark.SparkEnv.get
-      touchAcc.add(((if (env == null) "driver" else env.executorId), binIdx))
-    }
-
   /** The graph a cluster with these candidate edges must route over: the
     * single touched bin in the common case, a memoized merge when the
     * candidates span bins (e.g. top-K snaps hitting a disconnected
@@ -154,7 +143,7 @@ final class GraphPartitions(
 
   /** Resolve from candidate-carried bin tags (negative = untagged). */
   def resolveByBinIds(binIds: Array[Int]): CompactGraph = {
-    if (bins.length == 1) { touched(0); return bins(0).get }
+    if (bins.length == 1) return bins(0).get
     var multi: java.util.TreeSet[Integer] = null
     var only = -1
     var i = 0
@@ -169,12 +158,7 @@ final class GraphPartitions(
       }
       i += 1
     }
-    if (multi == null) {
-      val b = math.max(only, 0)
-      touched(b)
-      return bins(b).get
-    }
-    multi.forEach(b => touched(b.intValue()))
+    if (multi == null) return bins(math.max(only, 0)).get
     GraphPartitions.merged(this, multi)
   }
 }
@@ -225,56 +209,46 @@ object GraphPartitions {
       spark.sparkContext.broadcast(new java.util.HashMap[Long, java.lang.Integer]()),
       fileMode = true)
 
-  /** Pack components into bins and broadcast each. Deterministic: comps
-    * ordered by (size desc, label), big comps own a bin, small ones fill
-    * the currently-smallest bin; bin count capped. Falls back to a single
-    * bin when the graph is one component (a metro street grid) or too
-    * small for partitioning to pay. */
-  def build(spark: SparkSession, graph: CompactGraph,
-            minBinEdges: Int = MinBinEdges, maxBins: Int = MaxBins): GraphPartitions = {
-    // comp -> edge count
-    val sizes = new java.util.HashMap[Int, Int]()
-    var i = 0
-    while (i < graph.numEdges) {
-      val c = graph.compOfEdge(i)
-      sizes.put(c, sizes.getOrDefault(c, 0) + 1)
-      i += 1
-    }
-    if (sizes.size <= 1 || graph.numEdges < 2 * minBinEdges)
-      return single(spark, graph)
-
-    import scala.jdk.CollectionConverters._
-    val comps = sizes.entrySet().asScala.toArray
-      .map(e => (e.getKey.intValue(), e.getValue.intValue()))
-      .sortBy { case (label, n) => (-n, label) }
-    // greedy: big comps own a bin; the rest goes to the smallest bin
-    val binComps = scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
+  /** The one bin-packing policy (`build` and DistGraphBuild alike):
+    * components (label, edge count) ordered by (size desc, label); a comp
+    * of at least minBinEdges opens a bin while fewer than maxBins exist
+    * (the first comp always does), every other comp joins the currently
+    * smallest bin (lowest index on ties). Returns comp -> bin and the bin
+    * count. */
+  def pack(sizes: Array[(Long, Long)], minBinEdges: Int,
+           maxBins: Int): (Map[Long, Int], Int) = {
     val binSize = scala.collection.mutable.ArrayBuffer[Long]()
-    comps.foreach { case (label, n) =>
-      if (binComps.length < maxBins && (n >= minBinEdges || binComps.isEmpty)) {
-        binComps += scala.collection.mutable.ArrayBuffer(label)
-        binSize += n.toLong
+    val of = scala.collection.mutable.HashMap[Long, Int]()
+    sizes.sortBy { case (label, n) => (-n, label) }.foreach { case (label, n) =>
+      if (binSize.length < maxBins && (n >= minBinEdges || binSize.isEmpty)) {
+        binSize += n; of(label) = binSize.length - 1
       } else {
         val b = binSize.indices.minBy(binSize(_))
-        binComps(b) += label
-        binSize(b) += n
+        binSize(b) += n; of(label) = b
       }
     }
-    if (binComps.length == 1) return single(spark, graph)
+    (of.toMap, binSize.length)
+  }
 
-    val binOfComp = new java.util.HashMap[Int, Int]()
-    binComps.zipWithIndex.foreach { case (cs, b) => cs.foreach(binOfComp.put(_, b)) }
+  /** Pack components into bins (`pack`) and broadcast each. Falls back to
+    * a single bin when the graph is one component (a metro street grid)
+    * or too small for partitioning to pay. */
+  def build(spark: SparkSession, graph: CompactGraph,
+            minBinEdges: Int = MinBinEdges, maxBins: Int = MaxBins): GraphPartitions = {
+    val comps = Array.tabulate(graph.numEdges)(graph.compOfEdge)
+    val sizes = comps.groupMapReduce(_.toLong)(_ => 1L)(_ + _).toArray
+    if (sizes.length <= 1 || graph.numEdges < 2 * minBinEdges)
+      return single(spark, graph)
+    val (binOfComp, nBins) = pack(sizes, minBinEdges, maxBins)
+    if (nBins == 1) return single(spark, graph)
+
+    val binOfEdgeIdx = comps.map(c => binOfComp(c.toLong))
     val binOfEdgeMap = new java.util.HashMap[Long, java.lang.Integer](graph.numEdges * 2)
-    i = 0
-    while (i < graph.numEdges) {
-      binOfEdgeMap.put(graph.edgeIds(i), binOfComp.get(graph.compOfEdge(i)))
-      i += 1
-    }
-    val bins = binComps.indices.map { b =>
-      val cs = binComps(b).toSet
+    binOfEdgeIdx.indices.foreach(i => binOfEdgeMap.put(graph.edgeIds(i), binOfEdgeIdx(i)))
+    val bins = Array.tabulate[BinHandle](nBins) { b =>
       BroadcastBin(spark.sparkContext.broadcast(
-        CompactGraph.subset(graph, i => cs.contains(graph.compOfEdge(i))))): BinHandle
-    }.toArray
+        CompactGraph.subset(graph, i => binOfEdgeIdx(i) == b)))
+    }
     new GraphPartitions(bins, spark.sparkContext.broadcast(binOfEdgeMap))
   }
 }

@@ -389,11 +389,6 @@ object Matcher {
   case class TS(seq: Int, stop_id: String, arr_s: Int, dep_s: Int,
                 lat: Double, lng: Double)
 
-  /** One Viterbi solve per DISTINCT stop sequence (A2/A3 clustering). */
-  def solveDistinctSeqs(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
-                        graph: CompactGraph, cfg: OsmConfig): DataFrame =
-    solveKeyedSeqs(spark, tripStopsWithKey(tripStops), cands, graph, cfg)
-
   def solveKeyedSeqs(spark: SparkSession, keyed: DataFrame, cands: DataFrame,
                      graph: CompactGraph, cfg: OsmConfig): DataFrame =
     solveKeyedSeqs(spark, keyed, cands, GraphPartitions.build(spark, graph), cfg)
@@ -473,7 +468,7 @@ object Matcher {
     // distinct bins and its fetched-bin bytes approach its bins' sizes
     // instead of the whole graph. Keys are unchanged; only placement
     // differs, so results are partitioner-invariant.
-    val useLocality = hasBin && parts.bins.length > 1 && !BinLocalityDisabled
+    val useLocality = hasBin && parts.bins.length > 1
     if (!useLocality) {
       // grouped on the key COLUMNS (no per-row key function: no key
       // serializer and row joiner to generate per side)
@@ -594,9 +589,9 @@ object Matcher {
     // the bounded duplication. Bigger groups also share strictly more trie
     // prefix work. Results are grain-invariant (cluster attrs are computed
     // on the unsalted key; each distinct sequence solves identically in
-    // any group).
-    val targetGroups = TargetGroupsOverride.getOrElse(
-      math.max(1L, 4L * spark.sparkContext.defaultParallelism))
+    // any group). A comparison that must run one plan at several core
+    // counts pins spark.default.parallelism (ScalingBench).
+    val targetGroups = math.max(1L, 4L * spark.sparkContext.defaultParallelism)
     val grain = math.max(MaxSeqsPerGroup.toLong,
       (totalSeqs + targetGroups - 1) / targetGroups).toDouble
     val salted = clustered.join(broadcast(clLocal), Seq("c_line", "c_stop"))
@@ -665,29 +660,10 @@ object Matcher {
     }
   }
 
-  /** Cap on distinct sequences per solver task (the salting grain). Small
-    * enough that tasks comfortably outnumber cores on any real feed, large
-    * enough that the trie still shares prefixes within a task. Env-tunable
-    * (driver-side: the cap is baked into the salting expression) so the
-    * scaling bench can probe the grain/straggler tradeoff. */
-  val MaxSeqsPerGroup: Int =
-    sys.env.get("SPARK_GRAFT_MAX_SEQS").map(_.toInt).getOrElse(64)
-
-  /** Pin the salt-grain target group count regardless of the session's
-    * parallelism. The adaptive default (4x cores) tunes the grain to the
-    * job — but a SCALING comparison must hold the algorithmic
-    * configuration constant across its two levels, or the small level
-    * quietly benefits from coarser groups (more trie prefix sharing,
-    * fewer cogroup candidate copies) and the measured ratio mixes
-    * plan change with resource change. ScalingBench sets this to the
-    * large level's natural value for both. */
-  @volatile var TargetGroupsOverride: Option[Long] =
-    sys.env.get("SPARK_GRAFT_TARGET_GROUPS").map(_.toLong)
-
-  /** disable the bin-block solver placement (A/B lever for the locality
-    * evidence in PartitionBench/LocalityProbe) */
-  @volatile var BinLocalityDisabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_NO_BIN_LOCALITY")
+  /** Floor on distinct sequences per solver task (the salting grain).
+    * Small enough that tasks comfortably outnumber cores on any real feed,
+    * large enough that the trie still shares prefixes within a task. */
+  val MaxSeqsPerGroup = 64
 }
 
 /** The per-sequence solve: candidate expansion to directed edges, Viterbi,
@@ -725,11 +701,6 @@ object MatcherKernel {
       KernelSolves.increment()
     }
   }
-
-  /** back-compat overload (no line identity) */
-  def solveOne(seqKey: String, stops: Array[Matcher.TS], g: CompactGraph,
-               candMap: Map[String, Array[(Long, Double, Long, Double, Double, Int)]],
-               cfg: OsmConfig): SolvedSeq = solveOne(seqKey, "", stops, g, candMap, cfg)
 
   /** one stop's candidate group, expanded to directed edges; the null
     * placeholder when no snap exists (ShapeBuilder.cpp:171-173). Keeps only
@@ -925,10 +896,6 @@ object MatcherKernel {
     val t0 = System.nanoTime()
     val c0 = tmx.getCurrentThreadCpuTime
     KernelGroups.increment()
-    val trace = KernelTrace
-    if (trace) System.err.println(
-      s"[kernel-trace] start line=$lineName seqs=${seqs.length} " +
-        s"thread=${Thread.currentThread().getName} t=${System.currentTimeMillis()}")
     try {
       val (single, multi) = seqs.partition(_._2.length < 2)
       val singles = single.map { case (k, stops) =>
@@ -961,16 +928,12 @@ object MatcherKernel {
       // seconds is an environment pathology (JIT starvation, GC spiral,
       // host steal) — name it in the executor log with enough context to
       // localize instead of hanging silently
-      if (trace || wallNs > 30e9) System.err.println(
+      if (wallNs > 30e9) System.err.println(
         f"[kernel-trace] done line=$lineName seqs=${seqs.length} " +
           f"wall=${wallNs / 1e9}%.1f s cpu=${(tmx.getCurrentThreadCpuTime - c0) / 1e9}%.1f s " +
           f"iters=${Dijkstra.Iters.sum()} thread=${Thread.currentThread().getName}")
     }
   }
-
-  /** per-cluster start/done stderr tracing (executor logs) — set
-    * SPARK_GRAFT_KERNEL_TRACE=1; slow solves (> 30 s wall) always log. */
-  private val KernelTrace: Boolean = sys.env.contains("SPARK_GRAFT_KERNEL_TRACE")
 
   private def solveOneImpl(seqKey: String, lineName: String,
                stops: Array[Matcher.TS],

@@ -19,7 +19,10 @@ import org.apache.spark.sql.SparkSession
   *  - best-of-reps per level (bursty steal makes the minimum the
   *    uncontended measurement);
   *  - an efficiency above 1.05 is reported as a HARNESS FAILURE, not a
-  *    result — superlinear scaling from 4x cores is physically implausible.
+  *    result — superlinear scaling from 4x cores is physically implausible;
+  *  - both levels' sessions set spark.default.parallelism to 4N, so the
+  *    salt grain, the fixture slicing and every other parallelism-derived
+  *    default are the large level's at both: one plan, two core counts.
   */
 object ScalingBench {
   /** local-cluster mode: the two "cluster sizes" are REAL executor-process
@@ -49,7 +52,9 @@ object ScalingBench {
     if (clusterMode) s"${math.max(1, cores / CoresPerExecutor)} executors x $CoresPerExecutor cores"
     else s"local[$cores]"
 
-  def session(cores: Int): SparkSession = {
+  /** `parallelism`: spark.default.parallelism, when it must not follow
+    * the core count (a scaling comparison pins it at both levels) */
+  def session(cores: Int, parallelism: Option[Int] = None): SparkSession = {
     val b = SparkSession.builder()
       .appName(s"graft-scaling-$cores")
       // FIXED partition count at both levels (not =cores): tying it to
@@ -84,6 +89,7 @@ object ScalingBench {
       // tmpfs by default, env-gated with disk fallback + wipe-at-start
       // (see Bench.benchLocalDir)
       .config("spark.local.dir", graft.Bench.benchLocalDir())
+    parallelism.foreach(p => b.config("spark.default.parallelism", p.toLong))
     val s = (if (clusterMode) {
       val workers = math.max(1, cores / CoresPerExecutor)
       val memMB = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "6144").toInt
@@ -166,7 +172,8 @@ object ScalingBench {
   }
 
   /** One measured pipeline run: cold caches, warm JIT. */
-  def jobStage(spark: SparkSession, rows: Int, cols: Int, tpr: Int): JobSample = {
+  def jobStage(spark: SparkSession, cores: Int, rows: Int, cols: Int,
+               tpr: Int): JobSample = {
     spark.catalog.clearCache()
     // clearCache() frees SQL-cached plans only — localCheckpoint blocks
     // live as persistent RDDs until the DRIVER garbage-collects the RDD
@@ -230,7 +237,6 @@ object ScalingBench {
     val kCpu =
       if (clusterMode) hc.map(_._2._4).sum / 1e9
       else (graft.router.MatcherKernel.KernelCpuNanos.sum() - kc0) / 1e9
-    val cores = spark.sparkContext.defaultParallelism
     println(st.phases.map { case (k, v) => f"$k=$v%.2f" }
       .mkString(s"[phases cores=$cores] ", " ", "") +
       f" gc_ms=$gcMs groups=$groups kernel_wall=$kWall%.1f kernel_cpu=$kCpu%.1f" +
@@ -401,30 +407,25 @@ object ScalingBench {
       return
     }
 
-    // the scaling comparison holds the salt-grain configuration CONSTANT
-    // across levels (the adaptive 4x-cores default would hand the small
-    // level coarser groups — more trie prefix sharing, fewer cogroup
-    // candidate copies — and the ratio would mix plan change with
-    // resource change). Pinned to the LARGE level's natural value unless
-    // the env already pinned one.
-    if (graft.router.Matcher.TargetGroupsOverride.isEmpty)
-      graft.router.Matcher.TargetGroupsOverride = Some(16L * n)
-
     // ---- job level: interleaved sessions, same JVM (JIT stays warm) ----
     val samples = scala.collection.mutable.Map(n -> Vector.empty[JobSample],
       4 * n -> Vector.empty[JobSample])
     var trips = 0L
     var warmed = false
     def runPair(rep: Int): Unit = for (par <- Seq(n, 4 * n)) {
-      val spark = session(par)
+      // one plan at both levels: an unpinned parallelism hands the small
+      // level a coarser salt grain (more trie prefix sharing, fewer
+      // cogroup candidate copies), and the ratio would mix plan change
+      // with resource change
+      val spark = session(par, Some(4 * n))
       try {
         graft.Bench.runPipeline(spark, 8, 12, 2) // small warm at this shape
         // JIT steady state: one full-size warm-up. In local[] mode the JIT
         // lives in the one shared JVM, so one warm-up serves all sessions;
         // in cluster mode every session spawns FRESH executor JVMs, so
         // each session warms its own executors before being measured.
-        if (clusterMode || !warmed) { jobStage(spark, rows, cols, tpr); warmed = true }
-        val s = jobStage(spark, rows, cols, tpr)
+        if (clusterMode || !warmed) { jobStage(spark, par, rows, cols, tpr); warmed = true }
+        val s = jobStage(spark, par, rows, cols, tpr)
         trips = s.trips
         samples(par) :+= s
         println(f"[job rep $rep] ${spark.sparkContext.master} stage=${s.stage}%.2f s " +
@@ -546,12 +547,13 @@ object ScalingBench {
          |every rep; a rep that overlapped a hypervisor steal burst (>= 3%
          |of all-core time) measures the hypervisor and is excluded from
          |the minima (with up to 2 extra interleaved pairs run if a level
-         |has no clean rep). This run: $stealNote. The salt-grain target
-         |group count is pinned to the large level's natural value at BOTH
-         |levels, so the two levels run the identical logical plan.
+         |has no clean rep). This run: $stealNote. Both levels' sessions
+         |set spark.default.parallelism=${4 * n}, so the salt grain, the
+         |fixture slicing and every parallelism-derived default are the same
+         |at BOTH levels: the two levels run the identical logical plan.
          |
          |Level choice: N is picked so that 4N lies within the host's
-         |MEASURED parallel-capacity envelope (see the CPU-probe section at
+         |MEASURED parallel-capacity envelope (see the CPU probe linked at
          |the bottom — pure-CPU spin work with zero memory traffic). Where
          |the probe itself cannot reach ~4x between two levels, no code on
          |this box can, and a measurement at those levels would grade the
@@ -601,89 +603,18 @@ object ScalingBench {
          |tripsPerRoute=$tpr ($trips matched trips; kernel stage: $nSolves
          |distinct sequence solves on the 48x96/tpr=900 world), seed 42.
          |
-         |## Reading the residual gap (r4 analysis)
+         |## Analysis
          |
-         |Round 4 instrumented the gap to the bottom. What was found, fixed,
-         |and measured:
-         |
-         |1. **ParallelGC adaptive-sizing chaos** — identical back-to-back
-         |   runs varied 16.6 s to 77.2 s on the match stage, tracking
-         |   driver GC (2.5 s to 48 s, with full-GC death-spiral reps at
-         |   116 s). Fixed: generations pinned
-         |   (-XX:-UseAdaptiveSizePolicy -Xmn16g); executor JVMs in cluster
-         |   mode additionally pin -XX:ActiveProcessorCount to their core
-         |   share (by default every executor sized ~23 GC threads for the
-         |   whole box — a thread storm whenever any of 8 JVMs collected).
-         |2. **Allocation-rate hotspots** in the kernel (boxed geometry
-         |   tuples in materialize, HashMap + sort garbage in expandLayer)
-         |   — rewritten on primitive arrays; executor GC in the match
-         |   phase fell ~4x.
-         |3. **Blocking memo stampedes** — HopCache entries and the
-         |   line-surcharge cache serialized concurrent cold-start
-         |   requesters behind one computation (a blocked thread idles its
-         |   core when pool threads == cores). Both now publish-on-first /
-         |   duplicate-in-flight: kernel pools went from 57% to 100%
-         |   non-GC utilization at 32 threads.
-         |4. **Harness artifacts** — per-solve Runnables made the submitting
-         |   thread the serial bottleneck (fixed: 128-solve chunks); the
-         |   kernel stage now runs >= 60 s of genuinely distinct work
-         |   (per-copy perturbed candidate penalties) instead of re-paying
-         |   one cold stampede per batch.
-         |5. **Executor-environment defects the per-phase shuffle/GC split
-         |   localized** (second half of round 4): (a) local-cluster's
-         |   memMB only sizes the WORKER — executors launched at the 1g
-         |   default heap and GC-collapsed at larger worlds (75 s GC in one
-         |   193 s match phase); spark.executor.memory now set explicitly.
-         |   (b) Standalone workers IGNORE spark.local.dir, so executor
-         |   shuffle files landed on the single virtual disk: 157 s
-         |   shuffle-write + 28 s fetch-wait inside ONE match phase at 4
-         |   executors; SPARK_LOCAL_DIRS (tmpfs) is now mandatory in
-         |   cluster mode. (c) Pinning a large executor nursery (-Xmn 2/3
-         |   heap) starved the old gen below Spark's unified-memory demand
-         |   and produced a full-GC death spiral (783 s GC in one phase) —
-         |   the default 1/3 nursery is correct because cached blocks are
-         |   old-gen residents. (d) The synthetic stop_times fixture was
-         |   driver-serialized into 100 MB parallelize tasks inside the
-         |   measured phase — now regenerated executor-side from the slim
-         |   trips table. (e) Host steal bursts (up to ~18% of all cores
-         |   for minutes) poisoned whole reps; reps now sample /proc/stat
-         |   and contaminated reps are excluded (screening note above).
-         |   (f) The adaptive salt grain handed the two levels different
-         |   plans; the scaling run pins the grain (note above).
-         |
-         |What remains, with the measurement that names it: the matching
-         |KERNEL's CPU is flat across levels (MatchDiag: 20.0 s vs 21.0 s
-         |of thread CPU at local[8] vs local[32], identical Dijkstra
-         |iteration counts and hop-cache hit rates) — the algorithm does
-         |fixed work and is scale-clean. The phase wall above that CPU is
-         |bulk data movement: candidate/sequence cogroup shuffle, solved-
-         |payload serialization, the 10^7-row point explode and cache.
-         |Those operators move bytes, and the host's aggregate memory
-         |bandwidth saturates well below 32 active threads (see the
-         |memory-streaming probe below — the same box that scales
-         |register-only work at 0.90+ to 32 threads). On a real cluster
-         |the bandwidth axis scales with executor COUNT (each machine
-         |brings its own memory controllers and local disks); inside one
-         |box it cannot, whichever mode (local[] threads or local-cluster
-         |executor processes) is used. The cluster-mode numbers above are
-         |therefore the faithful per-heap/per-GC picture, with the box's
-         |single memory subsystem as the shared, quantified ceiling.
+         |The hand-written reading of these numbers (the r4 residual gap,
+         |the choice of level pair, root causes) is in
+         |[ANALYSIS.md](ANALYSIS.md); the host's parallel-capacity probe
+         |(`tools.CpuProbe`) is in [cpuprobe.md](cpuprobe.md).
          |""".stripMargin
+    // hand-written analysis lives in BENCH/ANALYSIS.md (linked above), so
+    // a regeneration can never destroy it
     val dir = java.nio.file.Paths.get("BENCH")
     java.nio.file.Files.createDirectories(dir)
-    // hand-written root-cause / architecture analysis lives in
-    // BENCH/ANALYSIS.md so a regeneration can never destroy it (the r5
-    // run overwrote four committed analysis sections before this existed);
-    // host-capacity context (CpuProbe writes BENCH/cpuprobe.md) appended
-    // last so the efficiency numbers are read against the measured ceiling
-    val analysis = dir.resolve("ANALYSIS.md")
-    val probe = dir.resolve("cpuprobe.md")
-    val mdFull = md +
-      (if (java.nio.file.Files.exists(analysis))
-        "\n" + java.nio.file.Files.readString(analysis) else "") +
-      (if (java.nio.file.Files.exists(probe))
-        "\n" + java.nio.file.Files.readString(probe) else "")
-    java.nio.file.Files.writeString(dir.resolve("BASELINE.md"), mdFull)
+    java.nio.file.Files.writeString(dir.resolve("BASELINE.md"), md)
     println(md)
     val valid = eff <= 1.05 && kEff <= 1.05
     println(f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","valid":$valid,"eff_adj":$effAdj%.3f,"floor_n":$floorN%.2f,"floor_4n":$floor4N%.2f,"t_n":$tN%.2f,"t_4n":$t4N%.2f,"kernel_eff":$kEff%.3f,"kernel_t_n":$kN%.2f,"kernel_t_4n":$k4N%.2f,"kernel_cpu_ratio":$cpuRatio%.2f,"n":$n,"trips":$trips}""")

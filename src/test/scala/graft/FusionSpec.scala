@@ -190,8 +190,7 @@ object PriorPlans {
     val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
     val clLocal = spark.createDataFrame(
       spark.sparkContext.parallelize(clRows.toIndexedSeq, 1), clCounts.schema)
-    val targetGroups = Matcher.TargetGroupsOverride.getOrElse(
-      math.max(1L, 4L * spark.sparkContext.defaultParallelism))
+    val targetGroups = math.max(1L, 4L * spark.sparkContext.defaultParallelism)
     val grain = math.max(Matcher.MaxSeqsPerGroup.toLong,
       (totalSeqs + targetGroups - 1) / targetGroups).toDouble
     val saltedKeys = slimKeys.join(broadcast(clLocal), Seq("c_line", "c_stop"))
