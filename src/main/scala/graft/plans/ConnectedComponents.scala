@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.graftbridge.StoredBlocks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,19 +10,6 @@ import org.apache.spark.sql.functions._
   * driver-side union-find on the collected broadcast graph; this operator
   * is the scale path for graphs too large to collect. */
 object ConnectedComponents {
-
-  /** The RDD a localCheckpoint actually persisted: Dataset.unpersist goes
-    * through the CacheManager, which does NOT track checkpoint blocks, so
-    * freeing a consumed round's state needs the LogicalRDD's own RDD.
-    * Without this, every round's step1/newLabels blocks (O(V) each) lived
-    * until the ContextCleaner happened to GC the dropped references — at
-    * 10^9-node graphs that is rounds x label-table of block storage held
-    * for the whole run. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 
   /** edges(a, b) undirected -> (node, comp) with comp = min reachable id.
     * Convergence (changed == 0) is guaranteed within maxRounds for
@@ -62,16 +50,21 @@ object ConnectedComponents {
       changed = newLabels.as("n").join(labels.as("o"), Seq("node"))
         .filter(col("n.comp") =!= col("o.comp")).count()
       // after the count, newLabels holds the round's whole state: free the
-      // consumed inputs at block level — the Dataset-level unpersist (kept
-      // for the round-0 cached labels) is a no-op for checkpoint blocks.
-      // Invariant: the `changed` count above has fully materialized
-      // newLabels before step1 and labels are freed. Their checkpoints cut
-      // the lineage, so a freed block cannot be recomputed: moving or
-      // deferring that count (or reading newLabels' inputs after this
-      // point) turns a lost block into a failed job instead of a recompute.
+      // consumed inputs at block level (the Dataset-level unpersist, kept
+      // for the round-0 cached labels, is a no-op for checkpoint blocks).
+      // Their checkpoints cut the lineage, so a freed block cannot be
+      // recomputed: every newLabels partition must be stored first.
+      // Without this, every round's step1/newLabels blocks (O(V) each) live
+      // until the ContextCleaner collects the dropped references.
+      val cp = Boundary.checkpointRdd(newLabels).get
+      val stored = StoredBlocks(cp)
+      val missing = cp.partitions.indices.filterNot(stored.contains)
+      require(missing.isEmpty, s"ConnectedComponents round $round: newLabels must be " +
+        s"fully stored before its inputs are freed; partitions ${missing.mkString(",")} " +
+        "have no block")
       labels.unpersist()
-      checkpointRdd(labels).foreach(_.unpersist(false))
-      checkpointRdd(step1).foreach(_.unpersist(false))
+      Boundary.checkpointRdd(labels).foreach(_.unpersist(false))
+      Boundary.checkpointRdd(step1).foreach(_.unpersist(false))
       labels = newLabels
       round += 1
     }

@@ -30,18 +30,6 @@ object GraftQueries {
   private def read(s: SparkSession, dir: String, t: String): DataFrame =
     ParquetTables.read(s, s"$dir/$t.parquet")
 
-  /** Final presentation sort behind a materialization boundary: orderBy
-    * plans a RangePartitioning exchange whose partition bounds come from
-    * SAMPLING THE CHILD — and a child with no shuffle/materialization
-    * boundary below it is executed twice, once for the sample pass and
-    * once for the sort's own shuffle (measured ~2x wall on the
-    * scan-rooted catalog queries; same-session A/B on q_dist_join:
-    * plain orderBy 0.87 s, round-robin-repartition-then-sort 0.75, this
-    * form 0.63). The deferred boundary materializes the (small, final)
-    * result on the sampling pass and the sort reads the blocks back. */
-  private def sortedBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    Boundary.deferred(df).orderBy(cols: _*)
-
   // ---- derived deterministic geo points (same formula in SQL) ----
   // Multiplicative scatter over lat [-45, 45), lon [-90, 90): dense,
   // pseudo-uniform, 0.01-degree granularity — every spatial join below
@@ -97,7 +85,7 @@ object GraftQueries {
           sum(round($"l_extendedprice" * 100).cast("long")).as("sum_price_cents"),
           sum(round($"l_discount" * 100).cast("long")).as("sum_disc_pct"),
           count(lit(1)).as("n"))
-        .transform(sortedBy(_, $"l_returnflag", $"l_linestatus"))
+        .transform(Boundary.sorted(_, $"l_returnflag", $"l_linestatus"))
     },
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
@@ -115,7 +103,7 @@ object GraftQueries {
         .groupBy($"n_name")
         .agg(count(lit(1)).as("n_orders"),
           sum(round($"o_totalprice" * 100).cast("long")).as("revenue_cents"))
-        .transform(sortedBy(_, $"n_name"))
+        .transform(Boundary.sorted(_, $"n_name"))
     },
       """SELECT n_name, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -146,7 +134,7 @@ object GraftQueries {
         .withColumn("rk", row_number().over(w))
         .filter($"rk" <= 3)
         .select($"o_custkey", $"o_orderkey", $"rk".cast("long").as("rk"))
-        .transform(sortedBy(_, $"o_custkey", $"rk"))
+        .transform(Boundary.sorted(_, $"o_custkey", $"rk"))
     },
       """SELECT o_custkey, o_orderkey, CAST(rk AS BIGINT) AS rk FROM (
         |  SELECT o_custkey, o_orderkey,
@@ -207,7 +195,7 @@ object GraftQueries {
       custPoints(s, dir)
         .groupBy(gcellParent(gcell($"lat", $"lon", 12), 6).as("cell_r6"))
         .agg(count(lit(1)).as("n"))
-        .transform(sortedBy(_, $"cell_r6"))
+        .transform(Boundary.sorted(_, $"cell_r6"))
     },
       s"""WITH pts AS ($custPointsSql)
          |SELECT (CAST(6 AS BIGINT) * 288230376151711744) +
@@ -226,7 +214,7 @@ object GraftQueries {
         .select($"c_custkey", explode(kring(gcell($"lat", $"lon", 6), 1)).as("cell"))
       cu.join(broadcast(su), Seq("cell"))
         .select($"c_custkey", $"s_suppkey", $"cell")
-        .transform(sortedBy(_, $"c_custkey", $"s_suppkey", $"cell"))
+        .transform(Boundary.sorted(_, $"c_custkey", $"s_suppkey", $"cell"))
     },
       // away from poles/antimeridian the k-ring is cell + dr*2^29 + dc
       s"""WITH su AS ($suppPointsSql), cu AS ($custPointsSql),
@@ -257,7 +245,7 @@ object GraftQueries {
         .withColumn("dist_km", round(haversineM($"lat", $"lon", $"slat", $"slon") / 1000.0, 2))
         .filter($"dist_km" <= 500.0)
         .select($"c_custkey", $"s_suppkey", $"dist_km")
-        .transform(sortedBy(_, $"c_custkey", $"s_suppkey"))
+        .transform(Boundary.sorted(_, $"c_custkey", $"s_suppkey"))
     },
       // away from poles/antimeridian the k-ring is cell + dr*2^29 + dc
       s"""WITH su AS ($suppPointsSql), cu AS ($custPointsSql),
@@ -337,7 +325,7 @@ object GraftQueries {
         labels = labels.unionByName(viaNeighbors)
           .groupBy($"node").agg(min($"comp").as("comp"))
       }
-      sortedBy(labels, $"node")
+      Boundary.sorted(labels, $"node")
     },
       """WITH RECURSIVE edges AS (
         |  SELECT CAST(n_nationkey AS BIGINT) AS a, CAST(n_regionkey AS BIGINT) + 100 AS b FROM nation
@@ -361,7 +349,7 @@ object GraftQueries {
         .groupBy($"bucket", $"event_type")
         .agg(count(lit(1)).as("n"),
           sum(round($"value" * 100).cast("long")).as("sum_value_cents"))
-        .transform(sortedBy(_, $"bucket", $"event_type"))
+        .transform(Boundary.sorted(_, $"bucket", $"event_type"))
     },
       """SELECT CAST(floor(epoch_us(ts) / 300000000) AS BIGINT) AS bucket, event_type,
         |  count(*) AS n,
@@ -378,7 +366,7 @@ object GraftQueries {
             .otherwise(0L))
         .groupBy($"user_id")
         .agg(sum($"new_sess").as("n_sessions"), count(lit(1)).as("n_events"))
-        .transform(sortedBy(_, $"user_id"))
+        .transform(Boundary.sorted(_, $"user_id"))
     },
       """SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
         |  SELECT user_id,
@@ -459,7 +447,7 @@ object GraftQueries {
         .select($"doc_id", B.column(graft.functions.GramFingerprint(
           B.expression(TextOps.bigramHashes($"text", distinct = false)),
           1000000007L)).as("fingerprint"))
-        .transform(sortedBy(_, $"doc_id"))
+        .transform(Boundary.sorted(_, $"doc_id"))
     },
       s"""$bigramWith
          |SELECT doc_id,
@@ -473,7 +461,7 @@ object GraftQueries {
   val dedup: Map[String, (Q, String)] = Map(
     "q_dedup_exact" -> q((s: SparkSession, dir: String) => {
       import s.implicits._
-      sortedBy(DedupOps.exact(read(s, dir, "documents")), $"canonical_id")
+      Boundary.sorted(DedupOps.exact(read(s, dir, "documents")), $"canonical_id")
     },
       """SELECT min(doc_id) AS canonical_id, count(*) AS n_dups
         |FROM documents GROUP BY text ORDER BY 1""".stripMargin),
@@ -482,7 +470,7 @@ object GraftQueries {
       // DF-capped (grams in > 10% of docs dropped — the hot-gram k^2
       // self-join cut; identical cut in the oracle CTE), threshold 0.5
       import s.implicits._
-      sortedBy(DedupOps.ngramJaccard(read(s, dir, "documents"), 0.5), $"a", $"b")
+      Boundary.sorted(DedupOps.ngramJaccard(read(s, dir, "documents"), 0.5), $"a", $"b")
     },
       s"""$bigramWith,
          |gh AS (SELECT DISTINCT doc_id, ${TextOps.Sql.gramHash} AS h FROM grams),
@@ -505,7 +493,7 @@ object GraftQueries {
       import s.implicits._
       DedupOps.minhash(read(s, dir, "documents"))
         .select($"doc_id", $"j".cast("long").as("j"), $"mh")
-        .transform(sortedBy(_, $"doc_id", $"j"))
+        .transform(Boundary.sorted(_, $"doc_id", $"j"))
     },
       s"""$bigramWith,
          |gh AS (SELECT DISTINCT doc_id, ${TextOps.Sql.gramHash} AS h FROM grams),
@@ -516,7 +504,7 @@ object GraftQueries {
 
     "q_minhash_lsh" -> q((s: SparkSession, dir: String) => {
       import s.implicits._
-      sortedBy(DedupOps.minhashLsh(read(s, dir, "documents")), $"a", $"b")
+      Boundary.sorted(DedupOps.minhashLsh(read(s, dir, "documents")), $"a", $"b")
     },
       s"""$bigramWith,
          |gh AS (SELECT DISTINCT doc_id, ${TextOps.Sql.gramHash} AS h FROM grams),
@@ -533,7 +521,7 @@ object GraftQueries {
 
     "q_simhash" -> q((s: SparkSession, dir: String) => {
       import s.implicits._
-      sortedBy(DedupOps.simhash(read(s, dir, "documents")), $"doc_id")
+      Boundary.sorted(DedupOps.simhash(read(s, dir, "documents")), $"doc_id")
     },
       {
         val bitsSql = (0 until 16).map { k =>
@@ -552,7 +540,7 @@ object GraftQueries {
       // ~0.47) yields a non-trivial result set — r1's 0.93 threshold with
       // id-window blocking passed on provably-empty output
       import s.implicits._
-      sortedBy(DedupOps.embeddingCosine(read(s, dir, "embeddings"), 0.25), $"a", $"b")
+      Boundary.sorted(DedupOps.embeddingCosine(read(s, dir, "embeddings"), 0.25), $"a", $"b")
     },
       """WITH RECURSIVE comp AS (
         |  SELECT vec_id, idx.i - 1 AS i, CAST(embedding[idx.i] AS DOUBLE) AS v
@@ -589,7 +577,7 @@ object GraftQueries {
       val emb = read(s, dir, "embeddings")
       AnnOps.bruteForceTopK(emb.filter($"vec_id" < 5), emb, 3)
         .select($"q", $"neighbor", $"rank".cast("long").as("rank"), $"cos")
-        .transform(sortedBy(_, $"q", $"rank"))
+        .transform(Boundary.sorted(_, $"q", $"rank"))
     },
       """WITH comp AS (
         |  SELECT vec_id, idx.i AS i, CAST(embedding[idx.i] AS DOUBLE) AS v
@@ -613,7 +601,7 @@ object GraftQueries {
       import s.implicits._
       AnnOps.lshBuckets(read(s, dir, "embeddings"), 8)
         .groupBy($"bucket").agg(count(lit(1)).as("n"))
-        .transform(sortedBy(_, $"bucket"))
+        .transform(Boundary.sorted(_, $"bucket"))
     },
       """WITH RECURSIVE comp AS (
         |  SELECT vec_id, idx.i - 1 AS i, CAST(embedding[idx.i] AS DOUBLE) AS v
@@ -632,7 +620,7 @@ object GraftQueries {
       import s.implicits._
       AnnOps.lshTopK(read(s, dir, "embeddings"), 8, 3)
         .select($"q", $"neighbor", $"rank".cast("long").as("rank"), $"cos")
-        .transform(sortedBy(_, $"q", $"rank"))
+        .transform(Boundary.sorted(_, $"q", $"rank"))
     },
       """WITH RECURSIVE comp AS (
         |  SELECT vec_id, idx.i - 1 AS i, CAST(embedding[idx.i] AS DOUBLE) AS v
@@ -671,7 +659,7 @@ object GraftQueries {
       import s.implicits._
       AnnOps.ivfAssign(read(s, dir, "embeddings"), 16)
         .groupBy($"list_id").agg(count(lit(1)).as("n"))
-        .transform(sortedBy(_, $"list_id"))
+        .transform(Boundary.sorted(_, $"list_id"))
     },
       s"""$ivfAssignWith
          |SELECT list_id, count(*) AS n FROM assign GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -683,7 +671,7 @@ object GraftQueries {
       val emb = read(s, dir, "embeddings")
       AnnOps.ivfTopK(emb.filter($"vec_id" < 5), emb, 16, 4, 3)
         .select($"q", $"neighbor", $"rank".cast("long").as("rank"), $"cos")
-        .transform(sortedBy(_, $"q", $"rank"))
+        .transform(Boundary.sorted(_, $"q", $"rank"))
     },
       s"""$ivfAssignWith,
          |probes AS (

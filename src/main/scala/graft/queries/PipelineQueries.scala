@@ -8,7 +8,7 @@ import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.images.ImageFixtures
 import graft.osm.{ColorOps, GraphBuilder, OsmConfig}
 import graft.overlay.ImageOverlay
-import graft.plans.Snapshots
+import graft.plans.{Boundary, Snapshots}
 import graft.router.{CompactGraph, Matcher}
 
 /** The map-matching / overlay / eval pipeline exposed as driver queries.
@@ -115,7 +115,7 @@ object PipelineQueries {
         .select($"shape_id", $"seq".cast("long").as("seq"),
           round($"lat", 7).as("lat"), round($"lng", 7).as("lng"),
           round($"travel_dist", 1).cast("double").as("travel_dist"))
-        .orderBy($"shape_id", $"seq")
+        .transform(Boundary.sorted(_, $"shape_id", $"seq"))
     }),
     // shapevl accuracy scores per trip
     "q_shapevl_scores" -> ((s: SparkSession, _: String) => {
@@ -126,14 +126,14 @@ object PipelineQueries {
           round($"avg_fd", 1).cast("double").as("avg_fd"),
           $"n_segs".cast("long").as("n_segs"),
           $"skipped".cast("long").as("skipped"))
-        .orderBy($"trip_id")
+        .transform(Boundary.sorted(_, $"trip_id"))
     }),
     // raster->vector tile assignments
     "q_tile_assign" -> ((s: SparkSession, _: String) => {
       import s.implicits._
       artifacts(s).assigned
         .select($"image_id", $"shape_id", $"cell".cast("long").as("cell"))
-        .orderBy($"image_id", $"shape_id")
+        .transform(Boundary.sorted(_, $"image_id", $"shape_id"))
     }),
     // payload verification stats (input_hint invariant)
     "q_tile_verify" -> ((s: SparkSession, _: String) => {
@@ -144,7 +144,7 @@ object PipelineQueries {
           sum(when($"psnr_ok", 1L).otherwise(0L)).as("n_psnr_ok"),
           sum(when($"phash_ok", 1L).otherwise(0L)).as("n_phash_ok"),
           sum(when($"caption_ok", 1L).otherwise(0L)).as("n_caption_ok"))
-        .orderBy($"fmt")
+        .transform(Boundary.sorted(_, $"fmt"))
     }),
     // A8: per-trip voted line color (coverage-weighted)
     "q_color_vote" -> ((s: SparkSession, _: String) => {
@@ -152,7 +152,7 @@ object PipelineQueries {
       artifacts(s).tripColors
         .select($"trip_id", $"color".cast("long").as("color"),
           round($"coverage", 4).cast("double").as("coverage"))
-        .orderBy($"trip_id")
+        .transform(Boundary.sorted(_, $"trip_id"))
     }),
     // A7: consolidated route colors (route splits as route_id::N)
     "q_route_colors" -> ((s: SparkSession, _: String) => {
@@ -160,7 +160,7 @@ object PipelineQueries {
       artifacts(s).routeColors
         .select($"route_id", $"new_route_id", $"color".cast("long").as("color"),
           $"text_color".cast("long").as("text_color"))
-        .orderBy($"route_id", $"new_route_id")
+        .transform(Boundary.sorted(_, $"route_id", $"new_route_id"))
     }))
 
   /** INDEPENDENT invariant oracles for the six VALUES-golden queries. The

@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * job number buried in fixed overhead):
   *  - the world is sized so the measured stages run >= 60 s at local[N],
   *    amortizing Spark's fixed stage overhead;
-  *  - N and 4N runs are INTERLEAVED (rep 1: N, 4N; rep 2: N, 4N; ...) so
-  *    host-level drift (CPU steal bursts) cannot bias one level;
+  *  - N and 4N runs are INTERLEAVED, the first level alternating by rep
+  *    (rep 1: N, 4N; rep 2: 4N, N; ...), so neither host-level drift (CPU
+  *    steal bursts) nor leftover warm-up lands on one level only;
   *  - one full-size warm-up run precedes measurement (same JVM: JIT stays
   *    hot across Spark sessions); caches (Spark + hop memo) are cleared
   *    before every measured run;
@@ -260,7 +261,8 @@ object ScalingBench {
   }
 
   /** Kernel-only scaling: the same distinct-sequence solves through fixed
-    * thread pools at n and 4n threads, interleaved, cold hop memo each run.
+    * thread pools at n and 4n threads, interleaved with the first level
+    * alternating by rep, cold hop memo each run.
     * Also reports per-solve CPU time at each level — if those differ the
     * measurement is a JIT/memo artifact, not scaling. */
   def kernelScaling(n: Int, reps: Int): (Double, Double, Int, Double, Double) = {
@@ -371,14 +373,20 @@ object ScalingBench {
     // precompute the perturbed candidate maps OUTSIDE the measured region
     val allMaps = Array.tabulate(batches)(perturbed)
     val pairs = (1 to reps).map { i =>
-      val (an, acn) = runPool(n, batches, allMaps)
-      val (a4, ac4) = runPool(4 * n, batches, allMaps)
+      val run = levelsInOrder(n, i).map(par => par -> runPool(par, batches, allMaps)).toMap
+      val (an, acn) = run(n)
+      val (a4, ac4) = run(4 * n)
       println(f"[kernel rep $i] t_n=$an%.2f (cpu $acn%.1f) t_4n=$a4%.2f (cpu $ac4%.1f)")
       (an, a4, acn, ac4)
     }
     (pairs.map(_._1).min, pairs.map(_._2).min, seqs.length * batches,
       pairs.map(_._3).min, pairs.map(_._4).min)
   }
+
+  /** The two levels in the order rep `rep` runs them: N first on odd reps,
+    * 4N first on even ones. */
+  def levelsInOrder(n: Int, rep: Int): Seq[Int] =
+    if (rep % 2 == 1) Seq(n, 4 * n) else Seq(4 * n, n)
 
   def validity(eff: Double): String =
     if (eff > 1.05) "HARNESS FAILURE: superlinear (> 1.05) — measurement artifact"
@@ -412,7 +420,7 @@ object ScalingBench {
       4 * n -> Vector.empty[JobSample])
     var trips = 0L
     var warmed = false
-    def runPair(rep: Int): Unit = for (par <- Seq(n, 4 * n)) {
+    def runPair(rep: Int): Unit = for (par <- levelsInOrder(n, rep)) {
       // one plan at both levels: an unpinned parallelism hands the small
       // level a coarser salt grain (more trie prefix sharing, fewer
       // cogroup candidate copies), and the ratio would mix plan change
@@ -533,10 +541,11 @@ object ScalingBench {
           else s"local[$n] vs local[${4 * n}] cores (one shared JVM heap — " +
             "note the 4N level pays 4x the allocation rate into one " +
             "collector, a distortion real clusters do not have)"}.
-         |Methodology: interleaved N/4N reps (steal bursts cannot bias one
-         |level), one full-size JIT warm-up before measurement, caches cold
-         |per run, per-PHASE best-of-$reps per level (the host's intermittent
-         |multi-10 s external stalls hit one random phase of a run; phase
+         |Methodology: interleaved N/4N reps, the first level alternating by
+         |rep (steal bursts cannot bias one level), one full-size JIT warm-up
+         |before measurement, caches cold per run, per-PHASE best-of-$reps
+         |per level (the host's intermittent multi-10 s external stalls hit
+         |one random phase of a run; phase
          |minima over interleaved reps are the uncontended measurements and
          |the stage figure is their sum). Shuffle/checkpoint blocks live on
          |tmpfs: the sandbox has one shared virtual disk, while a real

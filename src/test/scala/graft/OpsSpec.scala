@@ -73,6 +73,12 @@ class PlansSpec extends AnyFunSuite {
     assert(leaked.size <= 1, s"per-round checkpoint blocks leaked: $leaked")
   }
 
+  test("connected components of an empty edge set: no labels") {
+    // a round whose count has nothing to read must still find every
+    // partition of its new labels stored before freeing the old ones
+    assert(ConnectedComponents.run(Seq.empty[(Long, Long)].toDF("a", "b")).count() == 0)
+  }
+
   test("snapshots: stage computes once, resumes from manifest") {
     val dir = java.nio.file.Files.createTempDirectory("snap").toString
     var computes = 0

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,10 +66,41 @@ class PlanShapeSpec extends AnyFunSuite {
   audit("q_dedup_exact", Seq("HashAggregate"), allPairs :+ "SortMergeJoin")
   // doc-table text ops are scans + projections: no shuffle operators
   audit("q_lang_id", Seq("ReadSchema"), Seq("Exchange") ++ allPairs)
-  // in-row signatures since r6: the only exchange left in
-  // q_fingerprint/q_simhash is the final presentation sort
-  audit("q_fingerprint", Seq("gram_fingerprint", "ReadSchema"), allPairs)
-  audit("q_simhash", Seq("simhash_bits", "ReadSchema"), allPairs)
+  // in-row signatures, and a small result's presentation sort runs in one
+  // task (`Boundary.sorted`): no exchange at all
+  audit("q_fingerprint", Seq("gram_fingerprint", "ReadSchema"), Seq("Exchange") ++ allPairs)
+  audit("q_simhash", Seq("simhash_bits", "ReadSchema"), Seq("Exchange") ++ allPairs)
+
+  // matched on the Exchange node, not the bare partitioning name: an
+  // ExistingRDD scan prints the partitioning its child preserved, which
+  // can itself be rangepartitioning
+  test("Boundary.sorted: one task below the advisory size, a range sort above it") {
+    import spark.implicits._
+    val df = spark.range(0, 20000, 1, 8).select(($"id" * 7919 % 20000).as("k"), $"id")
+    val expected = df.orderBy($"k", $"id").collect().toSeq
+    def sortedRun(): (String, Seq[Row], Int) = {
+      var out: DataFrame = null
+      var rows: Seq[Row] = null
+      val plans = ExecutedPlans(spark) {
+        out = Boundary.sorted(df, $"k", $"id")
+        rows = out.collect().toSeq
+      }.mkString("\n")
+      (plans, rows, out.rdd.getNumPartitions)
+    }
+    val (plans, rows, parts) = sortedRun()
+    assert(!plans.contains("Exchange"), plans.take(4000))
+    assert(parts == 1)
+    assert(rows == expected)
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "4k")
+    try {
+      val (plans, rows, _) = sortedRun()
+      val rangeExchange = """\) Exchange\s+Input [^\n]*\n\s*Arguments: rangepartitioning""".r
+      assert(rangeExchange.findFirstIn(plans).isDefined, plans.take(4000))
+      assert(rows == expected)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("an all-pairs operator behind a boundary shows in the executed plans, not the static one") {
     import spark.implicits._
