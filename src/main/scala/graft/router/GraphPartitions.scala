@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * (or the merged graph of several bins) is bit-identical to solving it
   * against the full graph — components are closed under adjacency and the
   * deterministic (cost, dense-index) tie-break preserves relative order.
-  * Matcher.BinBlockPartitioner co-locates each bin's solver groups on few
+  * Matcher.BinBlockPlacement co-locates each bin's solver groups on few
   * executors; with lazy fetch this is an optimization, not a correctness
   * requirement.
   */

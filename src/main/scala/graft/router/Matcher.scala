@@ -389,15 +389,10 @@ object Matcher {
   case class TS(seq: Int, stop_id: String, arr_s: Int, dep_s: Int,
                 lat: Double, lng: Double)
 
-  def solveKeyedSeqs(spark: SparkSession, keyed: DataFrame, cands: DataFrame,
-                     graph: CompactGraph, cfg: OsmConfig): DataFrame =
-    solveKeyedSeqs(spark, keyed, cands, GraphPartitions.build(spark, graph), cfg)
-
-  /** Partitioned variant: the graph ships as per-component-bin broadcasts
-    * (GraphPartitions); each solver task resolves only the bins its
-    * candidate edges touch — at continental scale no executor ever holds
-    * the full graph. Single-bin partitionings degrade to exactly the old
-    * full-graph broadcast. */
+  /** The graph ships as per-component-bin broadcasts (GraphPartitions);
+    * each solver task resolves only the bins its candidate edges touch — at
+    * continental scale no executor ever holds the full graph. A single-bin
+    * partitioning is the full-graph broadcast. */
   def solveKeyedSeqs(spark: SparkSession, keyed: DataFrame, cands: DataFrame,
                      parts: GraphPartitions, cfg: OsmConfig): DataFrame = {
     import spark.implicits._
@@ -432,94 +427,73 @@ object Matcher {
       .drop("t0")
 
     val in = solverInputs(spark, distinctSeqs, cands)
-    val (seqRows, candRows) = (in.seqRows, in.candRows)
-    val hasBin = cands.columns.contains("bin")
     val clToNamesB = spark.sparkContext.broadcast(in.toNames)
 
-    def solveGroup(key: (String, String, Int),
-                   rows: Array[(String, String, Int, String, Seq[Matcher.TS], String)],
-                   candArr: Array[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]):
-        Iterator[SolvedSeq] = {
+    def solveGroup(key: (String, String, Int), rows: Array[SolverSeq],
+                   candArr: Array[SolverCand]): Iterator[SolvedSeq] = {
       val line = key._1
       val candMap: Map[String, Array[(Long, Double, Long, Double, Double, Int)]] =
-        candArr.groupBy(_._4).map { case (k, v) =>
-          k -> v.map(c => (c._5, c._6, c._7, c._8, c._9, c._10))
+        candArr.groupBy(_.stop_id).map { case (k, v) =>
+          k -> v.map(c => (c.edge_id, c.progr, c.pen10, c.py, c.px, c.oneway))
         }
       // only the graph bins this cluster's candidates touch are fetched
-      val g = if (parts.fileMode) parts.resolveByBinIds(candArr.map(_._11))
-              else parts.resolve(candArr.map(_._5))
+      val g = if (parts.fileMode) parts.resolveByBinIds(candArr.map(_.bin))
+              else parts.resolve(candArr.map(_.edge_id))
       // G2 routing attrs of this cluster: one lineFrom (same first stop
       // by construction), the PHYSICAL cluster's full lineTo set (shared
       // across salted sub-groups — one RoutingAttrs identity per cluster)
-      val fromName = rows.headOption.map(_._6).getOrElse("")
+      val fromName = rows.headOption.map(_.from_name).getOrElse("")
       val toNames = rows.headOption.map(_ => clToNamesB.value((key._1, key._2)))
         .getOrElse(Array.empty[String])
       MatcherKernel.solveCluster(line, fromName, toNames,
-        rows.map(r => (r._4, r._5.toArray)), g, candMap,
+        rows.map(r => (r.seq_key, r.stops.toArray)), g, candMap,
         cfgB.value).iterator
     }
 
     // BIN-AWARE LOCALITY (multi-bin partitionings with tagged candidates):
-    // the default hash shuffle scatters every bin's solver groups across
-    // every executor, so each executor ends up fetching nearly every bin.
-    // Here same-bin groups are routed into a contiguous partition block
-    // sized by the bin's GROUP count (work-proportional, so a dominant
-    // bin keeps its parallelism) — an executor then holds tasks of few
-    // distinct bins and its fetched-bin bytes approach its bins' sizes
-    // instead of the whole graph. Keys are unchanged; only placement
-    // differs, so results are partitioner-invariant.
-    val useLocality = hasBin && parts.bins.length > 1
-    if (!useLocality) {
-      // grouped on the key COLUMNS (no per-row key function: no key
-      // serializer and row joiner to generate per side)
-      val seqsDs = seqRows.toDF().groupBy($"c_line", $"c_stop", $"salt")
-        .as[(String, String, Int), (String, String, Int, String, Seq[Matcher.TS], String)]
-      val clusterCands = candRows.toDF().groupBy($"c_line", $"c_stop", $"salt")
-        .as[(String, String, Int),
-          (String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]
-      // cogroup: a sequence whose stops ALL lack candidates still arrives
-      // (with an empty candidate side) and is solved via the null-candidate
-      // fallback, never silently dropped.
-      seqsDs.cogroup(clusterCands) {
-        (key: (String, String, Int),
-         seqIt: Iterator[(String, String, Int, String, Seq[Matcher.TS], String)],
-         candIt: Iterator[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]) =>
-          solveGroup(key, seqIt.toArray, candIt.toArray)
+    // a hash placement scatters every bin's solver groups across every
+    // executor, so each executor ends up fetching nearly every bin. The
+    // placement routes same-bin groups into a contiguous partition block
+    // sized by the bin's GROUP count (work-proportional, so a dominant bin
+    // keeps its parallelism) — an executor then holds tasks of few distinct
+    // bins and its fetched-bin bytes approach its bins' sizes instead of
+    // the whole graph. Primary bin per group: max (an untagged -1 loses to
+    // any real bin); one row per GROUP, the bounded cardinality of clRows.
+    // Without tags or with one bin the map is empty (no job) and the same
+    // placement is a plain hash.
+    val groupBin: Map[(String, String, Int), Int] =
+      if (!cands.columns.contains("bin") || parts.bins.length <= 1) Map.empty
+      else in.candRows.groupBy($"c_line", $"c_stop", $"salt").agg(max($"bin"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)) -> r.getInt(3))
+        .toMap
+    // FEW, FAT partitions (≈ one per bin, floor = core count): Spark hands
+    // tasks to executors by slot availability, so a bin spread over many
+    // small partitions reaches many executors no matter how contiguously
+    // the blocks are laid out. With ~1 partition per bin an executor
+    // fetches one bin per partition it takes.
+    val place = new BinBlockPlacement(
+      math.max(spark.sparkContext.defaultParallelism, parts.bins.length), parts.bins.length,
+      groupBin.values.filter(_ >= 0).groupBy(identity).map { case (b, xs) => (b, xs.size) })
+    val groupBinB = spark.sparkContext.broadcast(groupBin)
+    val pid = udf((l: String, s: String, salt: Int) =>
+      place((l, s, salt), groupBinB.value.getOrElse((l, s, salt), -1)))
+    // the placement is a column both sides are repartitioned by; pid is a
+    // function of the group key, so grouping on (pid, key) keeps the groups
+    // and the id-passthrough partitioning satisfies the cogroup with no
+    // second exchange. The values resolve by name, so pid stays out of them.
+    def placed(ds: Dataset[_]) = ds.toDF()
+      .withColumn("pid", pid($"c_line", $"c_stop", $"salt"))
+      .repartitionById(place.n, $"pid")
+      .groupBy($"pid", $"c_line", $"c_stop", $"salt")
+    // cogroup: a sequence whose stops ALL lack candidates still arrives
+    // (with an empty candidate side) and is solved via the null-candidate
+    // fallback, never silently dropped.
+    placed(in.seqRows).as[(Int, String, String, Int), SolverSeq]
+      .cogroup(placed(in.candRows).as[(Int, String, String, Int), SolverCand]) {
+        (key, seqIt, candIt) =>
+          if (seqIt.isEmpty) Iterator.empty
+          else solveGroup((key._2, key._3, key._4), seqIt.toArray, candIt.toArray)
       }.toDF()
-    } else {
-      // primary bin per solver group (max: an untagged -1 loses to any
-      // real bin); one row per GROUP — same bounded cardinality as clRows
-      val groupBin = candRows
-        .groupByKey { case (line, stop0, salt, _, _, _, _, _, _, _, _) => (line, stop0, salt) }
-        .mapValues(_._11).mapGroups((k, vs) => (k, vs.max))
-        .collect().toMap
-      // FEW, FAT partitions (≈ one per bin, floor = core count): Spark
-      // hands tasks to executors by slot availability, so a bin spread
-      // over many small partitions reaches many executors no matter how
-      // contiguously the blocks are laid out. With ~1 partition per bin
-      // an executor fetches one bin per partition it takes, so its
-      // distinct-bin count equals its partition count (~P/executors).
-      // The floor keeps task count >= cores; the group-count weighting
-      // below still grants a dominant bin multiple partitions, so its
-      // work parallelizes even though those partitions then reach more
-      // executors (unavoidable: spread work means spread data).
-      val nPartitions = math.max(spark.sparkContext.defaultParallelism,
-        parts.bins.length)
-      val groupsPerBin = groupBin.values.filter(_ >= 0)
-        .groupBy(identity).map { case (b, xs) => (b, xs.size) }
-      val p = new BinBlockPartitioner(nPartitions, parts.bins.length,
-        spark.sparkContext.broadcast(groupBin), groupsPerBin)
-      val seqRdd = seqRows.rdd
-        .map(r => ((r._1, r._2, r._3), r))
-      val candRdd = candRows.rdd
-        .map(r => ((r._1, r._2, r._3), r))
-      val solvedRdd = seqRdd.cogroup(candRdd, p).flatMap {
-        case (key, (seqs, cs)) =>
-          if (seqs.isEmpty) Iterator.empty
-          else solveGroup(key, seqs.toArray, cs.toArray)
-      }
-      spark.createDataset(solvedRdd).toDF()
-    }
   }
 
   /** What the solver groups are built from: one row per sequence keyed by
@@ -527,9 +501,16 @@ object Matcher {
     * rows under the same key, and each cluster's lineTo set.
     * distinctSeqs: one row per seq_key, times relative (solveSeqs). */
   private[graft] case class SolverInputs(
-      seqRows: Dataset[(String, String, Int, String, Seq[Matcher.TS], String)],
-      candRows: Dataset[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)],
+      seqRows: Dataset[SolverSeq],
+      candRows: Dataset[SolverCand],
       toNames: Map[(String, String), Array[String]])
+  /** one sequence under its salted cluster key (times relative) */
+  case class SolverSeq(c_line: String, c_stop: String, salt: Int, seq_key: String,
+                       stops: Seq[TS], from_name: String)
+  /** one candidate of a stop of the cluster; bin -1 when untagged */
+  case class SolverCand(c_line: String, c_stop: String, salt: Int, stop_id: String,
+                        edge_id: Long, progr: Double, pen10: Long, py: Double,
+                        px: Double, oneway: Int, bin: Int)
 
   private[graft] def solverInputs(spark: SparkSession, distinctSeqs: DataFrame,
                                   cands: DataFrame): SolverInputs = {
@@ -572,7 +553,7 @@ object Matcher {
     val clRows = clAgg.collect()
     val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
     // the sizes re-enter the plan (the salt); the lineTo sets go to the
-    // kernel directly, so both plan branches below read one broadcast
+    // kernel directly, through one broadcast
     val clLocal = spark.createDataFrame(
       java.util.Arrays.asList(clRows.map(r => Row(r.get(0), r.get(1), r.get(2))): _*),
       StructType(clAgg.schema.fields.take(3)))
@@ -602,7 +583,7 @@ object Matcher {
     val seqRows = salted
       .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
         coalesce($"from_name", lit("")).as("from_name"))
-      .as[(String, String, Int, String, Seq[Matcher.TS], String)]
+      .as[SolverSeq]
 
     // Candidates are shipped ONCE PER CLUSTER via cogroup, not once per
     // sequence: the member sequences of a cluster share (almost all of)
@@ -625,19 +606,17 @@ object Matcher {
         $"py", $"px", $"oneway", binCol.as("bin")).hint("shuffle_merge"), Seq("stop_id"))
       .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",
         $"progr", $"pen10", $"py", $"px", $"oneway", $"bin")
-      .as[(String, String, Int, String, Long, Double, Long, Double, Double, Int, Int)]
+      .as[SolverCand]
     SolverInputs(seqRows, candRows, toNames)
   }
 
-  /** Routes each solver group into the contiguous partition block of its
-    * bin; block widths are proportional to the bin's group count (at least
-    * 1). Groups without a bin hash over the whole range. A pure function
-    * of the key via the broadcast group->bin map, so both cogroup sides
-    * partition identically. */
-  final class BinBlockPartitioner(
-      val numPartitions: Int, nBins: Int,
-      groupBin: org.apache.spark.broadcast.Broadcast[Map[(String, String, Int), Int]],
-      groupsPerBin: Map[Int, Int]) extends org.apache.spark.Partitioner {
+  /** Bin-block placement of the solver groups over `n` partitions: each
+    * bin owns a contiguous block whose width is proportional to its group
+    * count (at least 1); a group without a bin (-1) hashes over the whole
+    * range. A pure function of (group key, group bin), so both cogroup
+    * sides place a group alike. */
+  final class BinBlockPlacement(val n: Int, nBins: Int, groupsPerBin: Map[Int, Int])
+      extends Serializable {
     private val starts = new Array[Int](nBins)
     private val lens = new Array[Int](nBins)
     locally {
@@ -645,19 +624,16 @@ object Matcher {
       var at = 0
       (0 until nBins).foreach { b =>
         val share = groupsPerBin.getOrElse(b, 0)
-        val len = math.max(1, (share.toLong * numPartitions / total).toInt)
-        starts(b) = at % numPartitions
-        lens(b) = math.min(len, numPartitions)
+        val len = math.max(1, (share.toLong * n / total).toInt)
+        starts(b) = at % n
+        lens(b) = math.min(len, n)
         at += lens(b)
       }
     }
     private def mod(h: Int, m: Int): Int = { val r = h % m; if (r < 0) r + m else r }
-    def getPartition(key: Any): Int = {
-      val k = key.asInstanceOf[(String, String, Int)]
-      val bin = groupBin.value.getOrElse(k, -1)
-      if (bin < 0 || bin >= nBins) mod(k.hashCode, numPartitions)
-      else (starts(bin) + mod((k._1, k._2).hashCode + k._3, lens(bin))) % numPartitions
-    }
+    def apply(key: (String, String, Int), bin: Int): Int =
+      if (bin < 0 || bin >= nBins) mod(key.hashCode, n)
+      else (starts(bin) + mod((key._1, key._2).hashCode + key._3, lens(bin))) % n
   }
 
   /** Floor on distinct sequences per solver task (the salting grain).

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.osm.{GraphBuilder, OsmConfig, StationSnap}
-import graft.router.{CompactGraph, DistGraphBuild, GraphPartitions, Matcher}
+import graft.plans.ExecutedPlans
+import graft.router.{CompactGraph, DistGraphBuild, GraphPartitions, HopCache, Matcher}
 
 /** Distributed graph construction parity: the per-bin executor-side build
   * (DistGraphBuild: distributed CC -> per-bin snap cogroup -> file-backed
@@ -88,14 +89,60 @@ class DistBuildSpec extends AnyFunSuite {
     assert(gotA != gotB) // and A's handles still serve A
   }
 
+  lazy val cands = DistGraphBuild.tagCands(
+    Matcher.buildCandsWithStations(spark, t.stops, dist.edges,
+      dist.stations, cfg), dist.edges).localCheckpoint()
+  lazy val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
+
+  /** the file-backed solve: its executed plans, and each solved row's
+    * seq_key with the partition that solved it, read off the cogroup's
+    * output before any boundary */
+  lazy val placedRun = {
+    var rows = Array.empty[(String, Int)]
+    val (_, _, _) = (keyed, cands, dist) // materialized outside the capture
+    val plans = ExecutedPlans(spark) {
+      HopCache.clear()
+      rows = Matcher.solveKeyedSeqs(spark, keyed, cands, dist.parts, cfg)
+        .select($"seq_key", spark_partition_id()).as[(String, Int)].collect()
+    }
+    (plans, rows)
+  }
+
+  test("file-backed solve executes one id-placed cogroup and no RDD scan") {
+    val bad = SolvePlanShape.violations(placedRun._1)
+    assert(bad.isEmpty, bad.mkString("; ") + "\n" + SolvePlanShape.trees(placedRun._1))
+  }
+
+  test("file-backed solve runs each group in its bin's partition block") {
+    val in = Matcher.solverInputs(spark, keyed.dropDuplicates("seq_key")
+      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"), cands)
+    val groupOf = in.seqRows.collect().map(r => r.seq_key -> (r.c_line, r.c_stop, r.salt)).toMap
+    // a group's bin: the largest of its candidates' bins
+    val binOf = in.candRows.collect().groupBy(c => (c.c_line, c.c_stop, c.salt))
+      .map { case (k, cs) => k -> cs.map(_.bin).max }
+    val groupsPerBin = binOf.values.filter(_ >= 0).groupBy(identity)
+      .map { case (b, xs) => (b, xs.size) }
+    val nBins = dist.parts.bins.length
+    val n = math.max(spark.sparkContext.defaultParallelism, nBins)
+    val place = new Matcher.BinBlockPlacement(n, nBins, groupsPerBin)
+    val rows = placedRun._2
+    assert(rows.length == groupOf.size && rows.nonEmpty)
+    rows.foreach { case (k, at) =>
+      val g = groupOf(k)
+      assert(at == place(g, binOf.getOrElse(g, -1)), s"$k ($g) solved in partition $at")
+    }
+    // a bin's block is its group share of the n partitions, at least one
+    val total = groupsPerBin.values.sum
+    rows.groupBy { case (k, _) => binOf(groupOf(k)) }.foreach { case (b, rs) =>
+      val width = math.min(n, math.max(1, groupsPerBin(b) * n / total))
+      assert(rs.map(_._2).distinct.length <= width, s"bin $b spans more than $width")
+    }
+  }
+
   test("solve over file-backed bins equals the full-broadcast solve") {
-    val cands = DistGraphBuild.tagCands(
-      Matcher.buildCandsWithStations(spark, t.stops, dist.edges,
-        dist.stations, cfg), dist.edges).localCheckpoint()
     assert(cands.filter($"bin" < 0).count() == 0) // every cand edge has a bin
-    val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
     def run(p: GraphPartitions) = {
-      graft.router.HopCache.clear()
+      HopCache.clear()
       Matcher.solveKeyedSeqs(spark, keyed, cands, p, cfg)
         .select($"seq_key", $"cost10", $"n_hops", $"n_unroutable",
           to_json(arrays_zip($"lats", $"lngs", $"dists")).as("pts"), to_json($"anchors").as("an"))

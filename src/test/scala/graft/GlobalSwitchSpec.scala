@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The library keeps one behaviour per input: outside the harness mains
   * (Bench, Verify) and the tool mains, no source reads the environment and
   * no `@volatile var` is reachable from outside its class. Private memo
-  * cells (HopCache, PipelineQueries) are not switches and stay allowed. */
+  * cells (HopCache, PipelineQueries) are not switches and stay allowed.
+  * The router plans on Datasets only: no RDD API, no custom Partitioner. */
 class GlobalSwitchSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
@@ -36,6 +37,15 @@ class GlobalSwitchSpec extends AnyFunSuite {
     val hits = for {
       (f, code) <- sources
       (n, c) <- code if envRead.findFirstIn(c).isDefined
+    } yield s"$f:$n: $c"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("the router stays off the RDD API") {
+    val rddApi = """\.rdd\b|\bRDD\[|\bextends\b.*\bPartitioner\b""".r
+    val hits = for {
+      (f, code) <- sources if f.startsWith("router")
+      (n, c) <- code if rddApi.findFirstIn(c).isDefined
     } yield s"$f:$n: $c"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.osm.{GraphBuilder, OsmConfig}
+import graft.plans.ExecutedPlans
 import graft.router.{CompactGraph, GraphPartitions, Matcher}
 
 /** Component-level graph partitioning (SURVEY §7.3): a multi-city world's
@@ -60,16 +61,15 @@ class PartitionSpec extends AnyFunSuite {
     assert(parts.resolve(Array(bin0.edgeIds(5), bin1.edgeIds(3))) eq m)
   }
 
-  test("BinBlockPartitioner: weighted blocks, in-range, untagged spread") {
+  test("BinBlockPlacement: weighted blocks, in-range, untagged spread") {
     val keys = for (b <- 0 until 4; c <- 0 until 6; s <- 0 until 8)
       yield (s"L$b-$c", s"S$c", s)
     val groupBin = keys.map(k => k -> k._1.drop(1).takeWhile(_ != '-').toInt).toMap
-    val bc = spark.sparkContext.broadcast(groupBin)
     // bin 0 dominates: 5x the groups of the others
     val weights = Map(0 -> 50, 1 -> 10, 2 -> 10, 3 -> 10)
-    val p = new Matcher.BinBlockPartitioner(16, 4, bc, weights)
+    val p = new Matcher.BinBlockPlacement(16, 4, weights)
     val byBin = keys.groupBy(groupBin).map { case (b, ks) =>
-      b -> ks.map(p.getPartition(_: Any)).toSet
+      b -> ks.map(k => p(k, groupBin(k))).toSet
     }
     // every partition index in range
     byBin.values.flatten.foreach(i => assert(i >= 0 && i < 16))
@@ -79,22 +79,37 @@ class PartitionSpec extends AnyFunSuite {
     // a bin's partitions are FEW (its weighted share), not the whole range
     assert(byBin(1).size <= 3 && byBin(2).size <= 3 && byBin(3).size <= 3)
     // untagged keys fall back to the full range without throwing
-    val untagged = (0 until 100).map(i => p.getPartition(("zz", s"q$i", i): Any))
+    val untagged = (0 until 100).map(i => p(("zz", s"q$i", i), -1))
     assert(untagged.forall(i => i >= 0 && i < 16) && untagged.distinct.size > 4)
   }
 
+  // untagged candidates: the solve places its groups by plain hash
+  lazy val cands = Matcher.buildCandsWithStations(spark, t.stops, gt.edges,
+    gt.stations, cfg).localCheckpoint()
+  lazy val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
+  private def run(p: GraphPartitions) = {
+    graft.router.HopCache.clear()
+    Matcher.solveKeyedSeqs(spark, keyed, cands, p, cfg)
+      .select($"seq_key", $"cost10", $"n_hops", $"n_unroutable",
+        to_json(arrays_zip($"lats", $"lngs", $"dists")).as("pts"), to_json($"anchors").as("an"))
+      .collect().map(_.toSeq).sortBy(_.head.toString)
+  }
+  /** the full-graph solve: its executed plans and its rows */
+  lazy val singleRun = {
+    var rows = Array.empty[Seq[Any]]
+    val single = GraphPartitions.single(spark, graph)
+    val (_, _) = (keyed, cands) // materialized outside the capture
+    val plans = ExecutedPlans(spark) { rows = run(single) }
+    (plans, rows)
+  }
+
+  test("single-bin solve executes one id-placed cogroup and no RDD scan") {
+    val bad = SolvePlanShape.violations(singleRun._1)
+    assert(bad.isEmpty, bad.mkString("; ") + "\n" + SolvePlanShape.trees(singleRun._1))
+  }
+
   test("partitioned match is identical to the full-graph broadcast match") {
-    val cands = Matcher.buildCandsWithStations(spark, t.stops, gt.edges,
-      gt.stations, cfg).localCheckpoint()
-    val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
-    def run(p: GraphPartitions) = {
-      graft.router.HopCache.clear()
-      Matcher.solveKeyedSeqs(spark, keyed, cands, p, cfg)
-        .select($"seq_key", $"cost10", $"n_hops", $"n_unroutable",
-          to_json(arrays_zip($"lats", $"lngs", $"dists")).as("pts"), to_json($"anchors").as("an"))
-        .collect().map(_.toSeq).sortBy(_.head.toString)
-    }
-    val single = run(GraphPartitions.single(spark, graph))
+    val single = singleRun._2
     val multi = run(parts)
     assert(multi.length == single.length && multi.length > 0)
     multi.zip(single).foreach { case (a, b) => assert(a == b) }
