@@ -37,14 +37,11 @@ object AnnOps {
 
   private val Bridge = org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Deterministic integer hyperplane weight for (plane j, dim i):
-    * ((i*37 + j*101) mod 7) - 3  — identical arithmetic in the SQL oracle
-    * (no transcendental functions, no RNG). */
-  def planeWeight(i: Int, j: Int): Double = ((i * 37 + j * 101) % 7 - 3).toDouble
-
-  /** Projection of the embedding onto plane j. The weight is computed from
-    * the element INDEX inside the codegen'd transform lambda, so the
-    * projection adapts to whatever dimensionality the corpus actually has —
+  /** Projection of the embedding onto plane j, whose deterministic integer
+    * weight for dim i is ((i*37 + j*101) mod 7) - 3 — identical arithmetic
+    * in the SQL oracle (no transcendental functions, no RNG). The weight is
+    * computed from the element INDEX inside the codegen'd transform lambda,
+    * so the projection adapts to whatever dimensionality the corpus has —
     * a baked Dim-length literal array silently null-padded (and so zeroed
     * every sign bit) on any non-Dim corpus, collapsing LSH into one
     * quadratic mega-bucket. */

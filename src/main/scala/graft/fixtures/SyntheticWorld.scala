@@ -167,7 +167,6 @@ object SyntheticWorld {
     for (r <- busRows) {
       val routeId = s"R$r"
       routes += GtfsRoute(routeId, s"L$r", s"Line $r", 3, 0xff0000, 0xffffff)
-      val cs = (0 until cols).filter(_ % stopEvery == 0)
       for (t <- 0 until tripsPerRoute) {
         val tripId = s"T${r}_$t"
         trips += GtfsTrip(tripId, routeId, "SVC1", null, s"L$r")

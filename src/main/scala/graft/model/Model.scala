@@ -22,27 +22,6 @@ case class GtfsStopTime(trip_id: String, seq: Int, stop_id: String,
 case class GtfsShapePt(shape_id: String, seq: Int, lat: Double, lng: Double,
                        travel_dist: Float)
 
-// ---- derived transit graph (persisted IR) ----
-case class GeomPt(x: Double, y: Double) // x=lon, y=lat (reference POINT convention)
-case class GraphNode(node_id: Long, lon: Double, lat: Double, comp_id: Long,
-                     station_name: String, // null if not a station
-                     blocker: Boolean, cell: Long)
-case class GraphEdge(edge_id: Long, from_id: Long, to_id: Long,
-                     geom: Array[GeomPt], len_m: Double,
-                     cost10: Long, // u32 decisecond fixed point
-                     lvl: Int, oneway: Int, // 0 both, 1 fwd only, 2 rev only
-                     comp_id: Long,
-                     lines: Array[Int], cells: Array[Long])
-case class TransitLine(line_id: Long, short_name: String, from_str: String,
-                       to_str: String, color: Int)
-case class TurnRestriction(via_node: Long, from_way: Long, to_way: Long, positive: Boolean)
-
-// ---- matcher tables ----
-case class StopCand(stop_id: String, edge_id: Long, dir: Int, pen: Double,
-                    progr: Double, px: Double, py: Double)
-case class MatchedHop(trip_id: String, hop_idx: Int, edges: Array[Long],
-                      progr_start: Double, progr_end: Double)
-
 // ---- image payload (BASELINE.json input_hint) ----
 case class ImageRow(image_id: String, bytes: Array[Byte], w: Int, h: Int,
                     fmt: String, caption: String, phash: Long)

@@ -314,7 +314,6 @@ object StationSnap {
     * Returns the refined tables + stats. blockerNodes may be null/empty. */
   def refine(spark: SparkSession, gt: GraphBuilder.GraphTables, cfg: OsmConfig,
              blockerNodes: DataFrame = null): (GraphBuilder.GraphTables, SnapStats) = {
-    import spark.implicits._
     val w = new Work(SnapRes)
 
     // the two input collects are independent jobs — submit them

@@ -93,7 +93,7 @@ object ImageOverlay {
   * mapInPandas plumbing; decode is REAL via javax.imageio). The binary
   * column flows through exactly one narrow stage — no shuffle. */
 object ImageTransforms {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import graft.images.ImageCodec
 

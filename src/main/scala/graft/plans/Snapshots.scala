@@ -1,6 +1,6 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,6 +63,10 @@ object Snapshots {
     }
     val t0 = System.nanoTime()
     val df = compute
+    // the manifest vouches for the data, and Overwrite deletes that data
+    // before its job runs: withdraw the manifest first, so a write that
+    // fails midway leaves none and the next call recomputes
+    Files.deleteIfExists(manifestPath(dir, name))
     df.write.mode(SaveMode.Overwrite).parquet(out)
     val elapsed = (System.nanoTime() - t0) / 1e9
     val snap = ParquetTables.read(spark, out)
@@ -75,8 +79,11 @@ object Snapshots {
     val json =
       s"""{"stage":"$name","fingerprint":"$fingerprint","rows":$rows,
          |"partitions":$partsJson,"elapsedSec":$elapsed}""".stripMargin.replace("\n", "")
-    Files.createDirectories(Paths.get(dir, name))
-    Files.writeString(manifestPath(dir, name), json)
+    // publish whole or not at all: a crash mid-write must not leave a
+    // truncated manifest for the next call to parse
+    val tmp = Files.createTempFile(Paths.get(dir, name), "_MANIFEST", ".tmp")
+    Files.writeString(tmp, json)
+    Files.move(tmp, manifestPath(dir, name), StandardCopyOption.ATOMIC_MOVE)
     snap
   }
 

@@ -107,7 +107,6 @@ class CompactGraph(
     * the Dijkstra inner loop dominated kernel time) */
   val edgeFromIdx: Array[Int] = Array.tabulate(numEdges)(i => nodeIndex.get(edgeFrom(i)).intValue())
   val edgeToIdx: Array[Int] = Array.tabulate(numEdges)(i => nodeIndex.get(edgeTo(i)).intValue())
-  @inline def dirFromIdx(de: Int): Int = if ((de & 1) == 0) edgeFromIdx(de >> 1) else edgeToIdx(de >> 1)
   @inline def dirToIdx(de: Int): Int = if ((de & 1) == 0) edgeToIdx(de >> 1) else edgeFromIdx(de >> 1)
 
   @inline def dirFrom(de: Int): Long = if ((de & 1) == 0) edgeFrom(de >> 1) else edgeTo(de >> 1)

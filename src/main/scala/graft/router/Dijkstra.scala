@@ -28,74 +28,13 @@ object Dijkstra {
     * targets; with that, terminating when the popped f exceeds cutoff10 is
     * exact (Router.tpp:96-148 cutoff semantics). Results are read from the
     * workspace (ws.costOf / path) BEFORE the next call. Returns #targets
-    * settled. */
+    * settled. The one-seed case of [[manyToMany]]. */
   def oneToMany(g: CompactGraph, ws: RouterWorkspace, sourceDir: Int,
                 initCost10: Long, targetList: Array[Int], cutoff10: Long,
                 turnPen10: (Int, Int) => Long,
-                heur10: Int => Long = null): Int = {
-    ws.newEpoch()
-    var remaining = 0
-    var t = 0
-    while (t < targetList.length) {
-      if (!ws.isTarget(targetList(t))) { ws.markTarget(targetList(t)); remaining += 1 }
-      t += 1
-    }
-    var reached = 0
-    val pq = ws.pq
-    pq.clear()
-    // primitive long heap: a java.util.PriorityQueue[Long] boxes every
-    // entry; tens of millions of boxed longs saturated GC at 32 threads
-    @inline def h(de: Int): Long = if (heur10 == null) 0L else heur10(de)
-    // entries with f >= Int.MaxValue are never enqueued (offer returns
-    // false below): the pack clamp would otherwise desync the queued f
-    // from the workspace cost and the entry would be skipped forever —
-    // semantically such a cost exceeds any real cutoff anyway
-    @inline def pack(c: Long, de: Int): Long = (c << 32) | de.toLong
-    @inline def offer(f: Long, de: Int): Unit =
-      if (f < Int.MaxValue.toLong) pq.add(pack(f, de))
-    @inline def unpackCost(p: Long): Long = p >>> 32
-    @inline def unpackDe(p: Long): Int = (p & 0xffffffffL).toInt
-
-    val start = initCost10 + g.dirCost10(sourceDir)
-    ws.setCost(sourceDir, start, -1)
-    offer(start + h(sourceDir), sourceDir)
-
-    var iters = 0L
-    var exceeded = false
-    while (!pq.isEmpty && remaining > 0 && !exceeded) {
-      val top = pq.poll()
-      val f = unpackCost(top); val de = unpackDe(top)
-      val c = f - h(de)
-      if (f > cutoff10) exceeded = true
-      else if (!ws.isSettled(de) && c <= ws.costOf(de)) {
-        ws.markSettled(de)
-        iters += 1
-        if (ws.isTarget(de)) { remaining -= 1; reached += 1 }
-        if (remaining > 0) {
-          val ni = g.dirToIdx(de)
-          val lo = g.adjOffsets(ni); val hi = g.adjOffsets(ni + 1)
-          var k = lo
-          while (k < hi) {
-            val nx = g.adjEdges(k)
-            if (!ws.isSettled(nx)) {
-              val tp = turnPen10(de, nx)
-              if (tp >= 0) {
-                val nc = c + g.dirCost10(nx) + tp
-                val old = ws.costOf(nx)
-                if (nc < old || (nc == old && de < ws.predOf(nx))) {
-                  ws.setCost(nx, nc, de)
-                  offer(nc + h(nx), nx)
-                }
-              }
-            }
-            k += 1
-          }
-        }
-      }
-    }
-    Iters.add(iters)
-    reached
-  }
+                heur10: Int => Long = null): Int =
+    manyToMany(g, ws, Array(sourceDir), Array(initCost10), targetList,
+      cutoff10, turnPen10, heur10)
 
   /** N->N multi-source variant — the reference's hopsFast
     * (/root/reference/src/pfaedle/router/Router.tpp:434-526): every source
@@ -119,7 +58,13 @@ object Dijkstra {
     var reached = 0
     val pq = ws.pq
     pq.clear()
+    // primitive long heap: a java.util.PriorityQueue[Long] boxes every
+    // entry; tens of millions of boxed longs saturated GC at 32 threads
     @inline def h(de: Int): Long = if (heur10 == null) 0L else heur10(de)
+    // entries with f >= Int.MaxValue are never enqueued (offer returns
+    // false below): the pack clamp would otherwise desync the queued f
+    // from the workspace cost and the entry would be skipped forever —
+    // semantically such a cost exceeds any real cutoff anyway
     @inline def pack(c: Long, de: Int): Long = (c << 32) | de.toLong
     @inline def offer(f: Long, de: Int): Unit =
       if (f < Int.MaxValue.toLong) pq.add(pack(f, de))
@@ -175,7 +120,7 @@ object Dijkstra {
   }
 
   /** Materialize the directed-edge path source..target from the workspace
-    * predecessors (valid until the next oneToMany call). */
+    * predecessors (valid until the next search on this workspace). */
   def path(ws: RouterWorkspace, sourceDir: Int, targetDir: Int): Array[Int] = {
     if (ws.costOf(targetDir) >= Inf) return Array.empty
     val buf = scala.collection.mutable.ArrayBuffer[Int]()

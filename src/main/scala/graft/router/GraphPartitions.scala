@@ -177,13 +177,9 @@ object GraphPartitions {
     * clusters. Bounded; over capacity merges run uncached (deterministic,
     * like HopCache). */
   private val MaxMerged = 64
-  /** merged-graph resolutions (diagnostics: how often the multi-bin path
-    * actually fires — it should be rare on a well-separated world) */
-  val MergedResolves = new java.util.concurrent.atomic.LongAdder()
 
   private[router] def merged(parts: GraphPartitions,
                              touched: java.util.TreeSet[Integer]): CompactGraph = {
-    MergedResolves.increment()
     import scala.jdk.CollectionConverters._
     val binIdx = touched.asScala.toArray.map(_.intValue())
     val mergeCache = HopCache.gen(parts.bins(0).get.epoch).merged

@@ -368,9 +368,6 @@ object Matcher {
   }
 
   case class HopRow(hop_idx: Int, edge_ids: Array[Long], reachable: Boolean)
-  /** one snap candidate row as shipped to the kernel (encoder-compatible) */
-  case class CandRow(stop_id: String, edge_id: Long, progr: Double,
-                     pen10: Long, py: Double, px: Double, oneway: Int)
   /** The solved-shape payload is three FLAT primitive arrays (parallel by
     * point index; dists = the W2 cumulative haversine measure, accumulated
     * at materialization, stored at the float precision the output schema

@@ -33,16 +33,6 @@ final case class SolveResult(bestCands: Array[Int], hops: Array[HopPath], totalC
   */
 object Viterbi {
   val MaxDoublingSteps = 3
-  /** diagnostic counters (cheap LongAdders, read by tools/Bench only):
-    * where does layer-relax work go — residual per-source fill-ins after a
-    * fast pass, ladder restarts, layers total. */
-  val ResidualTargets = new java.util.concurrent.atomic.LongAdder()
-  val ResidualPasses = new java.util.concurrent.atomic.LongAdder()
-  val ResidualSelf = new java.util.concurrent.atomic.LongAdder()
-  val ResidualCut = new java.util.concurrent.atomic.LongAdder()
-  val ResidualClamp = new java.util.concurrent.atomic.LongAdder()
-  val LadderPasses = new java.util.concurrent.atomic.LongAdder()
-  val LayersRelaxed = new java.util.concurrent.atomic.LongAdder()
   /** ExpoTransWeight.maxCost (Weights.cpp:189-196): cutoff10 =
     * ceil(max(hopTimeSec, 60) * 3 * punishFactor * 10). */
   def maxHopCost10(hopTimeSec: Double, punishFactor: Double = 1.0): Long =
@@ -413,7 +403,6 @@ object Viterbi {
                 // source in the N->N search — only the per-source pass can
                 // price the others (the same-edge scalar pre-pass already
                 // priced the self pair)
-                ResidualSelf.increment()
                 if (residual == null) residual = new Array[Boolean](to.length)
                 residual(t2) = true
               } else {
@@ -439,7 +428,6 @@ object Viterbi {
                     // this cutoff — skip, keeping the doubling step at
                     // which the pair is "found" aligned with the slow path.
                     if (maxSeedCost >= cAbs - cutoff) {
-                      ResidualCut.increment()
                       if (residual == null) residual = new Array[Boolean](to.length)
                       residual(t2) = true
                     }
@@ -457,7 +445,6 @@ object Viterbi {
                         pathTo(t2) = lv.paths(ti2); foundL = true
                       }
                     } else {
-                      ResidualClamp.increment()
                       if (residual == null) residual = new Array[Boolean](to.length)
                       residual(t2) = true
                     }
@@ -474,13 +461,8 @@ object Viterbi {
           }
           t2 += 1
         }
-        if (residual != null) {
-          ResidualPasses.increment()
-          var rt = 0; var rn = 0
-          while (rt < residual.length) { if (residual(rt)) rn += 1; rt += 1 }
-          ResidualTargets.add(rn)
+        if (residual != null)
           foundL = slowPass(cutoff, residual) || foundL
-        }
         if (overflowSrc != null)
           foundL = slowPass(cutoff, null, overflowSrc) || foundL
         foundL
@@ -499,9 +481,7 @@ object Viterbi {
       var step = 0
       var found = false
       var done = false
-      LayersRelaxed.increment()
       while (!done) {
-        LadderPasses.increment()
         val f = if (useFast) fastPass(cutoff) else slowPass(cutoff, null)
         found = found || f
         done = found || step == MaxDoublingSteps || cutoff >= Inf / 2

@@ -3,17 +3,15 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.osm.{OsmConfig, TagRule}
+import graft.osm.OsmConfig
 
-/** Sinks (SURVEY §2.1 S5-S9): GTFS feed writer, filtered-OSM writer,
-  * GeoJSON debug sink, eval report sink — all plain projected DataFrame
-  * writes (the reference's streamed writers become ordinary distributed
-  * writes; Spark spills natively, SURVEY 4.11). */
+/** Sinks (SURVEY §2.1 S5, S8): GTFS shapes writer and GeoJSON debug sink —
+  * plain projected DataFrame writes (the reference's streamed writers become
+  * ordinary distributed writes; Spark spills natively, SURVEY 4.11). */
 object Writers {
 
-  /** S5: GTFS writer — writes shapes.txt-style CSV (plus any other feed
-    * table passed) under outDir/<name>. Shapes are written ordered with the
-    * GTFS header columns. */
+  /** S5: GTFS writer — writes shapes.txt-style CSV under outDir/shapes,
+    * ordered, with the GTFS header columns. */
   def writeGtfsShapes(shapes: DataFrame, outDir: String): Unit = {
     import shapes.sparkSession.implicits._
     shapes
@@ -23,33 +21,6 @@ object Writers {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).option("header", "true")
       .csv(s"$outDir/shapes")
-  }
-
-  def writeGtfsTable(df: DataFrame, outDir: String, name: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(s"$outDir/$name")
-
-  /** S6: filtered-OSM writer (-X mode, OsmBuilder.cpp:346-438): keep nodes
-    * in bbox + all members of kept ways + kept relations; three projected
-    * writes sharing the scan results. */
-  def writeFilteredOsm(osmNodes: DataFrame, osmWays: DataFrame, osmRels: DataFrame,
-                       keepWays: Seq[TagRule], bbox: graft.osm.GraphBuilder.BBox,
-                       outDir: String): Unit = {
-    import osmNodes.sparkSession.implicits._
-    val bboxNodes = osmNodes.filter($"lat" >= bbox.latMin && $"lat" <= bbox.latMax &&
-      $"lon" >= bbox.lonMin && $"lon" <= bbox.lonMax)
-    // semi-join: ways with >= 1 member node in bbox
-    val wayNode = osmWays.filter(graft.osm.GraphBuilder.tagMatches($"tags", keepWays))
-      .select($"id", explode($"nodes").as("node_id"))
-    val keptWayIds = wayNode.join(bboxNodes.select($"id".as("node_id")), Seq("node_id"), "left_semi")
-      .select($"id").distinct()
-    val ways = osmWays.join(keptWayIds, Seq("id"), "left_semi")
-    // all member nodes of kept ways (even outside bbox — reference keeps them)
-    val memberIds = ways.select(explode($"nodes").as("id")).distinct()
-    val nodes = osmNodes.join(memberIds, Seq("id"), "left_semi")
-    val rels = osmRels.filter($"tags".getItem("type").isin("route", "restriction"))
-    nodes.write.mode(SaveMode.Overwrite).parquet(s"$outDir/nodes")
-    ways.write.mode(SaveMode.Overwrite).parquet(s"$outDir/ways")
-    rels.write.mode(SaveMode.Overwrite).parquet(s"$outDir/rels")
   }
 
   /** S8: GeoJSON debug sink — one LineString feature per shape. */
@@ -67,15 +38,6 @@ object Writers {
         s"""{"type":"Feature","properties":{"shape_id":"$id"},"geometry":{"type":"LineString","coordinates":[$coords]}}"""
       }
     s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
-  }
-
-  /** S9: shapevl report sink — per-trip TSV. */
-  def writeEvalReport(scores: DataFrame, outDir: String): Unit = {
-    import scores.sparkSession.implicits._
-    scores.orderBy($"trip_id")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).option("header", "true").option("sep", "\t")
-      .csv(s"$outDir/eval")
   }
 }
 

@@ -57,7 +57,6 @@ object TextOps {
     * per-document window (a window shuffles and sorts every token row;
     * at 10^12 docs that's the whole corpus through one exchange). */
   def wordBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import docs.sparkSession.implicits._
     val words = split(col(textCol), " ")
     val grams = zip_with(
       slice(words, lit(1), size(words) - 1),

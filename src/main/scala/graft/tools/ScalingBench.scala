@@ -160,11 +160,17 @@ object ScalingBench {
       phases("cands_join") + phases("viterbi_match") + phases("tile_overlay")
   }
 
+  /** One executor JVM's router counters and live heap, read after a run. */
+  case class ExecCounters(hcMiss: Long, hcHit: Long, iters: Long,
+                          kernelCpuNs: Long, kernelNs: Long, groups: Long,
+                          paramsNs: Long, trieNs: Long, matNs: Long,
+                          hcSize: Long, heapMb: Long)
+
   /** run a closure once on every executor JVM (oversubscribed tiny job;
     * in local mode the single "driver" executor). Used to clear and read
     * the executor-resident memo caches, which driver-side calls cannot
     * reach in cluster mode. */
-  def onExecutors[T: scala.reflect.ClassTag](spark: SparkSession)(f: () => T): Seq[(String, T)] = {
+  def onExecutors[T](spark: SparkSession)(f: () => T): Seq[(String, T)] = {
     val n = math.max(64, spark.sparkContext.defaultParallelism * 8)
     spark.sparkContext.parallelize(1 to n, n).mapPartitions { _ =>
       Iterator((org.apache.spark.SparkEnv.get.executorId, f()))
@@ -198,6 +204,9 @@ object ScalingBench {
       graft.router.MatcherKernel.KernelNanos.reset()
       graft.router.MatcherKernel.KernelCpuNanos.reset()
       graft.router.MatcherKernel.KernelGroups.reset()
+      graft.router.MatcherKernel.ParamsNanos.reset()
+      graft.router.MatcherKernel.TrieNanos.reset()
+      graft.router.MatcherKernel.MatNanos.reset()
       // executor full GC between runs: the prior run's garbage otherwise
       // rides into the measured run as near-threshold old-gen occupancy
       // and its collection cost lands inside the measurement (observed:
@@ -219,33 +228,40 @@ object ScalingBench {
     // executors is the DUPLICATED-memo evidence — the same ctx entries
     // recomputed once per JVM that touches them. A real cluster pays this
     // CPU on its own cores; on one box it is a measured anti-scaling term.
-    val hc = onExecutors(spark)(() => (
-      graft.router.HopCache.Misses.sum(), graft.router.HopCache.Hits.sum(),
-      graft.router.Dijkstra.Iters.sum(),
-      graft.router.MatcherKernel.KernelCpuNanos.sum(),
-      graft.router.MatcherKernel.KernelNanos.sum(),
-      graft.router.MatcherKernel.KernelGroups.sum(),
-      (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20))
-    println(s"[exec-heap-mb] " + hc.map { case (id, t) => s"$id=${t._7}" }.mkString(" "))
-    val hcMiss = hc.map(_._2._1).sum; val hcHit = hc.map(_._2._2).sum
-    val iters = hc.map(_._2._3).sum
+    val hc = onExecutors(spark)(() => {
+      import graft.router.MatcherKernel._
+      ExecCounters(graft.router.HopCache.Misses.sum(), graft.router.HopCache.Hits.sum(),
+        graft.router.Dijkstra.Iters.sum(), KernelCpuNanos.sum(), KernelNanos.sum(),
+        KernelGroups.sum(), ParamsNanos.sum(), TrieNanos.sum(), MatNanos.sum(),
+        graft.router.HopCache.size(),
+        (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20)
+    })
+    println(s"[exec-heap-mb] " + hc.map { case (id, c) => s"$id=${c.heapMb}" }.mkString(" "))
+    def sumOf(f: ExecCounters => Long): Long = hc.map(c => f(c._2)).sum
+    val hcMiss = sumOf(_.hcMiss); val hcHit = sumOf(_.hcHit)
+    val iters = sumOf(_.iters)
     val groups =
-      if (clusterMode) hc.map(_._2._6).sum
+      if (clusterMode) sumOf(_.groups)
       else graft.router.MatcherKernel.KernelGroups.sum() - g0
     val kWall =
-      if (clusterMode) hc.map(_._2._5).sum / 1e9
+      if (clusterMode) sumOf(_.kernelNs) / 1e9
       else (graft.router.MatcherKernel.KernelNanos.sum() - k0) / 1e9
     val kCpu =
-      if (clusterMode) hc.map(_._2._4).sum / 1e9
+      if (clusterMode) sumOf(_.kernelCpuNs) / 1e9
       else (graft.router.MatcherKernel.KernelCpuNanos.sum() - kc0) / 1e9
     println(st.phases.map { case (k, v) => f"$k=$v%.2f" }
       .mkString(s"[phases cores=$cores] ", " ", "") +
       f" gc_ms=$gcMs groups=$groups kernel_wall=$kWall%.1f kernel_cpu=$kCpu%.1f" +
       f" hc_miss=$hcMiss hc_hit=$hcHit dijkstra_iters=$iters execs=${hc.length}" +
       f" steal_pct=$stealPct%.1f")
+    // kernel split: where the solve's own time goes besides the Dijkstra
+    // searches (per-trip params, trie build, shape materialization)
+    println(f"[kernel cores=$cores] wall=$kWall%.1f s cpu=$kCpu%.1f s " +
+      f"params=${sumOf(_.paramsNs) / 1e9}%.1f s trie=${sumOf(_.trieNs) / 1e9}%.1f s " +
+      f"mat=${sumOf(_.matNs) / 1e9}%.1f s hc_size=${sumOf(_.hcSize)}")
     // attribution: executor task-time vs wall — a phase whose wall greatly
     // exceeds taskMs/cores is driver/scheduling-bound, not executor-bound
-    println(st.phases.map { case (k, wall) =>
+    println(st.phases.map { case (k, _) =>
       val m = st.metrics.getOrElse(k, graft.Bench.PhaseM(0, 0, 0))
       f"$k=${m.taskMs / 1000.0}%.1f/${m.gcMs / 1000.0}%.1f/${m.nTasks}/${m.maxTaskMs / 1000.0}%.1f"
     }.mkString(s"[taskSec/gcSec/nTasks/maxTask cores=$cores] ", " ", ""))

@@ -98,6 +98,41 @@ class PlansSpec extends AnyFunSuite {
     assert(Snapshots.readManifest(dir, "stage1").get.rows == 1)
   }
 
+  test("snapshots: a re-stage that fails mid-write leaves no manifest to trust") {
+    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    var computes = 0
+    def stageA() = Snapshots.stage(spark, dir, "s", "fpA") {
+      computes += 1
+      Seq((1, "a"), (2, "b")).toDF("id", "v")
+    }
+    assert(stageA().count() == 2 && computes == 1)
+    // Overwrite deletes the fpA data before this task throws (a range,
+    // not a local relation, so the udf runs in a task, not in the optimizer)
+    val boom = udf((i: Long) => { if (i == 3) throw new IllegalStateException("boom"); i })
+    intercept[Exception] {
+      Snapshots.stage(spark, dir, "s", "fpB") {
+        spark.range(3, 4).select(boom($"id").as("id"), lit("c").as("v"))
+      }
+    }
+    assert(Snapshots.readManifest(dir, "s").isEmpty)
+    val again = stageA()
+    assert(computes == 2)
+    assert(again.orderBy("id").as[(Int, String)].collect().toSeq == Seq((1, "a"), (2, "b")))
+  }
+
+  test("snapshots: data written without a manifest is recomputed") {
+    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    Seq((9, "stale")).toDF("id", "v").write.parquet(s"$dir/s/data")
+    var computes = 0
+    val df = Snapshots.stage(spark, dir, "s", "fpA") {
+      computes += 1
+      Seq((1, "a")).toDF("id", "v")
+    }
+    assert(computes == 1)
+    assert(df.as[(Int, String)].collect().toSeq == Seq((1, "a")))
+    assert(Snapshots.readManifest(dir, "s").get.fingerprint == "fpA")
+  }
+
   test("writers: geojson + gtfs shapes csv round") {
     val shapes = Seq(("T1", 0, 48.0, 7.8, 0.0f), ("T1", 1, 48.0, 7.81, 100.0f))
       .toDF("shape_id", "seq", "lat", "lng", "travel_dist")

@@ -34,6 +34,24 @@ class PartitionSpec extends AnyFunSuite {
     assert(binIds.reduce(_ ++ _) == graph.edgeIds.toSet)
   }
 
+  test("a task holds less graph: largest bin ships smaller than the full graph") {
+    def serializedBytes(o: AnyRef): Long = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(o); oos.close()
+      bos.size().toLong
+    }
+    assert(parts.bins.map(b => serializedBytes(b.get)).max < serializedBytes(graph))
+    // the edge->bin index covers every edge, each in the bin holding it
+    val idx = parts.binOfEdge.value
+    val binEdges = parts.bins.map(_.get.edgeIds.toSet)
+    assert(idx.size == graph.numEdges)
+    graph.edgeIds.foreach { id =>
+      val b = idx.get(id)
+      assert(b != null && binEdges(b.intValue).contains(id))
+    }
+  }
+
   test("subset keeps global edge-id order, restrictions and turn cycles") {
     val all = CompactGraph.subset(graph, _ => true)
     assert(all.edgeIds.sameElements(graph.edgeIds))
