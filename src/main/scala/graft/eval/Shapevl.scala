@@ -1,7 +1,8 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.geo.Geo
 
@@ -13,9 +14,12 @@ import graft.geo.Geo
   * cumulative an-0/5/10/20/30/50/70/90 buckets (Collector.cpp:197-210) and
   * avg Fréchet. Sampling step 25 m (ShapevlMain.cpp:40).
   *
-  * Spark shape: both feeds' shape tables are grouped per trip and evaluated
-  * in one typed mapGroups-style pass (a cogroup join on trip); the bucket
-  * aggregation is a plain conditional-sum agg. */
+  * Spark shape: the four inputs (truth and generated shapes, truth and
+  * generated stop dists) are tagged by source, unioned and grouped once by
+  * trip: one exchange, no join. A broadcast join on the string trip id
+  * would build a hash relation holding a whole memory page per JVM; the
+  * grouped pass builds none. The bucket aggregation is a plain
+  * conditional-sum agg. */
 object Shapevl {
   val SegmentLenM = 25.0
   val UnmatchedThresholdM = 100.0
@@ -88,30 +92,39 @@ object Shapevl {
   /** Distributed evaluation: truthShapes/genShapes (shape_id=trip_id, seq,
     * lat, lng, travel_dist); stopDists / stopDistsGen (trip_id, seq,
     * shape_dist) — each shape cut at its own anchors. Returns per-trip
-    * scores. */
+    * scores for the non-null trips present in all four inputs. */
   def evaluate(spark: SparkSession, truthShapes: DataFrame, genShapes: DataFrame,
                stopDists: DataFrame, stopDistsGen: DataFrame = null): DataFrame = {
     import spark.implicits._
-    def collectShapes(df: DataFrame) = df
-      .groupBy($"shape_id")
-      .agg(sort_array(collect_list(struct($"seq", $"lat", $"lng", $"travel_dist"))).as("pts"))
-    def collectDists(df: DataFrame, name: String) = df.groupBy($"trip_id")
-      .agg(sort_array(collect_list(struct($"seq", $"shape_dist"))).as(name))
+    val ptType = Encoders.product[Pt].schema
+    val sdType = Encoders.product[SD].schema
+    // the input's columns of a struct type's fields, cast to their types
+    def fields(t: StructType) =
+      struct(t.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    def pts(df: DataFrame, src: Int) = df.select($"shape_id".as("trip_id"), lit(src).as("src"),
+      fields(ptType).as("pt"), lit(null).cast(sdType).as("sd"))
+    def dists(df: DataFrame, src: Int) = df.select($"trip_id", lit(src).as("src"),
+      lit(null).cast(ptType).as("pt"), fields(sdType).as("sd"))
+    def side(src: Int, field: String) =
+      sort_array(collect_list(when($"src" === src, col(field))))
     val sdg = if (stopDistsGen == null) stopDists else stopDistsGen
-    val joined = collectShapes(truthShapes).withColumnRenamed("pts", "truth")
-      .withColumnRenamed("shape_id", "trip_id")
-      .join(collectShapes(genShapes).withColumnRenamed("pts", "gen")
-        .withColumnRenamed("shape_id", "trip_id"), Seq("trip_id"))
-      .join(collectDists(stopDists, "dists"), Seq("trip_id"))
-      .join(collectDists(sdg, "dists_gen"), Seq("trip_id"))
+    pts(truthShapes, 0).unionByName(pts(genShapes, 1))
+      .unionByName(dists(stopDists, 2)).unionByName(dists(sdg, 3))
+      .filter($"trip_id".isNotNull)
+      .groupBy($"trip_id")
+      .agg(side(0, "pt").as("truth"), side(1, "pt").as("gen"),
+        side(2, "sd").as("dists"), side(3, "sd").as("dists_gen"))
+      // a trip missing from an input has an empty side and is not scored
+      .filter(size($"truth") > 0 && size($"gen") > 0 && size($"dists") > 0 &&
+        size($"dists_gen") > 0)
       .as[(String, Seq[Pt], Seq[Pt], Seq[SD], Seq[SD])]
-    joined.map { case (tripId, truth, gen, dists, distsGen) =>
-      scoreTrip(tripId,
-        truth.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
-        gen.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
-        dists.map(_.shape_dist.toDouble).toArray,
-        distsGen.map(_.shape_dist.toDouble).toArray)
-    }.toDF()
+      .map { case (tripId, truth, gen, dists, distsGen) =>
+        scoreTrip(tripId,
+          truth.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
+          gen.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
+          dists.map(_.shape_dist.toDouble).toArray,
+          distsGen.map(_.shape_dist.toDouble).toArray)
+      }.toDF()
   }
 
   /** Feed-level report: an-X buckets (share of trips with AN <= X%),

@@ -1,7 +1,6 @@
 package graft.router
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -538,9 +537,10 @@ object Matcher {
     // feed's route topology, not by trips; a whole-planet GTFS aggregate is
     // ~10^5-10^6 clusters (few MB), so this collect never becomes the
     // driver bottleneck the edge tables were (those now stay distributed,
-    // DistGraphBuild). Back in the plan it is a local relation: its exact
-    // size lets the planner broadcast it without a shuffle of the other
-    // side first.
+    // DistGraphBuild). Both per-cluster results return to the executors as
+    // broadcast maps: a broadcast join on the string cluster key would build
+    // a hash relation holding a whole memory page per JVM, and the solve
+    // would plan it once per cogroup side.
     val clustered = distinctSeqs
       .withColumn("c_line", coalesce($"line_name", lit("")))
       .withColumn("c_stop", coalesce(element_at($"stops", 1).getField("stop_id"), lit("")))
@@ -549,11 +549,6 @@ object Matcher {
         sort_array(collect_set(coalesce($"to_name", lit("")))).as("cl_to_names"))
     val clRows = clAgg.collect()
     val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
-    // the sizes re-enter the plan (the salt); the lineTo sets go to the
-    // kernel directly, through one broadcast
-    val clLocal = spark.createDataFrame(
-      java.util.Arrays.asList(clRows.map(r => Row(r.get(0), r.get(1), r.get(2))): _*),
-      StructType(clAgg.schema.fields.take(3)))
     val toNames = clRows.map(r =>
       (r.getString(0), r.getString(1)) -> r.getSeq[String](3).toArray).toMap
     // PARALLELISM-AWARE GRAIN: splitting a cluster is not free — each
@@ -572,11 +567,13 @@ object Matcher {
     val targetGroups = math.max(1L, 4L * spark.sparkContext.defaultParallelism)
     val grain = math.max(MaxSeqsPerGroup.toLong,
       (totalSeqs + targetGroups - 1) / targetGroups).toDouble
-    val salted = clustered.join(broadcast(clLocal), Seq("c_line", "c_stop"))
-      .withColumn("salt",
-        pmod(xxhash64($"seq_key"),
-          greatest(lit(1L), ceil($"n_cl" / lit(grain)).cast("long")))
-          .cast("int"))
+    // salted sub-groups per cluster: max(1, ceil(n_cl / grain))
+    val saltsB = spark.sparkContext.broadcast(clRows.map(r =>
+      (r.getString(0), r.getString(1)) -> math.max(1L, math.ceil(r.getLong(2) / grain).toLong)
+    ).toMap)
+    val salts = udf((l: String, s: String) => saltsB.value((l, s)))
+    val salted = clustered
+      .withColumn("salt", pmod(xxhash64($"seq_key"), salts($"c_line", $"c_stop")).cast("int"))
     val seqRows = salted
       .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
         coalesce($"from_name", lit("")).as("from_name"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eval.Shapevl.{Pt, SD, scoreTrip}
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.functions.GeoFunctions._
 import graft.geo.Cell
@@ -220,6 +221,31 @@ object PriorPlans {
       .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",
         $"progr", $"pen10", $"py", $"px", $"oneway", $"bin")
     (seqRows, candRows)
+  }
+
+  def shapevlEvaluate(spark: SparkSession, truthShapes: DataFrame, genShapes: DataFrame,
+                      stopDists: DataFrame, stopDistsGen: DataFrame = null): DataFrame = {
+    import spark.implicits._
+    def collectShapes(df: DataFrame) = df
+      .groupBy($"shape_id")
+      .agg(sort_array(collect_list(struct($"seq", $"lat", $"lng", $"travel_dist"))).as("pts"))
+    def collectDists(df: DataFrame, name: String) = df.groupBy($"trip_id")
+      .agg(sort_array(collect_list(struct($"seq", $"shape_dist"))).as(name))
+    val sdg = if (stopDistsGen == null) stopDists else stopDistsGen
+    val joined = collectShapes(truthShapes).withColumnRenamed("pts", "truth")
+      .withColumnRenamed("shape_id", "trip_id")
+      .join(collectShapes(genShapes).withColumnRenamed("pts", "gen")
+        .withColumnRenamed("shape_id", "trip_id"), Seq("trip_id"))
+      .join(collectDists(stopDists, "dists"), Seq("trip_id"))
+      .join(collectDists(sdg, "dists_gen"), Seq("trip_id"))
+      .as[(String, Seq[Pt], Seq[Pt], Seq[SD], Seq[SD])]
+    joined.map { case (tripId, truth, gen, dists, distsGen) =>
+      scoreTrip(tripId,
+        truth.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
+        gen.map(p => (p.lat, p.lng, p.travel_dist.toDouble)).toArray,
+        dists.map(_.shape_dist.toDouble).toArray,
+        distsGen.map(_.shape_dist.toDouble).toArray)
+    }.toDF()
   }
 
   def buildCandsWithStations(spark: SparkSession, stops: DataFrame, edges: DataFrame,

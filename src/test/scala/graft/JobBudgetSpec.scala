@@ -2,12 +2,23 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions.{lit, regexp_replace}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eval.Shapevl
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.osm.{GraphBuilder, OsmConfig, StationSnap}
 import graft.overlay.ImageOverlay
@@ -17,47 +28,90 @@ import graft.router.{CompactGraph, Dijkstra, HopCache, Matcher, MatcherKernel}
 /** Spark jobs per pipeline phase. Every job is a scheduler round trip, an
   * AQE re-plan and a set of whole-stage classes to generate and compile, so
   * on a small world the job count, not executor work, sets the wall time of
-  * a rep. The seven calls are wired as the repository benchmark wires them
-  * (graph build through tile verify) on a seeded 8x12 world; a second rep is
-  * measured after a warm-up rep. Each phase must stay within its job
-  * budget, and the router's work counters must equal the recorded values:
-  * removing jobs must not change what the kernel does. Codegen compiles per
-  * phase are printed, not asserted (they depend on the codegen cache). */
+  * a rep. The eight calls are wired as the repository benchmark wires them
+  * (graph build through tile verify, then the shape evaluation) on a seeded
+  * 8x12 world; a second rep is measured after a warm-up rep. Each phase
+  * must stay within its job budget, and the router's work counters must
+  * equal the recorded values: removing jobs must not change what the kernel
+  * does. Each phase's broadcast hash joins on a key other than one integral
+  * column must equal the recorded count: such a join builds a hash relation
+  * that holds a whole memory page (16 MB at 4 GB heap, 4 cores) in every JVM
+  * that reads it, however few its rows. Codegen compiles per phase are
+  * printed, not asserted (they depend on the codegen cache). */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** Spark jobs per phase of one rep (the seven calls sum to 103 in the
-    * formulation before the fused plans) */
+  /** Spark jobs per phase of one rep (the first seven calls sum to 103 in
+    * the formulation before the fused plans) */
   val Budget: Map[String, Long] = Map("osm.graph_build" -> 11, "osm.station_snap" -> 7,
     "router.graph_collect" -> 6, "router.cands_join" -> 6, "router.viterbi_match" -> 21,
-    "overlay.tile_overlay" -> 7, "overlay.tile_verify" -> 2)
+    "overlay.tile_overlay" -> 7, "overlay.tile_verify" -> 2, "eval" -> 3)
+
+  /** broadcast hash joins per phase whose build key is not one integral
+    * column; the rest of `viterbi_match`'s are `WorldTables.tripStops`'
+    * stop and trip joins, planned twice, and the representatives' semi-join
+    * on trip_id */
+  val PagedBroadcasts: Map[String, Long] = Budget.map { case (n, _) => n -> 0L } +
+    ("router.viterbi_match" -> 5L)
 
   private final class JobCounter extends SparkListener {
     val jobs = new LongAdder
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
   }
 
+  private val Integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
+  /** the build keys of the broadcast hash joins not keyed by one integral
+    * column, from the final plans of every query that completes, each join
+    * counted once */
+  private final class PagedBroadcastCounter extends QueryExecutionListener {
+    private val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val joins = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      walk(qe.executedPlan)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    private def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      p match {
+        case j: BroadcastHashJoinExec =>
+          val keys = if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
+          if (keys.size != 1 || !Integral(keys.head.dataType))
+            joins.add(keys.map(_.sql).mkString("(", ", ", ")"))
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case _ =>
+      }
+      p.children.foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+  }
+
   private def materialize(df: org.apache.spark.sql.DataFrame) =
     df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
 
-  /** jobs and compiles per phase of one rep, plus the router counters */
+  /** jobs, compiles and paged broadcast joins per phase of one rep, plus
+    * the router counters */
   private def rep(t: WorldTables.Tables, images: org.apache.spark.sql.DataFrame,
-                  counter: JobCounter): (Seq[(String, Long, Long)], Seq[Long]) = {
+                  counter: JobCounter, paged: PagedBroadcastCounter)
+      : (Seq[(String, Long, Long, Seq[String])], Seq[Long]) = {
     import spark.implicits._
     val cfg = OsmConfig.bus
     spark.catalog.clearCache()
     Dijkstra.Iters.reset()
     MatcherKernel.KernelSolves.reset()
     HopCache.clear()
-    val phases = Seq.newBuilder[(String, Long, Long)]
+    val phases = Seq.newBuilder[(String, Long, Long, Seq[String])]
     def phase[T](name: String)(body: => T): T = {
       ListenerDrain(spark.sparkContext)
       val j0 = counter.jobs.sum()
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val b0 = paged.joins.size
       val r = body
       ListenerDrain(spark.sparkContext)
       phases += ((name, counter.jobs.sum() - j0,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0))
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        paged.joins.asScala.toSeq.drop(b0)))
       r
     }
     val (gt0, bbox) = phase("osm.graph_build") {
@@ -94,6 +148,22 @@ class JobBudgetSpec extends AnyFunSuite {
       ImageOverlay.verify(spark, images).agg(org.apache.spark.sql.functions.count($"psnr_ok"))
         .first()
     }
+    // the evaluation's inputs are joined outside the phase: the benchmark
+    // materializes the truth tables at set-up and runs its own join for the
+    // generated stop dists
+    val truth = materialize(t.trips.select($"trip_id", $"route_id")
+      .join(t.truthShapes.withColumn("route_id", regexp_replace($"shape_id", "SHP_R", "R")),
+        Seq("route_id"))
+      .select($"trip_id".as("shape_id"), $"seq", $"lat", $"lng", $"travel_dist"))
+    val stopDists = materialize(t.stopTimes.select($"trip_id", $"seq", $"shape_dist"))
+    val stopDistsGen = materialize(mr.anchors
+      .join(mr.shapes, mr.anchors("trip_id") === mr.shapes("shape_id") &&
+        mr.anchors("point_seq") === mr.shapes("seq"))
+      .select(mr.anchors("trip_id"), $"stop_idx".as("seq"), $"travel_dist".as("shape_dist")))
+    phase("eval") {
+      Shapevl.evaluate(spark, truth, mr.shapes, stopDists, stopDistsGen)
+        .filter(!$"skipped" && $"an" === lit(0.0)).count()
+    }
     (phases.result(), Seq(MatcherKernel.KernelSolves.sum(), Dijkstra.Iters.sum(),
       HopCache.Hits.sum(), HopCache.Misses.sum()))
   }
@@ -107,17 +177,24 @@ class JobBudgetSpec extends AnyFunSuite {
     val images = materialize(
       ImageFixtures.table(spark, world, OsmConfig.bus.cellRes, noiseTiles = 8))
     val counter = new JobCounter
+    val paged = new PagedBroadcastCounter
     spark.sparkContext.addSparkListener(counter)
+    spark.listenerManager.register(paged)
     try {
-      rep(t, images, counter) // warm-up
-      val (phases, counters) = rep(t, images, counter)
-      phases.foreach { case (n, j, c) =>
-        println(f"[job-budget] $n%-22s jobs $j%3d (budget ${Budget(n)}%3d) compiles $c%4d")
+      rep(t, images, counter, paged) // warm-up
+      val (phases, counters) = rep(t, images, counter, paged)
+      phases.foreach { case (n, j, c, b) =>
+        println(f"[job-budget] $n%-22s jobs $j%3d (budget ${Budget(n)}%3d) compiles $c%4d " +
+          f"paged broadcast joins ${b.size}%2d ${b.mkString(" ")}")
       }
       println(s"[job-budget] total jobs ${phases.map(_._2).sum} compiles ${phases.map(_._3).sum}")
-      phases.foreach { case (n, j, _) => assert(j <= Budget(n), s"$n ran $j jobs") }
+      phases.foreach { case (n, j, _, _) => assert(j <= Budget(n), s"$n ran $j jobs") }
+      assert(phases.map { case (n, _, _, b) => n -> b.size.toLong }.toMap == PagedBroadcasts)
       // kernel solves, Dijkstra iterations, hop-cache hits and misses
       assert(counters == Seq(4L, 623L, 0L, 8L))
-    } finally spark.sparkContext.removeSparkListener(counter)
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      spark.listenerManager.unregister(paged)
+    }
   }
 }
