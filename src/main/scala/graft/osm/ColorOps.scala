@@ -24,16 +24,15 @@ object ColorOps {
     * color by covered edge length; a color wins when it covers > 90% of
     * the matched length (ShapeBuilder.cpp:596-606,1249-1258).
     * hops(trip_id, edge_ids[]); edges(edge_id, way_id, len_m);
-    * wayLines(way_id, line_id); lines(line_id, colour). */
+    * wayLines(way_id, line_id, colour), one row per (way, line). */
   def shapeColorVote(hops: DataFrame, edges: DataFrame, wayLines: DataFrame,
-                     lines: DataFrame, threshold: Double = 0.9): DataFrame = {
+                     threshold: Double = 0.9): DataFrame = {
     import hops.sparkSession.implicits._
     val colorOf = udf((c: String) => StringSim.parseHexColor(c))
     val hopEdges = hops.select($"trip_id", explode($"edge_ids").as("edge_id"))
     val withColor = hopEdges
       .join(edges.select($"edge_id", $"way_id", $"len_m"), Seq("edge_id"))
-      .join(wayLines, Seq("way_id"))
-      .join(lines.select($"line_id", colorOf($"colour").as("color")), Seq("line_id"))
+      .join(wayLines.select($"way_id", colorOf($"colour").as("color")), Seq("way_id"))
       .filter($"color" >= 0)
     val totals = hopEdges
       .join(edges.select($"edge_id", $"len_m"), Seq("edge_id"))

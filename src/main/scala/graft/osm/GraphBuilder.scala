@@ -1,10 +1,10 @@
 package graft.osm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
+import graft.functions.WayFunctions.{contractChains, wayEdges}
 import graft.geo.Geo
 import graft.plans.Boundary
 
@@ -12,7 +12,8 @@ import graft.plans.Boundary
   * recast of the reference's 4-pass streaming OsmBuilder
   * (/root/reference/src/pfaedle/osm/OsmBuilder.cpp:80-216). Each reference
   * pass becomes a join: pass 1 (bbox node ids) = a filter; pass 2 (kept
-  * rels/restrictions) = tag filters; pass 3 (edges) = posexplode+join+window;
+  * rels/restrictions) = tag filters; pass 3 (edges) = posexplode+join+one
+  * grouped pass per way;
   * pass 4 (geoms/stations) = projections. Catalyst handles predicate pushdown
   * and column pruning; every join key is an equi-key so AQE can pick
   * broadcast sides at runtime.
@@ -63,7 +64,8 @@ object GraphBuilder {
     * consecutive segments of the SAME way passing through degree-2 nodes
     * into one edge (costs and lengths summed, geometry concatenated).
     * Shrinks the broadcast graph — shape-point nodes dominate real OSM
-    * ways. Pure Catalyst: degree agg + window chain labeling + groupBy.
+    * ways. A degree pass per node and a chain walk per way
+    * (contractWithDegrees).
     * Input/output schema: the edgesCost schema + `geom` array.
     * breakNodes: nodes that must stay addressable vertices — turn cycles
     * (OsmBuilder.cpp:1591-1594), station nodes and snap blockers (the
@@ -90,72 +92,47 @@ object GraphBuilder {
     * degrees in the contracted graph (fixGaps reads its degree-1 endpoints
     * from them instead of re-aggregating).
     *
-    * The degrees come from ONE pass over the edges, not a degree aggregate
-    * joined back on each endpoint (which planned the edge subtree once per
-    * reference): each edge is emitted as its two endpoint rows, a count
-    * over the node partition gives every row its node's degree, and in
-    * (way, pos, side) order an edge's to-row directly follows its
-    * from-row, so a lead pairs the two degrees back up. Only the from-row
-    * carries the edge's columns through the two exchanges. */
+    * Two grouped passes, no window and no join: each edge is emitted as
+    * its two endpoint rows, one pass per node counts its rows (the
+    * degree), and one pass per way walks its edge ends in (pos, side)
+    * order (WayOps.contractChains), where an edge's to-end follows its
+    * from-end. Only the from-end carries the edge's columns through the
+    * two exchanges. */
   private[graft] def contractWithDegrees(edgesCost: DataFrame): DataFrame = {
     val spark = edgesCost.sparkSession
     import spark.implicits._
-    val payload = edgesCost.columns.filterNot(Set("way_id", "pos"))
-    val ends = edgesCost
-      .select($"way_id", $"pos", struct(payload.map(col): _*).as("e"),
-        explode(array(lit(0), lit(1))).as("side"))
-      .select($"way_id", $"pos", $"side",
-        when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"),
-        when($"side" === 0, $"e").as("e"))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy($"node_id")))
-    // in (way, pos, side) order the row after an edge's from-row is its
-    // to-row (lead: the to-node's degree), and the row before it is the
-    // previous edge's to-row (lag: the node that edge ended at), so one
-    // window pass pairs the degrees and finds where a chain breaks; to-rows
-    // add no break to the running sum that numbers the chains
-    val w = Window.partitionBy($"way_id").orderBy($"pos", $"side")
-    val perEdge = ends
-      .withColumn("to_deg", lead($"deg", 1).over(w))
-      .withColumn("prev_to", lag($"node_id", 1).over(w))
-      // a chain may continue through interior node n iff deg(n) == 2 and n
-      // is not a break node: break when this segment does not continue the
-      // previous one, or the shared node is an intersection (degree != 2)
-      // or a turn cycle
-      .withColumn("brk",
-        when($"side" === 1, 0)
-          .when($"prev_to".isNull || $"prev_to" =!= $"e.from_id" ||
-            $"deg" =!= 2 || $"e.from_tc".isNotNull, 1).otherwise(0))
-      .withColumn("chain", sum($"brk").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter($"side" === 0)
-    val withBreak = perEdge
-      .select(($"way_id" +: $"pos" +: $"chain" +: payload.map(c => $"e".getField(c).as(c))) ++
-        Seq($"deg".as("from_deg"), $"to_deg"): _*)
-    // order-explicit aggregation: Spark does not guarantee intra-group row
-    // order through groupBy (first/last/collect_list only looked ordered
-    // because partial aggregation happened to run on the window's sorted
-    // partitions) — endpoints via min_by/max_by(pos), geometry via
-    // sort_array on (pos,...) structs
-    withBreak
-      .groupBy($"way_id", $"chain")
-      .agg(
-        min($"edge_id").as("edge_id"),
-        min($"pos").as("pos"),
-        min_by($"from_id", $"pos").as("from_id"), max_by($"to_id", $"pos").as("to_id"),
-        min_by($"from_lat", $"pos").as("from_lat"), min_by($"from_lon", $"pos").as("from_lon"),
-        max_by($"to_lat", $"pos").as("to_lat"), max_by($"to_lon", $"pos").as("to_lon"),
-        sum($"len_m").as("len_m"),
-        sum($"cost10").as("cost10"),
-        min_by($"lvl", $"pos").as("lvl"), min_by($"oneway", $"pos").as("oneway"),
-        // geometry: every segment start (in pos order) + the final end point
-        concat(
-          transform(
-            sort_array(collect_list(struct($"pos", $"from_lat".as("lat"), $"from_lon".as("lon")))),
-            x => struct(x.getField("lat").as("lat"), x.getField("lon").as("lon"))),
-          array(struct(max_by($"to_lat", $"pos").as("lat"), max_by($"to_lon", $"pos").as("lon"))))
-          .as("geom"),
-        min_by($"from_deg", $"pos").as("from_deg"), max_by($"to_deg", $"pos").as("to_deg"))
-      .drop("chain")
+    val e = struct($"edge_id", $"from_id", $"to_id", $"from_lat", $"from_lon",
+      $"to_lat", $"to_lon", $"len_m", $"cost10", $"lvl", $"oneway", $"from_tc".as("tc"))
+    edgesCost
+      .select($"way_id", $"pos", e.as("e"), explode(array(lit(0), lit(1))).as("side"))
+      .groupBy(when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"))
+      .agg(count(lit(1)).as("deg"),
+        collect_list(struct($"way_id", $"pos", $"side", when($"side" === 0, $"e").as("e")))
+          .as("ends"))
+      .select($"deg", explode($"ends").as("x"))
+      .groupBy($"x.way_id".as("way_id"))
+      .agg(collect_list(struct($"x.pos", $"x.side", $"deg", $"x.e")).as("ends"))
+      .select($"way_id", explode(contractChains($"ends")).as("c"))
+      .select($"way_id", $"c.*")
+  }
+
+  /** The raw edges of resolved way nodes (way_id, lvl, oneway, pos,
+    * node_id, lat, lon, from_tc): one grouped pass per way takes its nodes
+    * in position order and pairs each with the next (WayOps.wayEdges). A
+    * node between two of them that lies outside the bbox is skipped, as
+    * it has no coordinates. Output: the edgesCost schema without cost10. */
+  private[graft] def segments(resolved: DataFrame): DataFrame = {
+    import resolved.sparkSession.implicits._
+    resolved
+      .groupBy($"way_id", $"lvl", $"oneway")
+      .agg(collect_list(struct($"pos", $"node_id", $"lat", $"lon", $"from_tc")).as("nodes"))
+      .select($"way_id", $"lvl", $"oneway", explode(wayEdges($"nodes")).as("s"))
+      // deterministic edge id: way id in high bits, position in low
+      .select(($"way_id" * lit(65536L) + $"s.pos").as("edge_id"), $"way_id",
+        $"s.pos".as("pos"), $"s.from_id".as("from_id"), $"s.to_id".as("to_id"),
+        $"s.from_lat".as("from_lat"), $"s.from_lon".as("from_lon"),
+        $"s.to_lat".as("to_lat"), $"s.to_lon".as("to_lon"), $"s.len_m".as("len_m"),
+        $"lvl", $"oneway", $"s.from_tc".as("from_tc"))
   }
 
   /** G8 fixGaps (OsmBuilder.cpp:1080-1122): merge degree-1 endpoints lying
@@ -320,6 +297,10 @@ object GraphBuilder {
     BBox(lat.get._1, lng.get._1, lat.get._2, lng.get._2)
   }
 
+  /** The built graph. transitLines(short_name, from_str, to_str, colour,
+    * line_id) is the line dim; wayLines(way_id, line_id, short_name,
+    * from_str, to_str, colour) the lines each way belongs to, with their
+    * names. */
   case class GraphTables(nodes: DataFrame, edges: DataFrame, stations: DataFrame,
                          restrictions: DataFrame, transitLines: DataFrame,
                          wayLines: DataFrame, turnCycles: DataFrame,
@@ -362,13 +343,14 @@ object GraphBuilder {
 
   /** Full graph build. Inputs are osm_nodes / osm_ways / osm_rels DataFrames
     * (FIXTURES.md §2 schemas). */
-  def build(spark: SparkSession, osmNodesRaw: DataFrame, osmWaysRaw: DataFrame,
+  def build(spark: SparkSession, osmNodes: DataFrame, osmWays: DataFrame,
             osmRels: DataFrame, bbox: BBox, cfg: OsmConfig): GraphTables = {
     import spark.implicits._
 
-    // ---- F5: tag-key projection before the heavy joins ----
-    val osmNodes = pruneTags(osmNodesRaw, cfg)
-    val osmWays = pruneTags(osmWaysRaw, cfg)
+    // F5's tag-key projection (pruneTags) is not needed here: every rule
+    // is read from the tags before the first exchange, so only the station
+    // nodes carry their tags into a join. The projection is an interpreted
+    // map_filter that cuts each plan's codegen stage in two.
 
     // ---- F1: bbox node filter (predicate pushes to the scan) ----
     val bboxNodes = osmNodes
@@ -377,8 +359,16 @@ object GraphBuilder {
 
     // ---- F2 + J1: kept ways = tag match AND >=1 member node in bbox ----
     val taggedWays = osmWays.filter(tagMatches($"tags", cfg.keepWays))
+    // level and direction are way attributes: classified once per way,
+    // before the explode (F3; twoway rules override both oneway
+    // directions, OsmFilter.cpp:55-64)
     val wayNodePairs = taggedWays
-      .select($"id".as("way_id"), $"tags", posexplode($"nodes").as(Seq("pos", "node_id")))
+      .select($"id".as("way_id"), levelOf($"tags", cfg.levelRules).as("lvl"),
+        when(tagMatches($"tags", cfg.twowayRules), lit(0))
+          .when(tagMatches($"tags", cfg.onewayRules), lit(1))
+          .when(tagMatches($"tags", cfg.onewayRevRules), lit(2))
+          .otherwise(lit(0)).as("oneway"),
+        posexplode($"nodes").as(Seq("pos", "node_id")))
 
     // ---- J2: resolve node coords, consecutive pairs -> edges ----
     // The reference's pass-1 way keep-filter ("any member node in bbox",
@@ -413,26 +403,7 @@ object GraphBuilder {
          .withColumn("node_id", when($"nohup",
            -($"way_id" * 65536L + $"pos")).otherwise($"node_id")))
        .withColumn("from_tc", when($"brk_node" && !$"nohup", lit(1)))
-    val w = Window.partitionBy($"way_id").orderBy($"pos")
-    val edgesRaw = resolved
-      .withColumn("to_id", lead($"node_id", 1).over(w))
-      .withColumn("to_lat", lead($"lat", 1).over(w))
-      .withColumn("to_lon", lead($"lon", 1).over(w))
-      .filter($"to_id".isNotNull)
-      .withColumn("lvl", levelOf($"tags", cfg.levelRules))
-      // twoway rules override both oneway directions (OsmFilter.cpp:55-64)
-      .withColumn("oneway",
-        when(tagMatches($"tags", cfg.twowayRules), lit(0))
-          .when(tagMatches($"tags", cfg.onewayRules), lit(1))
-          .when(tagMatches($"tags", cfg.onewayRevRules), lit(2))
-          .otherwise(lit(0)))
-      .withColumn("len_m", haversineM($"lat", $"lon", $"to_lat", $"to_lon"))
-      // deterministic edge id: way id in high bits, position in low
-      .withColumn("edge_id", ($"way_id" * lit(65536L)) + $"pos")
-      .select($"edge_id", $"way_id", $"pos",
-        $"node_id".as("from_id"), $"to_id",
-        $"lat".as("from_lat"), $"lon".as("from_lon"), $"to_lat", $"to_lon",
-        $"len_m", $"lvl", $"oneway", $"from_tc")
+    val edgesRaw = segments(resolved)
 
     // ---- G8 cost from level speed, fixed-point decisecond (4.10) ----
     val speeds = cfg.levelSpeedsKmh.map(_ / 3.6) // m/s per level
@@ -535,11 +506,14 @@ object GraphBuilder {
     // a relation's line is the lineDim row of its four identity columns;
     // the equi-join that found it matched exactly the relations with all
     // four non-null (lineDim holds each distinct identity once), so a
-    // filter plus the same hash is that join
+    // filter plus the same hash is that join. Each row carries its line's
+    // names too, so the graph collect, the color vote and the distributed
+    // build read them here instead of joining the line dim back.
     val wayLines = routeRels
       .filter($"short_name".isNotNull && $"from_str".isNotNull &&
         $"to_str".isNotNull && $"colour".isNotNull)
-      .select(explode($"way_ids").as("way_id"), lineId.as("line_id"))
+      .select(explode($"way_ids").as("way_id"), lineId.as("line_id"),
+        $"short_name", $"from_str", $"to_str", $"colour")
       .distinct()
 
     GraphTables(nodes, edges, stations, restrictions, lineDim, wayLines,

@@ -3,15 +3,14 @@ package graft.plans
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sources.ParquetTables
 
 /** Iceberg-style snapshot checkpoints (north rule: "resumable from
   * checkpoint with per-partition lineage + metrics"). Each pipeline stage
   * writes its output as a parquet snapshot plus a manifest recording the
-  * input fingerprint, row count, per-partition row counts (lineage +
-  * metrics), and timing. A re-run with the same fingerprint SKIPS the
+  * input fingerprint, row count, the row count of each written file
+  * (lineage + metrics; one file per written partition), and timing. A re-run with the same fingerprint SKIPS the
   * stage and reads the snapshot — the analog of the reference's staged
   * intermediate state, distributed (SURVEY §7.1 checkpoints #1-#3).
   *
@@ -70,10 +69,9 @@ object Snapshots {
     df.write.mode(SaveMode.Overwrite).parquet(out)
     val elapsed = (System.nanoTime() - t0) / 1e9
     val snap = ParquetTables.read(spark, out)
-    // per-partition lineage/metrics of the WRITTEN snapshot
-    val parts = snap.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("rows")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    // per-file lineage/metrics of the WRITTEN snapshot, from the footers
+    // on the driver: the write is the stage's only job
+    val parts = ParquetTables.fileRowCounts(spark, out).zipWithIndex.map(_.swap)
     val rows = parts.map(_._2).sum
     val partsJson = parts.map { case (p, n) => s"[$p,$n]" }.mkString("[", ",", "]")
     val json =

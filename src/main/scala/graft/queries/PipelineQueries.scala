@@ -80,8 +80,7 @@ object PipelineQueries {
     val hops = mr.hops.cache()
 
     // A8 shape color vote + A7 route color consolidation over matched hops
-    val tripColors = ColorOps.shapeColorVote(hops, edges, gt.wayLines,
-      gt.transitLines).cache()
+    val tripColors = ColorOps.shapeColorVote(hops, edges, gt.wayLines).cache()
     val routeColors = ColorOps.consolidateRouteColors(t.trips, tripColors,
       t.routes).cache()
 

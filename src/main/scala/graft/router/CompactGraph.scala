@@ -445,16 +445,18 @@ object CompactGraph {
                 restrictions: org.apache.spark.sql.DataFrame): CompactGraph =
     fromEdges(edges, restrictions, null, null)
 
-  /** Full builder: also attaches transit line short names per edge (from
-    * wayLines(way_id, line_id) x lines(line_id, short_name)) for the
-    * line-similarity cost shaping (G2/U6), and the turn-cycle node set. */
+  /** Full builder: also attaches transit line names per edge (from
+    * wayLines(way_id, short_name, from_str, to_str), GraphBuilder's way ->
+    * line table, which carries the names) for the line-similarity cost
+    * shaping (G2/U6), and the turn-cycle node set. `lines`, the line dim,
+    * is not read: the names ride on wayLines. */
   def fromEdges(edges: org.apache.spark.sql.DataFrame,
                 restrictions: org.apache.spark.sql.DataFrame,
                 wayLines: org.apache.spark.sql.DataFrame,
                 lines: org.apache.spark.sql.DataFrame,
                 turnCycles: org.apache.spark.sql.DataFrame = null): CompactGraph = {
     val hasGeom = edges.columns.contains("geom")
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col => fcol, lit}
+    import org.apache.spark.sql.functions.{coalesce, col => fcol, lit}
     // the three driver collects below are INDEPENDENT jobs; running them
     // sequentially paid three scheduler/AQE round-trips back to back
     // (guide: overlap independent jobs so the next job's tasks back-fill
@@ -481,24 +483,17 @@ object CompactGraph {
       "from_lat", "from_lon", "to_lat", "to_lon", "cost10", "len_m", "oneway"))
       .collect())
     // (short_name, from_str, to_str) triples per way — G2 needs the
-    // from/to split (RoutingAttrs.h:40-42); columns may be absent on
-    // older line dims
+    // from/to split (RoutingAttrs.h:40-42)
     val wayToNamesF: Future[Map[Long, Array[(String, String, String)]]] = Future {
-      if (wayLines == null || lines == null) Map.empty
-      else {
-        val hasFt = lines.columns.contains("from_str")
-        // the line dim is bounded by the feed's transit lines: broadcast
-        // it rather than shuffle both sides and convert at run time
-        wayLines.join(broadcast(lines), "line_id")
-          .select(fcol("way_id"), coalesce(fcol("short_name"), lit("")),
-            if (hasFt) coalesce(fcol("from_str"), lit("")) else lit(""),
-            if (hasFt) coalesce(fcol("to_str"), lit("")) else lit(""))
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (w, rs) =>
-            w -> rs.map(r => (r.getString(1), r.getString(2), r.getString(3))).distinct
-          }
-      }
+      if (wayLines == null) Map.empty
+      else wayLines
+        .select(fcol("way_id"), coalesce(fcol("short_name"), lit("")),
+          coalesce(fcol("from_str"), lit("")), coalesce(fcol("to_str"), lit("")))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (w, rs) =>
+          w -> rs.map(r => (r.getString(1), r.getString(2), r.getString(3))).distinct
+        }
     }
     // restrictions and turn-cycle nodes are both small: one query (a union
     // tagged by kind) collects them in one job

@@ -170,14 +170,14 @@ object DistGraphBuild {
     val cycleRows =
       if (gt.turnCycles == null) spark.emptyDataFrame
       else nodeRows(gt.turnCycles, 4)
-    val hasFt = gt.transitLines != null && gt.transitLines.columns.contains("from_str")
+    // the way -> line table carries the line names
     val nameRows =
-      if (gt.wayLines == null || gt.transitLines == null) spark.emptyDataFrame
-      else gt.wayLines.join(gt.transitLines, Seq("line_id"))
+      if (gt.wayLines == null) spark.emptyDataFrame
+      else gt.wayLines
         .select($"way_id",
           coalesce($"short_name", lit("")).as("s1"),
-          (if (hasFt) coalesce($"from_str", lit("")) else lit("")).as("s2"),
-          (if (hasFt) coalesce($"to_str", lit("")) else lit("")).as("s3"))
+          coalesce($"from_str", lit("")).as("s2"),
+          coalesce($"to_str", lit("")).as("s3"))
         .distinct()
         .join(edgesB.select($"way_id", $"bin").distinct(), Seq("way_id"))
         .select(lit(5).as("kind"), $"bin", $"way_id".as("a"),

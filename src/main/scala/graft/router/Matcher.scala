@@ -13,26 +13,28 @@ import graft.plans.Boundary
   * spatial join, the declared core of the north star), trips clustered by
   * identical stop sequence (the reference's trie-leaf collapse,
   * /root/reference/src/pfaedle/router/TripTrie.tpp:18-105 — exact duplicates
-  * dominate), one Viterbi solve per distinct sequence, results joined back
-  * to every trip.
+  * dominate), one Viterbi solve per distinct sequence, results exploded to
+  * every trip sharing it.
   *
   * Scale design: the candidate join is stops x edges on exploded cell keys;
   * the stops side is k-ring-exploded and AQE broadcasts the smaller side.
   * The road graph is broadcast as a compact primitive-array structure (the
   * reference holds the same graph fully in RAM single-node; per-MOT + bbox
   * filtering bounds it — SURVEY §7.3). Identical-sequence dedup makes kernel
-  * work proportional to DISTINCT sequences; the join-back is a plain
-  * shuffle join on seq_key that AQE skew-splits if one sequence has
-  * thousands of trips.
+  * work proportional to DISTINCT sequences; each solved sequence carries
+  * the ids of its trips, so the per-trip outputs are explodes, not a join.
   */
 object Matcher {
 
-  /** Candidate generation with station-aware penalties (J4 + J6 + U1-U5):
-    * buildCands plus, per stop, a bonus for edges that touch an OSM station
-    * node whose (normalized) name is similar to the stop's — the
+  /** Candidate generation (J4 + J5 + J6 + U1-U5): the K nearest edges per
+    * stop from a k-ring join + polyline projection, with station-aware
+    * penalties — per stop, a bonus for edges that touch an OSM station
+    * node whose (normalized) name is similar to the stop's, the
     * reference's station snap with statsimi classification
     * (OsmBuilder.cpp:1231-1313, StatsimiClassifier.cpp). Non-station
-    * candidates get nonStationPenaltySec added. stops must carry `name`. */
+    * candidates get nonStationPenaltySec added. stops(stop_id, name, lat,
+    * lng); edges from GraphBuilder. Returns cands(stop_id, edge_id, progr,
+    * py, px, dist_m, oneway, pen10). */
   def buildCandsWithStations(spark: SparkSession, stops: DataFrame, edges: DataFrame,
                              stations: DataFrame, cfg: OsmConfig,
                              maxAbsLat: Option[Double] = None): DataFrame = {
@@ -69,40 +71,77 @@ object Matcher {
       .filter($"d_m" <= cfg.maxSnapDistanceM)
       .filter(simUdf($"stop_name", $"st_name", $"d_m"))
       .withColumn("trk_mism", trkMismUdf($"pc", $"trk"))
-    // ONE per-stop aggregate carries everything the candidates need from
-    // the stop x station pairs: the similar stations as (node, track
-    // mismatch) pairs, and the nearest similar station. Candidates then
-    // join it once on stop_id (was: a per-(stop, node) aggregate joined
-    // twice, on the from and the to endpoint, plus a per-stop best-station
-    // aggregate joined a third time).
-    //  - a vertex aliasing several platforms counts as matching if ANY
-    //    matches: the endpoint's mismatch is the min over its pairs;
-    //  - the NEAREST similar station per stop — matching track beats
-    //    distance (two same-name platforms of one station are otherwise
+    // ring radius from the worst-case (highest) latitude in the feed —
+    // callers that already computed the feed bbox pass it in (the agg is
+    // otherwise a blocking driver round trip on the latency floor)
+    val kc = Cell.kForMeters(cfg.maxSnapDistanceM,
+      maxAbsLat.getOrElse(stops.agg(max(abs(col("lat")))).head().getDouble(0)), cfg.cellRes)
+    // project onto the full edge polyline when present (contracted chains
+    // are curved), else the straight segment
+    val edgeCells =
+      if (edges.columns.contains("geom"))
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          $"geom.lat".as("glat"), $"geom.lon".as("glon"),
+          explode($"cells").as("cell"))
+      else
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          array($"from_lat", $"to_lat").as("glat"),
+          array($"from_lon", $"to_lon").as("glon"),
+          explode($"cells").as("cell"))
+    // stop x edge candidate pairs (codegen'd projection expression; was a
+    // ScalaUDF whose Seq[Double] conversion boxed every coordinate), each
+    // as one struct ordered by (dist_m, edge_id) — the top-K order
+    val candPairs = stops
+      .select($"stop_id", $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), kc)))
+      .join(edgeCells, Seq("cell"))
+      .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
+      .filter($"proj._4" <= cfg.maxSnapDistanceM)
+      .select($"stop_id", struct($"proj._4".as("dist_m"), $"edge_id",
+        $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
+        $"oneway", $"from_id", $"to_id").as("c"))
+    // ONE group-by-stop pass over both pair sets serves everything the
+    // candidates need, with no window and no join:
+    //  - a (stop, edge) pair can match through several ring cells; the
+    //    copies are equal (same stop point, same edge polyline), so the
+    //    set dedups them, and the K nearest (ties: lower edge id) are the
+    //    first K of the sorted set. The best-per-deg-2-chain dedup (O1/G9)
+    //    happens kernel-side against CompactGraph.chainOf;
+    //  - the similar stations as (node, track mismatch) pairs: a vertex
+    //    aliasing several platforms counts as matching if ANY matches, so
+    //    an endpoint's mismatch is the min over its pairs;
+    //  - the NEAREST similar station — matching track beats distance (two
+    //    same-name platforms of one station are otherwise
     //    indistinguishable): candidates touching that vertex snap their
     //    position onto it, so matched shapes terminate exactly at the
     //    station node (the reference routes via station group nodes,
-    //    OsmBuilder snapStation + ShapeBuilder getECM). The pair-level min
-    //    over (trk_mism, d_m, node_id) is the per-node min followed by the
-    //    per-stop min (lexicographic order is hierarchical; st_lat/st_lon
-    //    are constant per node).
-    val stopStations = simPairs.groupBy($"stop_id")
-      .agg(collect_list(struct($"node_id", $"trk_mism")).as("sims"),
-        min_by(struct($"node_id", $"st_lat", $"st_lon"),
-          struct($"trk_mism", $"d_m", $"node_id")).as("b"))
-    val cands = buildCandsWithEnds(spark, stops, edges, cfg, maxAbsLat)
+    //    OsmBuilder snapStation + ShapeBuilder getECM).
+    // A candidate row has no station columns and a station row no
+    // candidate: collect_* skip the nulls and min_by skips rows with a null
+    // ordering.
+    val perStop = candPairs
+      .unionByName(simPairs.select($"stop_id",
+        struct($"node_id", $"trk_mism").as("sim"),
+        struct($"node_id", $"st_lat", $"st_lon").as("bv"),
+        struct($"trk_mism", $"d_m", $"node_id").as("bo")), allowMissingColumns = true)
+      .groupBy($"stop_id")
+      .agg(slice(sort_array(collect_set($"c")), 1, MaxCandsPerStop).as("top"),
+        collect_list($"sim").as("sims"), min_by($"bv", $"bo").as("b"))
     val nonStationPen10 = graft.geo.Geo.costToInt(cfg.nonStationPenaltySec)
     val platformPen10 = graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec)
-    // track mismatch of the similar stations at an endpoint (null: none)
-    def endMism(end: String) = array_min(transform(
-      filter($"sims", x => x.getField("node_id") === col(end)), x => x.getField("trk_mism")))
+    // track mismatch of the similar stations at an endpoint (null: none):
+    // the least over the endpoint's pairs, and a mismatch is 0 or 1
+    def endMism(end: String) = {
+      def has(m: Int) = array_contains($"sims",
+        struct($"c".getField(end).as("node_id"), lit(m).as("trk_mism")))
+      when(has(0), lit(0)).when(has(1), lit(1))
+    }
     // an edge is a "station candidate" if either endpoint is a similar station
-    // both sides arrive hash-partitioned by stop_id (the top-K window's
-    // exchange, the per-stop aggregate's): a merge join needs no further
-    // stage, where a run-time switch to broadcast adds a broadcast job
-    cands.join(stopStations.hint("shuffle_merge"), Seq("stop_id"), "left_outer")
+    perStop
+      .select($"stop_id", $"sims", $"b", explode($"top").as("c"))
       .withColumn("from_mism", endMism("from_id"))
       .withColumn("to_mism", endMism("to_id"))
+      .withColumn("pen10", ceil($"c.dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
       .withColumn("pen10",
         when($"from_mism".isNotNull || $"to_mism".isNotNull,
           // emulateReferenceTrackPenalty flips the condition to the
@@ -113,82 +152,17 @@ object Matcher {
             lit(platformPen10)).otherwise(lit(0L)))
           .otherwise($"pen10" + lit(nonStationPen10)))
       .withColumn("best_node", $"b.node_id")
-      .withColumn("at_from", $"best_node".isNotNull && $"from_id" === $"best_node")
-      .withColumn("at_to", $"best_node".isNotNull && $"to_id" === $"best_node")
-      .withColumn("progr", when($"at_from", lit(0.0))
-        .when($"at_to", lit(1.0)).otherwise($"progr"))
-      .withColumn("py", when($"at_from" || $"at_to", $"b.st_lat").otherwise($"py"))
-      .withColumn("px", when($"at_from" || $"at_to", $"b.st_lon").otherwise($"px"))
-      .drop("from_id", "to_id", "sims", "b", "from_mism", "to_mism",
-        "best_node", "at_from", "at_to")
+      .withColumn("at_from", $"best_node".isNotNull && $"c.from_id" === $"best_node")
+      .withColumn("at_to", $"best_node".isNotNull && $"c.to_id" === $"best_node")
+      .select($"stop_id", $"c.edge_id".as("edge_id"),
+        when($"at_from", lit(0.0)).when($"at_to", lit(1.0)).otherwise($"c.progr").as("progr"),
+        when($"at_from" || $"at_to", $"b.st_lat").otherwise($"c.py").as("py"),
+        when($"at_from" || $"at_to", $"b.st_lon").otherwise($"c.px").as("px"),
+        $"c.dist_m".as("dist_m"), $"c.oneway".as("oneway"), $"pen10")
   }
 
-  /** Candidate generation (J4/J5): broadcast k-ring join + projection.
-    * stops(stop_id, lat, lng); edges from GraphBuilder.
-    * Returns cands(stop_id, edge_id, progr, pen10, py, px, dist_m, oneway). */
-  def buildCands(spark: SparkSession, stops: DataFrame, edges: DataFrame,
-                 cfg: OsmConfig, maxAbsLatOpt: Option[Double] = None): DataFrame =
-    buildCandsWithEnds(spark, stops, edges, cfg, maxAbsLatOpt).drop("from_id", "to_id")
-
-  /** buildCands plus each candidate edge's endpoint node ids (from_id,
-    * to_id), read in the same edge scan the cell join uses. */
-  private def buildCandsWithEnds(spark: SparkSession, stops: DataFrame, edges: DataFrame,
-                                 cfg: OsmConfig, maxAbsLatOpt: Option[Double]): DataFrame = {
-    import spark.implicits._
-    // ring radius from the worst-case (highest) latitude in the feed —
-    // callers that already computed the feed bbox pass it in (the agg is
-    // otherwise a blocking driver round trip on the latency floor)
-    val maxAbsLat = maxAbsLatOpt.getOrElse(
-      stops.agg(max(abs(col("lat")))).head().getDouble(0))
-    val k = Cell.kForMeters(cfg.maxSnapDistanceM, maxAbsLat, cfg.cellRes)
-    val stopRings = stops
-      .select($"stop_id", $"lat".as("s_lat"), $"lng".as("s_lng"))
-      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), k)))
-    // project onto the full edge polyline when present (contracted chains
-    // are curved), else the straight segment
-    val hasGeom = edges.columns.contains("geom")
-    val edgeCells =
-      (if (hasGeom)
-        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
-          expr("transform(geom, p -> p.lat)").as("glat"),
-          expr("transform(geom, p -> p.lon)").as("glon"),
-          explode($"cells").as("cell"))
-      else
-        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
-          array($"from_lat", $"to_lat").as("glat"),
-          array($"from_lon", $"to_lon").as("glon"),
-          explode($"cells").as("cell")))
-    // codegen'd projection expression (was a ScalaUDF: Seq[Double]
-    // conversion boxed every coordinate of every candidate row's polyline)
-    val joined = stopRings.join(edgeCells, Seq("cell"))
-      .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
-      .select($"stop_id", $"edge_id", $"oneway", $"from_id", $"to_id",
-        $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
-        $"proj._4".as("dist_m"))
-      .filter($"dist_m" <= cfg.maxSnapDistanceM)
-      // one exchange by stop serves the dedup below and the top-K window
-      // (hash(stop) clusters (stop, edge) too)
-      .repartition($"stop_id")
-      // a (stop, edge) pair can match through several ring cells -> dedup
-      // (the copies are equal: same stop point, same edge polyline)
-      .groupBy($"stop_id", $"edge_id")
-      .agg(first($"progr").as("progr"), first($"py").as("py"), first($"px").as("px"),
-        first($"dist_m").as("dist_m"), first($"oneway").as("oneway"),
-        first($"from_id").as("from_id"), first($"to_id").as("to_id"))
-    // keep top-K nearest edges per stop; the best-per-deg-2-chain dedup
-    // (O1/G9) happens kernel-side against CompactGraph.chainOf
-    val byStop = Window.partitionBy($"stop_id").orderBy($"dist_m", $"edge_id")
-    joined.withColumn("rk", row_number().over(byStop))
-      .filter($"rk" <= 8).drop("rk")
-      .withColumn("pen10", ceil($"dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
-  }
-
-  /** Solve all trips. tripStops(trip_id, seq, stop_id, arr_s, dep_s, lat, lng)
-    * (J7 output); cands from buildCands. Output:
-    * shapes(shape_id=trip_id, seq, lat, lng, travel_dist) + hops via solveHops. */
-  def matchTrips(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
-                 graph: CompactGraph, cfg: OsmConfig): DataFrame =
-    matchTripsFull(spark, tripStops, cands, graph, cfg).shapes
+  /** Candidates kept per stop: the K nearest edges. */
+  val MaxCandsPerStop = 8
 
   /** Everything one matching run produces:
     *  - shapes(shape_id, seq, lat, lng, travel_dist) — the matched
@@ -212,57 +186,42 @@ object Matcher {
   def matchTripsFull(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
                      parts: GraphPartitions, cfg: OsmConfig): MatchResult = {
     import spark.implicits._
-    // Two slim materializations instead of one heavy one: the old flow
-    // checkpointed the per-TRIP keyed table (every trip's stops array =
-    // ~15x the distinct payload at high trips-per-route) and then shuffled
-    // ALL of it again through dropDuplicates. Now the per-trip table only
-    // ever exists as (trip_id, seq_key) — the stops arrays are re-built
-    // for ONE representative trip per distinct sequence (1/dup-factor of
-    // the rows), at the cost of a second pass over the tripStops source
-    // (scans are cheap and pruned; wide shuffles are not).
-    // Both sit behind deferred boundaries: every consumer chain in the
-    // match path is sequential driver code.
-    val (seqKeys, distinctSeqs) = tripSeqTables(tripStops)
+    // ONE per-trip aggregate and ONE per-seq_key aggregate feed the solve,
+    // over one plan of the tripStops source: each distinct sequence
+    // arrives with its representative's stops and the ids of every trip
+    // sharing it. Deferred: its consumers (the cluster collect, the solve)
+    // are sequential driver code.
+    val seqs = Boundary.deferred(distinctSeqs(tripStopsWithKey(tripStops)))
     // boundary: the kernel output feeds shapes, anchors, hops, the color
     // ops, the eval and the overlay — truncating the logical lineage here
     // keeps every downstream plan shallow (deep lineage made AQE's
     // per-update plan stringification quadratic)
-    // EAGER on purpose (unlike the slim seq tables above): the solve must
+    // EAGER on purpose (unlike the sequence table above): the solve must
     // run as its own dedicated job so the kernel has every core and the
     // KernelNanos/KernelCpuNanos wall-vs-CPU diagnostics measure the
-    // kernel, not co-scheduled join/explode tasks of a fused job (a lazy
+    // kernel, not co-scheduled explode tasks of a fused job (a lazy
     // checkpoint here inflated summed in-solve wall ~100x at local[32]
     // with identical CPU and iteration counts)
-    val solved = Boundary.eager(solveSeqs(spark, distinctSeqs,
-      cands, parts, cfg))
-
-    // join back ONCE, LAZILY: the solved table carries the heavy
-    // per-sequence payload (points/anchors/hops arrays); joining it
-    // separately for each of the three outputs shuffled that payload three
-    // times — jstack'd as the dominant cost of the whole match stage at
-    // high core counts. But CHECKPOINTING the join output was worse at
-    // high trip counts: the join duplicates each sequence's payload to
-    // every trip sharing it (~15x at tpr=3600), so the eager checkpoint
-    // wrote gigabytes a caller consuming only `shapes` never reads. Both
-    // join inputs are checkpointed, so re-running the join per consumed
-    // output costs one small shuffle of the 10^3-row pre-duplication
-    // payload — the duplication stays in-flight, never materialized.
-    // The W2 cumulative measure is accumulated in the kernel during
-    // geometry materialization (same haversine running sum the window
-    // computed — without a 10^7-row sort).
-    // a merge join: each side is exchanged by seq_key once, with no
-    // run-time switch to broadcast (and its extra job) on top
-    val joined = seqKeys.join(solved.hint("shuffle_merge"), Seq("seq_key"))
-    // arrays_zip at EXPLODE time only — the structs exist transiently in
-    // codegen; the shuffled/checkpointed payload stays flat primitives
-    val shapes = joined
-      .select($"trip_id".as("shape_id"),
+    val solved = Boundary.eager(solveSeqs(spark, seqs, cands, parts, cfg))
+    // The trip ids rode through the solve, so each output is a narrow
+    // explode of the solved rows. A sequence's payload is duplicated to
+    // its trips in flight only, never shuffled or materialized per trip
+    // (~15x the distinct payload at high trips-per-route). arrays_zip at
+    // EXPLODE time only — the
+    // structs exist transiently in codegen; the checkpointed payload stays
+    // flat primitives. The W2 cumulative measure is accumulated in the
+    // kernel during geometry materialization.
+    val shapes = solved
+      .select(explode($"trip_ids").as("shape_id"), $"lats", $"lngs", $"dists")
+      .select($"shape_id",
         posexplode(arrays_zip($"lats", $"lngs", $"dists")).as(Seq("seq", "z")))
       .select($"shape_id", $"seq", $"z.lats".as("lat"), $"z.lngs".as("lng"),
         $"z.dists".as("travel_dist"))
-    val anchors = joined
+    val anchors = solved
+      .select(explode($"trip_ids").as("trip_id"), $"anchors")
       .select($"trip_id", posexplode($"anchors").as(Seq("stop_idx", "point_seq")))
-    val hops = joined
+    val hops = solved
+      .select(explode($"trip_ids").as("trip_id"), $"hops")
       .select($"trip_id", explode($"hops").as("h"))
       .select($"trip_id", $"h.hop_idx".as("hop_idx"),
         $"h.edge_ids".as("edge_ids"), $"h.reachable".as("reachable"))
@@ -334,36 +293,22 @@ object Matcher {
       .drop("t0")
   }
 
-  /** The two tables the matcher actually needs, each materialized SLIM:
-    *  - seqKeys(trip_id, seq_key, from_name, to_name) — the full per-trip
-    *    table, string columns only (the old flow checkpointed every trip's
-    *    stops array here: ~15x the distinct payload at high
-    *    trips-per-route, written once and shuffled again by
-    *    dropDuplicates). The two names are not read downstream: keeping
-    *    them keeps this per-trip aggregate identical to distinctSeqs', so
-    *    the second one runs on the classes generated for the first instead
-    *    of compiling its own;
-    *  - distinctSeqs(seq_key, line_name, stops, from_name, to_name) — the
-    *    heavy stops arrays, built from ONE representative trip per
-    *    distinct sequence (deterministic min trip_id; dropDuplicates kept
-    *    an arbitrary partition-order row). Trips sharing a key differ only
-    *    by a constant time shift and the kernel is shift-invariant, so any
-    *    representative solves identically.
-    * Costs one extra pass over the tripStops source — scans are pruned
-    * and cheap, wide shuffles are not. */
-  def tripSeqTables(tripStops: DataFrame): (DataFrame, DataFrame) = {
-    val ss = tripStops.sparkSession
-    import ss.implicits._
-    // seq_key depends on the collected stops array, but the projection
-    // drops the array post-agg — it exists only transiently per group,
-    // never in a shuffle file or checkpoint block
-    val seqKeys = Boundary.deferred(tripStopsWithKey(tripStops)
-      .select($"trip_id", $"seq_key", $"from_name", $"to_name"))
-    val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
-    val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
-    val distinctSeqs = Boundary.deferred(tripStopsWithKey(repRows)
-      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"))
-    (seqKeys, distinctSeqs)
+  /** One row per distinct sequence from tripStopsWithKey's per-trip rows:
+    * (seq_key, line_name, stops, from_name, to_name, trip_ids). The
+    * sequence is that of ONE representative trip, the deterministic min
+    * trip_id (trips sharing a key differ only by a constant time shift and
+    * the kernel is shift-invariant, so any representative solves
+    * identically); trip_ids lists every trip sharing the key, sorted. One
+    * aggregate: the per-trip table is never materialized, joined back or
+    * planned a second time. */
+  def distinctSeqs(keyed: DataFrame): DataFrame = {
+    import keyed.sparkSession.implicits._
+    keyed.filter($"trip_id".isNotNull)
+      .groupBy($"seq_key")
+      .agg(min_by(struct($"line_name", $"stops", $"from_name", $"to_name"), $"trip_id").as("r"),
+        sort_array(collect_list($"trip_id")).as("trip_ids"))
+      .select($"seq_key", $"r.line_name".as("line_name"), $"r.stops".as("stops"),
+        $"r.from_name".as("from_name"), $"r.to_name".as("to_name"), $"trip_ids")
   }
 
   case class HopRow(hop_idx: Int, edge_ids: Array[Long], reachable: Boolean)
@@ -371,56 +316,33 @@ object Matcher {
     * point index; dists = the W2 cumulative haversine measure, accumulated
     * at materialization, stored at the float precision the output schema
     * carries) rather than an array of per-point structs: this payload
-    * crosses the solve-cogroup shuffle, a serialized checkpoint and the
-    * seq_key join-back, and struct-per-point arrays paid a Tungsten
+    * crosses the solve-cogroup shuffle and a serialized checkpoint, and
+    * struct-per-point arrays paid a Tungsten
     * offset+null-word per POINT on every hop (measured: the match phase
     * spends most of its executor time outside the kernel, in exactly this
     * serialization). anchors = index into the point arrays of each stop's
-    * snap position (per-stop shape_dist_traveled, the eval's cut anchors). */
+    * snap position (per-stop shape_dist_traveled, the eval's cut anchors).
+    * trip_ids: the trips sharing the sequence (the solve attaches them;
+    * the kernel leaves them empty). */
   case class SolvedSeq(seq_key: String, lats: Array[Double],
                        lngs: Array[Double], dists: Array[Float],
                        anchors: Array[Int], hops: Array[HopRow],
-                       n_hops: Int, n_unroutable: Int, cost10: Long)
+                       n_hops: Int, n_unroutable: Int, cost10: Long,
+                       trip_ids: Array[String] = Array.empty)
   /** ordered stop row inside a sequence (encoder-compatible field names) */
   case class TS(seq: Int, stop_id: String, arr_s: Int, dep_s: Int,
                 lat: Double, lng: Double)
 
-  /** The graph ships as per-component-bin broadcasts (GraphPartitions);
-    * each solver task resolves only the bins its candidate edges touch — at
+  /** Solve ALREADY-DISTINCT sequences (distinctSeqs' rows). The graph
+    * ships as per-component-bin broadcasts (GraphPartitions); each solver
+    * task resolves only the bins its candidate edges touch — at
     * continental scale no executor ever holds the full graph. A single-bin
-    * partitioning is the full-graph broadcast. */
-  def solveKeyedSeqs(spark: SparkSession, keyed: DataFrame, cands: DataFrame,
-                     parts: GraphPartitions, cfg: OsmConfig): DataFrame = {
-    import spark.implicits._
-    solveSeqs(spark, keyed.dropDuplicates("seq_key")
-      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"),
-      cands, parts, cfg)
-  }
-
-  /** Solve ALREADY-DISTINCT sequences (one row per seq_key). */
-  def solveSeqs(spark: SparkSession, distinctSeqs0: DataFrame, cands: DataFrame,
+    * partitioning is the full-graph broadcast. Output: SolvedSeq rows, each
+    * carrying its sequence's trip ids. */
+  def solveSeqs(spark: SparkSession, distinctSeqs: DataFrame, cands: DataFrame,
                 parts: GraphPartitions, cfg: OsmConfig): DataFrame = {
     import spark.implicits._
     val cfgB = spark.sparkContext.broadcast(cfg)
-
-    // NORMALIZE to relative times before solving: sequences sharing a
-    // seq_key differ only by a constant shift, but the REPRESENTATIVE
-    // carrying each key holds its own trip's absolute times — and the trie
-    // averages times ACROSS member sequences, so at a trie fork the
-    // parent/child member sets differ and avgTime differences absorb the
-    // representatives' shift spread (hours at high trips-per-route). A
-    // poisoned `sched` inflates the hop cutoff by that spread and a layer
-    // relax degenerates into whole-graph searches (observed: a solver task
-    // pinned for 15+ minutes on work that takes seconds). Relative times
-    // are what the cluster key hashes; solving on them makes the kernel
-    // shift-exact and the layer memo representative-independent.
-    val distinctSeqs = distinctSeqs0
-      .withColumn("t0", $"stops"(0).getField("dep_s"))
-      .withColumn("stops", expr(
-        "transform(stops, x -> struct(x.seq as seq, x.stop_id as stop_id, " +
-          "cast(x.arr_s - t0 as int) as arr_s, cast(x.dep_s - t0 as int) as dep_s, " +
-          "x.lat as lat, x.lng as lng))"))
-      .drop("t0")
 
     val in = solverInputs(spark, distinctSeqs, cands)
     val clToNamesB = spark.sparkContext.broadcast(in.toNames)
@@ -441,9 +363,10 @@ object Matcher {
       val fromName = rows.headOption.map(_.from_name).getOrElse("")
       val toNames = rows.headOption.map(_ => clToNamesB.value((key._1, key._2)))
         .getOrElse(Array.empty[String])
+      val tripIds = rows.iterator.map(r => r.seq_key -> r.trip_ids).toMap
       MatcherKernel.solveCluster(line, fromName, toNames,
-        rows.map(r => (r.seq_key, r.stops.toArray)), g, candMap,
-        cfgB.value).iterator
+        rows.map(r => (r.seq_key, relativeTimes(r.stops))), g, candMap,
+        cfgB.value).iterator.map(s => s.copy(trip_ids = tripIds(s.seq_key)))
     }
 
     // BIN-AWARE LOCALITY (multi-bin partitionings with tagged candidates):
@@ -492,17 +415,34 @@ object Matcher {
       }.toDF()
   }
 
+  /** A sequence's stops with times relative to its first departure, as
+    * the kernel solves them. Sequences sharing a seq_key differ only by a
+    * constant shift, but the REPRESENTATIVE carrying each key holds its own
+    * trip's absolute times — and the trie averages times ACROSS member
+    * sequences, so at a trie fork the parent/child member sets differ and
+    * avgTime differences absorb the representatives' shift spread (hours
+    * at high trips-per-route). A poisoned `sched` inflates the hop cutoff
+    * by that spread and a layer relax degenerates into whole-graph searches
+    * (observed: a solver task pinned for 15+ minutes on work that takes
+    * seconds). Relative times are what the cluster key hashes; solving on
+    * them makes the kernel shift-exact and the layer memo
+    * representative-independent. */
+  private[graft] def relativeTimes(stops: Seq[TS]): Array[TS] = {
+    val t0 = stops.headOption.fold(0)(_.dep_s)
+    stops.iterator.map(s => s.copy(arr_s = s.arr_s - t0, dep_s = s.dep_s - t0)).toArray
+  }
+
   /** What the solver groups are built from: one row per sequence keyed by
     * its salted cluster (c_line, c_stop, salt), the cluster's candidate
     * rows under the same key, and each cluster's lineTo set.
-    * distinctSeqs: one row per seq_key, times relative (solveSeqs). */
+    * distinctSeqs: distinctSeqs' rows. */
   private[graft] case class SolverInputs(
       seqRows: Dataset[SolverSeq],
       candRows: Dataset[SolverCand],
       toNames: Map[(String, String), Array[String]])
-  /** one sequence under its salted cluster key (times relative) */
+  /** one sequence under its salted cluster key (the representative's times) */
   case class SolverSeq(c_line: String, c_stop: String, salt: Int, seq_key: String,
-                       stops: Seq[TS], from_name: String)
+                       stops: Seq[TS], from_name: String, trip_ids: Array[String])
   /** one candidate of a stop of the cluster; bin -1 when untagged */
   case class SolverCand(c_line: String, c_stop: String, salt: Int, stop_id: String,
                         edge_id: Long, progr: Double, pen10: Long, py: Double,
@@ -576,7 +516,7 @@ object Matcher {
       .withColumn("salt", pmod(xxhash64($"seq_key"), salts($"c_line", $"c_stop")).cast("int"))
     val seqRows = salted
       .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
-        coalesce($"from_name", lit("")).as("from_name"))
+        coalesce($"from_name", lit("")).as("from_name"), $"trip_ids")
       .as[SolverSeq]
 
     // Candidates are shipped ONCE PER CLUSTER via cogroup, not once per
@@ -590,14 +530,16 @@ object Matcher {
     // .tagCands) — the solver resolves its graph from the tags, because no
     // edge->bin broadcast map exists when bins were built executor-side
     val binCol = if (cands.columns.contains("bin")) col("bin").cast("int") else lit(-1)
-    // one exchange by stop serves the dedup and the candidate merge join
+    // one exchange by stop serves the dedup and the candidate join; a hash
+    // join on that partitioning needs no sort of either side, and a stop's
+    // candidates (at most MaxCandsPerStop) are the side it builds
     val candRows = salted
       .select($"c_line", $"c_stop", $"salt",
-        explode(expr("transform(stops, s -> s.stop_id)")).as("stop_id"))
+        explode($"stops.stop_id").as("stop_id"))
       .repartition($"stop_id")
       .distinct()
       .join(cands.select($"stop_id", $"edge_id", $"progr", $"pen10",
-        $"py", $"px", $"oneway", binCol.as("bin")).hint("shuffle_merge"), Seq("stop_id"))
+        $"py", $"px", $"oneway", binCol.as("bin")).hint("shuffle_hash"), Seq("stop_id"))
       .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",
         $"progr", $"pen10", $"py", $"px", $"oneway", $"bin")
       .as[SolverCand]

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -60,20 +62,35 @@ object ParquetTables {
   private def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
+  /** The rows of each data file of the table at `path`, in path order,
+    * from the footers read on the driver: no Spark job. Empty when there
+    * is no data file. */
+  def fileRowCounts(spark: SparkSession, path: String): Seq[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(new Path(path), conf).toSeq.sortBy(_.getPath.toString).map { file =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }
+  }
+
   /** The first listed data file under `root`, stopping at the first hit
     * instead of listing the whole table. */
-  private def firstDataFile(root: Path, conf: Configuration): Option[FileStatus] = {
+  private def firstDataFile(root: Path, conf: Configuration): Option[FileStatus] =
+    dataFiles(root, conf).nextOption()
+
+  /** The data files under `root`, listed lazily. */
+  private def dataFiles(root: Path, conf: Configuration): Iterator[FileStatus] = {
     val fs = root.getFileSystem(conf)
     val rootDepth = fs.makeQualified(root).depth()
-    val it = try fs.listFiles(root, true) catch { case _: FileNotFoundException => return None }
-    while (it.hasNext) {
-      val f = it.next()
+    val it = try fs.listFiles(root, true) catch {
+      case _: FileNotFoundException => return Iterator.empty
+    }
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { f =>
       // every path component below the root, the file's name included
       var p = f.getPath
       var visible = true
       while (visible && p.depth() > rootDepth) { visible = !hidden(p.getName); p = p.getParent }
-      if (visible) return Some(f)
+      visible
     }
-    None
   }
 }

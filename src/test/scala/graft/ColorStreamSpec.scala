@@ -29,13 +29,12 @@ class ColorOpsSpec extends AnyFunSuite {
   test("A8+A7: matched trips vote their route-relation colour; routes consolidated") {
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions,
       gt.wayLines, gt.transitLines)
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg)
     val hops = Matcher.matchTripsFull(spark, WorldTables.tripStops(t), cands, graph, cfg).hops
     assert(hops != null && hops.count() > 0)
     // threshold 0.7: the first/last station jogs (off-line snap edges)
     // legitimately dilute coverage a little
-    val votes = ColorOps.shapeColorVote(hops, gt.edges, gt.wayLines,
-      gt.transitLines, threshold = 0.7).cache()
+    val votes = ColorOps.shapeColorVote(hops, gt.edges, gt.wayLines, threshold = 0.7).cache()
     // trips run along their row way which carries exactly one route
     // relation colour -> every trip gets a vote
     assert(votes.count() == t.trips.count())
@@ -64,8 +63,8 @@ class ColorOpsSpec extends AnyFunSuite {
       .join(elig.select($"trip_id"), Seq("trip_id"), "left_semi")
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions,
       gt.wayLines, gt.transitLines)
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
-    val matched = Matcher.matchTrips(spark, tripStops, cands, graph, cfg).cache()
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg)
+    val matched = MatchHelpers.matchTrips(spark, tripStops, cands, graph, cfg).cache()
     val matchedIds = matched.select($"shape_id".as("trip_id")).distinct()
     // post-match assignment: matched trips point at their new shapes
     val after = tripsWithShapes

@@ -102,7 +102,7 @@ class DistBuildSpec extends AnyFunSuite {
     val (_, _, _) = (keyed, cands, dist) // materialized outside the capture
     val plans = ExecutedPlans(spark) {
       HopCache.clear()
-      rows = Matcher.solveKeyedSeqs(spark, keyed, cands, dist.parts, cfg)
+      rows = MatchHelpers.solveKeyedSeqs(spark, keyed, cands, dist.parts, cfg)
         .select($"seq_key", spark_partition_id()).as[(String, Int)].collect()
     }
     (plans, rows)
@@ -114,8 +114,7 @@ class DistBuildSpec extends AnyFunSuite {
   }
 
   test("file-backed solve runs each group in its bin's partition block") {
-    val in = Matcher.solverInputs(spark, keyed.dropDuplicates("seq_key")
-      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"), cands)
+    val in = Matcher.solverInputs(spark, Matcher.distinctSeqs(keyed), cands)
     val groupOf = in.seqRows.collect().map(r => r.seq_key -> (r.c_line, r.c_stop, r.salt)).toMap
     // a group's bin: the largest of its candidates' bins
     val binOf = in.candRows.collect().groupBy(c => (c.c_line, c.c_stop, c.salt))
@@ -143,7 +142,7 @@ class DistBuildSpec extends AnyFunSuite {
     assert(cands.filter($"bin" < 0).count() == 0) // every cand edge has a bin
     def run(p: GraphPartitions) = {
       HopCache.clear()
-      Matcher.solveKeyedSeqs(spark, keyed, cands, p, cfg)
+      MatchHelpers.solveKeyedSeqs(spark, keyed, cands, p, cfg)
         .select($"seq_key", $"cost10", $"n_hops", $"n_unroutable",
           to_json(arrays_zip($"lats", $"lngs", $"dists")).as("pts"), to_json($"anchors").as("an"))
         .collect().map(_.toSeq).sortBy(_.head.toString)

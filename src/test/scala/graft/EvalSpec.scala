@@ -42,7 +42,7 @@ class EvalSpec extends AnyFunSuite {
     val bbox = GraphBuilder.feedBBox(t.stops).pad(cfg.bboxPaddingM)
     val gt = GraphBuilder.build(spark, t.osmNodes, t.osmWays, t.osmRels, bbox, cfg)
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions)
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg)
     val mr = Matcher.matchTripsFull(spark, WorldTables.tripStops(t), cands, graph, cfg)
     val (gen, anchors) = (mr.shapes, mr.anchors)
 

@@ -9,15 +9,20 @@ import graft.eval.Shapevl.{Pt, SD, scoreTrip}
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.functions.GeoFunctions._
 import graft.geo.Cell
-import graft.model.{OsmMember, OsmNode, OsmRel, OsmWay}
+import graft.model.{GtfsStop, OsmMember, OsmNode, OsmRel, OsmWay}
 import graft.osm.{GraphBuilder, OsmConfig, StationSnap}
-import graft.router.Matcher
+import graft.plans.Boundary
+import graft.router.{CompactGraph, GraphPartitions, Matcher}
 
 /** The fused plans equal the formulations they replaced, as row multisets,
   * on a seeded world extended with the cases the fusions must get right: a
   * sub-meter gap between two dead ends, a route relation without `ref`, and
-  * a line whose trips end at different terminals. The previous
-  * formulations are kept below verbatim as the reference. */
+  * a line whose trips end at different terminals. The grouped passes of
+  * the graph build, the candidates and the match are also checked on a
+  * second world with trips sharing a stop sequence, a way that leaves and
+  * re-enters the bbox, a closed way, and a stop with more than K candidate
+  * edges tied at the same distance. The previous formulations are kept
+  * below verbatim as the reference. */
 class FusionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -44,6 +49,60 @@ class FusionSpec extends AnyFunSuite {
   lazy val gt = GraphBuilder.build(spark, t.osmNodes, t.osmWays, t.osmRels, bbox, cfg)
   lazy val refined = StationSnap.refine(spark, gt, cfg, gt.blockers)._1
 
+  /** the edge cases of the grouped passes, around a grid point between
+    * the streets (the grid spacing is 200 m) */
+  lazy val world2: SyntheticWorld.World = {
+    val w = SyntheticWorld.build(8, 12, seed = 11L, tripsPerRoute = 3, variedTrips = false)
+    val mid = w.nodes(w.nodes.length / 2)
+    val (la, lo) = (mid.lat - 0.0008, mid.lon + 0.0012)
+    val road = Map("highway" -> "residential")
+    // a hub station with 12 spokes of 20 m: a stop placed on it is 0 m
+    // from all 12 edges, so its K = 8 candidates are cut inside a tie
+    val hub = OsmNode(9300000L, la, lo,
+      Map("public_transport" -> "stop_position", "name" -> "Hub", "bus" -> "yes"))
+    val spokes = (1 to 12).map { i =>
+      val a = 2 * math.Pi * i / 12
+      OsmNode(9300000L + i, la + 0.00018 * math.cos(a), lo + 0.00027 * math.sin(a), Map.empty)
+    }
+    val spokeWays = spokes.map(n => OsmWay(9400000L + n.id - 9300000L, road, Array(hub.id, n.id)))
+    // a way that leaves the bbox between its second and third node
+    val far = OsmNode(9310000L, -30.0, 100.0, Map.empty)
+    val out = Seq(OsmNode(9310001L, la + 0.0005, lo, Map.empty),
+      OsmNode(9310002L, la + 0.0005, lo + 0.0004, Map.empty),
+      OsmNode(9310003L, la + 0.0005, lo + 0.0008, Map.empty))
+    val outWay = OsmWay(9410000L, road, Array(out(0).id, out(1).id, far.id, out(2).id))
+    // a closed way: a ring of four nodes, first node repeated last
+    val ring = (0 until 4).map(i => OsmNode(9320000L + i,
+      la - 0.0004 + 0.0002 * (i / 2), lo + 0.0002 * (if (i == 1 || i == 2) 1 else 0), Map.empty))
+    val ringWay = OsmWay(9420000L, road, (ring.map(_.id) :+ ring.head.id).toArray)
+    val stop = GtfsStop("S_HUB", "Hub", la, lo, "", "", 0)
+    w.copy(nodes = w.nodes ++ (hub +: spokes) ++ (far +: out) ++ ring,
+      ways = w.ways ++ spokeWays :+ outWay :+ ringWay, stops = w.stops :+ stop)
+  }
+  lazy val t2 = WorldTables(spark, world2)
+  lazy val bbox2 = GraphBuilder.feedBBox(t2.stops).pad(cfg.bboxPaddingM)
+  lazy val refined2 = {
+    val g = GraphBuilder.build(spark, t2.osmNodes, t2.osmWays, t2.osmRels, bbox2, cfg)
+    StationSnap.refine(spark, g, cfg, g.blockers)._1
+  }
+
+  /** the build's resolved way nodes of a world, as GraphBuilder.build
+    * forms them (no nohup rules in the bus config) */
+  private def resolved(tb: WorldTables.Tables, bb: GraphBuilder.BBox): DataFrame = {
+    import GraphBuilder.{levelOf, tagMatches}
+    tb.osmWays.filter(tagMatches($"tags", cfg.keepWays))
+      .select($"id".as("way_id"), levelOf($"tags", cfg.levelRules).as("lvl"),
+        when(tagMatches($"tags", cfg.onewayRules), lit(1)).otherwise(lit(0)).as("oneway"),
+        posexplode($"nodes").as(Seq("pos", "node_id")))
+      .join(tb.osmNodes.filter($"lat" >= bb.latMin && $"lat" <= bb.latMax &&
+          $"lon" >= bb.lonMin && $"lon" <= bb.lonMax)
+        .select($"id".as("node_id"), $"lat", $"lon",
+          when(tagMatches($"tags", cfg.stationRules), lit(1)).as("from_tc")), Seq("node_id"))
+  }
+
+  private def withCost(segments: DataFrame): DataFrame =
+    segments.withColumn("cost10", costToInt($"len_m" / lit(5.0)))
+
   /** order-insensitive row multiset, columns by name */
   private def bag(df: DataFrame): Seq[String] =
     df.select(to_json(struct(df.columns.sorted.map(c => col(s"`$c`")): _*)))
@@ -68,7 +127,8 @@ class FusionSpec extends AnyFunSuite {
       .withColumn("line_id", xxhash64($"short_name", $"from_str", $"to_str", $"colour"))
     val old = routeRels
       .join(lineDim, Seq("short_name", "from_str", "to_str", "colour"))
-      .select(explode($"way_ids").as("way_id"), $"line_id")
+      .select(explode($"way_ids").as("way_id"), $"line_id",
+        $"short_name", $"from_str", $"to_str", $"colour")
       .distinct()
     assert(lineDim.filter($"short_name".isNull).count() == 1) // the ref-less relation
     assert(bag(gt.wayLines) == bag(old))
@@ -118,8 +178,7 @@ class FusionSpec extends AnyFunSuite {
     val ts = ts0.join(maxSeq, "trip_id")
       .filter(!(pmod(xxhash64($"trip_id"), lit(3)) === 0 && $"seq" >= $"mx" - 1))
       .drop("mx")
-    val (_, distinct0) = Matcher.tripSeqTables(ts)
-    val distinct = distinct0
+    val distinct = Matcher.distinctSeqs(Matcher.tripStopsWithKey(ts))
       .withColumn("t0", $"stops"(0).getField("dep_s"))
       .withColumn("stops", expr(
         "transform(stops, x -> struct(x.seq as seq, x.stop_id as stop_id, " +
@@ -131,16 +190,343 @@ class FusionSpec extends AnyFunSuite {
     val now = Matcher.solverInputs(spark, distinct, cands)
     val (oldSeqs, oldCands) = PriorPlans.solverInputs(spark, distinct, cands)
     assert(now.toNames.values.exists(_.length > 1)) // the multi-terminal line
-    val nowSeqs = now.seqRows.toDF()
+    val nowSeqs = now.seqRows.toDF().drop("trip_ids")
       .withColumn("cl_to_names", typedLit(now.toNames.map { case ((l, s), n) => s"$l|$s" -> n.toSeq })
         .getItem(concat_ws("|", $"c_line", $"c_stop")))
     assert(bag(nowSeqs) == bag(oldSeqs))
     assert(bag(now.candRows.toDF(oldCands.columns.toIndexedSeq: _*)) == bag(oldCands))
   }
+
+  test("segments and contraction: the per-way walks equal the window formulations") {
+    for ((tb, bb) <- Seq((t, bbox), (t2, bbox2))) {
+      val r = resolved(tb, bb).cache()
+      val seg = GraphBuilder.segments(r)
+      assert(bag(seg) == bag(PriorPlans.segments(r)))
+      val now = GraphBuilder.contractWithDegrees(withCost(seg))
+      val old = PriorPlans.contractWithDegrees(withCost(PriorPlans.segments(r)))
+      assert(now.columns.toSeq == old.columns.toSeq)
+      val n = bag(now)
+      assert(n.nonEmpty && n == bag(old))
+      r.unpersist()
+    }
+    // the second world's cases reached the contraction: the way leaving
+    // the bbox joins its nodes around the missing one, the ring closes on
+    // its first node
+    val c = GraphBuilder.contractWithDegrees(withCost(GraphBuilder.segments(resolved(t2, bbox2))))
+    assert(c.filter($"way_id" === 9410000L).select($"from_id", $"to_id").as[(Long, Long)]
+      .collect().toSeq == Seq((9310001L, 9310003L)))
+    assert(c.filter($"way_id" === 9420000L).select($"from_id", $"to_id", size($"geom"))
+      .as[(Long, Long, Int)].collect().toSeq == Seq((9320000L, 9320000L, 5)))
+  }
+
+  test("candidates: one group-by-stop pass equals the top-K window and merge join") {
+    for ((tb, g) <- Seq((t, refined), (t2, refined2))) {
+      val now = Matcher.buildCandsWithStations(spark, tb.stops, g.edges, g.stations, cfg)
+      val old = PriorPlans.buildCandsTopKWindow(spark, tb.stops, g.edges, g.stations, cfg)
+      assert(now.columns.toSeq == old.columns.toSeq)
+      val n = bag(now)
+      assert(n.nonEmpty && n == bag(old))
+    }
+    // the hub stop: 12 edges at 0 m, K = 8 kept, the lowest edge ids
+    val hub = Matcher.buildCandsWithStations(spark, t2.stops, refined2.edges,
+      refined2.stations, cfg).filter($"stop_id" === "S_HUB")
+    assert(hub.count() == Matcher.MaxCandsPerStop)
+    assert(hub.filter($"dist_m" === 0.0).count() == Matcher.MaxCandsPerStop)
+  }
+
+  test("match: one grouped pass per key equals the seq_key join-back") {
+    for ((tb, g) <- Seq((t, refined), (t2, refined2))) {
+      val ts = WorldTables.tripStops(tb)
+      // some trips share a stop sequence
+      assert(Matcher.tripStopsWithKey(ts).groupBy($"seq_key").count()
+        .filter($"count" > 1).count() > 0)
+      val graph = CompactGraph.fromEdges(g.edges, g.restrictions, g.wayLines,
+        g.transitLines, g.turnCycles)
+      val cands = Matcher.buildCandsWithStations(spark, tb.stops, g.edges, g.stations, cfg)
+        .localCheckpoint()
+      val now = Matcher.matchTripsFull(spark, ts, cands, graph, cfg)
+      val old = PriorPlans.matchTripsFull(spark, ts, cands, graph, cfg)
+      for ((a, b) <- Seq((now.shapes, old.shapes), (now.anchors, old.anchors),
+          (now.hops, old.hops))) {
+        assert(a.columns.toSeq == b.columns.toSeq)
+        val n = bag(a)
+        assert(n.nonEmpty && n == bag(b))
+      }
+    }
+  }
 }
 
 /** The formulations the fused plans replaced, verbatim. */
 object PriorPlans {
+  /** GraphBuilder.segments before the grouped pass: a lead window per way. */
+  def segments(resolved: DataFrame): DataFrame = {
+    import resolved.sparkSession.implicits._
+    val w = Window.partitionBy($"way_id").orderBy($"pos")
+    resolved
+      .withColumn("to_id", lead($"node_id", 1).over(w))
+      .withColumn("to_lat", lead($"lat", 1).over(w))
+      .withColumn("to_lon", lead($"lon", 1).over(w))
+      .filter($"to_id".isNotNull)
+      .withColumn("len_m", haversineM($"lat", $"lon", $"to_lat", $"to_lon"))
+      // deterministic edge id: way id in high bits, position in low
+      .withColumn("edge_id", ($"way_id" * lit(65536L)) + $"pos")
+      .select($"edge_id", $"way_id", $"pos",
+        $"node_id".as("from_id"), $"to_id",
+        $"lat".as("from_lat"), $"lon".as("from_lon"), $"to_lat", $"to_lon",
+        $"len_m", $"lvl", $"oneway", $"from_tc")
+  }
+
+  /** GraphBuilder.contractWithDegrees before the grouped passes: a degree
+    * window per node and a chain window per way. */
+  def contractWithDegrees(edgesCost: DataFrame): DataFrame = {
+    val spark = edgesCost.sparkSession
+    import spark.implicits._
+    val payload = edgesCost.columns.filterNot(Set("way_id", "pos"))
+    val ends = edgesCost
+      .select($"way_id", $"pos", struct(payload.map(col): _*).as("e"),
+        explode(array(lit(0), lit(1))).as("side"))
+      .select($"way_id", $"pos", $"side",
+        when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"),
+        when($"side" === 0, $"e").as("e"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy($"node_id")))
+    // in (way, pos, side) order the row after an edge's from-row is its
+    // to-row (lead: the to-node's degree), and the row before it is the
+    // previous edge's to-row (lag: the node that edge ended at), so one
+    // window pass pairs the degrees and finds where a chain breaks; to-rows
+    // add no break to the running sum that numbers the chains
+    val w = Window.partitionBy($"way_id").orderBy($"pos", $"side")
+    val perEdge = ends
+      .withColumn("to_deg", lead($"deg", 1).over(w))
+      .withColumn("prev_to", lag($"node_id", 1).over(w))
+      // a chain may continue through interior node n iff deg(n) == 2 and n
+      // is not a break node: break when this segment does not continue the
+      // previous one, or the shared node is an intersection (degree != 2)
+      // or a turn cycle
+      .withColumn("brk",
+        when($"side" === 1, 0)
+          .when($"prev_to".isNull || $"prev_to" =!= $"e.from_id" ||
+            $"deg" =!= 2 || $"e.from_tc".isNotNull, 1).otherwise(0))
+      .withColumn("chain", sum($"brk").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter($"side" === 0)
+    val withBreak = perEdge
+      .select(($"way_id" +: $"pos" +: $"chain" +: payload.map(c => $"e".getField(c).as(c))) ++
+        Seq($"deg".as("from_deg"), $"to_deg"): _*)
+    // order-explicit aggregation: Spark does not guarantee intra-group row
+    // order through groupBy (first/last/collect_list only looked ordered
+    // because partial aggregation happened to run on the window's sorted
+    // partitions) — endpoints via min_by/max_by(pos), geometry via
+    // sort_array on (pos,...) structs
+    withBreak
+      .groupBy($"way_id", $"chain")
+      .agg(
+        min($"edge_id").as("edge_id"),
+        min($"pos").as("pos"),
+        min_by($"from_id", $"pos").as("from_id"), max_by($"to_id", $"pos").as("to_id"),
+        min_by($"from_lat", $"pos").as("from_lat"), min_by($"from_lon", $"pos").as("from_lon"),
+        max_by($"to_lat", $"pos").as("to_lat"), max_by($"to_lon", $"pos").as("to_lon"),
+        sum($"len_m").as("len_m"),
+        sum($"cost10").as("cost10"),
+        min_by($"lvl", $"pos").as("lvl"), min_by($"oneway", $"pos").as("oneway"),
+        // geometry: every segment start (in pos order) + the final end point
+        concat(
+          transform(
+            sort_array(collect_list(struct($"pos", $"from_lat".as("lat"), $"from_lon".as("lon")))),
+            x => struct(x.getField("lat").as("lat"), x.getField("lon").as("lon"))),
+          array(struct(max_by($"to_lat", $"pos").as("lat"), max_by($"to_lon", $"pos").as("lon"))))
+          .as("geom"),
+        min_by($"from_deg", $"pos").as("from_deg"), max_by($"to_deg", $"pos").as("to_deg"))
+      .drop("chain")
+  }
+
+  /** Matcher.buildCandsWithStations before the one group-by-stop pass: a
+    * (stop, edge) dedup, a top-K window and a per-stop station aggregate
+    * merge-joined back on stop_id. */
+  def buildCandsTopKWindow(spark: SparkSession, stops: DataFrame, edges: DataFrame,
+                             stations: DataFrame, cfg: OsmConfig,
+                             maxAbsLat: Option[Double] = None): DataFrame = {
+    import spark.implicits._
+    // stop x station candidate pairs via the same k-ring join
+    val k = 1
+    val normB = cfg.stationNormRules
+    val simUdf = udf((a: String, b: String, d: Double) =>
+      graft.functions.StringSim.stationsSimilar(a, b, d,
+        graft.functions.StringSim.normalizerFor(normB)))
+    // U6 track/platform matching (reference StatInfo track +
+    // routing_platform_unmatched_penalty intent, ShapeBuilder.cpp:205-230):
+    // a station candidate whose normalized track differs from the stop's
+    // platform_code is penalized; absent info on either side is neutral
+    val trackRules = cfg.trackNormRules
+    val trkMismUdf = udf((pc: String, trk: String) => {
+      if (pc == null || trk == null || pc.isEmpty || trk.isEmpty) 0
+      else {
+        val n = graft.functions.StringSim.normalizerFor(trackRules)
+        if (n.norm(pc) == n.norm(trk)) 0 else 1
+      }
+    })
+    val pcCol = if (stops.columns.contains("platform_code"))
+      coalesce($"platform_code", lit("")) else lit("")
+    val stopRings = stops.select($"stop_id", $"name".as("stop_name"),
+        pcCol.as("pc"), $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), k)))
+    val trkCol = if (stations.columns.contains("track"))
+      coalesce($"track", lit("")) else lit("")
+    val simPairs = stopRings
+      .join(stations.select($"node_id", $"name".as("st_name"), trkCol.as("trk"),
+        $"lat".as("st_lat"), $"lon".as("st_lon"), $"cell"), Seq("cell"))
+      .withColumn("d_m", haversineM($"s_lat", $"s_lng", $"st_lat", $"st_lon"))
+      .filter($"d_m" <= cfg.maxSnapDistanceM)
+      .filter(simUdf($"stop_name", $"st_name", $"d_m"))
+      .withColumn("trk_mism", trkMismUdf($"pc", $"trk"))
+    // ONE per-stop aggregate carries everything the candidates need from
+    // the stop x station pairs: the similar stations as (node, track
+    // mismatch) pairs, and the nearest similar station. Candidates then
+    // join it once on stop_id (was: a per-(stop, node) aggregate joined
+    // twice, on the from and the to endpoint, plus a per-stop best-station
+    // aggregate joined a third time).
+    //  - a vertex aliasing several platforms counts as matching if ANY
+    //    matches: the endpoint's mismatch is the min over its pairs;
+    //  - the NEAREST similar station per stop — matching track beats
+    //    distance (two same-name platforms of one station are otherwise
+    //    indistinguishable): candidates touching that vertex snap their
+    //    position onto it, so matched shapes terminate exactly at the
+    //    station node (the reference routes via station group nodes,
+    //    OsmBuilder snapStation + ShapeBuilder getECM). The pair-level min
+    //    over (trk_mism, d_m, node_id) is the per-node min followed by the
+    //    per-stop min (lexicographic order is hierarchical; st_lat/st_lon
+    //    are constant per node).
+    val stopStations = simPairs.groupBy($"stop_id")
+      .agg(collect_list(struct($"node_id", $"trk_mism")).as("sims"),
+        min_by(struct($"node_id", $"st_lat", $"st_lon"),
+          struct($"trk_mism", $"d_m", $"node_id")).as("b"))
+    val cands = topKCandsWithEnds(spark, stops, edges, cfg, maxAbsLat)
+    val nonStationPen10 = graft.geo.Geo.costToInt(cfg.nonStationPenaltySec)
+    val platformPen10 = graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec)
+    // track mismatch of the similar stations at an endpoint (null: none)
+    def endMism(end: String) = array_min(transform(
+      filter($"sims", x => x.getField("node_id") === col(end)), x => x.getField("trk_mism")))
+    // an edge is a "station candidate" if either endpoint is a similar station
+    // both sides arrive hash-partitioned by stop_id (the top-K window's
+    // exchange, the per-stop aggregate's): a merge join needs no further
+    // stage, where a run-time switch to broadcast adds a broadcast job
+    cands.join(stopStations.hint("shuffle_merge"), Seq("stop_id"), "left_outer")
+      .withColumn("from_mism", endMism("from_id"))
+      .withColumn("to_mism", endMism("to_id"))
+      .withColumn("pen10",
+        when($"from_mism".isNotNull || $"to_mism".isNotNull,
+          // emulateReferenceTrackPenalty flips the condition to the
+          // reference's literal (inverted) ShapeBuilder.cpp:216-219 test
+          $"pen10" + when(least(coalesce($"from_mism", lit(1)),
+            coalesce($"to_mism", lit(1))) ===
+              (if (cfg.emulateReferenceTrackPenalty) 0 else 1),
+            lit(platformPen10)).otherwise(lit(0L)))
+          .otherwise($"pen10" + lit(nonStationPen10)))
+      .withColumn("best_node", $"b.node_id")
+      .withColumn("at_from", $"best_node".isNotNull && $"from_id" === $"best_node")
+      .withColumn("at_to", $"best_node".isNotNull && $"to_id" === $"best_node")
+      .withColumn("progr", when($"at_from", lit(0.0))
+        .when($"at_to", lit(1.0)).otherwise($"progr"))
+      .withColumn("py", when($"at_from" || $"at_to", $"b.st_lat").otherwise($"py"))
+      .withColumn("px", when($"at_from" || $"at_to", $"b.st_lon").otherwise($"px"))
+      .drop("from_id", "to_id", "sims", "b", "from_mism", "to_mism",
+        "best_node", "at_from", "at_to")
+  }
+
+  /** buildCands plus each candidate edge's endpoint node ids (from_id,
+    * to_id), read in the same edge scan the cell join uses. */
+  private def topKCandsWithEnds(spark: SparkSession, stops: DataFrame, edges: DataFrame,
+                                 cfg: OsmConfig, maxAbsLatOpt: Option[Double]): DataFrame = {
+    import spark.implicits._
+    // ring radius from the worst-case (highest) latitude in the feed —
+    // callers that already computed the feed bbox pass it in (the agg is
+    // otherwise a blocking driver round trip on the latency floor)
+    val maxAbsLat = maxAbsLatOpt.getOrElse(
+      stops.agg(max(abs(col("lat")))).head().getDouble(0))
+    val k = Cell.kForMeters(cfg.maxSnapDistanceM, maxAbsLat, cfg.cellRes)
+    val stopRings = stops
+      .select($"stop_id", $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), k)))
+    // project onto the full edge polyline when present (contracted chains
+    // are curved), else the straight segment
+    val hasGeom = edges.columns.contains("geom")
+    val edgeCells =
+      (if (hasGeom)
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          expr("transform(geom, p -> p.lat)").as("glat"),
+          expr("transform(geom, p -> p.lon)").as("glon"),
+          explode($"cells").as("cell"))
+      else
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          array($"from_lat", $"to_lat").as("glat"),
+          array($"from_lon", $"to_lon").as("glon"),
+          explode($"cells").as("cell")))
+    // codegen'd projection expression (was a ScalaUDF: Seq[Double]
+    // conversion boxed every coordinate of every candidate row's polyline)
+    val joined = stopRings.join(edgeCells, Seq("cell"))
+      .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
+      .select($"stop_id", $"edge_id", $"oneway", $"from_id", $"to_id",
+        $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
+        $"proj._4".as("dist_m"))
+      .filter($"dist_m" <= cfg.maxSnapDistanceM)
+      // one exchange by stop serves the dedup below and the top-K window
+      // (hash(stop) clusters (stop, edge) too)
+      .repartition($"stop_id")
+      // a (stop, edge) pair can match through several ring cells -> dedup
+      // (the copies are equal: same stop point, same edge polyline)
+      .groupBy($"stop_id", $"edge_id")
+      .agg(first($"progr").as("progr"), first($"py").as("py"), first($"px").as("px"),
+        first($"dist_m").as("dist_m"), first($"oneway").as("oneway"),
+        first($"from_id").as("from_id"), first($"to_id").as("to_id"))
+    // keep top-K nearest edges per stop; the best-per-deg-2-chain dedup
+    // (O1/G9) happens kernel-side against CompactGraph.chainOf
+    val byStop = Window.partitionBy($"stop_id").orderBy($"dist_m", $"edge_id")
+    joined.withColumn("rk", row_number().over(byStop))
+      .filter($"rk" <= 8).drop("rk")
+      .withColumn("pen10", ceil($"dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
+  }
+
+  /** Matcher.tripSeqTables: the per-trip key table and the distinct
+    * sequences from a second pass over tripStops for the representatives,
+    * before one grouped pass per key replaced them. */
+  def tripSeqTables(tripStops: DataFrame): (DataFrame, DataFrame) = {
+    val ss = tripStops.sparkSession
+    import ss.implicits._
+    // seq_key depends on the collected stops array, but the projection
+    // drops the array post-agg — it exists only transiently per group,
+    // never in a shuffle file or checkpoint block
+    val seqKeys = Boundary.deferred(Matcher.tripStopsWithKey(tripStops)
+      .select($"trip_id", $"seq_key", $"from_name", $"to_name"))
+    val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
+    val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
+    val distinctSeqs = Boundary.deferred(Matcher.tripStopsWithKey(repRows)
+      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"))
+    (seqKeys, distinctSeqs)
+  }
+
+  /** Matcher.matchTripsFull before the trip ids rode through the solve:
+    * the solved sequences joined back to the trips on seq_key. */
+  def matchTripsFull(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
+                     graph: CompactGraph, cfg: OsmConfig): Matcher.MatchResult = {
+    import spark.implicits._
+    val (seqKeys, distinctSeqs) = tripSeqTables(tripStops)
+    val solved = Boundary.eager(Matcher.solveSeqs(spark,
+      distinctSeqs.withColumn("trip_ids", typedLit(Seq.empty[String])), cands,
+      GraphPartitions.build(spark, graph), cfg).drop("trip_ids"))
+    val joined = seqKeys.join(solved.hint("shuffle_merge"), Seq("seq_key"))
+    val shapes = joined
+      .select($"trip_id".as("shape_id"),
+        posexplode(arrays_zip($"lats", $"lngs", $"dists")).as(Seq("seq", "z")))
+      .select($"shape_id", $"seq", $"z.lats".as("lat"), $"z.lngs".as("lng"),
+        $"z.dists".as("travel_dist"))
+    val anchors = joined
+      .select($"trip_id", posexplode($"anchors").as(Seq("stop_idx", "point_seq")))
+    val hops = joined
+      .select($"trip_id", explode($"hops").as("h"))
+      .select($"trip_id", $"h.hop_idx".as("hop_idx"),
+        $"h.edge_ids".as("edge_ids"), $"h.reachable".as("reachable"))
+    Matcher.MatchResult(shapes, anchors, hops)
+  }
+
   def contractDeg2Chains(edgesCost: DataFrame, breakNodes: DataFrame): DataFrame = {
     val spark = edgesCost.sparkSession
     import spark.implicits._

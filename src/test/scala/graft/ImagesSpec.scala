@@ -70,8 +70,8 @@ class OverlaySpec extends AnyFunSuite {
     val bbox = GraphBuilder.feedBBox(t.stops).pad(cfg.bboxPaddingM)
     val gt = GraphBuilder.build(spark, t.osmNodes, t.osmWays, t.osmRels, bbox, cfg)
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions)
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
-    val shapes = Matcher.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg)
+    val shapes = MatchHelpers.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
     val assigned = ImageOverlay.assign(images, shapes, cfg.cellRes).cache()
 
     // every on-map tile (station cell) must be assigned to >= 1 shape:

@@ -98,6 +98,25 @@ class PlansSpec extends AnyFunSuite {
     assert(Snapshots.readManifest(dir, "stage1").get.rows == 1)
   }
 
+  test("snapshots: a stage runs no job beyond its write") {
+    val dir = java.nio.file.Files.createTempDirectory("snap").toString
+    val jobs = new java.util.concurrent.atomic.LongAdder
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.increment()
+    }
+    org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Snapshots.stage(spark, dir, "s", "fp") { spark.range(0, 100, 1, 4).toDF("id") }
+      org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.sum() == 1)
+    // one file per written partition, its rows from the footer
+    val m = Snapshots.readManifest(dir, "s").get
+    assert(m.rows == 100 && m.partitions == Seq((0, 25L), (1, 25L), (2, 25L), (3, 25L)))
+  }
+
   test("snapshots: a re-stage that fails mid-write leaves no manifest to trust") {
     val dir = java.nio.file.Files.createTempDirectory("snap").toString
     var computes = 0

@@ -107,7 +107,7 @@ class PartitionSpec extends AnyFunSuite {
   lazy val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
   private def run(p: GraphPartitions) = {
     graft.router.HopCache.clear()
-    Matcher.solveKeyedSeqs(spark, keyed, cands, p, cfg)
+    MatchHelpers.solveKeyedSeqs(spark, keyed, cands, p, cfg)
       .select($"seq_key", $"cost10", $"n_hops", $"n_unroutable",
         to_json(arrays_zip($"lats", $"lngs", $"dists")).as("pts"), to_json($"anchors").as("an"))
       .collect().map(_.toSeq).sortBy(_.head.toString)

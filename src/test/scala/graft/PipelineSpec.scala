@@ -74,13 +74,13 @@ class PipelineSpec extends AnyFunSuite {
     // every trip (identical to a standalone build)
     val graph = CompactGraph.fromEdges(bus.edges, bus.restrictions,
       bus.wayLines, bus.transitLines, bus.turnCycles)
-    val cands = Matcher.buildCands(spark, t.stops, bus.edges, cfg)
-    val shapes = Matcher.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
+    val cands = MatchHelpers.buildCands(spark, t.stops, bus.edges, cfg)
+    val shapes = MatchHelpers.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
     assert(shapes.select("shape_id").distinct().count() == t.trips.count())
   }
 
   test("candidate join finds nearby edges for every stop") {
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg).cache()
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg).cache()
     val nStops = t.stops.count()
     val stopsWithCands = cands.select("stop_id").distinct().count()
     assert(stopsWithCands == nStops, s"$stopsWithCands of $nStops stops have candidates")
@@ -92,8 +92,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("end-to-end: matched shapes follow the row streets with monotone measure") {
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions)
-    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
-    val shapes = Matcher.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
+    val cands = MatchHelpers.buildCands(spark, t.stops, gt.edges, cfg)
+    val shapes = MatchHelpers.matchTrips(spark, WorldTables.tripStops(t), cands, graph, cfg)
       .cache()
     val nTrips = t.trips.count()
     assert(shapes.select("shape_id").distinct().count() == nTrips)
