@@ -28,13 +28,13 @@ fi
 # state, small enough that AQE can coalesce without driver pressure
 PARTS=$((EXECUTORS * CORES * 2))
 
-# codegen cache: one pipeline rep compiles ~350 classes (whole-stage
-# classes count twice: the driver and the executor task threads compile
-# them under different class loaders, and the cache key includes the
-# loader). Spark's default of 100 entries evicts every class before the
-# next rep needs it again, so each rep recompiles everything; 4000 entries
-# hold a rep's classes with room for the catalog queries. A static conf:
-# it must be set at submit time.
+# codegen cache: one match_city op of the benchmark (a pipeline rep and
+# its checks) compiles ~210 classes (whole-stage classes count twice: the
+# driver and the executor task threads compile them under different class
+# loaders, and the cache key includes the loader). Spark's default of 100
+# entries evicts every class before the next rep needs it again, so each
+# rep recompiles everything; 4000 entries hold a rep's classes with room
+# for the catalog queries. A static conf: it must be set at submit time.
 CODEGEN_CACHE=4000
 
 exec spark-submit \

@@ -7,13 +7,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.geo.Geo
 
 /** The graph build's per-way walks, as precompiled helpers called from
   * generated Java (see WayEdges and ContractChains). Each walks one way's
   * rows once, in position order; a per-way window over the same rows
-  * generated its own sort, ordering and projection classes per plan. */
+  * generated its own sort, ordering and projection classes per plan. The
+  * gap pairs and the relation member lookup are helpers too: a lambda
+  * (`filter`, `transform`) is interpreted and takes its whole operator out
+  * of whole-stage code generation. */
 object WayOps {
 
   /** element of wayEdges' input: one resolved way node */
@@ -152,6 +156,64 @@ object WayOps {
     if (first != null) close()
     new GenericArrayData(out.toArray)
   }
+
+  /** element of gapPairs' input: a degree-1 endpoint in a cell's list;
+    * own: the cell is the endpoint's own */
+  val CellEndType: StructType = StructType(Seq(
+    StructField("node_id", LongType), StructField("lat", DoubleType),
+    StructField("lon", DoubleType), StructField("own", BooleanType)))
+
+  /** element of gapPairs' output: endpoint b merges into endpoint a */
+  val GapPairType: StructType = StructType(Seq(
+    StructField("a", LongType), StructField("a_lat", DoubleType),
+    StructField("a_lon", DoubleType), StructField("b", LongType)))
+
+  /** The mergeable endpoint pairs of one cell's list: every (x, y) with y
+    * in its own cell, x's id below y's and the two within tolM, in list
+    * order. A null field fails the test, as it does in a SQL predicate. */
+  def gapPairs(m: ArrayData, tolM: Double): ArrayData = {
+    val nf = CellEndType.length
+    val n = m.numElements()
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < n) {
+      val x = m.getStruct(i, nf)
+      if (!x.isNullAt(0) && !x.isNullAt(1) && !x.isNullAt(2)) {
+        var j = 0
+        while (j < n) {
+          val y = m.getStruct(j, nf)
+          if (!y.isNullAt(3) && y.getBoolean(3) && !y.isNullAt(0) && x.getLong(0) < y.getLong(0) &&
+              !y.isNullAt(1) && !y.isNullAt(2) &&
+              Geo.haversineM(x.getDouble(1), x.getDouble(2), y.getDouble(1), y.getDouble(2)) <= tolM)
+            out += new GenericInternalRow(Array[Any](x.getLong(0), x.getDouble(1),
+              x.getDouble(2), y.getLong(0)))
+          j += 1
+        }
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** element of memberRef's input: one relation member */
+  val MemberType: StructType = StructType(Seq(
+    StructField("ref", LongType), StructField("mtype", IntegerType),
+    StructField("role", StringType)))
+
+  /** index of the first member with this role and type, -1 if none */
+  def memberIndex(members: ArrayData, role: UTF8String, mtype: Int): Int = {
+    val n = members.numElements()
+    var i = 0
+    while (i < n) {
+      if (!members.isNullAt(i)) {
+        val m = members.getStruct(i, MemberType.length)
+        if (!m.isNullAt(1) && m.getInt(1) == mtype && !m.isNullAt(2) && m.getUTF8String(2) == role)
+          return i
+      }
+      i += 1
+    }
+    -1
+  }
 }
 
 /** way_edges(nodes) -> array<segment>: WayOps.wayEdges as an expression. */
@@ -178,6 +240,53 @@ case class ContractChains(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** gap_pairs(m, tolM) -> array<pair>: WayOps.gapPairs as an expression. */
+case class GapPairs(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = ArrayType(WayOps.GapPairType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "gap_pairs"
+  override protected def nullSafeEval(m: Any, t: Any): Any =
+    WayOps.gapPairs(m.asInstanceOf[ArrayData], t.asInstanceOf[Double])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (m, t) => s"graft.functions.WayOps.gapPairs($m, $t)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** member_ref(members, role, mtype) -> the ref of the first member with
+  * that role and type; null when none matches (`filter(...)[0].ref`
+  * without the out-of-range error). */
+case class MemberRef(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "member_ref"
+  override protected def nullSafeEval(ms: Any, role: Any, mtype: Any): Any = {
+    val a = ms.asInstanceOf[ArrayData]
+    val i = WayOps.memberIndex(a, role.asInstanceOf[UTF8String], mtype.asInstanceOf[Int])
+    if (i < 0) null
+    else {
+      val m = a.getStruct(i, WayOps.MemberType.length)
+      if (m.isNullAt(0)) null else m.getLong(0)
+    }
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ms, role, mtype) => {
+      val i = ctx.freshName("i")
+      val m = ctx.freshName("m")
+      s"""int $i = graft.functions.WayOps.memberIndex($ms, $role, $mtype);
+         |${ev.isNull} = true;
+         |if ($i >= 0) {
+         |  InternalRow $m = $ms.getStruct($i, ${WayOps.MemberType.length});
+         |  if (!$m.isNullAt(0)) { ${ev.isNull} = false; ${ev.value} = $m.getLong(0); }
+         |}""".stripMargin
+    })
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+}
+
 /** Column-side API of the per-way walks. */
 object WayFunctions {
 
@@ -190,4 +299,14 @@ object WayFunctions {
   def contractChains(ends: Column): Column =
     ExpressionUtils.column(ContractChains(Cast(ExpressionUtils.expression(ends),
       ArrayType(WayOps.EndType))))
+
+  /** m: array of WayOps.CellEndType structs of one cell */
+  def gapPairs(m: Column, tolM: Double): Column =
+    ExpressionUtils.column(GapPairs(Cast(ExpressionUtils.expression(m),
+      ArrayType(WayOps.CellEndType)), Literal(tolM)))
+
+  /** members: array of (ref, mtype, role) structs, as osm_rels holds them */
+  def memberRef(members: Column, role: String, mtype: Int): Column =
+    ExpressionUtils.column(MemberRef(Cast(ExpressionUtils.expression(members),
+      ArrayType(WayOps.MemberType)), Literal(role), Literal(mtype)))
 }

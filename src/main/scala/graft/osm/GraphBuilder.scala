@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
-import graft.functions.WayFunctions.{contractChains, wayEdges}
+import graft.functions.WayFunctions.{contractChains, gapPairs, memberRef, wayEdges}
 import graft.geo.Geo
 import graft.plans.Boundary
 
@@ -93,11 +93,13 @@ object GraphBuilder {
     * from them instead of re-aggregating).
     *
     * Two grouped passes, no window and no join: each edge is emitted as
-    * its two endpoint rows, one pass per node counts its rows (the
-    * degree), and one pass per way walks its edge ends in (pos, side)
-    * order (WayOps.contractChains), where an edge's to-end follows its
-    * from-end. Only the from-end carries the edge's columns through the
-    * two exchanges. */
+    * its two endpoint rows, one pass per node collects its rows (their
+    * number is the degree), and one pass per way walks its edge ends in
+    * (pos, side) order (WayOps.contractChains), where an edge's to-end
+    * follows its from-end. Only the from-end carries the edge's columns through the
+    * two exchanges. Each pass's key is its input's first column, as it is
+    * after the exchange, so the partial and the final aggregate share their
+    * key projections' generated classes. */
   private[graft] def contractWithDegrees(edgesCost: DataFrame): DataFrame = {
     val spark = edgesCost.sparkSession
     import spark.implicits._
@@ -105,13 +107,15 @@ object GraphBuilder {
       $"to_lat", $"to_lon", $"len_m", $"cost10", $"lvl", $"oneway", $"from_tc".as("tc"))
     edgesCost
       .select($"way_id", $"pos", e.as("e"), explode(array(lit(0), lit(1))).as("side"))
-      .groupBy(when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"))
-      .agg(count(lit(1)).as("deg"),
-        collect_list(struct($"way_id", $"pos", $"side", when($"side" === 0, $"e").as("e")))
-          .as("ends"))
-      .select($"deg", explode($"ends").as("x"))
-      .groupBy($"x.way_id".as("way_id"))
-      .agg(collect_list(struct($"x.pos", $"x.side", $"deg", $"x.e")).as("ends"))
+      .select(when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"),
+        struct($"way_id", $"pos", $"side", when($"side" === 0, $"e").as("e")).as("end"))
+      .groupBy($"node_id")
+      .agg(collect_list($"end").as("ends"))
+      // the degree is the node's end count: one list entry per end
+      .select(size($"ends").cast("long").as("deg"), explode($"ends").as("x"))
+      .select($"x.way_id".as("way_id"), struct($"x.pos", $"x.side", $"deg", $"x.e").as("end"))
+      .groupBy($"way_id")
+      .agg(collect_list($"end").as("ends"))
       .select($"way_id", explode(contractChains($"ends")).as("c"))
       .select($"way_id", $"c.*")
   }
@@ -124,8 +128,10 @@ object GraphBuilder {
   private[graft] def segments(resolved: DataFrame): DataFrame = {
     import resolved.sparkSession.implicits._
     resolved
+      .select($"way_id", $"lvl", $"oneway",
+        struct($"pos", $"node_id", $"lat", $"lon", $"from_tc").as("node"))
       .groupBy($"way_id", $"lvl", $"oneway")
-      .agg(collect_list(struct($"pos", $"node_id", $"lat", $"lon", $"from_tc")).as("nodes"))
+      .agg(collect_list($"node").as("nodes"))
       .select($"way_id", $"lvl", $"oneway", explode(wayEdges($"nodes")).as("s"))
       // deterministic edge id: way id in high bits, position in low
       .select(($"way_id" * lit(65536L) + $"s.pos").as("edge_id"), $"way_id",
@@ -157,13 +163,17 @@ object GraphBuilder {
   /** The degree-1 endpoints (node_id, lat, lon) of edges that carry their
     * endpoint degrees (contractWithDegrees' output): a degree-1 node is
     * the end of exactly one edge, so a filter finds each once — no
-    * aggregation. */
+    * aggregation. One scan emits both ends of an edge, the end that is not
+    * degree 1 as null. */
   private[graft] def degreeOneEnds(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
-    edges.filter($"from_deg" === 1)
-      .select($"from_id".as("node_id"), $"from_lat".as("lat"), $"from_lon".as("lon"))
-      .unionByName(edges.filter($"to_deg" === 1)
-        .select($"to_id".as("node_id"), $"to_lat".as("lat"), $"to_lon".as("lon")))
+    def end(deg: String, id: String, lat: String, lon: String) =
+      when(col(deg) === 1, struct(col(id).as("node_id"), col(lat).as("lat"), col(lon).as("lon")))
+    edges.filter($"from_deg" === 1 || $"to_deg" === 1)
+      .select(explode(array(end("from_deg", "from_id", "from_lat", "from_lon"),
+        end("to_deg", "to_id", "to_lat", "to_lon"))).as("e"))
+      .filter($"e".isNotNull)
+      .select($"e.node_id", $"e.lat", $"e.lon")
   }
 
   /** fixGaps over a given degree-1 endpoint table deg1(node_id, lat, lon). */
@@ -180,16 +190,14 @@ object GraphBuilder {
     val inCell = deg1
       .select($"node_id", $"lat", $"lon", gcell($"lat", $"lon", res).as("own"),
         explode(kring(gcell($"lat", $"lon", res), 1)).as("cell"))
+      .select($"cell", struct($"node_id", $"lat", $"lon", ($"own" === $"cell").as("own")).as("x"))
       .groupBy($"cell")
-      .agg(collect_list(struct($"node_id", $"lat", $"lon", ($"own" === $"cell").as("own"))).as("m"))
+      .agg(collect_list($"x").as("m"))
+    // each x of a cell's list pairs with every y in its own cell with a
+    // higher id within the tolerance (WayOps.gapPairs)
     val pairs = inCell
-      .select($"m", explode($"m").as("x"))
-      .select($"x.node_id".as("a"), $"x.lat".as("a_lat"), $"x.lon".as("a_lon"),
-        explode(filter($"m", y => y.getField("own") &&
-          $"x.node_id" < y.getField("node_id") &&
-          haversineM($"x.lat", $"x.lon", y.getField("lat"), y.getField("lon")) <= toleranceM))
-          .as("y"))
-      .select($"a", $"a_lat", $"a_lon", $"y.node_id".as("b"))
+      .select(explode(gapPairs($"m", toleranceM)).as("p"))
+      .select($"p.a", $"p.a_lat", $"p.a_lon", $"p.b")
     // short-circuit: no mergeable endpoint pairs (the common case on a
     // well-digitized extract, and always true on the synthetic bench
     // world). The full path below with an EMPTY mapping is a value-level
@@ -250,8 +258,12 @@ object GraphBuilder {
                keep: Seq[String] = Nil): DataFrame = {
     val spark = entities.sparkSession
     import spark.implicits._
+    // the member id first: the aggregates below sort on it before and
+    // after their exchange, and share the sort's generated classes
     lazy val memberTags = rels.select($"id".as("rel_id"), $"tags".as("rtags"),
-        explode(expr(s"transform(filter(members, m -> m.mtype = $mtype), m -> m.ref)")).as("id"))
+        explode($"members").as("m"))
+      .filter($"m.mtype" === mtype)
+      .select($"m.ref".as("id"), $"rel_id", $"rtags")
     var df = entities.select(($"id" +: $"tags" +: keep.map(col)): _*)
     rules.zipWithIndex.foreach { case (r, i) =>
       if (!r.fromRelation) df = df.withColumn(s"v$i", $"tags".getItem(r.key))
@@ -259,8 +271,11 @@ object GraphBuilder {
         val rv = memberTags.filter($"rtags".getItem(r.key).isNotNull)
           .groupBy($"id")
           .agg(min_by($"rtags".getItem(r.key), $"rel_id").as(s"v$i"))
-        // rv is already partitioned by id (its aggregate): merge join
-        df = df.join(rv.hint("shuffle_merge"), Seq("id"), "left_outer")
+        // rv is already partitioned by id (its aggregate): a hash join on
+        // that partitioning builds rv's side with no sort of either side
+        // (a merge join sorted both). Its keys are unique, so no build
+        // key is skewed, and AQE bounds each task's build side.
+        df = df.join(rv.hint("shuffle_hash"), Seq("id"), "left_outer")
       }
     }
     df.select(($"id" +: keep.map(col)) :+
@@ -369,6 +384,9 @@ object GraphBuilder {
           .when(tagMatches($"tags", cfg.onewayRevRules), lit(2))
           .otherwise(lit(0)).as("oneway"),
         posexplode($"nodes").as(Seq("pos", "node_id")))
+      // the join key first, as on the node side: both exchanges share
+      // their partitioning projection's generated class
+      .select($"node_id", $"way_id", $"lvl", $"oneway", $"pos")
 
     // ---- J2: resolve node coords, consecutive pairs -> edges ----
     // The reference's pass-1 way keep-filter ("any member node in bbox",
@@ -390,13 +408,16 @@ object GraphBuilder {
     // of the coordinate join, so neither needs a join of its own. A
     // remapped nohup node is no longer the tagged node id, so it never
     // breaks a chain (as a join on the remapped id would find).
-    // a merge join on node id: the plan for the planet-scale node table,
-    // kept at every size (a run-time switch to broadcast costs a job)
+    // a shuffled hash join on node id, built on the node side: the plan
+    // for the planet-scale node table, kept at every size (a run-time
+    // switch to broadcast costs a job). Node ids are unique, so no build
+    // key is skewed, and AQE bounds each task's build side; a merge join
+    // sorted both sides.
     val resolved0 = wayNodePairs
       .join(bboxNodes.select($"id".as("node_id"), $"lat", $"lon",
         tagMatches($"tags", cfg.nohupRules).as("nohup"),
         tagMatches($"tags", cfg.turnCycleRules ++ cfg.stationRules ++
-          cfg.stationBlockerRules).as("brk_node")).hint("shuffle_merge"), Seq("node_id"))
+          cfg.stationBlockerRules).as("brk_node")).hint("shuffle_hash"), Seq("node_id"))
     val resolved =
       (if (cfg.nohupRules.isEmpty) resolved0
        else resolved0
@@ -480,10 +501,11 @@ object GraphBuilder {
     val restRels = osmRels.filter($"tags".getItem("type") === "restriction")
       .withColumn("positive",
         $"tags".getItem("restriction").startsWith("only_"))
+    // the first member of each role and type (WayOps.memberIndex)
     val restrictions = restRels.select($"id", $"positive",
-        expr("filter(members, m -> m.role = 'from' AND m.mtype = 1)[0].ref").as("from_way"),
-        expr("filter(members, m -> m.role = 'via' AND m.mtype = 0)[0].ref").as("via_node"),
-        expr("filter(members, m -> m.role = 'to' AND m.mtype = 1)[0].ref").as("to_way"))
+        memberRef($"members", "from", 1).as("from_way"),
+        memberRef($"members", "via", 0).as("via_node"),
+        memberRef($"members", "to", 1).as("to_way"))
       .filter($"from_way".isNotNull && $"via_node".isNotNull && $"to_way".isNotNull)
       .select($"via_node", $"from_way", $"to_way", $"positive")
 
@@ -493,8 +515,7 @@ object GraphBuilder {
         $"tags".getItem("ref").as("short_name"),
         $"tags".getItem("from").as("from_str"),
         $"tags".getItem("to").as("to_str"),
-        $"tags".getItem("colour").as("colour"),
-        expr("transform(filter(members, m -> m.mtype = 1), m -> m.ref)").as("way_ids"))
+        $"tags".getItem("colour").as("colour"), $"members")
     // deterministic id = hash of the full identity (incl. colour): the r3
     // row_number() ran a single-partition global window (the WindowExec
     // warn spam, an anti-scale sort) AND ordered on a strict subset of the
@@ -512,8 +533,11 @@ object GraphBuilder {
     val wayLines = routeRels
       .filter($"short_name".isNotNull && $"from_str".isNotNull &&
         $"to_str".isNotNull && $"colour".isNotNull)
-      .select(explode($"way_ids").as("way_id"), lineId.as("line_id"),
+      .select(explode($"members").as("m"), lineId.as("line_id"),
         $"short_name", $"from_str", $"to_str", $"colour")
+      .filter($"m.mtype" === 1)
+      .select($"m.ref".as("way_id"), $"line_id", $"short_name", $"from_str", $"to_str",
+        $"colour")
       .distinct()
 
     GraphTables(nodes, edges, stations, restrictions, lineDim, wayLines,

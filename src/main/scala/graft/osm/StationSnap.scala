@@ -322,13 +322,7 @@ object StationSnap {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val edgeRowsF = Future(gt.edges.select(
-      col("edge_id").cast("long"), col("way_id").cast("long"),
-      col("pos").cast("long"),
-      col("from_id").cast("long"), col("to_id").cast("long"),
-      expr("transform(geom, p -> p.lat)"), expr("transform(geom, p -> p.lon)"),
-      col("len_m").cast("double"), col("cost10").cast("long"),
-      col("lvl").cast("int"), col("oneway").cast("int")).collect())
+    val edgeRowsF = Future(graft.router.CompactGraph.collectEdgeRows(gt.edges))
     // stations and blocker nodes: one query (a union tagged by kind)
     val hasTrack = gt.stations.columns.contains("track")
     val trackCol = if (hasTrack) col("track") else lit(null).cast("string")

@@ -455,7 +455,6 @@ object CompactGraph {
                 wayLines: org.apache.spark.sql.DataFrame,
                 lines: org.apache.spark.sql.DataFrame,
                 turnCycles: org.apache.spark.sql.DataFrame = null): CompactGraph = {
-    val hasGeom = edges.columns.contains("geom")
     import org.apache.spark.sql.functions.{coalesce, col => fcol, lit}
     // the three driver collects below are INDEPENDENT jobs; running them
     // sequentially paid three scheduler/AQE round-trips back to back
@@ -465,23 +464,7 @@ object CompactGraph {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val rowsF = Future((if (hasGeom)
-      edges.select(org.apache.spark.sql.functions.col("edge_id"),
-        org.apache.spark.sql.functions.col("way_id"),
-        org.apache.spark.sql.functions.col("from_id"),
-        org.apache.spark.sql.functions.col("to_id"),
-        org.apache.spark.sql.functions.col("from_lat"),
-        org.apache.spark.sql.functions.col("from_lon"),
-        org.apache.spark.sql.functions.col("to_lat"),
-        org.apache.spark.sql.functions.col("to_lon"),
-        org.apache.spark.sql.functions.col("cost10"),
-        org.apache.spark.sql.functions.col("len_m"),
-        org.apache.spark.sql.functions.col("oneway"),
-        org.apache.spark.sql.functions.expr("transform(geom, p -> p.lat)").as("glat"),
-        org.apache.spark.sql.functions.expr("transform(geom, p -> p.lon)").as("glon"))
-    else edges.select("edge_id", "way_id", "from_id", "to_id",
-      "from_lat", "from_lon", "to_lat", "to_lon", "cost10", "len_m", "oneway"))
-      .collect())
+    val rowsF = Future(collectEdgeRows(edges))
     // (short_name, from_str, to_str) triples per way — G2 needs the
     // from/to split (RoutingAttrs.h:40-42)
     val wayToNamesF: Future[Map[Long, Array[(String, String, String)]]] = Future {
@@ -508,16 +491,32 @@ object CompactGraph {
     val rows = Await.result(rowsF, Duration.Inf)
     val wayToNames = Await.result(wayToNamesF, Duration.Inf)
     val edgeRows = rows.map { r =>
-      val (glat, glon) =
-        if (hasGeom) (r.getSeq[Double](11).toArray, r.getSeq[Double](12).toArray)
-        else (Array(r.getDouble(4), r.getDouble(6)), Array(r.getDouble(5), r.getDouble(7)))
-      EdgeRowIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        glat, glon, r.getLong(8), r.getDouble(9), r.getInt(10))
+      EdgeRowIn(r.getLong(0), r.getLong(1), r.getLong(3), r.getLong(4),
+        r.getSeq[Double](5).toArray, r.getSeq[Double](6).toArray, r.getLong(8),
+        r.getDouble(7), r.getInt(10))
     }
     val (restrRows, tcyRows) = Await.result(smallF, Duration.Inf).partition(_.getInt(0) == 0)
     val restr = restrRows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
     val tcy = tcyRows.map(_.getLong(1))
     fromRows(edgeRows, wayToNames, restr, tcy)
+  }
+
+  /** The rows of an edges table (GraphBuilder's schema, with `geom`) as
+    * the driver reads them: edge_id, way_id, pos, from_id, to_id, glat,
+    * glon, len_m, cost10, lvl, oneway. The one reader of the station snap
+    * and the graph collect: one plan shape, so the second collect finds
+    * the first one's generated classes in Spark's cache. The geometry
+    * arrays are field extractions of `geom`; a `transform` lambda would be
+    * interpreted and take the scan's projection out of whole-stage code
+    * generation. */
+  private[graft] def collectEdgeRows(edges: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.functions.col
+    edges.select(col("edge_id").cast("long"), col("way_id").cast("long"),
+      col("pos").cast("long"), col("from_id").cast("long"), col("to_id").cast("long"),
+      col("geom.lat").as("glat"), col("geom.lon").as("glon"),
+      col("len_m").cast("double"), col("cost10").cast("long"),
+      col("lvl").cast("int"), col("oneway").cast("int")).collect()
   }
 
   /** one pre-parsed edge row (id-sorted by the caller or fromRows) */

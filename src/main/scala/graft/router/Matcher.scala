@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
+import graft.functions.MatchFunctions.{relStops, stopCands, tripEnds}
+import graft.functions.MatchOps.CandParams
 import graft.geo.{Cell, Geo}
 import graft.osm.OsmConfig
 import graft.plans.Boundary
@@ -39,7 +41,7 @@ object Matcher {
                              stations: DataFrame, cfg: OsmConfig,
                              maxAbsLat: Option[Double] = None): DataFrame = {
     import spark.implicits._
-    // stop x station candidate pairs via the same k-ring join
+    // the ring radius of the stop x station pairs
     val k = 1
     val normB = cfg.stationNormRules
     val simUdf = udf((a: String, b: String, d: Double) =>
@@ -59,49 +61,53 @@ object Matcher {
     })
     val pcCol = if (stops.columns.contains("platform_code"))
       coalesce($"platform_code", lit("")) else lit("")
-    val stopRings = stops.select($"stop_id", $"name".as("stop_name"),
-        pcCol.as("pc"), $"lat".as("s_lat"), $"lng".as("s_lng"))
-      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), k)))
     val trkCol = if (stations.columns.contains("track"))
       coalesce($"track", lit("")) else lit("")
-    val simPairs = stopRings
-      .join(stations.select($"node_id", $"name".as("st_name"), trkCol.as("trk"),
-        $"lat".as("st_lat"), $"lon".as("st_lon"), $"cell"), Seq("cell"))
-      .withColumn("d_m", haversineM($"s_lat", $"s_lng", $"st_lat", $"st_lon"))
-      .filter($"d_m" <= cfg.maxSnapDistanceM)
-      .filter(simUdf($"stop_name", $"st_name", $"d_m"))
-      .withColumn("trk_mism", trkMismUdf($"pc", $"trk"))
     // ring radius from the worst-case (highest) latitude in the feed —
     // callers that already computed the feed bbox pass it in (the agg is
     // otherwise a blocking driver round trip on the latency floor)
     val kc = Cell.kForMeters(cfg.maxSnapDistanceM,
       maxAbsLat.getOrElse(stops.agg(max(abs(col("lat")))).head().getDouble(0)), cfg.cellRes)
-    // project onto the full edge polyline when present (contracted chains
-    // are curved), else the straight segment
-    val edgeCells =
-      if (edges.columns.contains("geom"))
-        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
-          $"geom.lat".as("glat"), $"geom.lon".as("glon"),
-          explode($"cells").as("cell"))
-      else
-        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
-          array($"from_lat", $"to_lat").as("glat"),
-          array($"from_lon", $"to_lon").as("glon"),
-          explode($"cells").as("cell"))
-    // stop x edge candidate pairs (codegen'd projection expression; was a
-    // ScalaUDF whose Seq[Double] conversion boxed every coordinate), each
-    // as one struct ordered by (dist_m, edge_id) — the top-K order
-    val candPairs = stops
-      .select($"stop_id", $"lat".as("s_lat"), $"lng".as("s_lng"))
-      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), kc)))
-      .join(edgeCells, Seq("cell"))
-      .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
-      .filter($"proj._4" <= cfg.maxSnapDistanceM)
-      .select($"stop_id", struct($"proj._4".as("dist_m"), $"edge_id",
+    // ONE ring join finds the stop x edge and the stop x station pairs: the
+    // edges' cells and the stations' cells are one table keyed by cell
+    // (kind 0: edge, 1: station), built once for the broadcast. An edge
+    // row projects the stop onto the full edge polyline when present
+    // (contracted chains are curved), else the straight segment; a station
+    // row keeps its own ring rule, k = 1 <= kc.
+    val (glat, glon) =
+      if (edges.columns.contains("geom")) ($"geom.lat", $"geom.lon")
+      else (array($"from_lat", $"to_lat"), array($"from_lon", $"to_lon"))
+    val ringSide = edges.select(lit(0).as("kind"), $"edge_id", $"oneway", $"from_id", $"to_id",
+        glat.as("glat"), glon.as("glon"), explode($"cells").as("cell"))
+      .unionByName(stations.select(lit(1).as("kind"), $"node_id", $"name".as("st_name"),
+        trkCol.as("trk"), $"lat".as("st_lat"), $"lon".as("st_lon"), $"cell"),
+        allowMissingColumns = true)
+    val isEdge = $"kind" === 0
+    val pairs = stops.select($"stop_id", $"name".as("stop_name"), pcCol.as("pc"),
+        $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("s_cell", gcell($"s_lat", $"s_lng", cfg.cellRes))
+      .withColumn("cell", explode(kring($"s_cell", kc)))
+      .join(ringSide, Seq("cell"))
+      // the projection (codegen'd; was a ScalaUDF whose Seq[Double]
+      // conversion boxed every coordinate) of an edge row, the distance of
+      // a station row
+      .withColumn("proj", when(isEdge, polylineProject($"s_lat", $"s_lng", $"glat", $"glon")))
+      .withColumn("d_m", when(!isEdge, haversineM($"s_lat", $"s_lng", $"st_lat", $"st_lon")))
+      .filter((isEdge && $"proj._4" <= cfg.maxSnapDistanceM) ||
+        (!isEdge && array_contains(kring($"s_cell", k), $"cell") &&
+          $"d_m" <= cfg.maxSnapDistanceM && simUdf($"stop_name", $"st_name", $"d_m")))
+      .withColumn("trk_mism", when(!isEdge, trkMismUdf($"pc", $"trk")))
+    // an edge pair as one struct ordered by (dist_m, edge_id) — the top-K
+    // order — and a station pair as the station's fields
+    val rows = pairs.select($"stop_id",
+      when(isEdge, struct($"proj._4".as("dist_m"), $"edge_id",
         $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
-        $"oneway", $"from_id", $"to_id").as("c"))
-    // ONE group-by-stop pass over both pair sets serves everything the
-    // candidates need, with no window and no join:
+        $"oneway", $"from_id", $"to_id")).as("c"),
+      when(!isEdge, struct($"node_id", $"trk_mism", $"st_lat", $"st_lon", $"d_m")).as("st"))
+    // ONE group-by-stop pass over both kinds of pairs serves everything the
+    // candidates need, with no window and no join. It collects the set of
+    // candidates and the set of similar stations, and a precompiled helper
+    // (MatchOps.stopCands) finishes the stop's candidates:
     //  - a (stop, edge) pair can match through several ring cells; the
     //    copies are equal (same stop point, same edge polyline), so the
     //    set dedups them, and the K nearest (ties: lower edge id) are the
@@ -116,49 +122,24 @@ object Matcher {
     //    position onto it, so matched shapes terminate exactly at the
     //    station node (the reference routes via station group nodes,
     //    OsmBuilder snapStation + ShapeBuilder getECM).
-    // A candidate row has no station columns and a station row no
-    // candidate: collect_* skip the nulls and min_by skips rows with a null
-    // ordering.
-    val perStop = candPairs
-      .unionByName(simPairs.select($"stop_id",
-        struct($"node_id", $"trk_mism").as("sim"),
-        struct($"node_id", $"st_lat", $"st_lon").as("bv"),
-        struct($"trk_mism", $"d_m", $"node_id").as("bo")), allowMissingColumns = true)
+    // A candidate row has no station and a station row no candidate:
+    // collect_* skip the nulls. Both are typed aggregates: a declarative
+    // one (min_by) adds mutable projection classes. Each station row
+    // crosses the exchange once, as its (node, mismatch) pair did beside
+    // min_by's buffer.
+    // An edge is a "station candidate" if either endpoint is a similar
+    // station; emulateReferenceTrackPenalty flips the platform condition to
+    // the reference's literal (inverted) ShapeBuilder.cpp:216-219 test.
+    val params = CandParams(MaxCandsPerStop, cfg.distPenFactor,
+      graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec),
+      graft.geo.Geo.costToInt(cfg.nonStationPenaltySec),
+      if (cfg.emulateReferenceTrackPenalty) 0 else 1)
+    rows
       .groupBy($"stop_id")
-      .agg(slice(sort_array(collect_set($"c")), 1, MaxCandsPerStop).as("top"),
-        collect_list($"sim").as("sims"), min_by($"bv", $"bo").as("b"))
-    val nonStationPen10 = graft.geo.Geo.costToInt(cfg.nonStationPenaltySec)
-    val platformPen10 = graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec)
-    // track mismatch of the similar stations at an endpoint (null: none):
-    // the least over the endpoint's pairs, and a mismatch is 0 or 1
-    def endMism(end: String) = {
-      def has(m: Int) = array_contains($"sims",
-        struct($"c".getField(end).as("node_id"), lit(m).as("trk_mism")))
-      when(has(0), lit(0)).when(has(1), lit(1))
-    }
-    // an edge is a "station candidate" if either endpoint is a similar station
-    perStop
-      .select($"stop_id", $"sims", $"b", explode($"top").as("c"))
-      .withColumn("from_mism", endMism("from_id"))
-      .withColumn("to_mism", endMism("to_id"))
-      .withColumn("pen10", ceil($"c.dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
-      .withColumn("pen10",
-        when($"from_mism".isNotNull || $"to_mism".isNotNull,
-          // emulateReferenceTrackPenalty flips the condition to the
-          // reference's literal (inverted) ShapeBuilder.cpp:216-219 test
-          $"pen10" + when(least(coalesce($"from_mism", lit(1)),
-            coalesce($"to_mism", lit(1))) ===
-              (if (cfg.emulateReferenceTrackPenalty) 0 else 1),
-            lit(platformPen10)).otherwise(lit(0L)))
-          .otherwise($"pen10" + lit(nonStationPen10)))
-      .withColumn("best_node", $"b.node_id")
-      .withColumn("at_from", $"best_node".isNotNull && $"c.from_id" === $"best_node")
-      .withColumn("at_to", $"best_node".isNotNull && $"c.to_id" === $"best_node")
-      .select($"stop_id", $"c.edge_id".as("edge_id"),
-        when($"at_from", lit(0.0)).when($"at_to", lit(1.0)).otherwise($"c.progr").as("progr"),
-        when($"at_from" || $"at_to", $"b.st_lat").otherwise($"c.py").as("py"),
-        when($"at_from" || $"at_to", $"b.st_lon").otherwise($"c.px").as("px"),
-        $"c.dist_m".as("dist_m"), $"c.oneway".as("oneway"), $"pen10")
+      .agg(collect_set($"c").as("cands"), collect_set($"st").as("sts"))
+      .select($"stop_id", explode(stopCands($"cands", $"sts", params)).as("c"))
+      .select($"stop_id", $"c.edge_id", $"c.progr", $"c.py", $"c.px", $"c.dist_m",
+        $"c.oneway", $"c.pen10")
   }
 
   /** Candidates kept per stop: the K nearest edges. */
@@ -265,32 +246,30 @@ object Matcher {
     * (/root/reference/src/pfaedle/router/TripTrie.tpp:190-204). */
   def tripStopsWithKey(tripStops: DataFrame): DataFrame = {
     import tripStops.sparkSession.implicits._
-    val hasLine = tripStops.columns.contains("line_name")
-    val lineAgg = if (hasLine) first($"line_name") else lit("")
+    def orEmpty(c: String) = if (tripStops.columns.contains(c)) col(c) else lit("")
     // G2 routing attrs: the trip's first/last stop NAMES feed the
     // from/to line-factor split (RoutingAttrs lineFrom/lineTo); feeds
-    // without a stop_name column degrade to empty = always-similar
-    val hasName = tripStops.columns.contains("stop_name")
-    val fromAgg = if (hasName) min_by($"stop_name", $"seq") else lit("")
-    val toAgg = if (hasName) max_by($"stop_name", $"seq") else lit("")
+    // without a stop_name column degrade to empty = always-similar. The
+    // line and the names come from a typed aggregate (MatchOps.Ends: the
+    // first row's line, the names at the least and greatest seq), not
+    // from fields of the collected stops: one line and two names per trip
+    // cross the exchange, not a name per stop.
     tripStops
       .groupBy($"trip_id")
       .agg(sort_array(collect_list(struct($"seq", $"stop_id", $"arr_s", $"dep_s",
         $"lat", $"lng"))).as("stops"),
-        coalesce(lineAgg, lit("")).as("line_name"),
-        coalesce(fromAgg, lit("")).as("from_name"),
-        coalesce(toAgg, lit("")).as("to_name"))
-      .withColumn("t0", $"stops"(0).getField("dep_s"))
+        tripEnds(orEmpty("line_name"), orEmpty("stop_name"), $"seq").as("e"))
+      .select($"trip_id", $"stops", coalesce($"e.line_name", lit("")).as("line_name"),
+        coalesce($"e.from_name", lit("")).as("from_name"),
+        coalesce($"e.to_name", lit("")).as("to_name"))
       // the cluster key includes the line identity: trips on different
       // lines cost-shape differently (RoutingAttrs clustering, A2).
       // xxhash64 hashes the struct ARRAY natively — the r2 to_json
       // serialization ran Jackson per trip row and showed up in stack
-      // profiles of the match stage
-      .withColumn("seq_key", conv(xxhash64(
-        transform($"stops", x => struct(x.getField("stop_id").as("s"),
-          (x.getField("arr_s") - $"t0").as("a"),
-          (x.getField("dep_s") - $"t0").as("d"))), $"line_name"), 10, 16))
-      .drop("t0")
+      // profiles of the match stage. The relative stops come from a
+      // precompiled helper (MatchOps.relStops): a transform lambda split
+      // the stage's whole-stage class in two.
+      .withColumn("seq_key", conv(xxhash64(relStops($"stops"), $"line_name"), 10, 16))
   }
 
   /** One row per distinct sequence from tripStopsWithKey's per-trip rows:
@@ -304,6 +283,7 @@ object Matcher {
   def distinctSeqs(keyed: DataFrame): DataFrame = {
     import keyed.sparkSession.implicits._
     keyed.filter($"trip_id".isNotNull)
+      .select($"seq_key", $"trip_id", $"line_name", $"stops", $"from_name", $"to_name")
       .groupBy($"seq_key")
       .agg(min_by(struct($"line_name", $"stops", $"from_name", $"to_name"), $"trip_id").as("r"),
         sort_array(collect_list($"trip_id")).as("trip_ids"))
@@ -400,10 +380,15 @@ object Matcher {
     // function of the group key, so grouping on (pid, key) keeps the groups
     // and the id-passthrough partitioning satisfies the cogroup with no
     // second exchange. The values resolve by name, so pid stays out of them.
-    def placed(ds: Dataset[_]) = ds.toDF()
-      .withColumn("pid", pid($"c_line", $"c_stop", $"salt"))
-      .repartitionById(place.n, $"pid")
-      .groupBy($"pid", $"c_line", $"c_stop", $"salt")
+    // Both sides lead with (pid, c_line, c_stop, salt): their partition-id,
+    // sort-prefix, ordering and key projections are one generated class
+    // each.
+    def placed(ds: Dataset[_]) = {
+      val df = ds.toDF()
+      df.select(pid($"c_line", $"c_stop", $"salt").as("pid") +: df.columns.map(col): _*)
+        .repartitionById(place.n, $"pid")
+        .groupBy($"pid", $"c_line", $"c_stop", $"salt")
+    }
     // cogroup: a sequence whose stops ALL lack candidates still arrives
     // (with an empty candidate side) and is solved via the null-candidate
     // fallback, never silently dropped.
@@ -484,7 +469,8 @@ object Matcher {
     val clustered = distinctSeqs
       .withColumn("c_line", coalesce($"line_name", lit("")))
       .withColumn("c_stop", coalesce(element_at($"stops", 1).getField("stop_id"), lit("")))
-    val clAgg = clustered.groupBy($"c_line", $"c_stop")
+    val clAgg = clustered.select($"c_line", $"c_stop", $"to_name")
+      .groupBy($"c_line", $"c_stop")
       .agg(count(lit(1)).as("n_cl"),
         sort_array(collect_set(coalesce($"to_name", lit("")))).as("cl_to_names"))
     val clRows = clAgg.collect()

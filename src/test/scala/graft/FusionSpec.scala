@@ -42,7 +42,17 @@ class FusionSpec extends AnyFunSuite {
     val member = w.rels.find(_.tags.get("type").contains("route")).get.members.head
     val noRef = OsmRel(9200001L, Map("type" -> "route", "route" -> "bus", "from" -> "A",
       "to" -> "B", "colour" -> "#000000"), Array(member))
-    w.copy(nodes = w.nodes ++ gapNodes, ways = w.ways ++ gapWays, rels = w.rels :+ noRef)
+    // a station without a name of its own in two named stop areas: it
+    // takes the name of the lower relation id
+    val nameless = OsmNode(9000010L, la - 0.0006, lo,
+      Map("public_transport" -> "stop_position", "bus" -> "yes"))
+    def area(id: Long, name: String, members: OsmMember*) = OsmRel(id,
+      Map("type" -> "public_transport", "public_transport" -> "stop_area", "name" -> name),
+      members.toArray)
+    val areas = Seq(area(9200003L, "Area B", OsmMember(9000010L, 0, "stop")),
+      area(9200002L, "Area A", OsmMember(9100001L, 1, ""), OsmMember(9000010L, 0, "stop")))
+    w.copy(nodes = w.nodes ++ gapNodes :+ nameless, ways = w.ways ++ gapWays,
+      rels = w.rels ++ (noRef +: areas))
   }
   lazy val t = WorldTables(spark, world)
   lazy val bbox = GraphBuilder.feedBBox(t.stops).pad(cfg.bboxPaddingM)
@@ -81,10 +91,8 @@ class FusionSpec extends AnyFunSuite {
   }
   lazy val t2 = WorldTables(spark, world2)
   lazy val bbox2 = GraphBuilder.feedBBox(t2.stops).pad(cfg.bboxPaddingM)
-  lazy val refined2 = {
-    val g = GraphBuilder.build(spark, t2.osmNodes, t2.osmWays, t2.osmRels, bbox2, cfg)
-    StationSnap.refine(spark, g, cfg, g.blockers)._1
-  }
+  lazy val gt2 = GraphBuilder.build(spark, t2.osmNodes, t2.osmWays, t2.osmRels, bbox2, cfg)
+  lazy val refined2 = StationSnap.refine(spark, gt2, cfg, gt2.blockers)._1
 
   /** the build's resolved way nodes of a world, as GraphBuilder.build
     * forms them (no nohup rules in the bus config) */
@@ -252,6 +260,77 @@ class FusionSpec extends AnyFunSuite {
         val n = bag(a)
         assert(n.nonEmpty && n == bag(b))
       }
+    }
+  }
+  test("build: explodes, helpers and hash joins equal the lambdas and merge joins") {
+    for ((tb, bb, g) <- Seq((t, bbox, gt), (t2, bbox2, gt2))) {
+      val c = GraphBuilder.contractWithDegrees(withCost(GraphBuilder.segments(resolved(tb, bb))))
+        .cache()
+      assert(bag(c) == bag(PriorPlans.contractWithDegreesCount(
+        withCost(GraphBuilder.segments(resolved(tb, bb))))))
+      val ends = GraphBuilder.degreeOneEnds(c)
+      assert(bag(ends) == bag(PriorPlans.degreeOneEnds(c)))
+      // the merged edges keep their endpoint degrees
+      val merged = GraphBuilder.mergeGaps(c, ends, 1.0)
+      assert(Seq("from_deg", "to_deg").forall(merged.columns.contains))
+      assert(bag(merged) == bag(PriorPlans.mergeGaps(c, PriorPlans.degreeOneEnds(c), 1.0)))
+      assert(bag(g.stations) == bag(PriorPlans.stations(tb.osmNodes, tb.osmRels, bb, cfg)))
+      assert(bag(g.restrictions) == bag(PriorPlans.restrictions(tb.osmRels)))
+      assert(bag(g.wayLines) == bag(PriorPlans.wayLines(tb.osmRels)))
+      c.unpersist()
+    }
+    // the 0.4 m gap merged: the second dead end's node is gone
+    val c = GraphBuilder.contractWithDegrees(withCost(GraphBuilder.segments(resolved(t, bbox))))
+    assert(GraphBuilder.mergeGaps(c, GraphBuilder.degreeOneEnds(c), 1.0)
+      .filter($"from_id" === 9000003L || $"to_id" === 9000003L).count() == 0)
+    assert(c.filter($"from_id" === 9000003L || $"to_id" === 9000003L).count() == 1)
+    // the stop areas named the nameless station; the restrictions exist
+    assert(gt.stations.filter($"node_id" === 9000010L).select($"name").as[String]
+      .collect().toSeq == Seq("Area A"))
+    assert(gt.restrictions.count() > 0)
+  }
+
+  test("candidates: one ring join and the per-stop helper equal two joins and a projection") {
+    for ((tb, g) <- Seq((t, refined), (t2, refined2))) {
+      val now = Matcher.buildCandsWithStations(spark, tb.stops, g.edges, g.stations, cfg)
+      val old = PriorPlans.buildCandsGroupedPass(spark, tb.stops, g.edges, g.stations, cfg)
+      assert(now.schema.map(f => (f.name, f.dataType)) == old.schema.map(f => (f.name, f.dataType)))
+      val n = bag(now)
+      assert(n.nonEmpty && n == bag(old))
+      // some candidates touch a similar station
+      assert(now.filter($"progr" === 0.0 || $"progr" === 1.0).count() > 0)
+    }
+  }
+
+  test("per-trip keys: TripEnds and the relative stops equal the declarative aggregate") {
+    for (tb <- Seq(t, t2)) {
+      val ts = WorldTables.tripStops(tb)
+      for (in <- Seq(ts, ts.drop("line_name"), ts.drop("stop_name", "line_name"))) {
+        val now = Matcher.tripStopsWithKey(in)
+        val old = PriorPlans.tripStopsWithKey(in)
+        assert(now.columns.toSeq == old.columns.toSeq)
+        val n = bag(now)
+        assert(n.nonEmpty && n == bag(old))
+        assert(now.select($"trip_id", $"seq_key").as[(String, String)].collect().toMap ==
+          old.select($"trip_id", $"seq_key").as[(String, String)].collect().toMap)
+      }
+    }
+  }
+
+  test("driver edge collects: the one reader returns both prior collects' rows") {
+    def rows(rs: Array[org.apache.spark.sql.Row], ix: Seq[Int]) = rs.map(r => ix.map(i =>
+      r.get(i) match {
+        case s: scala.collection.Seq[_] => s.toList
+        case v => v
+      })).toSeq.sortBy(_.head.asInstanceOf[Long])
+    for (edges <- Seq(gt.edges, refined.edges, gt2.edges, refined2.edges)) {
+      val now = CompactGraph.collectEdgeRows(edges)
+      assert(now.nonEmpty)
+      // the station snap read every column in the reader's order
+      assert(rows(now, 0 until 11) == rows(PriorPlans.stationSnapEdgeRows(edges), 0 until 11))
+      // the graph collect: id, way, from, to, cost10, len_m, oneway, glat, glon
+      assert(rows(now, Seq(0, 1, 3, 4, 8, 7, 10, 5, 6)) ==
+        rows(PriorPlans.compactGraphEdgeRows(edges), Seq(0, 1, 2, 3, 8, 9, 10, 11, 12)))
     }
   }
 }
@@ -494,11 +573,11 @@ object PriorPlans {
     // seq_key depends on the collected stops array, but the projection
     // drops the array post-agg — it exists only transiently per group,
     // never in a shuffle file or checkpoint block
-    val seqKeys = Boundary.deferred(Matcher.tripStopsWithKey(tripStops)
+    val seqKeys = Boundary.deferred(tripStopsWithKey(tripStops)
       .select($"trip_id", $"seq_key", $"from_name", $"to_name"))
     val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
     val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
-    val distinctSeqs = Boundary.deferred(Matcher.tripStopsWithKey(repRows)
+    val distinctSeqs = Boundary.deferred(tripStopsWithKey(repRows)
       .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"))
     (seqKeys, distinctSeqs)
   }
@@ -777,4 +856,380 @@ object PriorPlans {
       .filter($"rk" <= 8).drop("rk")
       .withColumn("pen10", ceil($"dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
   }
+
+  /** Matcher.buildCandsWithStations before the one ring join and the
+    * per-stop helper: a ring join per pair kind, a per-stop aggregate that
+    * mixes collect_set, collect_list and min_by, and a projection per
+    * candidate. */
+  def buildCandsGroupedPass(spark: SparkSession, stops: DataFrame, edges: DataFrame,
+                             stations: DataFrame, cfg: OsmConfig,
+                             maxAbsLat: Option[Double] = None): DataFrame = {
+    import spark.implicits._
+    // stop x station candidate pairs via the same k-ring join
+    val k = 1
+    val normB = cfg.stationNormRules
+    val simUdf = udf((a: String, b: String, d: Double) =>
+      graft.functions.StringSim.stationsSimilar(a, b, d,
+        graft.functions.StringSim.normalizerFor(normB)))
+    // U6 track/platform matching (reference StatInfo track +
+    // routing_platform_unmatched_penalty intent, ShapeBuilder.cpp:205-230):
+    // a station candidate whose normalized track differs from the stop's
+    // platform_code is penalized; absent info on either side is neutral
+    val trackRules = cfg.trackNormRules
+    val trkMismUdf = udf((pc: String, trk: String) => {
+      if (pc == null || trk == null || pc.isEmpty || trk.isEmpty) 0
+      else {
+        val n = graft.functions.StringSim.normalizerFor(trackRules)
+        if (n.norm(pc) == n.norm(trk)) 0 else 1
+      }
+    })
+    val pcCol = if (stops.columns.contains("platform_code"))
+      coalesce($"platform_code", lit("")) else lit("")
+    val stopRings = stops.select($"stop_id", $"name".as("stop_name"),
+        pcCol.as("pc"), $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), k)))
+    val trkCol = if (stations.columns.contains("track"))
+      coalesce($"track", lit("")) else lit("")
+    val simPairs = stopRings
+      .join(stations.select($"node_id", $"name".as("st_name"), trkCol.as("trk"),
+        $"lat".as("st_lat"), $"lon".as("st_lon"), $"cell"), Seq("cell"))
+      .withColumn("d_m", haversineM($"s_lat", $"s_lng", $"st_lat", $"st_lon"))
+      .filter($"d_m" <= cfg.maxSnapDistanceM)
+      .filter(simUdf($"stop_name", $"st_name", $"d_m"))
+      .withColumn("trk_mism", trkMismUdf($"pc", $"trk"))
+    // ring radius from the worst-case (highest) latitude in the feed —
+    // callers that already computed the feed bbox pass it in (the agg is
+    // otherwise a blocking driver round trip on the latency floor)
+    val kc = Cell.kForMeters(cfg.maxSnapDistanceM,
+      maxAbsLat.getOrElse(stops.agg(max(abs(col("lat")))).head().getDouble(0)), cfg.cellRes)
+    // project onto the full edge polyline when present (contracted chains
+    // are curved), else the straight segment
+    val edgeCells =
+      if (edges.columns.contains("geom"))
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          $"geom.lat".as("glat"), $"geom.lon".as("glon"),
+          explode($"cells").as("cell"))
+      else
+        edges.select($"edge_id", $"oneway", $"from_id", $"to_id",
+          array($"from_lat", $"to_lat").as("glat"),
+          array($"from_lon", $"to_lon").as("glon"),
+          explode($"cells").as("cell"))
+    // stop x edge candidate pairs (codegen'd projection expression; was a
+    // ScalaUDF whose Seq[Double] conversion boxed every coordinate), each
+    // as one struct ordered by (dist_m, edge_id) — the top-K order
+    val candPairs = stops
+      .select($"stop_id", $"lat".as("s_lat"), $"lng".as("s_lng"))
+      .withColumn("cell", explode(kring(gcell($"s_lat", $"s_lng", cfg.cellRes), kc)))
+      .join(edgeCells, Seq("cell"))
+      .withColumn("proj", polylineProject($"s_lat", $"s_lng", $"glat", $"glon"))
+      .filter($"proj._4" <= cfg.maxSnapDistanceM)
+      .select($"stop_id", struct($"proj._4".as("dist_m"), $"edge_id",
+        $"proj._1".as("progr"), $"proj._2".as("py"), $"proj._3".as("px"),
+        $"oneway", $"from_id", $"to_id").as("c"))
+    // ONE group-by-stop pass over both pair sets serves everything the
+    // candidates need, with no window and no join:
+    //  - a (stop, edge) pair can match through several ring cells; the
+    //    copies are equal (same stop point, same edge polyline), so the
+    //    set dedups them, and the K nearest (ties: lower edge id) are the
+    //    first K of the sorted set. The best-per-deg-2-chain dedup (O1/G9)
+    //    happens kernel-side against CompactGraph.chainOf;
+    //  - the similar stations as (node, track mismatch) pairs: a vertex
+    //    aliasing several platforms counts as matching if ANY matches, so
+    //    an endpoint's mismatch is the min over its pairs;
+    //  - the NEAREST similar station — matching track beats distance (two
+    //    same-name platforms of one station are otherwise
+    //    indistinguishable): candidates touching that vertex snap their
+    //    position onto it, so matched shapes terminate exactly at the
+    //    station node (the reference routes via station group nodes,
+    //    OsmBuilder snapStation + ShapeBuilder getECM).
+    // A candidate row has no station columns and a station row no
+    // candidate: collect_* skip the nulls and min_by skips rows with a null
+    // ordering.
+    val perStop = candPairs
+      .unionByName(simPairs.select($"stop_id",
+        struct($"node_id", $"trk_mism").as("sim"),
+        struct($"node_id", $"st_lat", $"st_lon").as("bv"),
+        struct($"trk_mism", $"d_m", $"node_id").as("bo")), allowMissingColumns = true)
+      .groupBy($"stop_id")
+      .agg(slice(sort_array(collect_set($"c")), 1, Matcher.MaxCandsPerStop).as("top"),
+        collect_list($"sim").as("sims"), min_by($"bv", $"bo").as("b"))
+    val nonStationPen10 = graft.geo.Geo.costToInt(cfg.nonStationPenaltySec)
+    val platformPen10 = graft.geo.Geo.costToInt(cfg.platformUnmatchedPenaltySec)
+    // track mismatch of the similar stations at an endpoint (null: none):
+    // the least over the endpoint's pairs, and a mismatch is 0 or 1
+    def endMism(end: String) = {
+      def has(m: Int) = array_contains($"sims",
+        struct($"c".getField(end).as("node_id"), lit(m).as("trk_mism")))
+      when(has(0), lit(0)).when(has(1), lit(1))
+    }
+    // an edge is a "station candidate" if either endpoint is a similar station
+    perStop
+      .select($"stop_id", $"sims", $"b", explode($"top").as("c"))
+      .withColumn("from_mism", endMism("from_id"))
+      .withColumn("to_mism", endMism("to_id"))
+      .withColumn("pen10", ceil($"c.dist_m" * lit(cfg.distPenFactor) * 10.0).cast("long"))
+      .withColumn("pen10",
+        when($"from_mism".isNotNull || $"to_mism".isNotNull,
+          // emulateReferenceTrackPenalty flips the condition to the
+          // reference's literal (inverted) ShapeBuilder.cpp:216-219 test
+          $"pen10" + when(least(coalesce($"from_mism", lit(1)),
+            coalesce($"to_mism", lit(1))) ===
+              (if (cfg.emulateReferenceTrackPenalty) 0 else 1),
+            lit(platformPen10)).otherwise(lit(0L)))
+          .otherwise($"pen10" + lit(nonStationPen10)))
+      .withColumn("best_node", $"b.node_id")
+      .withColumn("at_from", $"best_node".isNotNull && $"c.from_id" === $"best_node")
+      .withColumn("at_to", $"best_node".isNotNull && $"c.to_id" === $"best_node")
+      .select($"stop_id", $"c.edge_id".as("edge_id"),
+        when($"at_from", lit(0.0)).when($"at_to", lit(1.0)).otherwise($"c.progr").as("progr"),
+        when($"at_from" || $"at_to", $"b.st_lat").otherwise($"c.py").as("py"),
+        when($"at_from" || $"at_to", $"b.st_lon").otherwise($"c.px").as("px"),
+        $"c.dist_m".as("dist_m"), $"c.oneway".as("oneway"), $"pen10")
+  }
+
+  /** Matcher.tripStopsWithKey before the per-trip helper: sort_array,
+    * first, min_by and max_by in one aggregate, and the key hashed through
+    * an interpreted transform. */
+  def tripStopsWithKey(tripStops: DataFrame): DataFrame = {
+    import tripStops.sparkSession.implicits._
+    val hasLine = tripStops.columns.contains("line_name")
+    val lineAgg = if (hasLine) first($"line_name") else lit("")
+    // G2 routing attrs: the trip's first/last stop NAMES feed the
+    // from/to line-factor split (RoutingAttrs lineFrom/lineTo); feeds
+    // without a stop_name column degrade to empty = always-similar
+    val hasName = tripStops.columns.contains("stop_name")
+    val fromAgg = if (hasName) min_by($"stop_name", $"seq") else lit("")
+    val toAgg = if (hasName) max_by($"stop_name", $"seq") else lit("")
+    tripStops
+      .groupBy($"trip_id")
+      .agg(sort_array(collect_list(struct($"seq", $"stop_id", $"arr_s", $"dep_s",
+        $"lat", $"lng"))).as("stops"),
+        coalesce(lineAgg, lit("")).as("line_name"),
+        coalesce(fromAgg, lit("")).as("from_name"),
+        coalesce(toAgg, lit("")).as("to_name"))
+      .withColumn("t0", $"stops"(0).getField("dep_s"))
+      // the cluster key includes the line identity: trips on different
+      // lines cost-shape differently (RoutingAttrs clustering, A2).
+      // xxhash64 hashes the struct ARRAY natively — the r2 to_json
+      // serialization ran Jackson per trip row and showed up in stack
+      // profiles of the match stage
+      .withColumn("seq_key", conv(xxhash64(
+        transform($"stops", x => struct(x.getField("stop_id").as("s"),
+          (x.getField("arr_s") - $"t0").as("a"),
+          (x.getField("dep_s") - $"t0").as("d"))), $"line_name"), 10, 16))
+      .drop("t0")
+  }
+
+  /** GraphBuilder.contractWithDegrees before the degree was the node's
+    * list size: count and collect_list in one aggregate. */
+  def contractWithDegreesCount(edgesCost: DataFrame): DataFrame = {
+    val spark = edgesCost.sparkSession
+    import spark.implicits._
+    val e = struct($"edge_id", $"from_id", $"to_id", $"from_lat", $"from_lon",
+      $"to_lat", $"to_lon", $"len_m", $"cost10", $"lvl", $"oneway", $"from_tc".as("tc"))
+    edgesCost
+      .select($"way_id", $"pos", e.as("e"), explode(array(lit(0), lit(1))).as("side"))
+      .groupBy(when($"side" === 0, $"e.from_id").otherwise($"e.to_id").as("node_id"))
+      .agg(count(lit(1)).as("deg"),
+        collect_list(struct($"way_id", $"pos", $"side", when($"side" === 0, $"e").as("e")))
+          .as("ends"))
+      .select($"deg", explode($"ends").as("x"))
+      .groupBy($"x.way_id".as("way_id"))
+      .agg(collect_list(struct($"x.pos", $"x.side", $"deg", $"x.e")).as("ends"))
+      .select($"way_id", explode(graft.functions.WayFunctions.contractChains($"ends")).as("c"))
+      .select($"way_id", $"c.*")
+  }
+
+  /** GraphBuilder.degreeOneEnds before one scan emitted both ends: two
+    * filtered scans and a union. The degree-1 endpoints (node_id, lat, lon) of edges that carry their
+    * endpoint degrees (contractWithDegrees' output): a degree-1 node is
+    * the end of exactly one edge, so a filter finds each once — no
+    * aggregation. */
+  def degreeOneEnds(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    edges.filter($"from_deg" === 1)
+      .select($"from_id".as("node_id"), $"from_lat".as("lat"), $"from_lon".as("lon"))
+      .unionByName(edges.filter($"to_deg" === 1)
+        .select($"to_id".as("node_id"), $"to_lat".as("lat"), $"to_lon".as("lon")))
+  }
+
+  /** GraphBuilder.mergeGaps before the pair helper: the gap pairs through
+    * an interpreted filter lambda. fixGaps over a given degree-1 endpoint table deg1(node_id, lat, lon). */
+  def mergeGaps(edges: DataFrame, deg1: DataFrame, toleranceM: Double): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // res 24: cellDeg = 90/2^24 deg ~ 0.6 m — a k=1 ring covers 1 m.
+    // Candidate pairs: a in the ring of b's cell. One exchange by cell
+    // finds them: every endpoint is emitted into each cell of its ring
+    // (its own cell included), and within a cell each endpoint pairs with
+    // the endpoints whose OWN cell it is — the ring self-join, without
+    // shuffling the two join sides separately.
+    val res = 24
+    val inCell = deg1
+      .select($"node_id", $"lat", $"lon", gcell($"lat", $"lon", res).as("own"),
+        explode(kring(gcell($"lat", $"lon", res), 1)).as("cell"))
+      .groupBy($"cell")
+      .agg(collect_list(struct($"node_id", $"lat", $"lon", ($"own" === $"cell").as("own"))).as("m"))
+    val pairs = inCell
+      .select($"m", explode($"m").as("x"))
+      .select($"x.node_id".as("a"), $"x.lat".as("a_lat"), $"x.lon".as("a_lon"),
+        explode(filter($"m", y => y.getField("own") &&
+          $"x.node_id" < y.getField("node_id") &&
+          haversineM($"x.lat", $"x.lon", y.getField("lat"), y.getField("lon")) <= toleranceM))
+          .as("y"))
+      .select($"a", $"a_lat", $"a_lon", $"y.node_id".as("b"))
+    // short-circuit: no mergeable endpoint pairs (the common case on a
+    // well-digitized extract, and always true on the synthetic bench
+    // world). The full path below with an EMPTY mapping is a value-level
+    // identity — every left_outer misses, coalesce keeps the original
+    // node/geometry values — so skipping it changes nothing except the
+    // plan: the mapping self-join, two broadcast builds and the geometry
+    // rebuild projection disappear from the downstream checkpoint job.
+    if (pairs.isEmpty) return edges
+    // canonical target per merged node; resolve one chain hop (b->a, c->b)
+    val m0 = pairs.groupBy($"b")
+      .agg(min_by(struct($"a", $"a_lat", $"a_lon"), $"a").as("t"))
+      .select($"b", $"t.a".as("a"), $"t.a_lat".as("a_lat"), $"t.a_lon".as("a_lon"))
+    val mapping = m0.as("m1")
+      .join(m0.as("m2"), col("m1.a") === col("m2.b"), "left_outer")
+      .select(col("m1.b").as("b"),
+        coalesce(col("m2.a"), col("m1.a")).as("a"),
+        coalesce(col("m2.a_lat"), col("m1.a_lat")).as("a_lat"),
+        coalesce(col("m2.a_lon"), col("m1.a_lon")).as("a_lon"))
+    val fm = mapping.select($"b".as("from_id"), $"a".as("nf_id"),
+      $"a_lat".as("nf_lat"), $"a_lon".as("nf_lon"))
+    val tm = mapping.select($"b".as("to_id"), $"a".as("nt_id"),
+      $"a_lat".as("nt_lat"), $"a_lon".as("nt_lon"))
+    edges.join(broadcast(fm), Seq("from_id"), "left_outer")
+      .join(broadcast(tm), Seq("to_id"), "left_outer")
+      .withColumn("from_id2", coalesce($"nf_id", $"from_id"))
+      .withColumn("from_lat2", coalesce($"nf_lat", $"from_lat"))
+      .withColumn("from_lon2", coalesce($"nf_lon", $"from_lon"))
+      .withColumn("to_id2", coalesce($"nt_id", $"to_id"))
+      .withColumn("to_lat2", coalesce($"nt_lat", $"to_lat"))
+      .withColumn("to_lon2", coalesce($"nt_lon", $"to_lon"))
+      // geometry endpoints follow the merged node position
+      .withColumn("geom", concat(
+        array(struct($"from_lat2".as("lat"), $"from_lon2".as("lon"))),
+        expr("slice(geom, 2, greatest(size(geom) - 2, 0))"),
+        array(struct($"to_lat2".as("lat"), $"to_lon2".as("lon")))))
+      .drop("from_id", "from_lat", "from_lon", "to_id", "to_lat", "to_lon",
+        "nf_id", "nf_lat", "nf_lon", "nt_id", "nt_lat", "nt_lon")
+      .withColumnRenamed("from_id2", "from_id")
+      .withColumnRenamed("from_lat2", "from_lat")
+      .withColumnRenamed("from_lon2", "from_lon")
+      .withColumnRenamed("to_id2", "to_id")
+      .withColumnRenamed("to_lat2", "to_lat")
+      .withColumnRenamed("to_lon2", "to_lon")
+  }
+
+  /** GraphBuilder.deepAttr before the explode and the hash join: the
+    * member refs through interpreted lambdas, a merge join. F6 deep attribute extraction (OsmBuilder.cpp:980-1029): first-match
+    * over an ordered rule list, where relation-aware rules pull the tag
+    * from the lowest-id containing relation (deterministic tie-break).
+    * entities(id, tags); rels(id, tags, members); mtype selects the member
+    * type (0 = node, 1 = way). Returns (id, <keep columns>, <out>). */
+  def deepAttr(entities: DataFrame, rels: DataFrame, mtype: Int,
+               rules: Seq[GraphBuilder.DeepAttrRule], out: String,
+               keep: Seq[String] = Nil): DataFrame = {
+    val spark = entities.sparkSession
+    import spark.implicits._
+    lazy val memberTags = rels.select($"id".as("rel_id"), $"tags".as("rtags"),
+        explode(expr(s"transform(filter(members, m -> m.mtype = $mtype), m -> m.ref)")).as("id"))
+    var df = entities.select(($"id" +: $"tags" +: keep.map(col)): _*)
+    rules.zipWithIndex.foreach { case (r, i) =>
+      if (!r.fromRelation) df = df.withColumn(s"v$i", $"tags".getItem(r.key))
+      else {
+        val rv = memberTags.filter($"rtags".getItem(r.key).isNotNull)
+          .groupBy($"id")
+          .agg(min_by($"rtags".getItem(r.key), $"rel_id").as(s"v$i"))
+        // rv is already partitioned by id (its aggregate): merge join
+        df = df.join(rv.hint("shuffle_merge"), Seq("id"), "left_outer")
+      }
+    }
+    df.select(($"id" +: keep.map(col)) :+
+      coalesce(rules.indices.map(i => col(s"v$i")): _*).as(out): _*)
+  }
+
+  /** GraphBuilder.build's stations, restrictions and way lines before the
+    * explodes and the member-ref helper: interpreted lambdas over the
+    * members, and the deepAttr above. */
+  def stations(osmNodes: DataFrame, osmRels: DataFrame, bbox: GraphBuilder.BBox,
+               cfg: OsmConfig): DataFrame = {
+    val spark = osmNodes.sparkSession
+    import spark.implicits._
+    import GraphBuilder.tagMatches
+    val bboxNodes = osmNodes
+      .filter($"lat" >= bbox.latMin && $"lat" <= bbox.latMax &&
+              $"lon" >= bbox.lonMin && $"lon" <= bbox.lonMax)
+    val trackCol =
+      if (cfg.platformTagKeys.isEmpty) lit(null).cast("string")
+      else coalesce(cfg.platformTagKeys.map(k => $"tags".getItem(k)): _*)
+    val stationNodes = bboxNodes.filter(tagMatches($"tags", cfg.stationRules))
+      .select($"id", $"tags", $"lat", $"lon",
+        gcell($"lat", $"lon", cfg.cellRes).as("cell"), trackCol.as("track"))
+    deepAttr(stationNodes, osmRels, mtype = 0,
+      Seq(GraphBuilder.DeepAttrRule("name", fromRelation = false),
+        GraphBuilder.DeepAttrRule("name", fromRelation = true)), "name",
+      keep = Seq("lat", "lon", "cell", "track"))
+      .select($"id".as("node_id"), $"lat", $"lon", $"cell", $"track", $"name")
+  }
+
+  def restrictions(osmRels: DataFrame): DataFrame = {
+    import osmRels.sparkSession.implicits._
+    val restRels = osmRels.filter($"tags".getItem("type") === "restriction")
+      .withColumn("positive",
+        $"tags".getItem("restriction").startsWith("only_"))
+    restRels.select($"id", $"positive",
+        expr("filter(members, m -> m.role = 'from' AND m.mtype = 1)[0].ref").as("from_way"),
+        expr("filter(members, m -> m.role = 'via' AND m.mtype = 0)[0].ref").as("via_node"),
+        expr("filter(members, m -> m.role = 'to' AND m.mtype = 1)[0].ref").as("to_way"))
+      .filter($"from_way".isNotNull && $"via_node".isNotNull && $"to_way".isNotNull)
+      .select($"via_node", $"from_way", $"to_way", $"positive")
+  }
+
+  def wayLines(osmRels: DataFrame): DataFrame = {
+    import osmRels.sparkSession.implicits._
+    val routeRels = osmRels.filter($"tags".getItem("type") === "route")
+      .select($"id".as("rel_id"),
+        $"tags".getItem("ref").as("short_name"),
+        $"tags".getItem("from").as("from_str"),
+        $"tags".getItem("to").as("to_str"),
+        $"tags".getItem("colour").as("colour"),
+        expr("transform(filter(members, m -> m.mtype = 1), m -> m.ref)").as("way_ids"))
+    val lineId = xxhash64($"short_name", $"from_str", $"to_str", $"colour")
+    routeRels
+      .filter($"short_name".isNotNull && $"from_str".isNotNull &&
+        $"to_str".isNotNull && $"colour".isNotNull)
+      .select(explode($"way_ids").as("way_id"), lineId.as("line_id"),
+        $"short_name", $"from_str", $"to_str", $"colour")
+      .distinct()
+  }
+
+  /** StationSnap.refine's edge collect before the shared reader. */
+  def stationSnapEdgeRows(edges: DataFrame): Array[org.apache.spark.sql.Row] =
+    edges.select(
+      col("edge_id").cast("long"), col("way_id").cast("long"),
+      col("pos").cast("long"),
+      col("from_id").cast("long"), col("to_id").cast("long"),
+      expr("transform(geom, p -> p.lat)"), expr("transform(geom, p -> p.lon)"),
+      col("len_m").cast("double"), col("cost10").cast("long"),
+      col("lvl").cast("int"), col("oneway").cast("int")).collect()
+
+  /** CompactGraph.fromEdges' edge collect before the shared reader. */
+  def compactGraphEdgeRows(edges: DataFrame): Array[org.apache.spark.sql.Row] =
+    edges.select(org.apache.spark.sql.functions.col("edge_id"),
+        org.apache.spark.sql.functions.col("way_id"),
+        org.apache.spark.sql.functions.col("from_id"),
+        org.apache.spark.sql.functions.col("to_id"),
+        org.apache.spark.sql.functions.col("from_lat"),
+        org.apache.spark.sql.functions.col("from_lon"),
+        org.apache.spark.sql.functions.col("to_lat"),
+        org.apache.spark.sql.functions.col("to_lon"),
+        org.apache.spark.sql.functions.col("cost10"),
+        org.apache.spark.sql.functions.col("len_m"),
+        org.apache.spark.sql.functions.col("oneway"),
+        org.apache.spark.sql.functions.expr("transform(geom, p -> p.lat)").as("glat"),
+        org.apache.spark.sql.functions.expr("transform(geom, p -> p.lon)").as("glon"))
+      .collect()
 }

@@ -7,11 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions.{lit, regexp_replace}
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,23 +43,29 @@ import graft.router.{CompactGraph, Dijkstra, HopCache, Matcher, MatcherKernel}
   * phase and asserted for the rep's seven pipeline phases together: a
   * class that misses Spark's codegen cache is generated, compiled and
   * JIT-compiled again on every rep, which makes class count a large share
-  * of a small rep's time. */
+  * of a small rep's time. The final plans of the pipeline phases hold no
+  * interpreted expression (a non-leaf `CodegenFallback`, such as a
+  * `transform` or `filter` lambda, takes its whole operator out of
+  * whole-stage code generation; aggregate functions are not counted) and
+  * no sort-merge join (its two sorts add stages and orderings a hash join
+  * on the same exchange does without). */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   /** Spark jobs per phase of one rep (the first seven calls sum to 103 in
     * the formulation before the fused plans, 59 before the grouped passes
-    * per key) */
+    * per key, 50 before the candidates' one ring join) */
   val Budget: Map[String, Long] = Map("osm.graph_build" -> 11, "osm.station_snap" -> 7,
-    "router.graph_collect" -> 4, "router.cands_join" -> 5, "router.viterbi_match" -> 14,
+    "router.graph_collect" -> 4, "router.cands_join" -> 4, "router.viterbi_match" -> 14,
     "overlay.tile_overlay" -> 7, "overlay.tile_verify" -> 2, "eval" -> 3)
 
   /** the pipeline phases of a rep, the calls the repository benchmark times */
   val Pipeline: Set[String] = Budget.keySet - "eval"
 
   /** codegen compiles of the pipeline phases of one rep (346 before the
-    * grouped passes per key; measured 247 to 251 since) */
-  val CompileBudget = 260L
+    * grouped passes per key, 239 to 251 before the hash joins, the
+    * precompiled helpers and the one ring join; measured 178 since) */
+  val CompileBudget = 186L
 
   /** broadcast hash joins per phase whose build key is not one integral
     * column; `viterbi_match`'s are `WorldTables.tripStops`' stop and trip
@@ -71,22 +80,33 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val Integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
 
-  /** the build keys of the broadcast hash joins not keyed by one integral
-    * column, from the final plans of every query that completes, each join
-    * counted once */
-  private final class PagedBroadcastCounter extends QueryExecutionListener {
+  /** From the final plans of every query that completes, each operator
+    * counted once: the build keys of the broadcast hash joins not keyed by
+    * one integral column, the non-leaf interpreted expressions other than
+    * aggregate functions, and the sort-merge joins. */
+  private final class PlanCounter extends QueryExecutionListener {
     private val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     val joins = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val fallbacks = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val mergeJoins = new java.util.concurrent.ConcurrentLinkedQueue[String]
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       walk(qe.executedPlan)
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    /** the outermost interpreted expressions of a tree */
+    private def interpreted(e: Expression): Unit = e match {
+      case f: CodegenFallback if f.children.nonEmpty && !f.isInstanceOf[AggregateFunction] =>
+        fallbacks.add(f.prettyName)
+      case _ => e.children.foreach(interpreted)
+    }
     private def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      p.expressions.foreach(interpreted)
       p match {
         case j: BroadcastHashJoinExec =>
           val keys = if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
           if (keys.size != 1 || !Integral(keys.head.dataType))
             joins.add(keys.map(_.sql).mkString("(", ", ", ")"))
+        case j: SortMergeJoinExec => mergeJoins.add(j.leftKeys.map(_.sql).mkString("(", ", ", ")"))
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
         case q: QueryStageExec => walk(q.plan)
         case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
@@ -100,28 +120,32 @@ class JobBudgetSpec extends AnyFunSuite {
   private def materialize(df: org.apache.spark.sql.DataFrame) =
     df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
 
-  /** jobs, compiles and paged broadcast joins per phase of one rep, plus
-    * the router counters */
+  /** what one phase of a rep ran */
+  private case class Phase(name: String, jobs: Long, compiles: Long, paged: Seq[String],
+                           fallbacks: Seq[String], mergeJoins: Seq[String])
+
+  /** jobs, compiles, paged broadcast joins, interpreted expressions and
+    * merge joins per phase of one rep, plus the router counters */
   private def rep(t: WorldTables.Tables, images: org.apache.spark.sql.DataFrame,
-                  counter: JobCounter, paged: PagedBroadcastCounter)
-      : (Seq[(String, Long, Long, Seq[String])], Seq[Long]) = {
+                  counter: JobCounter, plans: PlanCounter): (Seq[Phase], Seq[Long]) = {
     import spark.implicits._
     val cfg = OsmConfig.bus
     spark.catalog.clearCache()
     Dijkstra.Iters.reset()
     MatcherKernel.KernelSolves.reset()
     HopCache.clear()
-    val phases = Seq.newBuilder[(String, Long, Long, Seq[String])]
+    val phases = Seq.newBuilder[Phase]
     def phase[T](name: String)(body: => T): T = {
       ListenerDrain(spark.sparkContext)
       val j0 = counter.jobs.sum()
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val b0 = paged.joins.size
+      val (b0, f0, m0) = (plans.joins.size, plans.fallbacks.size, plans.mergeJoins.size)
       val r = body
       ListenerDrain(spark.sparkContext)
-      phases += ((name, counter.jobs.sum() - j0,
+      phases += Phase(name, counter.jobs.sum() - j0,
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
-        paged.joins.asScala.toSeq.drop(b0)))
+        plans.joins.asScala.toSeq.drop(b0), plans.fallbacks.asScala.toSeq.drop(f0),
+        plans.mergeJoins.asScala.toSeq.drop(m0))
       r
     }
     val (gt0, bbox) = phase("osm.graph_build") {
@@ -187,28 +211,32 @@ class JobBudgetSpec extends AnyFunSuite {
     val images = materialize(
       ImageFixtures.table(spark, world, OsmConfig.bus.cellRes, noiseTiles = 8))
     val counter = new JobCounter
-    val paged = new PagedBroadcastCounter
+    val plans = new PlanCounter
     spark.sparkContext.addSparkListener(counter)
-    spark.listenerManager.register(paged)
+    spark.listenerManager.register(plans)
     try {
-      rep(t, images, counter, paged) // warm-up
-      val (phases, counters) = rep(t, images, counter, paged)
-      phases.foreach { case (n, j, c, b) =>
-        println(f"[job-budget] $n%-22s jobs $j%3d (budget ${Budget(n)}%3d) compiles $c%4d " +
-          f"paged broadcast joins ${b.size}%2d ${b.mkString(" ")}")
+      rep(t, images, counter, plans) // warm-up
+      val (phases, counters) = rep(t, images, counter, plans)
+      phases.foreach { p =>
+        println(f"[job-budget] ${p.name}%-22s jobs ${p.jobs}%3d (budget ${Budget(p.name)}%3d) " +
+          f"compiles ${p.compiles}%4d paged broadcast joins ${p.paged.size}%2d " +
+          f"${p.paged.mkString(" ")} interpreted ${p.fallbacks.mkString("[", " ", "]")} " +
+          f"merge joins ${p.mergeJoins.mkString("[", " ", "]")}")
       }
-      val pipeline = phases.filter { case (n, _, _, _) => Pipeline(n) }
-      val compiles = pipeline.map(_._3).sum
-      println(s"[job-budget] pipeline jobs ${pipeline.map(_._2).sum} compiles $compiles, " +
-        s"with eval jobs ${phases.map(_._2).sum} compiles ${phases.map(_._3).sum}")
-      phases.foreach { case (n, j, _, _) => assert(j <= Budget(n), s"$n ran $j jobs") }
+      val pipeline = phases.filter(p => Pipeline(p.name))
+      val compiles = pipeline.map(_.compiles).sum
+      println(s"[job-budget] pipeline jobs ${pipeline.map(_.jobs).sum} compiles $compiles, " +
+        s"with eval jobs ${phases.map(_.jobs).sum} compiles ${phases.map(_.compiles).sum}")
+      phases.foreach(p => assert(p.jobs <= Budget(p.name), s"${p.name} ran ${p.jobs} jobs"))
       assert(compiles <= CompileBudget, s"the pipeline phases compiled $compiles classes")
-      assert(phases.map { case (n, _, _, b) => n -> b.size.toLong }.toMap == PagedBroadcasts)
+      assert(phases.map(p => p.name -> p.paged.size.toLong).toMap == PagedBroadcasts)
+      assert(pipeline.flatMap(_.fallbacks).isEmpty, "interpreted expressions in the pipeline")
+      assert(pipeline.flatMap(_.mergeJoins).isEmpty, "merge joins in the pipeline")
       // kernel solves, Dijkstra iterations, hop-cache hits and misses
       assert(counters == Seq(4L, 623L, 0L, 8L))
     } finally {
       spark.sparkContext.removeSparkListener(counter)
-      spark.listenerManager.unregister(paged)
+      spark.listenerManager.unregister(plans)
     }
   }
 }
