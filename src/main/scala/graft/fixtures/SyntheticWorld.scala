@@ -243,8 +243,9 @@ object SyntheticWorld {
   /** Multi-component world: `cities` copies of the grid city, separated by
     * ~25 km of empty space — far beyond snap distance and bbox padding, so
     * the routing graph has (at least) one connected component per city.
-    * Exercises GraphPartitions: every solver cluster's candidates live in
-    * exactly one city's component(s). */
+    * Exercises DistGraphBuild's component bins (GraphPartitions): every
+    * solver cluster's candidates live in exactly one city's
+    * component(s). */
   def buildMulti(cities: Int, rows: Int, cols: Int, seed: Long = 42L,
                  stopEvery: Int = 3, tripsPerRoute: Int = 2,
                  variedTrips: Boolean = false): World = {

@@ -319,7 +319,7 @@ object GraphBuilder {
   case class GraphTables(nodes: DataFrame, edges: DataFrame, stations: DataFrame,
                          restrictions: DataFrame, transitLines: DataFrame,
                          wayLines: DataFrame, turnCycles: DataFrame,
-                         blockers: DataFrame = null)
+                         blockers: DataFrame)
 
   /** O5 multi-MOT shared scan: ONE pass over the raw OSM tables serves
     * every MOT config. The union keep-filter + union tag projection

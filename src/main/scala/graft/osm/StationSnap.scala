@@ -311,9 +311,10 @@ object StationSnap {
   }
 
   /** Refine a built GraphTables: snap orphan stations into the edge set.
-    * Returns the refined tables + stats. blockerNodes may be null/empty. */
+    * Returns the refined tables + stats. blockerNodes(node_id): the nodes
+    * a station walk may not cross (GraphTables.blockers). */
   def refine(spark: SparkSession, gt: GraphBuilder.GraphTables, cfg: OsmConfig,
-             blockerNodes: DataFrame = null): (GraphBuilder.GraphTables, SnapStats) = {
+             blockerNodes: DataFrame): (GraphBuilder.GraphTables, SnapStats) = {
     val w = new Work(SnapRes)
 
     // the two input collects are independent jobs — submit them
@@ -324,16 +325,13 @@ object StationSnap {
     import scala.concurrent.ExecutionContext.Implicits.global
     val edgeRowsF = Future(graft.router.CompactGraph.collectEdgeRows(gt.edges))
     // stations and blocker nodes: one query (a union tagged by kind)
-    val hasTrack = gt.stations.columns.contains("track")
-    val trackCol = if (hasTrack) col("track") else lit(null).cast("string")
     val nodesF = Future {
-      val st = gt.stations.select(lit(0).as("kind"), col("node_id").cast("long"),
-        col("lat").cast("double"), col("lon").cast("double"), col("name").cast("string"),
-        trackCol.cast("string"))
-      (if (blockerNodes == null) st
-       else st.union(blockerNodes.select(lit(1), col("node_id").cast("long"),
-         lit(null).cast("double"), lit(null).cast("double"), lit(null).cast("string"),
-         lit(null).cast("string"))))
+      gt.stations.select(lit(0).as("kind"), col("node_id").cast("long"),
+          col("lat").cast("double"), col("lon").cast("double"), col("name").cast("string"),
+          col("track").cast("string"))
+        .union(blockerNodes.select(lit(1), col("node_id").cast("long"),
+          lit(null).cast("double"), lit(null).cast("double"), lit(null).cast("string"),
+          lit(null).cast("string")))
         .collect().partition(_.getInt(0) == 0)
     }
     Await.result(edgeRowsF, Duration.Inf).sortBy(_.getLong(0)).foreach { r =>

@@ -41,7 +41,7 @@ class CompactGraph(
     turnCycleNodesIn: Array[Long] = Array.empty
 ) extends Serializable {
 
-  /** constructor inputs retained for subset/concat (GraphPartitions) */
+  /** constructor inputs retained for concat (GraphPartitions.merged) */
   val rawRestrictions: Array[(Long, Long, Long, Boolean)] = restrictionsIn
   val rawTurnCycles: Array[Long] = turnCycleNodesIn
 
@@ -64,9 +64,10 @@ class CompactGraph(
     * cross-serve dense-edge-indexed memo arrays between different graphs. */
   val token: Long = CompactGraph.TokenCounter.incrementAndGet()
 
-  /** top-level build epoch: subset/concat graphs inherit their parent's,
-    * so one pipeline run — whose component bins and on-demand merges are
-    * all alive at once — forms ONE cache generation (HopCache.gen). A
+  /** top-level build epoch: the bins of one distributed build share it
+    * (FileBin stamps it) and concat graphs inherit their parts', so one
+    * pipeline run — whose component bins and on-demand merges are all
+    * alive at once — forms ONE cache generation (HopCache.gen). A
     * fresh top-level build starts a new generation and retires old ones:
     * without that, a long-lived executor that serves many graph builds
     * accumulates dead-token entries until the no-eviction caches hit
@@ -362,48 +363,10 @@ object CompactGraph {
       restrictions.toArray, edgeLinesFrom = linesF, edgeLinesTo = linesT)
   }
 
-  /** Subset graph over the stored edges whose dense index passes `keep`
-    * (ascending dense order, which is ascending GLOBAL edge-id order —
-    * fromEdges sorts by edge id — so dense-index tie-breaking inside any
-    * subset is order-consistent with the full graph and routing restricted
-    * to a closed component set is bit-identical to routing on the full
-    * graph). Edge/node/way ids stay global; restrictions and turn-cycle
-    * nodes are filtered to the surviving node set. */
-  def subset(g: CompactGraph, keep: Int => Boolean): CompactGraph = {
-    val idx = (0 until g.numEdges).filter(keep).toArray
-    val n = idx.length
-    val nodeSet = new java.util.HashSet[Long]()
-    val ids = new Array[Long](n); val ef = new Array[Long](n); val et = new Array[Long](n)
-    val c10 = new Array[Long](n); val lm = new Array[Double](n)
-    val ow = new Array[Int](n); val wy = new Array[Long](n)
-    val gla = new Array[Array[Double]](n); val glo = new Array[Array[Double]](n)
-    val eln = new Array[Array[String]](n)
-    val elnF = if (g.edgeLinesFrom == null) null else new Array[Array[String]](n)
-    val elnT = if (g.edgeLinesTo == null) null else new Array[Array[String]](n)
-    var k = 0
-    while (k < n) {
-      val i = idx(k)
-      ids(k) = g.edgeIds(i); ef(k) = g.edgeFrom(i); et(k) = g.edgeTo(i)
-      c10(k) = g.cost10(i); lm(k) = g.lenM(i); ow(k) = g.oneway(i); wy(k) = g.wayId(i)
-      gla(k) = g.geomLat(i); glo(k) = g.geomLon(i); eln(k) = g.edgeLines(i)
-      if (elnF != null) elnF(k) = g.edgeLinesFrom(i)
-      if (elnT != null) elnT(k) = g.edgeLinesTo(i)
-      nodeSet.add(ef(k)); nodeSet.add(et(k))
-      k += 1
-    }
-    new CompactGraph(ids, ef, et, c10, lm, ow, wy, gla, glo, eln,
-      g.rawRestrictions.filter(r => nodeSet.contains(r._1)),
-      edgeLinesFrom = elnF, edgeLinesTo = elnT,
-      oneWaySpeedPen = g.oneWaySpeedPen, oneWayEntryCostSec = g.oneWayEntryCostSec,
-      turnCycleNodesIn = g.rawTurnCycles.filter(nodeSet.contains))
-      .setEpoch(g.epoch)
-  }
-
-  /** Merge disjoint subset graphs back into one, restoring global
+  /** Merge disjoint component bins into one graph, restoring global
     * edge-id order (so the merged graph's dense indices — hence Dijkstra
-    * tie-breaks — equal those of the equivalent subset of the full
-    * graph). Used for the rare solver cluster whose candidates span
-    * partition bins. */
+    * tie-breaks — equal those of the same edges inside the full graph).
+    * Used for the rare solver cluster whose candidates span bins. */
   def concat(parts: Seq[CompactGraph]): CompactGraph = {
     require(parts.nonEmpty)
     if (parts.length == 1) return parts.head

@@ -7,13 +7,12 @@ import graft.geo.{Cell, Geo}
 import graft.osm.{GraphBuilder, OsmConfig, StationSnap}
 import graft.plans.Boundary
 
-/** Distributed graph construction — kills the last O(graph) driver paths.
+/** Distributed graph construction — no O(graph) driver path, and the only
+  * producer of component bins (GraphPartitions.fromFiles).
   *
-  * The r4 architecture solved the EXECUTOR side of continental scale
-  * (GraphPartitions: component bins, lazily fetched), but the bins were
-  * subsets of a driver-collected CompactGraph and StationSnap walked every
-  * edge in one sequential driver loop. Here both run inside one cogroup
-  * over component BINS:
+  * The driver build (StationSnap.refine + CompactGraph.fromEdges) collects
+  * every edge and walks them in one sequential snap loop. Here both the
+  * snap and the graph build run inside one cogroup over component BINS:
   *
   *   edges --(distributed CC on endpoints)--> comp --(greedy packing,
   *   sizes-only collect)--> bin; stations/blockers/restrictions/turn
@@ -118,22 +117,19 @@ object DistGraphBuild {
       val line = glat.indices.map(i => (glat(i), glon(i))).toArray
       Geo.projectOnPolyline(sLat, sLon, line)._4
     })
+    // the geometry arrays are field extractions of `geom` (a `transform`
+    // lambda would be interpreted, as CompactGraph.collectEdgeRows notes)
     val edgeCells = edgesB.select($"bin", $"edge_id",
-        expr("transform(geom, p -> p.lat)").as("glat"),
-        expr("transform(geom, p -> p.lon)").as("glon"))
+        $"geom.lat".as("glat"), $"geom.lon".as("glon"))
       .select($"bin", $"edge_id", explode(coverU($"glat", $"glon")).as("cell"))
       .distinct()
-    val hasTrack = gt.stations.columns.contains("track")
-    val trackCol = if (hasTrack) $"track" else lit(null).cast("string")
-    val st = gt.stations.select($"node_id", $"lat", $"lon",
-      coalesce($"name", lit(null).cast("string")).as("name"), trackCol.as("track"))
+    val st = gt.stations.select($"node_id", $"lat", $"lon", $"name", $"track")
     val stCand = Boundary.deferred(st.select($"node_id", $"lat", $"lon",
         explode(ringU($"lat", $"lon")).as("cell"))
       .join(edgeCells, Seq("cell"))
       .select($"node_id", $"lat", $"lon", $"edge_id", $"bin").distinct()
-      .join(edgesB.select($"edge_id",
-        expr("transform(geom, p -> p.lat)").as("glat"),
-        expr("transform(geom, p -> p.lon)").as("glon")), Seq("edge_id"))
+      .join(edgesB.select($"edge_id", $"geom.lat".as("glat"), $"geom.lon".as("glon")),
+        Seq("edge_id"))
       .withColumn("dist", projU($"lat", $"lon", $"glat", $"glon"))
       .filter($"dist" <= cfg.maxOsmStationDistanceM)
       .select($"node_id", $"edge_id", $"bin", $"dist"))
@@ -157,9 +153,7 @@ object DistGraphBuild {
           lit(0.0).as("lat"), lit(0.0).as("lon"),
           lit(null).cast("string").as("s1"), lit(null).cast("string").as("s2"),
           lit(null).cast("string").as("s3"))
-    val blockerRows =
-      if (gt.blockers == null) spark.emptyDataFrame
-      else nodeRows(gt.blockers, 2)
+    val blockerRows = nodeRows(gt.blockers, 2)
     val restrRows = gt.restrictions
       .join(nodeBin.withColumnRenamed("node", "via_node"), Seq("via_node"))
       .select(lit(3).as("kind"), $"bin", $"via_node".as("a"),
@@ -167,31 +161,24 @@ object DistGraphBuild {
         lit(0.0).as("lat"), lit(0.0).as("lon"),
         lit(null).cast("string").as("s1"), lit(null).cast("string").as("s2"),
         lit(null).cast("string").as("s3"))
-    val cycleRows =
-      if (gt.turnCycles == null) spark.emptyDataFrame
-      else nodeRows(gt.turnCycles, 4)
+    val cycleRows = nodeRows(gt.turnCycles, 4)
     // the way -> line table carries the line names
-    val nameRows =
-      if (gt.wayLines == null) spark.emptyDataFrame
-      else gt.wayLines
-        .select($"way_id",
-          coalesce($"short_name", lit("")).as("s1"),
-          coalesce($"from_str", lit("")).as("s2"),
-          coalesce($"to_str", lit("")).as("s3"))
-        .distinct()
-        .join(edgesB.select($"way_id", $"bin").distinct(), Seq("way_id"))
-        .select(lit(5).as("kind"), $"bin", $"way_id".as("a"),
-          lit(0L).as("b"), lit(0L).as("c"), lit(false).as("flag"),
-          lit(0.0).as("lat"), lit(0.0).as("lon"), $"s1", $"s2", $"s3")
+    val nameRows = gt.wayLines
+      .select($"way_id",
+        coalesce($"short_name", lit("")).as("s1"),
+        coalesce($"from_str", lit("")).as("s2"),
+        coalesce($"to_str", lit("")).as("s3"))
+      .distinct()
+      .join(edgesB.select($"way_id", $"bin").distinct(), Seq("way_id"))
+      .select(lit(5).as("kind"), $"bin", $"way_id".as("a"),
+        lit(0L).as("b"), lit(0L).as("c"), lit(false).as("flag"),
+        lit(0.0).as("lat"), lit(0.0).as("lon"), $"s1", $"s2", $"s3")
     val misc = Seq(stationRows, blockerRows, restrRows, cycleRows, nameRows)
-      .filter(_.columns.nonEmpty)
       .reduce(_ unionByName _)
       .as[MiscIn]
 
     val edgeIn = edgesB.select($"bin", $"edge_id", $"way_id", $"pos",
-        $"from_id", $"to_id",
-        expr("transform(geom, p -> p.lat)").as("glat"),
-        expr("transform(geom, p -> p.lon)").as("glon"),
+        $"from_id", $"to_id", $"geom.lat".as("glat"), $"geom.lon".as("glon"),
         $"len_m", $"cost10", $"lvl".cast("int").as("lvl"),
         $"oneway".cast("int").as("oneway"), $"cells")
       .as[EdgeIn]
@@ -255,12 +242,12 @@ object DistGraphBuild {
       .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
     require(metas.length == nBins,
       s"expected $nBins bin files, got ${metas.length}")
-    val parts = GraphPartitions.fromFiles(spark, metas.map(_._2).toSeq, epoch)
+    val parts = GraphPartitions.fromFiles(metas.map(_._2).toSeq, epoch)
     Result(parts, edges2, stations2, stats, nBins)
   }
 
-  /** tag candidate rows with the bin of their edge (file-mode solves
-    * resolve graphs from these tags, no edge->bin broadcast exists) */
+  /** tag candidate rows with the bin of their edge (the solve resolves
+    * each group's graph from these tags) */
   def tagCands(cands: DataFrame, edgesWithBin: DataFrame): DataFrame =
     cands.join(edgesWithBin.select(col("edge_id"), col("bin").cast("int").as("bin")),
       Seq("edge_id"), "left")

@@ -3,27 +3,27 @@ package graft.router
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
-/** Component-level partitioning of the road graph — the SURVEY §7.3
-  * broadcast-size mitigation. The reference routes inside one in-RAM graph
+/** The road graph as the solver tasks find it: either ONE broadcast bin
+  * holding the driver-built graph (`single`), or the file-backed
+  * component bins that the distributed build (DistGraphBuild) writes from
+  * executors (`fromFiles`) — the scale path, where no process ever holds
+  * the whole graph. The reference routes inside one in-RAM graph
   * (/root/reference/src/pfaedle/trgraph/Graph.h:24-28) and skips
   * cross-component pairs via the per-node component pointer
-  * (/root/reference/src/pfaedle/router/Router.tpp:329-331); at continental
-  * scale a single full-graph broadcast is the one structural ceiling left.
-  * Here the connected components of the routing graph are packed into
-  * BINS, each bin broadcast SEPARATELY, plus one slim (edge id -> bin)
-  * index. A solver task resolves only the bins its candidate edges touch:
-  * Spark's torrent broadcast fetches blocks lazily on first `.value`
-  * access, so an executor that only ever solves trips of one region
-  * fetches that region's subgraph — per-executor graph bytes shrink with
-  * the component count instead of replicating the continent everywhere.
+  * (pfaedle, src/pfaedle/router/Router.tpp:329-331).
   *
-  * Routing parity: bins keep global ids and global edge-id ORDER (see
-  * CompactGraph.subset), so solving a cluster against its resolved bin
-  * (or the merged graph of several bins) is bit-identical to solving it
-  * against the full graph — components are closed under adjacency and the
-  * deterministic (cost, dense-index) tie-break preserves relative order.
+  * A solver group resolves only the bins its candidates' bin tags name
+  * (DistGraphBuild.tagCands): a task that only solves trips of one region
+  * loads that region's subgraph.
+  *
+  * Routing parity: bins keep global ids and global edge-id ORDER
+  * (CompactGraph.fromRows sorts by edge id), so solving a cluster against
+  * its resolved bin (or the merged graph of several bins,
+  * CompactGraph.concat) is bit-identical to solving it against the full
+  * graph — components are closed under adjacency and the deterministic
+  * (cost, dense-index) tie-break preserves relative order.
   * Matcher.BinBlockPlacement co-locates each bin's solver groups on few
-  * executors; with lazy fetch this is an optimization, not a correctness
+  * executors; with lazy loads this is an optimization, not a correctness
   * requirement.
   */
 /** How a bin's CompactGraph reaches a solver task. */
@@ -102,47 +102,15 @@ object FileBin {
   }
 }
 
-final class GraphPartitions(
-    val bins: Array[BinHandle],
-    /** global edge id -> bin index; empty when bins.length == 1 or when
-      * candidates carry bin tags (file mode) */
-    val binOfEdge: Broadcast[java.util.HashMap[Long, java.lang.Integer]],
-    /** file mode: bins were built executor-side; candidate rows MUST carry
-      * their bin tag (resolve-by-edge-id has no map to consult) */
-    val fileMode: Boolean = false)
-  extends Serializable {
+final class GraphPartitions(val bins: Array[BinHandle]) extends Serializable {
 
-  /** The graph a cluster with these candidate edges must route over: the
-    * single touched bin in the common case, a memoized merge when the
-    * candidates span bins (e.g. top-K snaps hitting a disconnected
-    * island), bin 0 for the all-null-candidate cluster (any graph works —
-    * only the fallback ladder runs). Unknown edge ids are ignored, like
-    * expandLayer ignores them. */
-  def resolve(candEdgeIds: Array[Long]): CompactGraph = {
-    if (bins.length == 1) return bins(0).get
-    require(!fileMode, "file-mode partitions resolve by bin tags, not edge ids")
-    val bm = binOfEdge.value
-    var touched: java.util.TreeSet[Integer] = null
-    var only = -1
-    var i = 0
-    while (i < candEdgeIds.length) {
-      val b = bm.get(candEdgeIds(i))
-      if (b != null) {
-        val bi = b.intValue()
-        if (only == -1) only = bi
-        else if (bi != only && touched == null) {
-          touched = new java.util.TreeSet[Integer]()
-          touched.add(only); touched.add(bi)
-        } else if (touched != null) touched.add(bi)
-      }
-      i += 1
-    }
-    if (touched == null) return bins(math.max(only, 0)).get
-    GraphPartitions.merged(this, touched)
-  }
-
-  /** Resolve from candidate-carried bin tags (negative = untagged). */
-  def resolveByBinIds(binIds: Array[Int]): CompactGraph = {
+  /** The graph a cluster whose candidates carry these bin tags must route
+    * over: the single touched bin in the common case, a memoized merge
+    * when the candidates span bins (e.g. top-K snaps hitting a
+    * disconnected island), bin 0 for the all-null-candidate cluster (any
+    * graph works — only the fallback ladder runs). Negative tags
+    * (untagged) are ignored. */
+  def resolve(binIds: Array[Int]): CompactGraph = {
     if (bins.length == 1) return bins(0).get
     var multi: java.util.TreeSet[Integer] = null
     var only = -1
@@ -164,8 +132,8 @@ final class GraphPartitions(
 }
 
 object GraphPartitions {
-  /** comps smaller than this share a bin with others (one broadcast per
-    * 100-edge island would drown the driver in broadcast bookkeeping) */
+  /** comps smaller than this share a bin with others (one file per
+    * 100-edge island would drown the build in per-bin bookkeeping) */
   val MinBinEdges = 4096
   val MaxBins = 64
 
@@ -192,20 +160,16 @@ object GraphPartitions {
     if (again != null) again else g
   }
 
-  /** Trivial single-bin partitioning (reuses the graph instance). */
+  /** The driver-built graph as one broadcast bin. */
   def single(spark: SparkSession, graph: CompactGraph): GraphPartitions =
-    new GraphPartitions(Array(BroadcastBin(spark.sparkContext.broadcast(graph))),
-      spark.sparkContext.broadcast(new java.util.HashMap[Long, java.lang.Integer]()))
+    new GraphPartitions(Array(BroadcastBin(spark.sparkContext.broadcast(graph))))
 
   /** File-backed partitioning over executor-built bins (DistGraphBuild):
     * the driver holds only paths. Candidates must carry bin tags. */
-  def fromFiles(spark: SparkSession, binPaths: Seq[String],
-                epoch: Long): GraphPartitions =
-    new GraphPartitions(binPaths.map(p => FileBin(p, epoch): BinHandle).toArray,
-      spark.sparkContext.broadcast(new java.util.HashMap[Long, java.lang.Integer]()),
-      fileMode = true)
+  def fromFiles(binPaths: Seq[String], epoch: Long): GraphPartitions =
+    new GraphPartitions(binPaths.map(p => FileBin(p, epoch): BinHandle).toArray)
 
-  /** The one bin-packing policy (`build` and DistGraphBuild alike):
+  /** The bin-packing policy of the distributed build:
     * components (label, edge count) ordered by (size desc, label); a comp
     * of at least minBinEdges opens a bin while fewer than maxBins exist
     * (the first comp always does), every other comp joins the currently
@@ -224,27 +188,5 @@ object GraphPartitions {
       }
     }
     (of.toMap, binSize.length)
-  }
-
-  /** Pack components into bins (`pack`) and broadcast each. Falls back to
-    * a single bin when the graph is one component (a metro street grid)
-    * or too small for partitioning to pay. */
-  def build(spark: SparkSession, graph: CompactGraph,
-            minBinEdges: Int = MinBinEdges, maxBins: Int = MaxBins): GraphPartitions = {
-    val comps = Array.tabulate(graph.numEdges)(graph.compOfEdge)
-    val sizes = comps.groupMapReduce(_.toLong)(_ => 1L)(_ + _).toArray
-    if (sizes.length <= 1 || graph.numEdges < 2 * minBinEdges)
-      return single(spark, graph)
-    val (binOfComp, nBins) = pack(sizes, minBinEdges, maxBins)
-    if (nBins == 1) return single(spark, graph)
-
-    val binOfEdgeIdx = comps.map(c => binOfComp(c.toLong))
-    val binOfEdgeMap = new java.util.HashMap[Long, java.lang.Integer](graph.numEdges * 2)
-    binOfEdgeIdx.indices.foreach(i => binOfEdgeMap.put(graph.edgeIds(i), binOfEdgeIdx(i)))
-    val bins = Array.tabulate[BinHandle](nBins) { b =>
-      BroadcastBin(spark.sparkContext.broadcast(
-        CompactGraph.subset(graph, i => binOfEdgeIdx(i) == b)))
-    }
-    new GraphPartitions(bins, spark.sparkContext.broadcast(binOfEdgeMap))
   }
 }

@@ -19,13 +19,10 @@ object HopCache {
     * edge indices and get() could return costs from the wrong graph. */
   final case class Key(ctx: Long, fromDir: Int, progrQ: Int, cutoff10: Long, tHash: Long)
 
-  /** 64-bit mix of graph token, config fingerprint and line name (FNV-1a
-    * over the name avoids 32-bit String.hashCode collisions). */
-  def mixCtx(graphToken: Long, cfgFp: Long, lineName: String): Long =
-    mixCtx(graphToken, cfgFp, Seq(lineName))
-
-  /** variant folding the full routing-attrs identity (line short name +
-    * from/to strings — G2): two attr sets must never share hop entries. */
+  /** 64-bit mix of graph token, config fingerprint and the full
+    * routing-attrs identity (line short name + from/to strings — G2; FNV-1a
+    * over the strings avoids 32-bit String.hashCode collisions): two attr
+    * sets must never share hop entries. */
   def mixCtx(graphToken: Long, cfgFp: Long, parts: Seq[String]): Long = {
     var h = graphToken * 0x9e3779b97f4a7c15L ^ cfgFp
     parts.foreach { p =>
@@ -58,12 +55,12 @@ object HopCache {
     * scales at 0.94. Duplicating an in-flight compute costs one parallel
     * redundant Dijkstra but never an idle core, and identical inputs give
     * an identical value, so publication order cannot change results. */
-  final class Entry(compute: () => Val) {
-    @volatile private var v: Val = null
+  final class Entry[V <: AnyRef](compute: () => V) {
+    @volatile private var v: V = _
     /** the published value, or null while still in flight */
-    def published: Val = v
+    def published: V = v
     /** run the computation on THIS thread and publish it */
-    def computeAndPublish(): Val = { val r = compute(); v = r; r }
+    def computeAndPublish(): V = { val r = compute(); v = r; r }
   }
 
   /** One cache GENERATION = all memos of one top-level graph build
@@ -78,9 +75,9 @@ object HopCache {
     * results: entries are scoped to their graph token, and an evicted
     * entry is recomputed identically on next touch. */
   final class Gen {
-    private[HopCache] val map = new ConcurrentHashMap[Key, Entry]()
+    private[HopCache] val map = new ConcurrentHashMap[Key, Entry[Val]]()
     private[HopCache] val mapCount = new java.util.concurrent.atomic.LongAdder()
-    private[HopCache] val layerMap = new ConcurrentHashMap[LayerKey, LayerEntry]()
+    private[HopCache] val layerMap = new ConcurrentHashMap[LayerKey, Entry[LayerVal]]()
     private[HopCache] val layerCount = new java.util.concurrent.atomic.LongAdder()
     /** per-(graph token, numEdges, cfg fingerprint, attrs) line-surcharge
       * arrays (Matcher.relaxParams) — token-scoped because the arrays
@@ -131,36 +128,43 @@ object HopCache {
     h
   }
 
-  /** Memoized lookup: the creating thread computes and publishes; a thread
-    * that finds the entry still in flight computes locally without waiting
-    * (see Entry). The compute closure MUST acquire its own thread-local
-    * workspace (it may run on whichever thread touches the entry first).
-    * Over MaxEntries, computes run uncached (deterministic: no eviction).
-    * A 64-bit targets-hash collision also computes uncached. */
-  def getOrCompute(epoch: Long, key: Key, targets: Array[Int], compute: () => Val): Val = {
-    val g = gen(epoch)
+  /** The one memo policy of both maps: the creating thread computes and
+    * publishes; a thread that finds the entry still in flight computes
+    * locally without waiting (see Entry). The compute closure MUST acquire
+    * its own thread-local workspace (it may run on whichever thread
+    * touches the entry first). Over MaxEntries, computes run uncached
+    * (deterministic: no eviction). Counts one hit or miss per lookup. */
+  private def memo[K, V <: AnyRef](map: ConcurrentHashMap[K, Entry[V]],
+                                   count: java.util.concurrent.atomic.LongAdder,
+                                   key: K, compute: () => V): V = {
     var created = false
     val e =
-      if (g.mapCount.sum() >= MaxEntries) g.map.get(key)
-      else g.map.computeIfAbsent(key, _ => {
-        created = true; g.mapCount.increment(); new Entry(compute)
+      if (count.sum() >= MaxEntries) map.get(key)
+      else map.computeIfAbsent(key, _ => {
+        created = true; count.increment(); new Entry(compute)
       })
-    val v =
-      if (created) {
-        Misses.increment()
-        // if compute throws (task kill / OOM) drop the unpublished entry so
-        // a later toucher can re-create it — otherwise it would miss-and-
-        // recompute for the rest of the generation while counting against
-        // MaxEntries
-        try e.computeAndPublish()
-        catch { case t: Throwable => g.map.remove(key, e); g.mapCount.decrement(); throw t }
-      }
-      else if (e == null) { Misses.increment(); compute() } // over capacity
-      else {
-        val p = e.published
-        if (p != null) { Hits.increment(); p }
-        else { Misses.increment(); compute() } // in flight: duplicate, don't wait
-      }
+    if (created) {
+      Misses.increment()
+      // if compute throws (task kill / OOM) drop the unpublished entry so
+      // a later toucher can re-create it — otherwise it would miss-and-
+      // recompute for the rest of the generation while counting against
+      // MaxEntries
+      try e.computeAndPublish()
+      catch { case t: Throwable => map.remove(key, e); count.decrement(); throw t }
+    }
+    else if (e == null) { Misses.increment(); compute() } // over capacity
+    else {
+      val p = e.published
+      if (p != null) { Hits.increment(); p }
+      else { Misses.increment(); compute() } // in flight: duplicate, don't wait
+    }
+  }
+
+  /** Memoized hop lookup (`memo`). A 64-bit targets-hash collision
+    * computes uncached. */
+  def getOrCompute(epoch: Long, key: Key, targets: Array[Int], compute: () => Val): Val = {
+    val g = gen(epoch)
+    val v = memo(g.map, g.mapCount, key, compute)
     if (java.util.Arrays.equals(v.targets, targets)) v
     else compute() // hash collision: compute fresh, don't poison the entry
   }
@@ -180,12 +184,6 @@ object HopCache {
                             costsRel: Array[Long], winners: Array[Int],
                             paths: Array[Array[Int]])
 
-  /** same first-toucher-publishes / in-flight-duplicates policy as Entry */
-  final class LayerEntry(compute: () => LayerVal) {
-    @volatile private var v: LayerVal = null
-    def published: LayerVal = v
-    def computeAndPublish(): LayerVal = { val r = compute(); v = r; r }
-  }
   def srcsHash(srcs: Array[Long]): Long = {
     var h = 0x9e3779b97f4a7c15L
     var i = 0
@@ -193,29 +191,12 @@ object HopCache {
     h
   }
 
+  /** Memoized layer lookup (`memo`). A source- or targets-hash collision
+    * computes uncached. */
   def layerGetOrCompute(epoch: Long, key: LayerKey, srcs: Array[Long], targets: Array[Int],
                         compute: () => LayerVal): LayerVal = {
     val g = gen(epoch)
-    var created = false
-    val e =
-      if (g.layerCount.sum() >= MaxEntries) g.layerMap.get(key)
-      else g.layerMap.computeIfAbsent(key, _ => {
-        created = true; g.layerCount.increment(); new LayerEntry(compute)
-      })
-    val v =
-      if (created) {
-        Misses.increment()
-        // same dead-entry cleanup as getOrCompute: failed computes must not
-        // pin an unpublishable entry for the generation's lifetime
-        try e.computeAndPublish()
-        catch { case t: Throwable => g.layerMap.remove(key, e); g.layerCount.decrement(); throw t }
-      }
-      else if (e == null) { Misses.increment(); compute() } // over capacity
-      else {
-        val p = e.published
-        if (p != null) { Hits.increment(); p }
-        else { Misses.increment(); compute() } // in flight: duplicate, don't wait
-      }
+    val v = memo(g.layerMap, g.layerCount, key, compute)
     if (java.util.Arrays.equals(v.srcs, srcs) &&
         java.util.Arrays.equals(v.targets, targets)) v
     else compute() // hash collision: compute fresh, don't poison the entry

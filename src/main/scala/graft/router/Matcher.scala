@@ -71,14 +71,10 @@ object Matcher {
     // ONE ring join finds the stop x edge and the stop x station pairs: the
     // edges' cells and the stations' cells are one table keyed by cell
     // (kind 0: edge, 1: station), built once for the broadcast. An edge
-    // row projects the stop onto the full edge polyline when present
-    // (contracted chains are curved), else the straight segment; a station
-    // row keeps its own ring rule, k = 1 <= kc.
-    val (glat, glon) =
-      if (edges.columns.contains("geom")) ($"geom.lat", $"geom.lon")
-      else (array($"from_lat", $"to_lat"), array($"from_lon", $"to_lon"))
+    // row projects the stop onto the full edge polyline (contracted chains
+    // are curved); a station row keeps its own ring rule, k = 1 <= kc.
     val ringSide = edges.select(lit(0).as("kind"), $"edge_id", $"oneway", $"from_id", $"to_id",
-        glat.as("glat"), glon.as("glon"), explode($"cells").as("cell"))
+        $"geom.lat".as("glat"), $"geom.lon".as("glon"), explode($"cells").as("cell"))
       .unionByName(stations.select(lit(1).as("kind"), $"node_id", $"name".as("st_name"),
         trkCol.as("trk"), $"lat".as("st_lat"), $"lon".as("st_lon"), $"cell"),
         allowMissingColumns = true)
@@ -157,13 +153,14 @@ object Matcher {
     * channel, silently coupling callers to call order). */
   case class MatchResult(shapes: DataFrame, anchors: DataFrame, hops: DataFrame)
 
+  /** Over a driver-built graph: one broadcast bin. */
   def matchTripsFull(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
                      graph: CompactGraph, cfg: OsmConfig): MatchResult =
-    matchTripsFull(spark, tripStops, cands, GraphPartitions.build(spark, graph), cfg)
+    matchTripsFull(spark, tripStops, cands, GraphPartitions.single(spark, graph), cfg)
 
-  /** Partitioned/file-mode variant: no driver-resident full graph needed —
-    * `parts` may be file-backed (DistGraphBuild), in which case `cands`
-    * must carry bin tags (DistGraphBuild.tagCands). */
+  /** Over any partitioning: no driver-resident full graph needed — `parts`
+    * may be DistGraphBuild's file-backed bins, in which case `cands` carry
+    * bin tags (DistGraphBuild.tagCands). */
   def matchTripsFull(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
                      parts: GraphPartitions, cfg: OsmConfig): MatchResult = {
     import spark.implicits._
@@ -313,12 +310,13 @@ object Matcher {
   case class TS(seq: Int, stop_id: String, arr_s: Int, dep_s: Int,
                 lat: Double, lng: Double)
 
-  /** Solve ALREADY-DISTINCT sequences (distinctSeqs' rows). The graph
-    * ships as per-component-bin broadcasts (GraphPartitions); each solver
-    * task resolves only the bins its candidate edges touch — at
-    * continental scale no executor ever holds the full graph. A single-bin
-    * partitioning is the full-graph broadcast. Output: SolvedSeq rows, each
-    * carrying its sequence's trip ids. */
+  /** Solve ALREADY-DISTINCT sequences (distinctSeqs' rows). The graph is
+    * either one broadcast bin or DistGraphBuild's file-backed component
+    * bins (GraphPartitions); each solver group resolves the bins its
+    * candidates' bin tags name — over file bins no executor ever holds the
+    * full graph. Every group runs one kernel, the trip trie
+    * (MatcherKernel.solveCluster). Output: SolvedSeq rows, each carrying
+    * its sequence's trip ids. */
   def solveSeqs(spark: SparkSession, distinctSeqs: DataFrame, cands: DataFrame,
                 parts: GraphPartitions, cfg: OsmConfig): DataFrame = {
     import spark.implicits._
@@ -335,8 +333,7 @@ object Matcher {
           k -> v.map(c => (c.edge_id, c.progr, c.pen10, c.py, c.px, c.oneway))
         }
       // only the graph bins this cluster's candidates touch are fetched
-      val g = if (parts.fileMode) parts.resolveByBinIds(candArr.map(_.bin))
-              else parts.resolve(candArr.map(_.edge_id))
+      val g = parts.resolve(candArr.map(_.bin))
       // G2 routing attrs of this cluster: one lineFrom (same first stop
       // by construction), the PHYSICAL cluster's full lineTo set (shared
       // across salted sub-groups — one RoutingAttrs identity per cluster)
@@ -512,9 +509,9 @@ object Matcher {
     // payload amplification = most of the match stage's executor time —
     // encoder deserialization of tens of millions of duplicate structs).
     // This is still a JOIN distribution, never a driver collect.
-    // candidates may carry a bin tag (file-mode partitions: DistGraphBuild
-    // .tagCands) — the solver resolves its graph from the tags, because no
-    // edge->bin broadcast map exists when bins were built executor-side
+    // candidates may carry a bin tag (file-backed bins: DistGraphBuild
+    // .tagCands) — the solver resolves its graph from the tags; untagged
+    // candidates (-1) route over the single broadcast bin
     val binCol = if (cands.columns.contains("bin")) col("bin").cast("int") else lit(-1)
     // one exchange by stop serves the dedup and the candidate join; a hash
     // join on that partitioning needs no sort of either side, and a stop's
@@ -564,8 +561,12 @@ object Matcher {
   val MaxSeqsPerGroup = 64
 }
 
-/** The per-sequence solve: candidate expansion to directed edges, Viterbi,
-  * geometry materialization. Pure Scala on broadcast data. */
+/** The executor-side solve, one kernel for every sequence: a solver
+  * group's sequences go through the trip trie (solveCluster — candidate
+  * expansion to directed edges, layer relaxation, backtrace per leaf),
+  * then geometry materialization. Pure Scala over the group's resolved
+  * graph. Viterbi.solve, the linear lattice solve, is the tests'
+  * reference. */
 object MatcherKernel {
   import Matcher.SolvedSeq
 
@@ -584,21 +585,6 @@ object MatcherKernel {
   private val tmx = java.lang.management.ManagementFactory.getThreadMXBean
 
   val NullCandPen10 = 60000L // 100 min — dominated by any real snap
-
-  def solveOne(seqKey: String, lineName: String,
-               stops: Array[Matcher.TS],
-               g: CompactGraph,
-               candMap: Map[String, Array[(Long, Double, Long, Double, Double, Int)]],
-               cfg: OsmConfig): SolvedSeq = {
-    val t0 = System.nanoTime()
-    val c0 = tmx.getCurrentThreadCpuTime
-    try solveOneImpl(seqKey, lineName, stops, g, candMap, cfg)
-    finally {
-      KernelNanos.add(System.nanoTime() - t0)
-      KernelCpuNanos.add(tmx.getCurrentThreadCpuTime - c0)
-      KernelSolves.increment()
-    }
-  }
 
   /** one stop's candidate group, expanded to directed edges; the null
     * placeholder when no snap exists (ShapeBuilder.cpp:171-173). Keeps only
@@ -677,7 +663,7 @@ object MatcherKernel {
     * @param fromName the trip's first stop name (RoutingAttrs.lineFrom)
     * @param toNames  last stop names of the cluster's trips (lineTo set) */
   def relaxParams(g: CompactGraph, cfg: OsmConfig, lineName: String,
-                  fromName: String = "", toNames: Array[String] = Array.empty): Viterbi.RelaxParams = {
+                  fromName: String, toNames: Array[String]): Viterbi.RelaxParams = {
     val fullTurnPen10 = Geo.costToInt(cfg.fullTurnPenaltySec)
     val hasRestr = g.hasRestrictions
     val ln = if (lineName == null) "" else lineName
@@ -779,13 +765,9 @@ object MatcherKernel {
 
   /** Solve a whole cluster (same line, same first stop) through the
     * prefix-sharing trip trie — shared prefixes relax once; trips landing
-    * on the same leaf share geometry (A3/G4/W4). */
-  def solveCluster(lineName: String, seqs: Array[(String, Array[Matcher.TS])],
-                   g: CompactGraph,
-                   candMap: Map[String, Array[(Long, Double, Long, Double, Double, Int)]],
-                   cfg: OsmConfig): Array[SolvedSeq] =
-    solveCluster(lineName, "", Array.empty[String], seqs, g, candMap, cfg)
-
+    * on the same leaf share geometry (A3/G4/W4). A one-stop sequence is a
+    * leaf at its departure node: one layer, no hop, the min-pen candidate
+    * (TrieSolver.Trie.add). */
   def solveCluster(lineName: String, fromName: String, toNames: Array[String],
                    seqs: Array[(String, Array[Matcher.TS])],
                    g: CompactGraph,
@@ -795,14 +777,10 @@ object MatcherKernel {
     val c0 = tmx.getCurrentThreadCpuTime
     KernelGroups.increment()
     try {
-      val (single, multi) = seqs.partition(_._2.length < 2)
-      val singles = single.map { case (k, stops) =>
-        solveOneImpl(k, lineName, stops, g, candMap, cfg)
-      }
       val tp0 = System.nanoTime()
       val p = relaxParams(g, cfg, lineName, fromName, toNames)
       ParamsNanos.add(System.nanoTime() - tp0)
-      val solved = TrieSolver.buildForest(multi).flatMap { trie =>
+      TrieSolver.buildForest(seqs).iterator.flatMap { trie =>
         val ts0 = System.nanoTime()
         val leaves = TrieSolver.solveTrie(g, trie,
           nd => expandLayer(g, candMap, nd.stopId, nd.lat, nd.lng), p)
@@ -815,8 +793,7 @@ object MatcherKernel {
           lr.seqKeys.map(k => SolvedSeq(k, lats, lngs, dists, anchors,
             hopRows, lr.res.hops.length, unroutable, lr.res.totalCost10))
         }
-      }
-      singles ++ solved
+      }.toArray
     } finally {
       val wallNs = System.nanoTime() - t0
       KernelNanos.add(wallNs)
@@ -831,41 +808,6 @@ object MatcherKernel {
           f"wall=${wallNs / 1e9}%.1f s cpu=${(tmx.getCurrentThreadCpuTime - c0) / 1e9}%.1f s " +
           f"iters=${Dijkstra.Iters.sum()} thread=${Thread.currentThread().getName}")
     }
-  }
-
-  private def solveOneImpl(seqKey: String, lineName: String,
-               stops: Array[Matcher.TS],
-               g: CompactGraph,
-               candMap: Map[String, Array[(Long, Double, Long, Double, Double, Int)]],
-               cfg: OsmConfig): SolvedSeq = {
-    // candidate groups per layer, expanded to directed edges
-    val layers: Array[Array[Cand]] =
-      stops.map(st => expandLayer(g, candMap, st.stop_id, st.lat, st.lng))
-    val nHops = math.max(0, stops.length - 1)
-    // W1: scheduled seconds between consecutive stops (min 1)
-    val schedSec = new Array[Double](nHops)
-    // straight-line stop-to-stop meters (getTransDists,
-    // ShapeBuilder.cpp:760-775): floors the hop cutoff at dist/vmax and
-    // feeds the distdiff transition model
-    val hopDistM = new Array[Double](nHops)
-    var hi = 0
-    while (hi < nHops) {
-      schedSec(hi) = math.max(1, stops(hi + 1).arr_s - stops(hi).dep_s).toDouble
-      hopDistM(hi) = Geo.haversineM(stops(hi).lat, stops(hi).lng,
-        stops(hi + 1).lat, stops(hi + 1).lng)
-      hi += 1
-    }
-
-    val p = relaxParams(g, cfg, lineName)
-    val res = Viterbi.solve(g, layers, schedSec, p.turnPen10,
-      vmaxMs = p.vmaxMs, hopDistM = hopDistM,
-      transitionPenalty = p.transitionPenalty, transModel = p.transModel,
-      cutoffFactor = p.cutoffFactor, cacheCtx = p.cacheCtx)
-
-    val (lats, lngs, dists, anchors, hopRows, unroutable) =
-      materialize(g, cfg, layers, res)
-    SolvedSeq(seqKey, lats, lngs, dists, anchors, hopRows,
-      res.hops.length, unroutable, res.totalCost10)
   }
 
   /** materialize geometry: per hop either the routed polyline or a straight

@@ -74,7 +74,10 @@ object TrieSolver {
     }
 
     /** add one stop sequence; times are made relative to the first
-      * departure (TripTrie.tpp:40-44). */
+      * departure (TripTrie.tpp:40-44). A one-stop sequence ends on its
+      * departure node: its leaf is one layer with no hop, and its relative
+      * time 0 is every first departure's, so sharing the node changes no
+      * other sequence's node times. */
     def add(seqKey: String, stops: Array[Matcher.TS]): Unit = {
       val t0 = stops(0).dep_s
       var cur = 0
@@ -82,7 +85,7 @@ object TrieSolver {
       while (i < stops.length) {
         val st = stops(i)
         if (i > 0) cur = step(cur, st, st.arr_s - t0, arr = true)
-        if (i < stops.length - 1) cur = step(cur, st, st.dep_s - t0, arr = false)
+        if (i == 0 || i < stops.length - 1) cur = step(cur, st, st.dep_s - t0, arr = false)
         i += 1
       }
       leafSeqs.getOrElseUpdate(cur, mutable.ArrayBuffer()) += seqKey

@@ -277,14 +277,22 @@ object ScalingBench {
       stealPct)
   }
 
-  /** Kernel-only scaling: the same distinct-sequence solves through fixed
-    * thread pools at n and 4n threads, interleaved with the first level
-    * alternating by rep, cold hop memo each run.
+  /** One solver group as `Matcher.solveSeqs` hands it to the kernel: the
+    * cluster's line, first-stop name and lineTo set, and its sequences
+    * with relative times. */
+  case class KernelGroup(line: String, fromName: String, toNames: Array[String],
+                         seqs: Array[(String, Array[graft.router.Matcher.TS])])
+
+  /** Kernel-only scaling: the solver groups that `Matcher.solverInputs`
+    * forms, each solved through `MatcherKernel.solveCluster` exactly as
+    * the production solve calls it, in fixed thread pools at n and 4n
+    * threads, interleaved with the first level alternating by rep, cold
+    * hop memo each run.
     * Also reports per-solve CPU time at each level — if those differ the
     * measurement is a JIT/memo artifact, not scaling. */
   def kernelScaling(n: Int, reps: Int): (Double, Double, Int, Double, Double) = {
     val spark = session(8)
-    val (graph, candMap, seqs) = try {
+    val (graph, candMap, groups) = try {
       import spark.implicits._
       val cfg = graft.osm.OsmConfig.bus
       val world = graft.fixtures.SyntheticWorld.build(48, 96,
@@ -303,12 +311,18 @@ object ScalingBench {
         .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2), r.getLong(3),
           r.getDouble(4), r.getDouble(5), r.getInt(6))))
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val seqs = graft.router.Matcher.tripStopsWithKey(
-          graft.fixtures.WorldTables.tripStops(t))
-        .dropDuplicates("seq_key").select($"seq_key", $"line_name", $"stops")
-        .as[(String, String, Seq[graft.router.Matcher.TS])].collect()
-      (graph, candMap, seqs)
+      import graft.router.Matcher
+      val in = Matcher.solverInputs(spark, Matcher.distinctSeqs(
+        Matcher.tripStopsWithKey(graft.fixtures.WorldTables.tripStops(t))), cands)
+      val groups = in.seqRows.collect()
+        .groupBy(r => (r.c_line, r.c_stop, r.salt)).toArray.sortBy(_._1)
+        .map { case ((line, stop, _), rows) =>
+          KernelGroup(line, rows.head.from_name, in.toNames((line, stop)),
+            rows.sortBy(_.seq_key).map(r => (r.seq_key, Matcher.relativeTimes(r.stops))))
+        }
+      (graph, candMap, groups)
     } finally spark.stop()
+    val nSeqs = groups.map(_.seqs.length).sum
     val cfg = graft.osm.OsmConfig.bus
 
     /** Fixed work = `batches` DISTINCT copies of the whole distinct-sequence
@@ -341,30 +355,19 @@ object ScalingBench {
       val cpu0 = graft.router.MatcherKernel.KernelCpuNanos.sum()
       val t0 = System.nanoTime()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      // coarse tasks (~128 solves each, like a production solver group):
-      // submitting one Runnable per solve made the single producer thread
-      // the serial bottleneck at 32 consumers (~230 us/solve of queue
-      // handoff at par=32 vs ~30 us at par=8 — measured as 44% thread
-      // idle), which benchmarked the queue lock, not the kernel
-      val chunk = 128
-      val nChunks = (seqs.length + chunk - 1) / chunk
-      val latch = new java.util.concurrent.CountDownLatch(batches * nChunks)
+      // one task per solver group, as a production solver task runs it
+      // (one Runnable per solve made the single producer thread the
+      // serial bottleneck at 32 consumers, which benchmarked the queue
+      // lock, not the kernel)
+      val latch = new java.util.concurrent.CountDownLatch(batches * groups.length)
       var b = 0
       while (b < batches) {
         val cm = maps(b)
-        var c0 = 0
-        while (c0 < seqs.length) {
-          val lo = c0; val hi = math.min(seqs.length, c0 + chunk)
+        groups.foreach { gr =>
           pool.submit(new Runnable { def run(): Unit = {
-            try {
-              var i = lo
-              while (i < hi) {
-                val (k, ln, st) = seqs(i)
-                graft.router.MatcherKernel.solveOne(k, ln, st.toArray, graph, cm, cfg)
-                i += 1
-              }
-            } finally latch.countDown(); () } })
-          c0 += chunk
+            try graft.router.MatcherKernel.solveCluster(gr.line, gr.fromName, gr.toNames,
+              gr.seqs, graph, cm, cfg)
+            finally latch.countDown(); () } })
         }
         b += 1
       }
@@ -396,7 +399,7 @@ object ScalingBench {
       println(f"[kernel rep $i] t_n=$an%.2f (cpu $acn%.1f) t_4n=$a4%.2f (cpu $ac4%.1f)")
       (an, a4, acn, ac4)
     }
-    (pairs.map(_._1).min, pairs.map(_._2).min, seqs.length * batches,
+    (pairs.map(_._1).min, pairs.map(_._2).min, nSeqs * batches,
       pairs.map(_._3).min, pairs.map(_._4).min)
   }
 

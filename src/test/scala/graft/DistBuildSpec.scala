@@ -9,9 +9,11 @@ import graft.router.{CompactGraph, DistGraphBuild, GraphPartitions, HopCache, Ma
 
 /** Distributed graph construction parity: the per-bin executor-side build
   * (DistGraphBuild: distributed CC -> per-bin snap cogroup -> file-backed
-  * bins) must produce the SAME refined tables and the SAME solve output as
-  * the driver-side path (StationSnap.refine + CompactGraph.fromEdges +
-  * GraphPartitions.build), with no O(numEdges) driver materialization. */
+  * bins, the only producer of component bins) must produce the SAME
+  * refined tables and the SAME solve output as the driver-side path
+  * (StationSnap.refine + CompactGraph.fromEdges, solved over one broadcast
+  * bin, GraphPartitions.single), with no O(numEdges) driver
+  * materialization. Also: how a solver group resolves its bins. */
 class DistBuildSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -56,7 +58,7 @@ class DistBuildSpec extends AnyFunSuite {
   }
 
   test("file-backed bins partition the edge set with global ids") {
-    assert(dist.parts.fileMode && dist.nBins == 3) // one comp per city
+    assert(dist.parts.bins.length == 3 && dist.nBins == 3) // one comp per city
     val binIds = dist.parts.bins.map(_.get.edgeIds.toSet)
     assert(binIds.map(_.size).sum == graphD.numEdges)
     assert(binIds.reduce(_ ++ _) == graphD.edgeIds.toSet)
@@ -65,6 +67,30 @@ class DistBuildSpec extends AnyFunSuite {
       assert(g.edgeIds.sameElements(g.edgeIds.sorted))
       g.rawRestrictions.foreach(r => assert(g.nodeIndex.containsKey(r._1)))
     }
+    // a task holds less graph: the largest bin is smaller than the whole
+    def serializedBytes(o: AnyRef): Long = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(o); oos.close()
+      bos.size().toLong
+    }
+    assert(dist.parts.bins.map(b => serializedBytes(b.get)).max < serializedBytes(graphD))
+  }
+
+  test("resolve: one bin per tag set, untagged ignored, merged bins memoized") {
+    val parts = dist.parts
+    val bin0 = parts.bins(0).get
+    val bin1 = parts.bins(1).get
+    assert(parts.resolve(Array(0, 0, 0)) eq bin0)
+    assert(parts.resolve(Array(-1, 1, -1)) eq bin1)  // -1 (untagged) ignored
+    assert(parts.resolve(Array.empty[Int]) eq bin0)  // null-cand cluster
+    assert(parts.resolve(Array(-1)) eq bin0)
+    val m = parts.resolve(Array(0, 1))
+    assert(m.numEdges == bin0.numEdges + bin1.numEdges)
+    assert(m.edgeIds.sameElements((bin0.edgeIds ++ bin1.edgeIds).sorted))
+    assert(m.epoch == bin0.epoch) // one cache generation per build
+    // memoized: the same bin set shares one merged instance (stable token)
+    assert(parts.resolve(Array(1, -1, 0, 1)) eq m)
   }
 
   test("two builds sharing a binDir never cross-serve cached bins") {

@@ -590,7 +590,7 @@ object PriorPlans {
     val (seqKeys, distinctSeqs) = tripSeqTables(tripStops)
     val solved = Boundary.eager(Matcher.solveSeqs(spark,
       distinctSeqs.withColumn("trip_ids", typedLit(Seq.empty[String])), cands,
-      GraphPartitions.build(spark, graph), cfg).drop("trip_ids"))
+      GraphPartitions.single(spark, graph), cfg).drop("trip_ids"))
     val joined = seqKeys.join(solved.hint("shuffle_merge"), Seq("seq_key"))
     val shapes = joined
       .select($"trip_id".as("shape_id"),

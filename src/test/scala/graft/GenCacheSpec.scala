@@ -17,15 +17,23 @@ class GenCacheSpec extends AnyFunSuite {
       Seq((1L, 2L, 10.0, 0, 100L), (2L, 3L, 10.0, 0, 100L)), coords)
   }
 
-  test("subset and concat inherit the parent epoch; top-level builds get fresh epochs") {
+  /** one straight edge `id` from (lat, 7.8) to (lat + 0.001, 7.8) */
+  private def oneEdgeBin(id: Long, lat: Double): CompactGraph =
+    CompactGraph.fromRows(Array(CompactGraph.EdgeRowIn(id, 100L, 2 * id, 2 * id + 1,
+      Array(lat, lat + 0.001), Array(7.8, 7.8), 1000L, 111.0, 0)),
+      Map.empty, Array.empty, Array.empty)
+
+  test("concat keeps the parts' epoch; top-level builds get fresh epochs") {
     val g = toyGraph()
     assert(g.epoch == g.token)
-    val sub = CompactGraph.subset(g, _ == 0)
-    assert(sub.token != g.token)
-    assert(sub.epoch == g.epoch)
-    val sub2 = CompactGraph.subset(g, _ == 1)
-    val merged = CompactGraph.concat(Seq(sub, sub2))
-    assert(merged.epoch == g.epoch)
+    // two bins of one distributed build share its epoch (FileBin stamps it)
+    val epoch = CompactGraph.newEpoch()
+    val bin0 = oneEdgeBin(0L, 48.0).setEpoch(epoch)
+    val bin1 = oneEdgeBin(1L, 49.0).setEpoch(epoch)
+    assert(bin0.token != bin1.token)
+    val merged = CompactGraph.concat(Seq(bin1, bin0))
+    assert(merged.epoch == epoch && merged.token != bin0.token)
+    assert(merged.edgeIds.toSeq == Seq(0L, 1L)) // global edge-id order
     val g2 = toyGraph()
     assert(g2.epoch != g.epoch)
   }

@@ -243,8 +243,8 @@ class RouterSpec extends AnyFunSuite {
     val cands = Array(
       Array(Cand(0, 0.5, 0L, 48.0, 7.805)),
       Array(Cand(4, 0.5, 0L, 48.0, 7.825)))
-    val ctxA = HopCache.mixCtx(gA.token, 0L, "L1")
-    val ctxB = HopCache.mixCtx(gB.token, 0L, "L1")
+    val ctxA = HopCache.mixCtx(gA.token, 0L, Seq("L1"))
+    val ctxB = HopCache.mixCtx(gB.token, 0L, Seq("L1"))
     val rA = Viterbi.solve(gA, cands, Array(600.0), noPen, cacheCtx = ctxA)
     val rB = Viterbi.solve(gB, cands, Array(600.0), noPen, cacheCtx = ctxB)
     assert(rA.totalCost10 == 610L)

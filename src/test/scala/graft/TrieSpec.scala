@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.router._
 
 /** Trip-trie solver: prefix sharing, arr/dep dual nodes with dwell
-  * penalties, leaf sharing, exact-cost parity with the linear solve
-  * (reference semantics: TripTrie.tpp:36-105, Router.tpp:23-198). */
+  * penalties, leaf sharing, exact-cost parity with the linear solve,
+  * one-stop sequences as departure leaves (reference semantics:
+  * TripTrie.tpp:36-105, Router.tpp:23-198). */
 class TrieSpec extends AnyFunSuite {
   // A -- B -- C -- D chain + B -- E spur (same toy graph as RouterSpec)
   val coords = Map(
@@ -26,6 +27,15 @@ class TrieSpec extends AnyFunSuite {
     "Y" -> Array((2L, 0.5, 0L, 48.0, 7.825)).map(t => (t._1, t._2, t._3, t._4, t._5, 0)),
     "E" -> Array((3L, 0.5, 0L, 48.005, 7.81)).map(t => (t._1, t._2, t._3, t._4, t._5, 0)))
 
+  /** solveCluster with no routing attrs, as every test here calls it */
+  def solve(seqs: (String, Array[Matcher.TS])*): Array[Matcher.SolvedSeq] =
+    MatcherKernel.solveCluster("", "", Array.empty, seqs.toArray, g, candMap, cfg)
+
+  /** every field of a solved sequence, comparable with == */
+  def sig(s: Matcher.SolvedSeq) = (s.seq_key, s.lats.toSeq, s.lngs.toSeq, s.dists.toSeq,
+    s.anchors.toSeq, s.hops.toSeq.map(h => (h.hop_idx, h.edge_ids.toSeq, h.reachable)),
+    s.n_hops, s.n_unroutable, s.cost10)
+
   test("trie build: shared prefix merges, forest splits on first stop") {
     val seqA = Array(ts("X", 0, 0, 0, 48.0, 7.805), ts("Y", 1, 600, 600, 48.0, 7.825))
     val seqB = Array(ts("X", 0, 0, 0, 48.0, 7.805), ts("E", 1, 600, 600, 48.005, 7.81))
@@ -41,7 +51,7 @@ class TrieSpec extends AnyFunSuite {
 
   test("trie solve matches the linear solve exactly (zero dwell)") {
     val seq = Array(ts("X", 0, 0, 0, 48.0, 7.805), ts("Y", 1, 600, 600, 48.0, 7.825))
-    val linear = MatcherKernel.solveCluster("", Array(("k", seq)), g, candMap, cfg)
+    val linear = solve(("k", seq))
     assert(linear.length == 1)
     // expected: 0.5*e0 + e1 + 0.5*e2 = 610 ds (RouterSpec's single-hop case)
     assert(linear(0).cost10 == 610L)
@@ -51,8 +61,7 @@ class TrieSpec extends AnyFunSuite {
   test("two sequences with a shared prefix solve once and both get results") {
     val seqA = Array(ts("X", 0, 0, 0, 48.0, 7.805), ts("Y", 1, 600, 600, 48.0, 7.825))
     val seqB = Array(ts("X", 0, 0, 0, 48.0, 7.805), ts("E", 1, 600, 600, 48.005, 7.81))
-    val out = MatcherKernel.solveCluster("", Array(("a", seqA), ("b", seqB)),
-      g, candMap, cfg)
+    val out = solve(("a", seqA), ("b", seqB))
     assert(out.length == 2)
     val byKey = out.map(s => s.seq_key -> s).toMap
     assert(byKey("a").cost10 == 610L)
@@ -66,8 +75,7 @@ class TrieSpec extends AnyFunSuite {
     assert(forest.length == 1 && forest.head.leafSeqs.size == 1)
     val arrY = forest.head.nodes.find(n => n.stopId == "Y" && n.arr).get
     assert(arrY.trips == 2 && math.abs(arrY.avgTime - 900.0) < 1e-9) // W4 averaging
-    val out = MatcherKernel.solveCluster("", Array(("a", seqA), ("b", seqB)),
-      g, candMap, cfg)
+    val out = solve(("a", seqA), ("b", seqB))
     assert(out.length == 2)
     assert(out(0).lats.toSeq == out(1).lats.toSeq &&
       out(0).lngs.toSeq == out(1).lngs.toSeq &&
@@ -83,9 +91,47 @@ class TrieSpec extends AnyFunSuite {
     val dwell = Array(
       ts("X", 0, 0, 0, 48.0, 7.805), ts("Y", 1, 600, 1200, 48.0, 7.825),
       ts("E", 2, 1800, 1800, 48.005, 7.81))
-    val a = MatcherKernel.solveCluster("", Array(("a", noDwell)), g, candMap, cfg)
-    val b = MatcherKernel.solveCluster("", Array(("b", dwell)), g, candMap, cfg)
+    val a = solve(("a", noDwell))
+    val b = solve(("b", dwell))
     assert(TrieSolver.dwellPen10(600.0) == 40L)
     assert(b(0).cost10 == a(0).cost10 + 40L)
+  }
+
+  test("a one-stop sequence solves as Viterbi.solve on its one layer") {
+    // W: two candidates, the farther one cheaper; Q: no candidate at all
+    val cm = candMap ++ Map(
+      "W" -> Array((0L, 0.5, 30L, 48.0, 7.805, 0), (1L, 0.5, 10L, 48.0, 7.815, 0)))
+    for ((stop, lat, lng) <- Seq(("W", 48.0, 7.81), ("Q", 48.002, 7.812))) {
+      val one = Array(ts(stop, 0, 300, 360, lat, lng))
+      val out = MatcherKernel.solveCluster("", "", Array.empty, Array(("s", one)), g, cm, cfg)
+      val layers = Array(MatcherKernel.expandLayer(g, cm, stop, lat, lng))
+      val ref = Viterbi.solve(g, layers, Array.empty[Double], (_, _) => 0L)
+      val (lats, lngs, _, anchors, _, _) = MatcherKernel.materialize(g, cfg, layers, ref)
+      assert(out.length == 1)
+      val s = out(0)
+      assert(s.lats.toSeq == lats.toSeq && s.lngs.toSeq == lngs.toSeq && s.lats.length == 1)
+      assert(s.cost10 == ref.totalCost10 && s.n_hops == 0 && s.hops.isEmpty)
+      assert(s.anchors.toSeq == anchors.toSeq && s.anchors.toSeq == Seq(0))
+    }
+    val w = MatcherKernel.solveCluster("", "", Array.empty,
+      Array(("w", Array(ts("W", 0, 0, 0, 48.0, 7.81)))), g, cm, cfg)(0)
+    assert(w.cost10 == 10L && w.lngs.toSeq == Seq(7.815)) // the min-pen snap
+    val q = MatcherKernel.solveCluster("", "", Array.empty,
+      Array(("q", Array(ts("Q", 0, 0, 0, 48.002, 7.812)))), g, cm, cfg)(0)
+    assert(q.cost10 == MatcherKernel.NullCandPen10 && q.lats.toSeq == Seq(48.002))
+  }
+
+  test("a one-stop sequence beside a longer one leaves the longer one bit-equal") {
+    // X is the first stop of both; Y has a dwell, so node times matter
+    val long = Array(ts("X", 0, 100, 100, 48.0, 7.805), ts("Y", 1, 700, 1300, 48.0, 7.825),
+      ts("E", 2, 1900, 1900, 48.005, 7.81))
+    val one = Array(ts("X", 0, 5000, 5060, 48.0, 7.805))
+    val alone = solve(("a", long))
+    val both = solve(("a", long), ("s", one))
+    assert(both.length == 2)
+    val byKey = both.map(s => s.seq_key -> s).toMap
+    assert(sig(byKey("a")) == sig(alone(0)))
+    assert(sig(byKey("s")) == sig(solve(("s", one))(0)))
+    assert(byKey("s").n_hops == 0 && byKey("s").anchors.toSeq == Seq(0))
   }
 }
